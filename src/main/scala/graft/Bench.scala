@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import scala.jdk.CollectionConverters._
 
 /** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR and
   * reports timings as driver-parseable JSON.
@@ -68,12 +69,10 @@ object Bench {
   def main(args: Array[String]): Unit = {
     // Optional args: restrict to these query names (dev profiling); the
     // driver passes none → full run.
-    val only = args.toSet
-    val unknown = only.diff(SparkEntry.queries.keySet)
-    require(unknown.isEmpty,
-      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
+    val subset = args.nonEmpty
+    val names = Harness.select(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Harness.cpus.toString
     // The committed per-scale-factor prior: `bench_results.json` is
     // gitignored, so a fresh driver checkout never found a prior and the
     // regression comparison sat disabled (prev_n:0 in rounds ≤6).
@@ -81,20 +80,14 @@ object Bench {
     // dev run from any path still compares like with like.
     val sfBase = new java.io.File(sfDir).getName
     val prevPath = java.nio.file.Paths.get(s"bench_prev/$sfBase.json")
-    def parseQueries(txt: String): Map[String, Double] =
-      """"queries":\{([^}]*)\}""".r.findFirstMatchIn(txt)
-        .map(_.group(1)).toSeq
-        .flatMap(q => """"([A-Za-z0-9_]+)":(-?[0-9.]+)""".r
-          .findAllMatchIn(q).map(m => m.group(1) -> m.group(2).toDouble))
-        .toMap
+    def queriesOf(j: JsonNode) = j.get("queries").properties.asScala
+      .map(e => e.getKey -> e.getValue.asDouble).toMap
+    def field(j: JsonNode, k: String) = Option(j.get(k)).map(_.asText)
     // The prior is keyed by basename but records the FULL sfDir it was
     // measured on: two corpora whose dirs share a basename (/a/sf0.1 vs
     // /b/sf0.1) must not share a prior — a mismatch disables the
     // comparison (and this run's refresh then starts a fresh prior for
     // its own dir). A legacy prior without the field is accepted.
-    def sfDirMatches(txt: String): Boolean =
-      """"sf_dir":"([^"]*)"""".r.findFirstMatchIn(txt)
-        .forall(_.group(1) == sfDir)
     // The prior also records the CPU count it was measured at: dev-scale
     // (sf0.001) walls are dominated by per-stage fixed costs that scale
     // with parallelism (stash-verified 2.4s vs 0.766s for the same code
@@ -102,9 +95,8 @@ object Bench {
     // shape would flag phantom regressions — ignore it with a note and
     // let this run's refresh start a fresh prior. Legacy priors without
     // the field are accepted (same policy as sf_dir).
-    def cpusMatch(txt: String): Boolean = {
-      val ok = """"cpus":"([^"]*)"""".r.findFirstMatchIn(txt)
-        .forall(_.group(1) == cpus)
+    def cpusMatch(j: JsonNode): Boolean = {
+      val ok = field(j, "cpus").forall(_ == cpus)
       if (!ok) System.err.println(
         s"[bench] prior ignored: measured on different cpu count " +
           s"(prior vs current $cpus)")
@@ -116,37 +108,19 @@ object Bench {
     // different scale factor would flag phantom regressions everywhere.
     val prev: Map[String, Double] =
       try {
+        val mapper = new ObjectMapper
         if (java.nio.file.Files.exists(prevPath)) {
-          val txt = new String(
-            java.nio.file.Files.readAllBytes(prevPath), "UTF-8")
-          if (sfDirMatches(txt) && cpusMatch(txt)) parseQueries(txt)
+          val j = mapper.readTree(prevPath.toFile)
+          if (field(j, "sf_dir").forall(_ == sfDir) && cpusMatch(j))
+            queriesOf(j)
           else Map.empty
         } else {
-          val txt = new String(java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get("bench_results.json")), "UTF-8")
-          // Plain contains — a regex would wildcard '.' in every real
-          // path and break on metacharacters.
-          if (txt.contains(s""""sf":"$sfDir"""")) parseQueries(txt) else Map.empty
+          val j = mapper.readTree(new java.io.File("bench_results.json"))
+          if (field(j, "sf").contains(sfDir)) queriesOf(j) else Map.empty
         }
       } catch { case scala.util.control.NonFatal(_) => Map.empty }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // Execute the query's EXACT physical plan: a count() on top would let
-    // the optimizer prune unused window/projection expressions and
-    // under-measure. toRdd + full iterator consumption materializes every
-    // output column.
-    def runFull(name: String): Unit =
-      SparkEntry.queries(name)(spark, sfDir)
-        .queryExecution.toRdd.foreachPartition { it =>
-          while (it.hasNext) it.next()
-        }
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.isEmpty || only(n))
+    val spark = Harness.session()
+    def runFull(name: String): Unit = Harness.runFull(spark, name, sfDir)
     // Sorted-name chunks sized so each part line stays ~500 bytes —
     // well inside the driver's tail window — and the first part prints
     // a couple of minutes in.
@@ -159,6 +133,8 @@ object Bench {
     // The first failure's exception class + message, carried into the
     // artifact: round 6's artifact showed 55 `-1`s but not WHY — the
     // cause had to be re-derived by rerunning Verify by hand.
+    // errLine bounds its length BEFORE escaping: truncating the escaped
+    // form could split an escape pair and emit an unterminated string.
     var firstErr: Option[String] = None
     def noteErr(name: String, e: Throwable): Unit =
       if (firstErr.isEmpty) firstErr = Some(errLine(name, e))
@@ -185,46 +161,48 @@ object Bench {
       .empty[(String, Double)]
     val spreadsBuf = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
 
-    // Locale.ROOT: f"%.3f" uses the JVM default locale, and a
-    // comma-decimal locale would emit invalid JSON.
-    def f3(v: Double): String =
-      if (v < 0) "-1"
-      else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    def f3(v: Double): String = if (v < 0) "-1" else Harness.num(v)
     def qJson(rs: Seq[(String, Double)]): String =
-      rs.map { case (k, v) => "\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")
-    def jArr(xs: Seq[String]): String =
-      xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // First failure cause, JSON-escaped — so a red artifact says WHY in
-    // the artifact itself. Length is bounded by errLine BEFORE escaping:
-    // truncating the escaped form could split an escape pair and emit
-    // an unterminated string, corrupting the whole summary line.
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => " "
-        case c => c.toString
-      } + "\""
+      Harness.obj(rs.map { case (k, v) => k -> f3(v) })
 
     // Subset (dev) runs write a SIDE file: overwriting the full-run
     // artifact with a partial query map would destroy the baseline the
     // next round's regression comparison reads.
     val artifact =
-      if (only.isEmpty) "bench_results.json" else "bench_results_subset.json"
+      if (subset) "bench_results_subset.json" else "bench_results.json"
+
+    // The fields every artifact and summary line opens and closes with.
+    def headFields(provisional: Boolean): Seq[(String, String)] = {
+      val total = results.map(_._2).filter(_ >= 0).sum
+      val maxSpread =
+        if (spreadsBuf.isEmpty) 0.0 else spreadsBuf.map(_._2).max
+      Seq("metric" -> Harness.str("total"),
+        "value" -> (if (!provisional && failed.isEmpty) f3(total) else "-1"),
+        "unit" -> Harness.str("sec"), "n" -> names.size.toString,
+        "completed" -> results.count(_._2 >= 0).toString,
+        "provisional" -> provisional.toString, "total_sec" -> f3(total),
+        "passes" -> passes.toString,
+        "stat" -> Harness.str(
+          "min2/median3; floor_reproduced=true publishes min"),
+        "max_spread_sec" -> f3(maxSpread))
+    }
+    def tailFields: Seq[(String, String)] = Seq(
+      "failed" -> Harness.arr(failed.toSeq.sorted),
+      "first_error" -> firstErr.map(Harness.str).getOrElse("null"),
+      "sf" -> Harness.str(sfDir))
 
     // Rewrite the on-disk artifact with everything measured so far —
     // called after EVERY chunk, so a kill at any point leaves complete
     // per-query data for the chunks that finished. `extra` carries the
     // final run's recall/regression fields; provisional writes omit
     // them (they are only computable at the end).
-    def writeArtifact(provisional: Boolean, extra: String): Unit = {
-      val done = results.count(_._2 >= 0)
-      val total = results.map(_._2).filter(_ >= 0).sum
-      val value = if (!provisional && failed.isEmpty) f3(total) else "-1"
-      val maxSpread =
-        if (spreadsBuf.isEmpty) 0.0 else spreadsBuf.map(_._2).max
-      val line =
-        s"""{"metric":"total","value":$value,"unit":"sec","n":${names.size},"completed":$done,"provisional":$provisional,"total_sec":${f3(total)},"passes":$passes,"stat":"min2/median3; floor_reproduced=true publishes min","max_spread_sec":${f3(maxSpread)},"queries":${qJson(results.toSeq)},"spread":${qJson(spreadsBuf.toSeq)}$extra,"remeasured":${jArr(remeasured.toSeq.sorted)},"cold":${jArr(cold)},"failed":${jArr(failed.toSeq.sorted)},"first_error":${firstErr.map(jstr).getOrElse("null")},"sf":"$sfDir"}"""
+    def writeArtifact(provisional: Boolean,
+        extra: Seq[(String, String)]): Unit = {
+      val line = Harness.obj(headFields(provisional) ++ Seq(
+        "queries" -> qJson(results.toSeq),
+        "spread" -> qJson(spreadsBuf.toSeq)) ++ extra ++ Seq(
+        "remeasured" -> Harness.arr(remeasured.toSeq.sorted),
+        "cold" -> Harness.arr(cold)) ++ tailFields)
       try java.nio.file.Files.write(
         java.nio.file.Paths.get(artifact), (line + "\n").getBytes("UTF-8"))
       catch { case scala.util.control.NonFatal(e) =>
@@ -232,14 +210,11 @@ object Bench {
       }
     }
     def summaryLine(provisional: Boolean, recallJson: String,
-        regNamesJson: String, floorJson: String = "{}"): String = {
-      val done = results.count(_._2 >= 0)
-      val total = results.map(_._2).filter(_ >= 0).sum
-      val value = if (!provisional && failed.isEmpty) f3(total) else "-1"
-      val maxSpread =
-        if (spreadsBuf.isEmpty) 0.0 else spreadsBuf.map(_._2).max
-      s"""{"metric":"total","value":$value,"unit":"sec","n":${names.size},"completed":$done,"provisional":$provisional,"total_sec":${f3(total)},"passes":$passes,"stat":"min2/median3; floor_reproduced=true publishes min","max_spread_sec":${f3(maxSpread)},"recall":$recallJson,"regressions_vs_prev":$regNamesJson,"floor_reproduced":$floorJson,"prev_n":${prev.size},"failed":${jArr(failed.toSeq.sorted)},"first_error":${firstErr.map(jstr).getOrElse("null")},"sf":"$sfDir","detail":"$artifact"}"""
-    }
+        regNamesJson: String, floorJson: String = "{}"): String =
+      Harness.obj(headFields(provisional) ++ Seq("recall" -> recallJson,
+        "regressions_vs_prev" -> regNamesJson, "floor_reproduced" -> floorJson,
+        "prev_n" -> prev.size.toString) ++ tailFields ++
+        Seq("detail" -> Harness.str(artifact)))
 
     // One timed sample; returns false on a FATAL (OOM-class) throw —
     // the JVM is poisoned, any further timings would be garbage, but
@@ -277,6 +252,9 @@ object Bench {
 
     val chunkLoop = new scala.util.control.Breaks
     var partsPrinted = 0
+    def partLine(rs: Seq[(String, Double)]): String =
+      Harness.obj(Seq("part" -> partsPrinted.toString,
+        "of" -> chunkList.size.toString, "queries" -> qJson(rs)))
     chunkLoop.breakable {
       for ((chunk, ci) <- chunkList.zipWithIndex) {
         // Warmup (non-fatal failures re-surface in the measured pass).
@@ -365,9 +343,9 @@ object Bench {
             n -> BenchGate.spreadOf(samples(n), passes)
         }
         partsPrinted += 1
-        println(s"""{"part":$partsPrinted,"of":${chunkList.size},"queries":${qJson(chunkResults)}}""")
+        println(partLine(chunkResults))
         val last = ci == chunkList.size - 1
-        writeArtifact(provisional = !last && !fatal, extra = "")
+        writeArtifact(provisional = !last && !fatal, extra = Nil)
         if (!last && !fatal)
           println(summaryLine(provisional = true, "{}", "[]"))
         if (fatal) chunkLoop.break()
@@ -383,7 +361,7 @@ object Bench {
         val rs = chunk.map(_ -> -1.0)
         results ++= rs
         partsPrinted += 1
-        println(s"""{"part":$partsPrinted,"of":${chunkList.size},"queries":${qJson(rs)}}""")
+        println(partLine(rs))
       }
     }
 
@@ -391,46 +369,20 @@ object Bench {
     // counts (the only driver-side signal for no-oracle queries) cannot
     // catch an index/bucketing regression; these numbers can. Tiny
     // collects: tens-to-hundreds of id pairs per query.
-    // One mechanism for every no-oracle approximate query with an exact
-    // twin in the inventory: recall of its id-pair set vs the baseline's,
-    // keyed by the two given id columns. The ANN variants compare
-    // (query_id, neighbor_id) against the exact scan; SemDeDup compares
-    // (id_a, id_b) against the exact cosine pass.
-    def recallOf(exactName: String, variants: Seq[String],
-        keyCols: Seq[String]): Seq[(String, Double)] =
-      if (!fatal && !failed(exactName) && names.contains(exactName))
-        try {
-          def pairs(q: String): Set[(Long, Long)] =
-            SparkEntry.queries(q)(spark, sfDir)
-              .select(keyCols.head, keyCols.tail: _*).collect()
-              .map(r => (r.getLong(0), r.getLong(1))).toSet
-          val exact = pairs(exactName)
-          // An empty exact baseline (corpus smaller than the query set)
-          // would make recall 0/0 = NaN, which f3 renders literally and
-          // breaks the JSON artifact — skip recall instead.
-          if (exact.isEmpty) Seq.empty
-          else variants.filter(v => names.contains(v) && !failed(v)).map { q =>
-            q -> pairs(q).count(exact.contains).toDouble / exact.size
-          }
-        } catch {
+    // One row per [[Recall]]-checked query in the registry, measured
+    // the way [[RecallGate]] measures it.
+    val recall = RecallGate.Pairings.flatMap { case (twin, variants, keyCols) =>
+      if (!fatal && !failed(twin) && names.contains(twin))
+        try RecallGate.recallOf(spark, sfDir, twin,
+          variants.filter(v => names.contains(v) && !failed(v)), keyCols)
+        catch {
           case scala.util.control.NonFatal(e) =>
             System.err.println(
-              s"[bench] recall vs $exactName failed: ${e.getMessage}")
+              s"[bench] recall vs $twin failed: ${e.getMessage}")
             Seq.empty
         }
       else Seq.empty
-    val recall =
-      recallOf("ann_topk_exact",
-        Seq("ann_topk_lsh", "ann_topk_ivf", "ann_topk_pq",
-          "ann_topk_ivfpq"),
-        Seq("query_id", "neighbor_id")) ++
-      recallOf("dd_cosine_neardup", Seq("dd_semantic"), Seq("id_a", "id_b")) ++
-      // Curation-mode jaccard vs the exact operator: on THIS (natural)
-      // corpus the degree cap excludes nothing and the capped variant's
-      // exact-over-capped-expansion scoring makes the outputs
-      // bit-identical, so anything under 1.0 is a code change; the
-      // skew gate carries the capped-under-Zipf overlap separately.
-      recallOf("g4_jaccard", Seq("g4_jaccard_capped"), Seq("s1", "s2"))
+    }
     // Cross-round regressions — policy in [[BenchGate.regressionFlags]]:
     // >1.5× slower AND delta above max(0.5s, 3× the query's own spread).
     // Cold queries (unwarmed after a warmup fatal) are excluded: their
@@ -446,16 +398,15 @@ object Bench {
     val regressions = BenchGate.regressionFlags(
       statResults.toSeq, prev, spreadsBuf.toMap, cold)
       .filterNot { case (n, _) => floorChecked.getOrElse(n, false) }
-    val floorJson = floorChecked.toSeq.sortBy(_._1)
-      .map { case (n, ok) => "\"" + n + "\":" + ok }
-      .mkString("{", ",", "}")
-    val regSummaryJson = jArr(
+    val floorJson = Harness.obj(floorChecked.toSeq.sortBy(_._1)
+      .map { case (n, ok) => n -> ok.toString })
+    val regSummaryJson = Harness.arr(
       regressions.toSeq.sortBy(-_._2).take(8).map(_._1))
-    val regFullJson = qJson(regressions.toSeq.sortBy(-_._2))
     val recallJson = qJson(recall)
     // Final artifact: complete results + the end-of-run-only fields.
-    writeArtifact(provisional = false,
-      extra = s""","recall":$recallJson,"regressions_vs_prev":$regFullJson,"floor_reproduced":$floorJson,"prev_n":${prev.size}""")
+    writeArtifact(provisional = false, extra = Seq("recall" -> recallJson,
+      "regressions_vs_prev" -> qJson(regressions.toSeq.sortBy(-_._2)),
+      "floor_reproduced" -> floorJson, "prev_n" -> prev.size.toString))
     // Refresh the committed prior for the NEXT run's regression gate —
     // policy in [[BenchGate.mergedPrior]]: a fatal or INCOMPLETE run
     // never writes (round 10 closed on a 67/221 artifact; its floors
@@ -467,7 +418,7 @@ object Bench {
     // baseline. COLD timings are excluded for the same reason they are
     // excluded from the regression check.
     val maxSpread = if (spreadsBuf.isEmpty) 0.0 else spreadsBuf.map(_._2).max
-    if (only.isEmpty)
+    if (!subset)
       BenchGate.mergedPrior(prev, statResults.toSeq, cold, maxSpread, fatal,
         complete = failed.isEmpty && results.size == names.size).foreach {
         merged =>
@@ -475,8 +426,9 @@ object Bench {
             val mergedJson = qJson(merged.toSeq.sortBy(_._1))
             java.nio.file.Files.createDirectories(prevPath.getParent)
             java.nio.file.Files.write(prevPath,
-              (s"""{"sf":"$sfBase","sf_dir":"$sfDir","cpus":"$cpus",""" +
-                s""""queries":$mergedJson}""" + "\n").getBytes("UTF-8"))
+              (Harness.obj(Seq("sf" -> Harness.str(sfBase),
+                "sf_dir" -> Harness.str(sfDir), "cpus" -> Harness.str(cpus),
+                "queries" -> mergedJson)) + "\n").getBytes("UTF-8"))
           } catch { case scala.util.control.NonFatal(e) =>
             System.err.println(s"[bench] prior write failed: $e")
           }

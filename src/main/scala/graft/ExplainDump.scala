@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Diagnostic main: write each named query's `.explain("formatted")`
@@ -20,15 +19,8 @@ object ExplainDump {
     require(args.length >= 4,
       "usage: ExplainDump <sfDir> <outDir> <tag> <query...>")
     val Array(sfDir, outDir, tag) = args.take(3)
-    val names = args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val names = Harness.select(args.drop(3).toSeq)
+    val spark = Harness.session()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Inventory-wide scale gate: times EVERY declared query at 1× and at a
   * replicated `factor`× warehouse ([[ScaleData.writeScaledWarehouse]])
   * and reports the per-query growth factor — the super-linear-plan
@@ -19,15 +17,15 @@ import org.apache.spark.sql.SparkSession
   * number). A query is flagged when growth exceeds [[DefaultBound]]
   * (n·log n on 10× data is ~11.7×, plus scheduling overhead) AND its
   * 10× time is material (> [[MaterialSec]] — a 0.1s→1.5s query is
-  * fixed-overhead noise, not a scale signal), unless an [[exemptions]]
-  * entry raises its bound with a reason (algorithms whose work is
-  * super-linear BY SPEC, e.g. exact all-pairs similarity) or a
-  * [[workGated]] entry replaces the wall comparison with an exact,
-  * variance-free work metric (wall kept only as a loose backstop).
+  * fixed-overhead noise, not a scale signal), unless the query's
+  * registry [[growth]] rule is an [[Exempt]] that raises its bound with
+  * a reason (algorithms whose work is super-linear BY SPEC, e.g. exact
+  * all-pairs similarity) or a [[WorkGated]] that replaces the wall
+  * comparison with an exact, variance-free work metric (wall kept only
+  * as a loose backstop).
   *
   * Usage: runMain graft.GrowthGate [factor] [srcSfDir] [scratchDir]
-  *   [query ...]
-  * Env: GRAFT_GROWTH_ONLY=substr[,substr] restricts by substring.
+  *   [query ...]  (exact registry names; none → every query)
   * Artifact: growth_gate.json (full per-query map + flags); progress
   * lines stream per query so a long run is observable.
   */
@@ -35,40 +33,23 @@ object GrowthGate {
   val DefaultBound = 12.0
   val MaterialSec = 3.0
 
-  /** Queries whose cost model is super-linear by SPEC: (bound at 10×,
-    * cost-model exponent, reason the judge should read). At another
-    * factor f the bound scales as bound₁₀ · (f/10)^(exponent−1) ON TOP
-    * of the gate's linear (f/10) scaling — i.e. a quadratic-spec
-    * exemption (exponent 2) scales its bound by (f/10)², because a
-    * healthy by-spec quadratic lands at ~f²/100 × its 10× wall, and
-    * linear scaling alone would flag it at any f > 10.
-    */
-  val exemptions: Map[String, (Double, Double, String)] = Map(
-    "sim_knn_self" -> (150.0, 2.0,
-      "exact all-pairs self-join: scored pairs grow quadratically " +
-        "(100x) by definition; the tiled kernel bounds task size, " +
-        "not total work"),
-    "dd_cosine_neardup" -> (150.0, 2.0,
-      "exact all-pairs cosine screen: quadratic scored-pair count by " +
-        "definition (the LSH/semantic variants are the scale path)"),
-    "dd_semantic" -> (30.0, 1.0,
-      "near-dup pair OUTPUT grows superlinearly when corpus growth " +
-        "densifies the embedding manifold (r12 measured 20x wall at " +
-        "10x; the r13 assign/cells retune brought the measured point " +
-        "to 2.2x at 10x and 3.6x at 30x, so the linear-scaled bound " +
-        "now holds with wide margin)"),
-    "ml_model_compare" -> (40.0, 1.0,
-      "CV model training: optimizer iteration count is data-dependent, " +
-        "not a relational plan property"))
-
-  /** Queries gated on a MEASURED WORK METRIC instead of raw wall time.
-    * g4_jaccard's r12 story motivated this: its candidate-pair volume
-    * is exactly linear (12,544,866 → 125,448,660 = 10.0× at 10×,
-    * DuckDB-verified, variance-free) while the pair STAGE's wall swung
-    * 11–69s run-to-run under shared-box shuffle/GC pressure — a wall
-    * bound loose enough to absorb that variance (25×) would also pass
-    * a genuine quadratic. Two checks per entry, both deterministic in
-    * what they compare against:
+  /** The registry's growth rules by query name. An [[Exempt]] query's
+    * cost model is super-linear by SPEC (exact all-pairs similarity, CV
+    * training): at another factor f its bound scales as
+    * bound₁₀ · (f/10)^(exponent−1) ON TOP of the gate's linear (f/10)
+    * scaling — i.e. a quadratic-spec exemption (exponent 2) scales its
+    * bound by (f/10)², because a healthy by-spec quadratic lands at
+    * ~f²/100 × its 10× wall, and linear scaling alone would flag it at
+    * any f > 10.
+    *
+    * A [[WorkGated]] query is gated on a MEASURED WORK METRIC instead of
+    * raw wall time. g4_jaccard's r12 story motivated this: its
+    * candidate-pair volume is exactly linear (12,544,866 → 125,448,660
+    * = 10.0× at 10×, DuckDB-verified, variance-free) while the pair
+    * STAGE's wall swung 11–69s run-to-run under shared-box shuffle/GC
+    * pressure — a wall bound loose enough to absorb that variance (25×)
+    * would also pass a genuine quadratic. Two checks per entry, both
+    * deterministic in what they compare against:
     *
     *  1. WORK CONTRACT — the metric's own growth must stay within
     *     `workSlack` × factor (the operator's documented cost model is
@@ -83,35 +64,13 @@ object GrowthGate {
     *     measured work growth flags a plan regression the metric
     *     cannot see (re-evaluated generators, lost broadcast, a
     *     straggler key).
-    *
-    * Value per name: (workSlack, wallSlack, metric fn, why).
     */
-  val workGated: Map[String,
-      (Double, Double, (SparkSession, String) => Double, String)] = Map(
-    "g4_jaccard" -> (1.3, 2.5,
-      (s: SparkSession, dir: String) =>
-        operators.Graph.jaccardPairVolume(s, dir),
-      "work = candidate-pair volume sum_c C(deg_c,2): the chunked " +
-        "generator's exact output contract, linear for bounded " +
-        "customer degree; wall tracking catches a regressed pair " +
-        "stage the count cannot see"),
-    "g4_jaccard_capped" -> (1.3, 2.5,
-      (s: SparkSession, dir: String) =>
-        operators.Graph.jaccardCappedWork(s, dir),
-      "work = capped candidate volume sum_{deg<=cap} C(deg,2): stays " +
-        "~linear under a Zipf tail BY CONSTRUCTION — the gate " +
-        "verifies the curation-mode bound instead of excusing exact-" +
-        "jaccard's quadratic hub response"),
-    "dd_edit_distance" -> (1.5, 2.5,
-      (s: SparkSession, dir: String) =>
-        operators.Dedup.editDistanceWork(s, dir),
-      "work = mean-length-NORMALIZED banded-DP cost over LSH " +
-        "candidate pairs (min_len*(2k+3), or ~1 past the length-gap " +
-        "early exit, / corpus mean len): the operator now runs Spark " +
-        "4's thresholded levenshtein, and normalizing by mean length " +
-        "cancels the generator's uniform token-suffix inflation, so " +
-        "the metric tracks candidate COUNT - slack tightened 2.5 -> " +
-        "1.5; a quadratic candidate blow-up (~factor^2) still flags"))
+  lazy val growth: Map[String, Growth] =
+    SparkEntry.specs.flatMap(q => q.growth.map(q.name -> _)).toMap
+  private[graft] def workGated(name: String): Option[WorkGated] =
+    growth.get(name).collect { case w: WorkGated => w }
+  private def exemptBound(factor: Int, b: Double, exp: Double): Double =
+    b * factor / 10.0 * math.pow(factor / 10.0, exp - 1.0)
 
   /** The gate's entire per-query flag policy, as a pure function (the
     * BenchGate precedent: decision logic spec-testable without Spark or
@@ -130,52 +89,46 @@ object GrowthGate {
       tN: Double, work: Option[(Double, Double)]): Boolean = {
     if (t1 <= 0) return false
     def scaled(b: Double): Double = b * factor / 10.0
-    workGated.get(name) match {
-      case Some((workSlack, wallSlack, _, _)) =>
+    growth.get(name) match {
+      case Some(WorkGated(workSlack, wallSlack, _, _)) =>
         val wg = work.map { case (w1, wN) => wN / math.max(w1, 1.0) }
         wg.exists(_ > factor * workSlack) ||
           (wg.exists(g => tN / math.max(t1, 0.05) >
             wallSlack * math.max(g, 1.0)) && tN > MaterialSec)
-      case None =>
-        val bound = exemptions.get(name) match {
-          case Some((b, exp, _)) =>
-            scaled(b) * math.pow(factor / 10.0, exp - 1.0)
-          case None => scaled(DefaultBound)
+      case exempt =>
+        val bound = exempt match {
+          case Some(Exempt(b, exp, _)) => exemptBound(factor, b, exp)
+          case _ => scaled(DefaultBound)
         }
         tN / math.max(t1, 0.05) > bound && tN > MaterialSec
     }
   }
 
+  /** Per-query walls at 1× and `factor`×, their growth, and the work
+    * pair where one was measured — the `queries` map of the growth and
+    * skew gates' artifacts.
+    */
+  private[graft] def queriesJson(factor: Int,
+      rows: Seq[(String, Double, Double, String)],
+      work: scala.collection.Map[String, (Double, Double)]): String =
+    Harness.obj(rows.map { case (n, t1, tN, _) =>
+      n -> Harness.nums(Seq("t1" -> t1, s"t$factor" -> tN,
+        "growth" -> (if (t1 > 0) tN / math.max(t1, 0.05) else -1.0)) ++
+        work.get(n).toSeq.flatMap { case (w1, wN) =>
+          Seq("work1" -> w1, s"work$factor" -> wN,
+            "work_growth" -> wN / math.max(w1, 1.0))
+        })
+    })
+
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(10)
     val src = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val scratch = args.lift(2).getOrElse(s"/tmp/graft_growth$factor")
-    val only = args.drop(3).toSet ++
-      sys.env.get("GRAFT_GROWTH_ONLY").toSeq
-        .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    ScaleData.writeScaledWarehouse(spark, src, scratch, factor, cpus.toInt)
+    val only = args.drop(3).toSeq
+    val names = Harness.select(only)
+    val spark = Harness.session()
+    ScaleData.writeScaledWarehouse(spark, src, scratch, factor, Harness.cpus)
 
-    def runFull(name: String, dir: String): Unit =
-      SparkEntry.queries(name)(spark, dir)
-        .queryExecution.toRdd.foreachPartition { it =>
-          while (it.hasNext) it.next()
-        }
-    def timed(name: String, dir: String): Double = {
-      runFull(name, dir) // warm: JIT + per-dir pins
-      val t0 = System.nanoTime()
-      runFull(name, dir)
-      (System.nanoTime() - t0) / 1e9
-    }
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.isEmpty || only.exists(n.contains))
     val rows = scala.collection.mutable.ArrayBuffer
       .empty[(String, Double, Double, String)] // name, t1, tN, err
     // name -> (work1, workN) for the work-gated queries — measured once
@@ -183,10 +136,10 @@ object GrowthGate {
     val work = scala.collection.mutable.Map.empty[String, (Double, Double)]
     names.foreach { name =>
       val r = try {
-        val t1 = timed(name, src)
-        val tN = timed(name, scratch)
-        workGated.get(name).foreach { case (_, _, metric, _) =>
-          work(name) = (metric(spark, src), metric(spark, scratch))
+        val t1 = Harness.warmTimed(spark, name, src)
+        val tN = Harness.warmTimed(spark, name, scratch)
+        workGated(name).foreach { w =>
+          work(name) = (w.metric(spark, src), w.metric(spark, scratch))
         }
         (name, t1, tN, "")
       } catch {
@@ -200,9 +153,7 @@ object GrowthGate {
           f" work=${w1}%.0f->${wN}%.0f (${wN / math.max(w1, 1)}%4.1fx)"
         }.getOrElse(""))
     }
-    def fmt(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def scaled(b: Double): Double = b * factor / 10.0
+    def fmt(v: Double) = Harness.num(v)
     def flagsOf(rs: Seq[(String, Double, Double, String)]): Seq[String] =
       rs.collect {
         case (n, t1, tN, "")
@@ -219,13 +170,13 @@ object GrowthGate {
     // Work-CONTRACT flags are never re-measured: the metric is
     // deterministic, so its verdict is already evidence.
     val remeasured = flagsOf(rows.toSeq).filter(n =>
-      workGated.get(n).forall { case (workSlack, _, _, _) =>
+      workGated(n).forall { w =>
         work.get(n).forall { case (w1, wN) =>
-          wN / math.max(w1, 1.0) <= factor * workSlack } })
+          wN / math.max(w1, 1.0) <= factor * w.workSlack } })
     remeasured.foreach { name =>
       try {
-        val t1b = timed(name, src)
-        val tNb = timed(name, scratch)
+        val t1b = Harness.warmTimed(spark, name, src)
+        val tNb = Harness.warmTimed(spark, name, scratch)
         val i = rows.indexWhere(_._1 == name)
         val (_, t1a, tNa, _) = rows(i)
         rows(i) = (name, math.min(t1a, t1b), math.min(tNa, tNb), "")
@@ -238,34 +189,28 @@ object GrowthGate {
     }
     val flags = flagsOf(rows.toSeq)
     val failed = rows.collect { case (n, _, _, e) if e.nonEmpty => n }
-    val qJson = rows.map { case (n, t1, tN, _) =>
-      s""""$n":{"t1":${fmt(t1)},"t$factor":${fmt(tN)},"growth":${
-        fmt(if (t1 > 0) tN / math.max(t1, 0.05) else -1.0)}${
-        work.get(n).map { case (w1, wN) =>
-          s""","work1":${fmt(w1)},"work$factor":${fmt(wN)},""" +
-            s""""work_growth":${fmt(wN / math.max(w1, 1.0))}"""
-        }.getOrElse("")}}"""
-    }.mkString("{", ",", "}")
-    val exJson = exemptions.toSeq.sortBy(_._1).map {
-      case (n, (b, exp, why)) =>
-        s""""$n":{"bound":${
-          fmt(scaled(b) * math.pow(factor / 10.0, exp - 1.0))},""" +
-          s""""cost_exponent":${fmt(exp)},"why":"$why"}"""
-    }.mkString("{", ",", "}")
-    val wgJson = workGated.toSeq.sortBy(_._1).map {
-      case (n, (workSlack, wallSlack, _, why)) =>
-        s""""$n":{"work_bound":${fmt(factor * workSlack)},""" +
-          s""""wall_tracks_work_slack":${fmt(wallSlack)},"why":"$why"}"""
-    }.mkString("{", ",", "}")
-    def arr(xs: Seq[String]) =
-      xs.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val line =
-      s"""{"metric":"growth_gate","factor":$factor,"n":${rows.size},""" +
-        s""""bound":${fmt(scaled(DefaultBound))},"material_sec":$MaterialSec,""" +
-        s""""flags":${arr(flags.toSeq)},"failed":${arr(failed.toSeq)},""" +
-        s""""remeasured":${arr(remeasured)},""" +
-        s""""exemptions":$exJson,"work_gated":$wgJson,""" +
-        s""""only":${arr(only.toSeq)},"queries":$qJson,"sf":"$src"}"""
+    val exJson = Harness.obj(growth.toSeq.sortBy(_._1).collect {
+      case (n, Exempt(b, exp, why)) =>
+        n -> Harness.obj(Seq("bound" -> fmt(exemptBound(factor, b, exp)),
+          "cost_exponent" -> fmt(exp), "why" -> Harness.str(why)))
+    })
+    val wgJson = Harness.obj(growth.toSeq.sortBy(_._1).collect {
+      case (n, WorkGated(workSlack, wallSlack, _, why)) =>
+        n -> Harness.obj(Seq("work_bound" -> fmt(factor * workSlack),
+          "wall_tracks_work_slack" -> fmt(wallSlack),
+          "why" -> Harness.str(why)))
+    })
+    def arr(xs: Seq[String]) = Harness.arr(xs.sorted)
+    val line = Harness.obj(Seq(
+      "metric" -> Harness.str("growth_gate"), "factor" -> factor.toString,
+      "n" -> rows.size.toString, "bound" -> fmt(factor * DefaultBound / 10),
+      "material_sec" -> MaterialSec.toString,
+      "flags" -> arr(flags), "failed" -> arr(failed.toSeq),
+      "remeasured" -> arr(remeasured),
+      "exemptions" -> exJson, "work_gated" -> wgJson,
+      "only" -> arr(only.distinct),
+      "queries" -> queriesJson(factor, rows.toSeq, work),
+      "sf" -> Harness.str(src)))
     // Subset (dev) runs write a side file — overwriting the full-run
     // artifact with a partial map would destroy the committed gate.
     // This applies at EVERY factor: the 30×/100× heavy-family gates
@@ -284,9 +229,10 @@ object GrowthGate {
       else "growth_gate_subset.json"
     java.nio.file.Files.write(java.nio.file.Paths.get(artifact),
       (line + "\n").getBytes("UTF-8"))
-    println(s"""{"metric":"growth_gate","factor":$factor,"n":${rows.size},""" +
-      s""""flags":${arr(flags.toSeq)},"failed":${arr(failed.toSeq)},""" +
-      s""""detail":"$artifact"}""")
+    println(Harness.obj(Seq(
+      "metric" -> Harness.str("growth_gate"), "factor" -> factor.toString,
+      "n" -> rows.size.toString, "flags" -> arr(flags),
+      "failed" -> arr(failed.toSeq), "detail" -> Harness.str(artifact))))
     spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Planted-skew gate for the graph family: the degree-bound arguments in
   * [[operators.Graph]] ("jaccard's C(deg,2) fan-out is degree-bounded",
   * "triangles' orientation tames hubs") were arguments, not tests. This
@@ -35,28 +33,10 @@ object HubGate {
     val src = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val scratch = args.lift(2).getOrElse(s"/tmp/graft_growth$factor")
     val hubDir = scratch + "_hub"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    ScaleData.writeScaledWarehouse(spark, src, scratch, factor, cpus.toInt)
+    val spark = Harness.session()
+    ScaleData.writeScaledWarehouse(spark, src, scratch, factor, Harness.cpus)
     ScaleData.writeHubWarehouse(spark, scratch, hubDir)
 
-    def runFull(name: String, dir: String): Unit =
-      SparkEntry.queries(name)(spark, dir)
-        .queryExecution.toRdd.foreachPartition { it =>
-          while (it.hasNext) it.next()
-        }
-    def timed(name: String, dir: String): Double = {
-      runFull(name, dir) // warm: JIT + per-dir pins
-      val t0 = System.nanoTime()
-      runFull(name, dir)
-      (System.nanoTime() - t0) / 1e9
-    }
     // Measure the planted CUSTOMER-side hub the way g4 sees it — via
     // the SAME incidence construction the operator and the growth
     // gate's work metric share (Graph.customerDegreeStats, reading
@@ -72,15 +52,14 @@ object HubGate {
 
     val names = Seq("g1_pagerank", "g2_triangles", "g3_reach", "g4_jaccard")
     val rows = names.map { name =>
-      val plain = timed(name, scratch)
-      val hub = timed(name, hubDir)
+      val plain = Harness.warmTimed(spark, name, scratch)
+      val hub = Harness.warmTimed(spark, name, hubDir)
       val inflation = hub / math.max(plain, 0.05)
       println(f"[hub] $name%-16s plain=$plain%7.2f hub=$hub%7.2f " +
         f"inflation=$inflation%5.2f")
       (name, plain, hub, inflation)
     }
-    def fmt(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    def fmt(v: Double) = Harness.num(v)
 
     // ---------------------------------------------- extreme-hub probe
     // The planted warehouse hub (~degree 3000) bounds g4's inflation on
@@ -124,32 +103,30 @@ object HubGate {
     val (fullMaxDeg, fullPairs) =
       operators.Graph.customerDegreeStats(spark, fullDir)
     val fullT0 = System.nanoTime()
-    runFull("g4_jaccard", fullDir)
+    Harness.runFull(spark, "g4_jaccard", fullDir)
     val fullWall = (System.nanoTime() - fullT0) / 1e9
     println(f"[hub] extreme full deg=$fullMaxDeg pairs=$fullPairs%.0f " +
       f"wall=$fullWall%.2f")
 
     val flags = rows.collect { case (n, _, _, inf) if inf > Bound => n } ++
       (if (genBalance > 5.0) Seq("extreme_gen_straggler") else Nil)
-    val qJson = rows.map { case (n, p, h, inf) =>
-      s""""$n":{"plain":${fmt(p)},"hub":${fmt(h)},"inflation":${fmt(inf)}}"""
-    }.mkString("{", ",", "}")
-    val extremeJson =
-      s"""{"gen_degree":$genDeg,"gen_chunk_pair_rows":$genRows,""" +
-        s""""gen_wall_sec":${fmt(genWall)},""" +
-        s""""gen_partition_max_over_mean":${fmt(genBalance)},""" +
-        s""""full_degree":$fullMaxDeg,"full_pair_volume":${fmt(fullPairs)},""" +
-        s""""full_wall_sec":${fmt(fullWall)}}"""
-    val line =
-      s"""{"metric":"hub_gate","factor":$factor,"bound":$Bound,""" +
-        s""""hub_supplier_frac":0.3,"hot_part_order_frac":0.3,""" +
-        s""""hub_customer_degree":$hubDeg,""" +
-        s""""hub_customer_pair_contrib":$hubPairs,""" +
-        s""""flags":${flags.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        s""""extreme":$extremeJson,"queries":$qJson,"sf":"$src"}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get("hub_gate.json"),
-      (line + "\n").getBytes("UTF-8"))
-    println(line)
+    val qJson = Harness.obj(rows.map { case (n, p, h, inf) =>
+      n -> Harness.nums(Seq("plain" -> p, "hub" -> h, "inflation" -> inf))
+    })
+    val extremeJson = Harness.obj(Seq(
+      "gen_degree" -> genDeg.toString, "gen_chunk_pair_rows" -> genRows.toString,
+      "gen_wall_sec" -> fmt(genWall),
+      "gen_partition_max_over_mean" -> fmt(genBalance),
+      "full_degree" -> fullMaxDeg.toString,
+      "full_pair_volume" -> fmt(fullPairs), "full_wall_sec" -> fmt(fullWall)))
+    Harness.emit("hub_gate.json", Harness.obj(Seq(
+      "metric" -> Harness.str("hub_gate"), "factor" -> factor.toString,
+      "bound" -> Bound.toString,
+      "hub_supplier_frac" -> "0.3", "hot_part_order_frac" -> "0.3",
+      "hub_customer_degree" -> hubDeg.toString,
+      "hub_customer_pair_contrib" -> hubPairs.toString,
+      "flags" -> Harness.arr(flags), "extreme" -> extremeJson,
+      "queries" -> qJson, "sf" -> Harness.str(src))))
     spark.stop()
   }
 }

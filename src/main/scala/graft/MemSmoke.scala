@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Constrained-heap proof of the value-grid order-statistics rewrites:
@@ -39,14 +38,7 @@ object MemSmoke {
     val stage = args(0)
     val n = args.lift(1).map(_.toLong).getOrElse(30000000L)
     val sfDir = args.lift(2).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     // Every value distinct and continuous-ish: the grid IS the data,
     // the worst case for any order-statistics plan.
     def frame = spark.range(0, n).select((col("id") * 1e-6).as("x"))
@@ -117,8 +109,7 @@ object MemSmoke {
                   .select((col("id") * (t * perPool + i + 2L)).as("v"))
                   .groupBy("v").count()
                 ContextCaches.pinBounded(df, s"mem-pool-$t", 4)
-                df.queryExecution.toRdd.foreachPartition { it =>
-                  while (it.hasNext) it.next() }
+                Harness.drain(df)
               }
             } catch { case e: Throwable => errs.add(e) }
           })
@@ -132,17 +123,16 @@ object MemSmoke {
         libN.toDouble
       case q if q.startsWith("query:") =>
         val name = q.stripPrefix("query:")
-        SparkEntry.queries(name)(spark, sfDir)
-          .queryExecution.toRdd.foreachPartition { it =>
-            while (it.hasNext) it.next()
-          }
+        Harness.runFull(spark, name, sfDir)
         0.0
       case other => sys.error(s"unknown stage $other")
     }
     val sec = (System.nanoTime() - t0) / 1e9
     val heap = Runtime.getRuntime.maxMemory() / (1024 * 1024)
-    println(f"""{"metric":"mem_smoke","stage":"$stage","n":$n,""" +
-      f""""heap_mb":$heap,"sec":$sec%.1f,"result":$result%.6f}""")
+    println(Harness.obj(Seq("metric" -> Harness.str("mem_smoke"),
+      "stage" -> Harness.str(stage), "n" -> n.toString,
+      "heap_mb" -> heap.toString, "sec" -> Harness.num(sec, 1),
+      "result" -> Harness.num(result, 6))))
     spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Measures the convergence-stopped PageRank
   * ([[operators.Graph.pagerankConverged]]) against the fixed-iteration
   * oracle query at a replicated `factor`× warehouse: rounds actually
@@ -19,20 +17,9 @@ object PagerankConvergeGate {
     val src = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val scratch = args.lift(2).getOrElse(s"/tmp/graft_growth$factor")
     val eps = args.lift(3).map(_.toDouble).getOrElse(1e-2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    ScaleData.writeScaledWarehouse(spark, src, scratch, factor, cpus.toInt)
+    val spark = Harness.session()
+    ScaleData.writeScaledWarehouse(spark, src, scratch, factor, Harness.cpus)
 
-    def consume(df: org.apache.spark.sql.DataFrame): Unit =
-      df.queryExecution.toRdd.foreachPartition { it =>
-        while (it.hasNext) it.next()
-      }
     // Ranking agreement, not value agreement: rank values decay toward
     // the fixed point at ~0.85^k per round, so a converged run's
     // 6-decimal values differ from the 10-round oracle's by
@@ -41,9 +28,9 @@ object PagerankConvergeGate {
       df.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     // Warm both paths once (JIT + the shared nodes/edges pins), then
     // measure one pass each.
-    consume(SparkEntry.queries("g1_pagerank")(spark, scratch))
+    Harness.runFull(spark, "g1_pagerank", scratch)
     val t0 = System.nanoTime()
-    consume(SparkEntry.queries("g1_pagerank")(spark, scratch))
+    Harness.runFull(spark, "g1_pagerank", scratch)
     val fixedSec = (System.nanoTime() - t0) / 1e9
     val fixedRows = ranking(SparkEntry.queries("g1_pagerank")(spark, scratch))
     // Two RELATIVE tolerances: the loose one is the "stable ranking"
@@ -53,12 +40,12 @@ object PagerankConvergeGate {
     val levels = Seq(eps, eps * 1e-2)
     val measured = levels.map { e =>
       operators.Graph.pagerankConverged(spark, scratch, e) match {
-        case (df, _) => consume(df) // warm this eps level
+        case (df, _) => Harness.drain(df) // warm this eps level
       }
       val t1 = System.nanoTime()
       val (convHead, iters) =
         operators.Graph.pagerankConverged(spark, scratch, e)
-      consume(convHead)
+      Harness.drain(convHead)
       val convSec = (System.nanoTime() - t1) / 1e9
       val agree = ranking(
         operators.Graph.pagerankConverged(spark, scratch, e)._1) == fixedRows
@@ -66,20 +53,15 @@ object PagerankConvergeGate {
         f"ranking_agrees=$agree (fixed 10 rounds, $fixedSec%.2f)")
       (e, iters, convSec, agree)
     }
-    def fmt(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val lvlJson = measured.map { case (e, it, sec, agree) =>
-      s"""{"eps_rel":$e,"iters":$it,"sec":${fmt(sec)},""" +
-        s""""ranking_agrees":$agree}"""
+      Harness.obj(Seq("eps_rel" -> e.toString, "iters" -> it.toString,
+        "sec" -> Harness.num(sec), "ranking_agrees" -> agree.toString))
     }.mkString("[", ",", "]")
-    val line =
-      s"""{"metric":"pagerank_converge","factor":$factor,""" +
-        s""""fixed_iters":10,"fixed_sec":${fmt(fixedSec)},""" +
-        s""""levels":$lvlJson,"sf":"$src"}"""
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"pagerank_converge_${factor}x.json"),
-      (line + "\n").getBytes("UTF-8"))
-    println(line)
+    Harness.emit(s"pagerank_converge_${factor}x.json", Harness.obj(Seq(
+      "metric" -> Harness.str("pagerank_converge"),
+      "factor" -> factor.toString, "fixed_iters" -> "10",
+      "fixed_sec" -> Harness.num(fixedSec), "levels" -> lvlJson,
+      "sf" -> Harness.str(src))))
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Diagnostic main: run the named queries and dump the FINAL (post-AQE)
@@ -15,20 +14,11 @@ object PlanProbe {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: PlanProbe <sfDir> <query...>")
     val sfDir = args.head
-    val names = args.tail.toSeq
-    // Default 32 = the driver's bench parallelism (BENCH_r* artifacts
-    // record cpus:32) — this tool diagnoses DRIVER-run timings, so the
-    // plan must reproduce under the same cores/shuffle-partitions. Set
-    // SPARK_GRAFT_CPUS to match whatever run is being diagnosed (e.g. 4
-    // for a bare local Bench invocation).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val names = Harness.select(args.tail.toSeq)
+    // The plan must reproduce under the cores/shuffle-partitions of the
+    // run being diagnosed: set SPARK_GRAFT_CPUS to match it (the
+    // official bench artifacts record cpus:32).
+    val spark = Harness.session()
     names.foreach { name =>
       // The timer must wrap CONSTRUCTION as well as the consume — some
       // queries (the label-propagation family) do their heavy lifting
@@ -38,8 +28,7 @@ object PlanProbe {
       // (round-9 attribution) — keep the two tools' scopes identical.
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(name)(spark, sfDir)
-      // consume the exact physical plan (same contract as Bench.runFull)
-      df.queryExecution.toRdd.foreachPartition(it => while (it.hasNext) it.next())
+      Harness.drain(df) // the exact physical plan, as Bench times it
       val sec = (System.nanoTime() - t0) / 1e9
       val plan = df.queryExecution.executedPlan match {
         case a: AdaptiveSparkPlanExec => a.executedPlan // final post-AQE plan

@@ -14,7 +14,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Recall here is id-pair-set recall against the exact twin, computed
   * with the SAME pairings [[Bench]] reports, at the official sf0.1
-  * scale: (query_id, neighbor_id) for the ANN variants vs the exact
+  * scale. Twins, key columns and floors are the registry's [[Recall]]
+  * checks: (query_id, neighbor_id) for the ANN variants vs the exact
   * scan, (id_a, id_b) for SemDeDup vs the exact cosine pass, (s1, s2)
   * for the capped curation-mode jaccard vs the exact operator.
   *
@@ -22,40 +23,23 @@ import org.apache.spark.sql.SparkSession
   * Artifact: recall_gate.json (per-query recall + floor + flags).
   */
 object RecallGate {
-  /** (exact twin, approximate variants, id-pair columns) — one row per
-    * no-oracle approximate family with an exact twin in the inventory.
-    */
-  val Pairings: Seq[(String, Seq[String], Seq[String])] = Seq(
-    ("ann_topk_exact",
-      Seq("ann_topk_lsh", "ann_topk_ivf", "ann_topk_pq", "ann_topk_ivfpq"),
-      Seq("query_id", "neighbor_id")),
-    ("dd_cosine_neardup", Seq("dd_semantic"), Seq("id_a", "id_b")),
-    ("g4_jaccard", Seq("g4_jaccard_capped"), Seq("s1", "s2")))
+  private lazy val recallSpecs: Seq[(String, Recall)] =
+    SparkEntry.specs.collect { case QuerySpec(n, _, r: Recall, _) => n -> r }
 
-  /** Committed floors: measured recall at sf0.1 minus 0.02. The 0.02
-    * allowance covers cross-round corpus regeneration jitter (the
-    * driver rebuilds testdata per round with fresh seeds); every
-    * pipeline here is deterministic per corpus, so on FIXED data any
-    * drop below the floor is a code change, not noise. Raise a floor
-    * when a retune raises the measured recall; never lower one without
-    * a verdict-visible reason.
+  /** (exact twin, approximate variants, id-pair columns), one row per
+    * twin, in registry order.
     */
-  val Floors: Map[String, Double] = Map(
-    "ann_topk_lsh" -> 0.98, // r14 measured 1.00
-    "ann_topk_ivf" -> 0.88, // r14 measured 0.90
-    "ann_topk_pq" -> 0.90, // r14 measured 0.92
-    "ann_topk_ivfpq" -> 0.91, // r14 measured 0.93
-    "dd_semantic" -> 0.918, // r14 measured 0.938
-    // Exact-over-capped-expansion scoring is bit-identical to the
-    // exact operator whenever max customer degree <= the cap (true of
-    // every natural corpus measured; r15 measured 1.00 at sf0.1). The
-    // 0.02 allowance covers only a regenerated corpus that grows a
-    // genuine hub past the cap. The r14 minhash scoring this replaced
-    // measured 0.00 here — its 0.95 floor basis came from the
-    // 10-supplier sf0.001 corpus (45 candidate pairs); at sf0.1 the
-    // top-40 exact scores span 0.0434–0.0403 over 499,500 pairs, a gap
-    // no affordable signature length resolves (OPTIMIZATION_r15.md).
-    "g4_jaccard_capped" -> 0.98)
+  lazy val Pairings: Seq[(String, Seq[String], Seq[String])] =
+    recallSpecs.map { case (_, r) => (r.twin, r.keyCols) }.distinct.map {
+      case (twin, keyCols) =>
+        (twin, recallSpecs.collect {
+          case (n, r) if r.twin == twin && r.keyCols == keyCols => n
+        }, keyCols)
+    }
+
+  /** Each [[Recall]]-checked query's committed floor. */
+  lazy val Floors: Map[String, Double] =
+    recallSpecs.map { case (n, r) => n -> r.floor }.toMap
 
   /** The gate's entire flag policy, pure for the spec: a floored query
     * flags when its measured recall is under the floor OR when the
@@ -69,43 +53,39 @@ object RecallGate {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def pairs(q: String, keyCols: Seq[String]): Set[(Long, Long)] =
-      SparkEntry.queries(q)(spark, sfDir)
-        .select(keyCols.head, keyCols.tail: _*).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recalls = Pairings.flatMap { case (exactName, variants, keyCols) =>
-      val exact = pairs(exactName, keyCols)
-      if (exact.isEmpty) Seq.empty
-      else variants.map { q =>
-        val r = pairs(q, keyCols).count(exact.contains).toDouble / exact.size
-        println(f"[recall_gate] $q%-20s vs $exactName%-18s recall=$r%.3f " +
-          f"floor=${Floors.getOrElse(q, 0.0)}%.3f")
+    val spark = Harness.session()
+    val recalls = Pairings.flatMap { case (twin, variants, keyCols) =>
+      recallOf(spark, sfDir, twin, variants, keyCols).map { case (q, r) =>
+        println(f"[recall_gate] $q%-20s vs $twin%-18s recall=$r%.3f " +
+          f"floor=${Floors(q)}%.3f")
         q -> r
       }
     }.toMap
     val flags = flagged(recalls, Floors)
-
-    def fmt(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
-    def qJson(m: Seq[(String, Double)]) =
-      m.map { case (k, v) => s""""$k":${fmt(v)}""" }.mkString("{", ",", "}")
-    val line =
-      s"""{"metric":"recall_gate","n":${Floors.size},""" +
-        s""""flags":${flags.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        s""""recall":${qJson(recalls.toSeq.sortBy(_._1))},""" +
-        s""""floors":${qJson(Floors.toSeq.sortBy(_._1))},"sf":"$sfDir"}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get("recall_gate.json"),
-      (line + "\n").getBytes("UTF-8"))
-    println(line)
+    Harness.emit("recall_gate.json", Harness.obj(Seq(
+      "metric" -> Harness.str("recall_gate"),
+      "n" -> Floors.size.toString,
+      "flags" -> Harness.arr(flags),
+      "recall" -> Harness.nums(recalls.toSeq.sortBy(_._1), 4),
+      "floors" -> Harness.nums(Floors.toSeq.sortBy(_._1), 4),
+      "sf" -> Harness.str(sfDir))))
     spark.stop()
+  }
+
+  /** Recall of each variant's `keyCols` pair set against the exact
+    * twin's. Empty when the twin returns no pairs (corpus smaller than
+    * the query set): recall would be 0/0 = NaN.
+    */
+  def recallOf(spark: SparkSession, sfDir: String, twin: String,
+      variants: Seq[String], keyCols: Seq[String]): Seq[(String, Double)] = {
+    def pairs(q: String): Set[(Long, Long)] =
+      SparkEntry.queries(q)(spark, sfDir)
+        .select(keyCols.head, keyCols.tail: _*).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val exact = pairs(twin)
+    if (exact.isEmpty) Seq.empty
+    else variants.map { q =>
+      q -> pairs(q).count(exact.contains).toDouble / exact.size
+    }
   }
 }

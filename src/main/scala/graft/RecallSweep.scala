@@ -14,12 +14,7 @@ import org.apache.spark.sql.SparkSession
 object RecallSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     val exact = operators.Similarity.annTopkExact(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
     // Exact near-dup PAIR baseline for the sem: mode — computed once,

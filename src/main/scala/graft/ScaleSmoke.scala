@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-smoke utility: replicates the events table `factor`× (unique
@@ -16,14 +15,7 @@ object ScaleSmoke {
     val factor = args.headOption.map(_.toInt).getOrElse(100)
     val src = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val scratch = args.lift(2).getOrElse("/tmp/graft_scale_events")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
 
     val dir = new java.io.File(scratch)
     if (!dir.exists()) {
@@ -34,17 +26,14 @@ object ScaleSmoke {
           col("ts"),
           (col("user_id") + col("rep") * 1000000L).as("user_id"),
           col("event_type"), col("value"))
-        .repartition(cpus.toInt * 2)
+        .repartition(Harness.cpus * 2)
         .write.mode("overwrite").parquet(scratch)
     }
     val big = spark.read.parquet(scratch)
     val rows = big.count()
 
-    // Materialize the exact plan (count() would prune window exprs).
     def full(df: org.apache.spark.sql.DataFrame): Long = {
-      df.queryExecution.toRdd.foreachPartition { it =>
-        while (it.hasNext) it.next()
-      }
+      Harness.drain(df)
       0L
     }
     // GRAFT_SMOKE_ONLY=substr[,substr...] restricts the run to stages
@@ -242,7 +231,7 @@ object ScaleSmoke {
       docs.crossJoin(spark.range(0, docsFactor).select(col("id").as("rep")))
         .select((col("doc_id") + col("rep") * n * docsFactor).as("doc_id"),
           col("text"), col("lang"), col("source"), col("n_chars"))
-        .repartition(cpus.toInt)
+        .repartition(Harness.cpus)
         .write.mode("overwrite").parquet(s"$docScratch/documents.parquet")
     }
     val dedupResults = Seq(
@@ -380,7 +369,7 @@ object ScaleSmoke {
            |  AS text""".stripMargin,
         "'en' AS lang", "'webhot' AS source")
         .withColumn("n_chars", length(col("text")).cast("long"))
-        .repartition(cpus.toInt)
+        .repartition(Harness.cpus)
         .write.mode("overwrite").parquet(s"$hotScratch/documents.parquet")
     }
     val hotResults = Seq(
@@ -400,7 +389,7 @@ object ScaleSmoke {
     val vecScratch = s"$scratch-vecs"
     if (!new java.io.File(vecScratch).exists()) {
       ScaleData.grownVectors(spark, src, 10)
-        .repartition(cpus.toInt)
+        .repartition(Harness.cpus)
         .write.mode("overwrite").parquet(s"$vecScratch/embeddings.parquet")
     }
     val knnResults = Seq(
@@ -437,7 +426,7 @@ object ScaleSmoke {
            |       ELSE $scatExpr END)
            |  AS array<float>) AS embedding""".stripMargin,
         "cast(0 AS int) AS label")
-        .repartition(cpus.toInt)
+        .repartition(Harness.cpus)
         .write.mode("overwrite").parquet(s"$vecSkewScratch/embeddings.parquet")
     }
     val skewVecResults = Seq(
@@ -549,14 +538,14 @@ object ScaleSmoke {
       knnResults ++ skewVecResults ++ annTimes.toSeq ++ pipeResults ++
       streamResults)
       .filter { case (_, v, _) => v >= 0 }
-      .map { case (k, v, _) => s""""$k":$v""" }.mkString("{", ",", "}")
+      .map { case (k, v, _) => k -> v.toString }
     val pairCounts = dedupResults.filter { case (_, v, _) => v >= 0 }
-      .map { case (k, _, n) => s""""$k":$n""" }
-      .mkString("{", ",", "}")
-    val recallJson = recall10x.map { case (k, v) =>
-      s""""$k":${"%.3f".formatLocal(java.util.Locale.ROOT, v)}""" }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"scale_smoke","rows":$rows,"factor":$factor,"docs_factor":$docsFactor,"queries":$qs,"dedup_pairs":$pairCounts,"recall_10x":$recallJson}""")
+      .map { case (k, _, n) => k -> n.toString }
+    println(Harness.obj(Seq("metric" -> Harness.str("scale_smoke"),
+      "rows" -> rows.toString, "factor" -> factor.toString,
+      "docs_factor" -> docsFactor.toString, "queries" -> Harness.obj(qs),
+      "dedup_pairs" -> Harness.obj(pairCounts),
+      "recall_10x" -> Harness.nums(recall10x))))
     spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** SemDeDup persisted-index scale probe: separates the ONE-TIME index
   * build cost (k-means train over the full corpus + the N·cells
   * assignment pass + the partitioned write) from the SERVE cost
@@ -24,24 +22,15 @@ object SemIndexGate {
     val factor = args.headOption.map(_.toInt).getOrElse(10)
     val src = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val scratch = args.lift(2).getOrElse(s"/tmp/graft_growth$factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    ScaleData.writeScaledWarehouse(spark, src, scratch, factor, cpus.toInt)
+    val spark = Harness.session()
+    ScaleData.writeScaledWarehouse(spark, src, scratch, factor, Harness.cpus)
     val indexPath = s"${scratch}_semindex"
     org.apache.commons.io.FileUtils
       .deleteQuietly(new java.io.File(indexPath))
 
     def consume(df: org.apache.spark.sql.DataFrame): Long = {
       val t0 = System.nanoTime()
-      df.queryExecution.toRdd.foreachPartition { it =>
-        while (it.hasNext) it.next()
-      }
+      Harness.drain(df)
       System.nanoTime() - t0
     }
     // In-session operator first: the COLD wall prices train + assign +
@@ -63,19 +52,13 @@ object SemIndexGate {
       .semanticPairsAgainstIndex(spark, indexPath).count()
     val nVec = spark.read.parquet(s"$indexPath/assignments")
       .select("vec_id").distinct().count()
-    def s(ns: Long) = String.format(java.util.Locale.ROOT, "%.3f",
-      Double.box(ns / 1e9))
-    val line =
-      s"""{"metric":"sem_index_gate","factor":$factor,""" +
-        s""""n_vectors":$nVec,"pairs":$pairs,""" +
-        s""""build_sec":${s(buildNs)},"serve_sec":${s(serveNs)},""" +
-        s""""insession_cold_sec":${s(coldNs)},""" +
-        s""""insession_warm_sec":${s(warmNs)},""" +
-        s""""index_path":"$indexPath","sf":"$src"}"""
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"sem_index_gate_${factor}x.json"),
-      (line + "\n").getBytes("UTF-8"))
-    println(line)
+    def s(ns: Long) = Harness.num(ns / 1e9)
+    Harness.emit(s"sem_index_gate_${factor}x.json", Harness.obj(Seq(
+      "metric" -> Harness.str("sem_index_gate"), "factor" -> factor.toString,
+      "n_vectors" -> nVec.toString, "pairs" -> pairs.toString,
+      "build_sec" -> s(buildNs), "serve_sec" -> s(serveNs),
+      "insession_cold_sec" -> s(coldNs), "insession_warm_sec" -> s(warmNs),
+      "index_path" -> Harness.str(indexPath), "sf" -> Harness.str(src))))
     spark.stop()
   }
 }

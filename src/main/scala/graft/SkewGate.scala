@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Realistic-skew scale gate: the growth gates measure clone-grown data
   * whose key frequencies stay uniform-ish, and [[HubGate]] plants ONE
   * adversarial node; this gate times the order-reading heavy queries on
@@ -33,15 +31,8 @@ object SkewGate {
     val src = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val scratch = args.lift(2).getOrElse(s"/tmp/graft_growth$factor")
     val alpha = 1.2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    ScaleData.writeScaledWarehouse(spark, src, scratch, factor, cpus.toInt)
+    val spark = Harness.session()
+    ScaleData.writeScaledWarehouse(spark, src, scratch, factor, Harness.cpus)
     val z1 = s"${scratch}_zipf1"
     val zN = s"${scratch}_zipf$factor"
     ScaleData.writeZipfWarehouse(spark, src, z1, alpha)
@@ -51,24 +42,13 @@ object SkewGate {
     println(s"[skew] zipf alpha=$alpha max_customer_degree " +
       s"1x=$maxDeg1 ${factor}x=$maxDegN pair_volume_${factor}x=$pairVolN")
 
-    def runFull(name: String, dir: String): Unit =
-      SparkEntry.queries(name)(spark, dir)
-        .queryExecution.toRdd.foreachPartition { it =>
-          while (it.hasNext) it.next()
-        }
-    def timed(name: String, dir: String): Double = {
-      runFull(name, dir) // warm: JIT + per-dir pins
-      val t0 = System.nanoTime()
-      runFull(name, dir)
-      (System.nanoTime() - t0) / 1e9
-    }
     val work = scala.collection.mutable.Map.empty[String, (Double, Double)]
     val rows = Names.map { name =>
       val r = try {
-        val t1 = timed(name, z1)
-        val tN = timed(name, zN)
-        GrowthGate.workGated.get(name).foreach { case (_, _, metric, _) =>
-          work(name) = (metric(spark, z1), metric(spark, zN))
+        val t1 = Harness.warmTimed(spark, name, z1)
+        val tN = Harness.warmTimed(spark, name, zN)
+        GrowthGate.workGated(name).foreach { w =>
+          work(name) = (w.metric(spark, z1), w.metric(spark, zN))
         }
         (name, t1, tN, "")
       } catch {
@@ -111,8 +91,8 @@ object SkewGate {
     // chunking failed to spread) — that check stays. Non-work-gated
     // queries keep the full GrowthGate policy.
     def skewFlagged(n: String, t1: Double, tN: Double): Boolean =
-      GrowthGate.workGated.get(n) match {
-        case Some((_, wallSlack, _, _)) =>
+      GrowthGate.workGated(n) match {
+        case Some(WorkGated(_, wallSlack, _, _)) =>
           work.get(n).exists { case (w1, wN) =>
             tN / math.max(t1, 0.05) >
               wallSlack * math.max(wN / math.max(w1, 1.0), 1.0) &&
@@ -124,30 +104,18 @@ object SkewGate {
       case (n, t1, tN, "") if skewFlagged(n, t1, tN) => n
     }
     val failed = rows.collect { case (n, _, _, e) if e.nonEmpty => n }
-    def fmt(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def arr(xs: Seq[String]) =
-      xs.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val qJson = rows.map { case (n, t1, tN, _) =>
-      s""""$n":{"t1":${fmt(t1)},"t$factor":${fmt(tN)},"growth":${
-        fmt(if (t1 > 0) tN / math.max(t1, 0.05) else -1.0)}${
-        work.get(n).map { case (w1, wN) =>
-          s""","work1":${fmt(w1)},"work$factor":${fmt(wN)},""" +
-            s""""work_growth":${fmt(wN / math.max(w1, 1.0))}"""
-        }.getOrElse("")}}"""
-    }.mkString("{", ",", "}")
-    val line =
-      s"""{"metric":"growth_gate_skew","factor":$factor,"alpha":$alpha,""" +
-        s""""n":${rows.size},"max_customer_degree_1x":$maxDeg1,""" +
-        s""""max_customer_degree_${factor}x":$maxDegN,""" +
-        s""""capped_recall":{"z1":${fmt(recall1)},""" +
-        s""""z$factor":${fmt(recallN)}},""" +
-        s""""flags":${arr(flags)},"failed":${arr(failed)},""" +
-        s""""queries":$qJson,"sf":"$src"}"""
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("growth_gate_skew.json"),
-      (line + "\n").getBytes("UTF-8"))
-    println(line)
+    Harness.emit("growth_gate_skew.json", Harness.obj(Seq(
+      "metric" -> Harness.str("growth_gate_skew"),
+      "factor" -> factor.toString, "alpha" -> alpha.toString,
+      "n" -> rows.size.toString,
+      "max_customer_degree_1x" -> maxDeg1.toString,
+      s"max_customer_degree_${factor}x" -> maxDegN.toString,
+      "capped_recall" -> Harness.nums(Seq("z1" -> recall1,
+        s"z$factor" -> recallN)),
+      "flags" -> Harness.arr(flags.sorted),
+      "failed" -> Harness.arr(failed.sorted),
+      "queries" -> GrowthGate.queriesJson(factor, rows, work),
+      "sf" -> Harness.str(src))))
     spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Streaming scale gate: the 8 streaming twins have batch-equivalence
   * and crash-replay specs but, before this, no measured scale point.
   * This gate drives [[streaming.StreamingDedup.firstSeen]] — the
@@ -34,15 +32,8 @@ object StreamGate {
     val factor = args.headOption.map(_.toInt).getOrElse(10)
     val src = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val scratch = args.lift(2).getOrElse(s"/tmp/graft_growth$factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    ScaleData.writeScaledWarehouse(spark, src, scratch, factor, cpus.toInt)
+    val spark = Harness.session()
+    ScaleData.writeScaledWarehouse(spark, src, scratch, factor, Harness.cpus)
     import spark.implicits._
 
     /** Feed the dir's documents through firstSeen in [[Batches]] equal
@@ -91,22 +82,18 @@ object StreamGate {
       s"slope_${factor}x" -> slopeN).collect {
       case (k, v) if v > Bound => k
     }
-    def fmt(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
-    val line =
-      s"""{"metric":"stream_gate","op":"dedup_first_seen","factor":$factor,""" +
-        s""""bound":$Bound,"batches":$Batches,""" +
-        s""""docs_1x":$n1,"docs_${factor}x":$nN,""" +
-        s""""docs_per_sec_1x":${fmt(n1 / t1)},""" +
-        s""""docs_per_sec_${factor}x":${fmt(nN / tN)},""" +
-        s""""per_doc_growth":${fmt(growth)},""" +
-        s""""slope_1x":${fmt(slope1)},"slope_${factor}x":${fmt(slopeN)},""" +
-        s""""emitted_1x":$e1,"emitted_${factor}x":$eN,""" +
-        s""""flags":${flags.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        s""""sf":"$src"}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get("stream_gate.json"),
-      (line + "\n").getBytes("UTF-8"))
-    println(line)
+    def fmt(v: Double) = Harness.num(v, 4)
+    Harness.emit("stream_gate.json", Harness.obj(Seq(
+      "metric" -> Harness.str("stream_gate"),
+      "op" -> Harness.str("dedup_first_seen"), "factor" -> factor.toString,
+      "bound" -> Bound.toString, "batches" -> Batches.toString,
+      "docs_1x" -> n1.toString, s"docs_${factor}x" -> nN.toString,
+      "docs_per_sec_1x" -> fmt(n1 / t1),
+      s"docs_per_sec_${factor}x" -> fmt(nN / tN),
+      "per_doc_growth" -> fmt(growth),
+      "slope_1x" -> fmt(slope1), s"slope_${factor}x" -> fmt(slopeN),
+      "emitted_1x" -> e1.toString, s"emitted_${factor}x" -> eN.toString,
+      "flags" -> Harness.arr(flags), "sf" -> Harness.str(src))))
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Streaming differential gate: replays the batch corpus through every
@@ -31,14 +31,7 @@ object StreamVerify {
     val scratch = args.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("graft_stream_verify")
         .toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     import spark.implicits._
 
     /** Write `df` as `parts` single-file drops in `orderCol` order with
@@ -346,22 +339,17 @@ object StreamVerify {
         streamed.size.toLong, batch.size.toLong)
     }
 
-    def fmt(b: Boolean) = if (b) "true" else "false"
-    val twinsJson = results.map { case (n, ok, s, b, err) =>
-      s""""$n":{"match":${fmt(ok)},"streamed":$s,"batch":$b""" +
-        (if (err.nonEmpty) s""","error":"${err.replace("\"", "'")}"}"""
-         else "}")
-    }.mkString("{", ",", "}")
+    val twinsJson = Harness.obj(results.map { case (n, ok, s, b, err) =>
+      n -> Harness.obj(Seq("match" -> ok.toString, "streamed" -> s.toString,
+        "batch" -> b.toString) ++
+        (if (err.nonEmpty) Seq("error" -> Harness.str(err)) else Nil))
+    })
     val mismatch = results.collect { case (n, false, _, _, _) => n }
-    val line =
-      s"""{"metric":"stream_verify","n":${results.size},""" +
-        s""""all_match":${fmt(mismatch.isEmpty)},""" +
-        s""""mismatch":${mismatch.map("\"" + _ + "\"")
-          .mkString("[", ",", "]")},""" +
-        s""""twins":$twinsJson,"sf":"$sfDir"}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get("stream_verify.json"),
-      (line + "\n").getBytes("UTF-8"))
-    println(line)
+    Harness.emit("stream_verify.json", Harness.obj(Seq(
+      "metric" -> Harness.str("stream_verify"), "n" -> results.size.toString,
+      "all_match" -> mismatch.isEmpty.toString,
+      "mismatch" -> Harness.arr(mismatch), "twins" -> twinsJson,
+      "sf" -> Harness.str(sfDir))))
     spark.stop()
   }
 }

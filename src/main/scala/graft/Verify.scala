@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,51 +8,29 @@ object Verify {
     val outDir = args(1)
     // Optional extra args: restrict the dump to these query names (dev
     // iteration); the driver passes exactly two args → full dump.
-    val only = args.drop(2).toSet
-    val unknown = only.diff(SparkEntry.queries.keySet)
-    require(unknown.isEmpty,
-      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = Harness.select(args.drop(2).toSeq)
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     // Failures must be VISIBLE in the artifact, not just on stderr: round
     // 6's driver artifact simply lacked the 55 failed queries' entries
     // and the cause had to be re-derived by hand. errors.json names each
     // failed query with its exception class + first message line.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val selected = SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    selected.foreach { name =>
+      try SparkEntry.queries(name)(spark, sfDir).coalesce(1).write
+        .mode("overwrite").parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         errors(name) = errLine(name, e)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    Files.writeString(Paths.get(s"$outDir/errors.json"),
-      errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+    // Sorted keys: two dumps diff byte for byte.
+    def sortedObj(m: Iterable[(String, String)]): String =
+      Harness.obj(m.toSeq.sortBy(_._1).map { case (k, v) =>
+        k -> Harness.str(v) })
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      sortedObj(SparkEntry.oracleSql))
+    Files.writeString(Paths.get(s"$outDir/errors.json"), sortedObj(errors))
     println(s"[verify] ${selected.size - errors.size} written, " +
       s"${errors.size} failed" +
       errors.headOption.map { case (n, m) => s"; first: $n -> $m" }.getOrElse(""))

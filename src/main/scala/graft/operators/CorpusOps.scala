@@ -624,25 +624,8 @@ object CorpusOps {
       .orderBy("doc_id")
   }
 
-  val queries: Map[String, Query] = Map(
-    "pp_quality_filter" -> ppQualityFilter _,
-    "pp_line_dedup" -> ppLineDedup _,
-    "pp_decontaminate" -> ppDecontaminate _,
-    "pp_temperature_mix" -> ppTemperatureMix _,
-    "pp_ppl_buckets" -> ppPplBuckets _,
-    "pp_domain_mix" -> ppDomainMix _,
-    "pp_hash_split" -> ppHashSplit _,
-    "pp_stratified" -> ppStratified _,
-    "pp_token_budget" -> ppTokenBudget _,
-    "pp_fixed_k" -> ppFixedK _,
-    "pp_pack" -> ppPack _,
-    "io_jsonl_roundtrip" -> ioJsonl _,
-    "io_csv_roundtrip" -> ioCsv _,
-    "io_orc_roundtrip" -> ioOrc _,
-    "io_text_scan" -> ioTextScan _)
-
-  val oracle: Map[String, String] = Map(
-    "pp_quality_filter" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("pp_quality_filter", ppQualityFilter _, Oracle(
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w
         |  FROM documents),
         |m AS (SELECT doc_id, w, len(w) AS nw,
@@ -662,8 +645,8 @@ object CorpusOps {
         |  (nw >= 20 AND nw <= 10000) AND
         |    (mean_len >= 3.0 AND mean_len <= 10.0) AND
         |    n_stop >= 2 AND top_freq <= 0.25 AS keep
-        |FROM m ORDER BY doc_id""".stripMargin,
-    "pp_line_dedup" ->
+        |FROM m ORDER BY doc_id""".stripMargin)),
+    QuerySpec("pp_line_dedup", ppLineDedup _, Oracle(
       // The oracle states first-occurrence-wins as a window rank (the
       // natural SQL form); the Spark plan states it as a map-side
       // combinable min aggregate — the differential check proves the
@@ -682,8 +665,8 @@ object CorpusOps {
         |    FROM segs) WHERE rn = 1)
         |SELECT doc_id, count(*) AS n_kept,
         |  string_agg(seg, ' ' ORDER BY seg_idx) AS text_deduped
-        |FROM keep GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "pp_temperature_mix" ->
+        |FROM keep GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+    QuerySpec("pp_temperature_mix", ppTemperatureMix _, Oracle(
       """WITH c AS (SELECT lang, count(*) AS n_l FROM documents GROUP BY 1),
         |m AS (SELECT min(n_l) AS n_min FROM c),
         |b AS (SELECT doc_id, lang,
@@ -693,8 +676,8 @@ object CorpusOps {
         |SELECT b.doc_id, b.lang, b.bucket
         |FROM b JOIN c USING (lang) CROSS JOIN m
         |WHERE b.bucket * b.bucket * c.n_l < 1000000 * m.n_min
-        |ORDER BY doc_id""".stripMargin,
-    "pp_ppl_buckets" ->
+        |ORDER BY doc_id""".stripMargin)),
+    QuerySpec("pp_ppl_buckets", ppPplBuckets _, Oracle(
       s"""WITH tok AS (SELECT doc_id, lang,
          |    unnest(string_split(text, ' ')) AS token FROM documents),
          |freq AS (SELECT token, count(*) AS cnt FROM tok GROUP BY token),
@@ -722,8 +705,8 @@ object CorpusOps {
          |       WHEN sc.score <= t2 THEN 'middle'
          |       ELSE 'head' END AS bucket
          |FROM sc LEFT JOIN thr USING (lang)
-         |ORDER BY doc_id""".stripMargin,
-    "pp_decontaminate" ->
+         |ORDER BY doc_id""".stripMargin)),
+    QuerySpec("pp_decontaminate", ppDecontaminate _, Oracle(
       s"""WITH w0 AS (SELECT doc_id,
          |  ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT % 100
          |    AS bucket,
@@ -734,8 +717,8 @@ object CorpusOps {
          |be AS (SELECT DISTINCT unnest(sh) AS g FROM t WHERE bucket >= 90)
          |SELECT tr.doc_id, count(DISTINCT tr.g) AS n_shared
          |FROM tr JOIN be USING (g)
-         |GROUP BY tr.doc_id ORDER BY doc_id""".stripMargin,
-    "pp_domain_mix" ->
+         |GROUP BY tr.doc_id ORDER BY doc_id""".stripMargin)),
+    QuerySpec("pp_domain_mix", ppDomainMix _, Oracle(
       """WITH c AS (SELECT source, count(*) AS n_s FROM documents GROUP BY 1),
         |t AS (SELECT count(*) AS n FROM documents),
         |b AS (SELECT doc_id, source,
@@ -745,8 +728,8 @@ object CorpusOps {
         |FROM documents)
         |SELECT b.doc_id, b.source FROM b JOIN c USING (source) CROSS JOIN t
         |WHERE b.bucket * c.n_s < b.permille * t.n
-        |ORDER BY doc_id""".stripMargin,
-    "pp_hash_split" ->
+        |ORDER BY doc_id""".stripMargin)),
+    QuerySpec("pp_hash_split", ppHashSplit _, Oracle(
       """WITH b AS (SELECT lang,
         |  ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT % 100
         |    AS bucket
@@ -755,8 +738,8 @@ object CorpusOps {
         |  CASE WHEN bucket < 80 THEN 'train'
         |       WHEN bucket < 90 THEN 'val' ELSE 'test' END AS split,
         |  count(*) AS n
-        |FROM b GROUP BY 1, 2 ORDER BY lang, split""".stripMargin,
-    "pp_stratified" ->
+        |FROM b GROUP BY 1, 2 ORDER BY lang, split""".stripMargin)),
+    QuerySpec("pp_stratified", ppStratified _, Oracle(
       """WITH b AS (SELECT doc_id, lang,
         |  ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 5, 4))::BIGINT % 1000
         |    AS bucket
@@ -765,8 +748,8 @@ object CorpusOps {
         |WHERE bucket < CASE lang WHEN 'en' THEN 900 WHEN 'es' THEN 700
         |  WHEN 'de' THEN 500 WHEN 'fr' THEN 300 WHEN 'zh' THEN 100
         |  ELSE 0 END
-        |ORDER BY doc_id""".stripMargin,
-    "pp_token_budget" ->
+        |ORDER BY doc_id""".stripMargin)),
+    QuerySpec("pp_token_budget", ppTokenBudget _, Oracle(
       s"""WITH t AS (SELECT doc_id, source,
          |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
          |  ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 17, 4))::BIGINT
@@ -779,8 +762,8 @@ object CorpusOps {
          |  FROM t)
          |SELECT doc_id, source, n_tokens, cum_tokens FROM c
          |WHERE cum_tokens - n_tokens < $SourceTokenBudget
-         |ORDER BY doc_id""".stripMargin,
-    "pp_fixed_k" ->
+         |ORDER BY doc_id""".stripMargin)),
+    QuerySpec("pp_fixed_k", ppFixedK _, Oracle(
       s"""WITH t AS (SELECT doc_id, source, lang,
          |  ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 21, 4))::BIGINT
          |    AS ord
@@ -790,8 +773,8 @@ object CorpusOps {
          |    AS BIGINT) AS rank
          |  FROM t)
          |SELECT doc_id, source, lang, rank FROM r WHERE rank <= $FixedK
-         |ORDER BY doc_id""".stripMargin,
-    "pp_pack" ->
+         |ORDER BY doc_id""".stripMargin)),
+    QuerySpec("pp_pack", ppPack _, Oracle(
       s"""WITH t AS (SELECT doc_id,
          |  ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 13, 4))::BIGINT
          |    % $PackShards AS shard,
@@ -804,20 +787,20 @@ object CorpusOps {
          |SELECT shard, doc_id, n_tokens,
          |  CAST((cum - n_tokens) // $PackSeqLen AS BIGINT) AS seq_idx,
          |  CAST((cum - n_tokens) % $PackSeqLen AS BIGINT) AS seq_offset
-         |FROM c ORDER BY shard, doc_id""".stripMargin,
-    "io_jsonl_roundtrip" ->
+         |FROM c ORDER BY shard, doc_id""".stripMargin)),
+    QuerySpec("io_jsonl_roundtrip", ioJsonl _, Oracle(
       """SELECT doc_id, text, lang, source, n_chars
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "io_csv_roundtrip" ->
+        |FROM documents ORDER BY doc_id""".stripMargin)),
+    QuerySpec("io_csv_roundtrip", ioCsv _, Oracle(
       """SELECT doc_id, text, lang, source, n_chars
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "io_orc_roundtrip" ->
+        |FROM documents ORDER BY doc_id""".stripMargin)),
+    QuerySpec("io_orc_roundtrip", ioOrc _, Oracle(
       """SELECT doc_id, text, lang, source, n_chars
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "io_text_scan" ->
+        |FROM documents ORDER BY doc_id""".stripMargin)),
+    QuerySpec("io_text_scan", ioTextScan _, Oracle(
       """SELECT l_orderkey % 7 AS bucket, count(*) AS n,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE)
         |    AS sum_price
         |FROM lineitem WHERE l_quantity > 25.0
-        |GROUP BY 1 ORDER BY bucket""".stripMargin)
+        |GROUP BY 1 ORDER BY bucket""".stripMargin)))
 }

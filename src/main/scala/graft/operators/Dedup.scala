@@ -93,7 +93,7 @@ object Dedup {
     * then verified with the exact Jaccard. Same result set as the naive
     * O(n²) oracle, scalable shuffle profile.
     */
-  private def ngramJaccard(s: SparkSession, d: String): DataFrame = {
+  private[graft] def ngramJaccard(s: SparkSession, d: String): DataFrame = {
     // Shingle sets are reused by three branches (freq stats, prefix index,
     // verification) — materialize once. Spark's CacheManager dedups the
     // identical plan across repeated invocations, so this is the
@@ -743,7 +743,7 @@ object Dedup {
     * pp_hash_split, applied to the cluster label; one extra column on
     * the label-propagation output, no new shuffle.
     */
-  private def clusterSplit(s: SparkSession, d: String): DataFrame = {
+  private[graft] def clusterSplit(s: SparkSession, d: String): DataFrame = {
     val bucket = conv(substring(md5(col("cluster").cast("string")), 1, 4),
       16, 10).cast("long") % 100
     val split = when(bucket < 80, "train").when(bucket < 90, "val")
@@ -1077,22 +1077,6 @@ object Dedup {
 
   // ------------------------------------------------------------ registry
 
-  val queries: Map[String, Query] = Map(
-    "dd_containment" -> containment _,
-    "dd_span_coverage" -> spanCoverage _,
-    "dd_exact" -> exact _,
-    "dd_ngram_jaccard" -> ngramJaccard _,
-    "dd_minhash_lsh" -> minhashLsh _,
-    "dd_minhash_est" -> minhashEstimate _,
-    "dd_simhash" -> simhashSigs _,
-    "dd_simhash_pairs" -> simhashPairs _,
-    "dd_clusters" -> clusters _,
-    "dd_keep_best" -> keepBest _,
-    "dd_incremental" -> incremental _,
-    "pp_cluster_split" -> clusterSplit _,
-    "dd_edit_distance" -> editDistance _,
-    "dd_cosine_neardup" -> cosineNearDup _)
-
   /** The recursive connected-components CTE shared by the dd_clusters
     * and dd_keep_best oracles: yields `reach(src, dst)` whose per-src
     * minimum is the cluster label.
@@ -1114,8 +1098,8 @@ object Dedup {
        |  UNION
        |  SELECT r.src, e2.b FROM reach r JOIN edges e2 ON r.dst = e2.a)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "dd_containment" -> {
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("dd_containment", containment _, Oracle {
       // Containment twin of prefixCandSql: probe prefix (x from pref)
       // against the FULL ranked postings (y from pp), size/positional
       // prunes keyed to ⌈τ·x.n⌉ alone. CAST(τ AS DOUBLE) for the same
@@ -1144,8 +1128,8 @@ object Dedup {
          |SELECT doc_a, doc_b, containment FROM v
          |WHERE containment >= $tauD
          |ORDER BY doc_a, doc_b""".stripMargin
-    },
-    "dd_span_coverage" -> {
+    }),
+    QuerySpec("dd_span_coverage", spanCoverage _, Oracle {
       val parts = (0 until SpanK).map(j => s"w[i+$j]").mkString(" || ' ' || ")
       s"""WITH w0 AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          |g AS (SELECT doc_id,
@@ -1160,8 +1144,8 @@ object Dedup {
          |    / count(*), 6) AS dup_frac
          |FROM g JOIN df USING (gram)
          |GROUP BY doc_id ORDER BY doc_id""".stripMargin
-    },
-    "dd_incremental" -> {
+    }),
+    QuerySpec("dd_incremental", incremental _, Oracle {
       val sh5 = {
         val parts = (0 until 5).map(j => s"w[i+$j]").mkString(" || ' ' || ")
         s"""list_distinct(CASE WHEN len(w) >= 5
@@ -1179,12 +1163,12 @@ object Dedup {
          |SELECT doc_id, lang,
          |  CASE WHEN h IN (SELECT h FROM hist) THEN 1 ELSE 0 END AS is_dup
          |FROM inc ORDER BY doc_id""".stripMargin
-    },
-    "dd_exact" ->
+    }),
+    QuerySpec("dd_exact", exact _, Oracle(
       """SELECT md5(text) AS text_hash, min(doc_id) AS keep_id,
         |  count(*) AS n_copies
-        |FROM documents GROUP BY md5(text) ORDER BY keep_id""".stripMargin,
-    "dd_ngram_jaccard" ->
+        |FROM documents GROUP BY md5(text) ORDER BY keep_id""".stripMargin)),
+    QuerySpec("dd_ngram_jaccard", ngramJaccard _, Oracle(
       s"""WITH w0 AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          |t AS (SELECT doc_id, ${shinglesSql(3)} AS sh FROM w0),
          |t2 AS (SELECT doc_id, sh FROM t WHERE len(sh) > 0),
@@ -1194,9 +1178,9 @@ object Dedup {
          |    (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) AS jaccard
          |  FROM cand JOIN t2 a ON a.doc_id = doc_a JOIN t2 b ON b.doc_id = doc_b)
          |SELECT doc_a, doc_b, jaccard FROM j WHERE jaccard >= $JaccardTau
-         |ORDER BY doc_a, doc_b""".stripMargin,
-    "dd_minhash_lsh" -> minhashOracle,
-    "dd_minhash_est" -> {
+         |ORDER BY doc_a, doc_b""".stripMargin)),
+    QuerySpec("dd_minhash_lsh", minhashLsh _, Oracle(minhashOracle)),
+    QuerySpec("dd_minhash_est", minhashEstimate _, Oracle {
       val agree = (0 until NumHashes).map(i =>
         s"CASE WHEN a.m$i = b.m$i THEN 1 ELSE 0 END").mkString(" + ")
       s"""WITH $minhashCandSql
@@ -1205,8 +1189,8 @@ object Dedup {
          |JOIN sigs a ON a.doc_id = doc_a
          |JOIN sigs b ON b.doc_id = doc_b
          |ORDER BY doc_a, doc_b""".stripMargin
-    },
-    "dd_edit_distance" ->
+    }),
+    QuerySpec("dd_edit_distance", editDistance _, Oracle(
       s"""WITH $minhashCandSql
          |SELECT doc_a, doc_b,
          |  CAST(levenshtein(a.text, b.text) AS INT) AS edit_dist
@@ -1214,12 +1198,20 @@ object Dedup {
          |JOIN documents a ON a.doc_id = doc_a
          |JOIN documents b ON b.doc_id = doc_b
          |WHERE levenshtein(a.text, b.text) <= $EditMax
-         |ORDER BY doc_a, doc_b""".stripMargin,
-    "dd_clusters" ->
+         |ORDER BY doc_a, doc_b""".stripMargin),
+      growth = Some(WorkGated(1.5, 2.5, editDistanceWork,
+        "work = mean-length-NORMALIZED banded-DP cost over LSH " +
+          "candidate pairs (min_len*(2k+3), or ~1 past the length-gap " +
+          "early exit, / corpus mean len): the operator now runs Spark " +
+          "4's thresholded levenshtein, and normalizing by mean length " +
+          "cancels the generator's uniform token-suffix inflation, so " +
+          "the metric tracks candidate COUNT - slack tightened 2.5 -> " +
+          "1.5; a quadratic candidate blow-up (~factor^2) still flags"))),
+    QuerySpec("dd_clusters", clusters _, Oracle(
       s"""$clustersReachSql
          |SELECT src AS doc_id, min(dst) AS cluster FROM reach
-         |GROUP BY src ORDER BY doc_id""".stripMargin,
-    "pp_cluster_split" ->
+         |GROUP BY src ORDER BY doc_id""".stripMargin)),
+    QuerySpec("pp_cluster_split", clusterSplit _, Oracle(
       s"""$clustersReachSql,
          |lab AS (SELECT src AS doc_id, min(dst) AS cluster FROM reach
          |  GROUP BY src),
@@ -1229,8 +1221,8 @@ object Dedup {
          |SELECT doc_id, cluster,
          |  CASE WHEN bucket < 80 THEN 'train'
          |       WHEN bucket < 90 THEN 'val' ELSE 'test' END AS split
-         |FROM b ORDER BY doc_id""".stripMargin,
-    "dd_keep_best" ->
+         |FROM b ORDER BY doc_id""".stripMargin)),
+    QuerySpec("dd_keep_best", keepBest _, Oracle(
       s"""$clustersReachSql,
          |lab AS (SELECT src AS doc_id, min(dst) AS cluster FROM reach
          |  GROUP BY src),
@@ -1242,10 +1234,10 @@ object Dedup {
          |    ORDER BY n_words DESC, lab.doc_id) AS rn
          |  FROM lab JOIN nw USING (doc_id))
          |SELECT cluster, doc_id AS keep_id, n_docs, n_words
-         |FROM r WHERE rn = 1 ORDER BY cluster""".stripMargin,
-    "dd_simhash" -> simhashSql,
-    "dd_simhash_pairs" -> simhashPairsOracle,
-    "dd_cosine_neardup" ->
+         |FROM r WHERE rn = 1 ORDER BY cluster""".stripMargin)),
+    QuerySpec("dd_simhash", simhashSigs _, Oracle(simhashSql)),
+    QuerySpec("dd_simhash_pairs", simhashPairs _, Oracle(simhashPairsOracle)),
+    QuerySpec("dd_cosine_neardup", cosineNearDup _, Oracle(
       s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
          |n AS (SELECT vec_id, e,
          |  sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm FROM v),
@@ -1254,5 +1246,8 @@ object Dedup {
          |    i -> a.e[i] * b.e[i])) / (a.nrm * b.nrm), 6) AS cos
          |  FROM n a JOIN n b ON a.vec_id < b.vec_id)
          |SELECT id_a, id_b, cos FROM p WHERE cos >= $CosTau
-         |ORDER BY id_a, id_b""".stripMargin)
+         |ORDER BY id_a, id_b""".stripMargin),
+      growth = Some(Exempt(150.0, 2.0,
+        "exact all-pairs cosine screen: quadratic scored-pair count by " +
+          "definition (the LSH/semantic variants are the scale path)"))))
 }

@@ -1056,47 +1056,8 @@ object Extended {
       .orderBy("event_type", "day")
   }
 
-  val queries: Map[String, Query] = Map(
-    "dq_profile" -> dqProfile _,
-    "dq_rules" -> dqRules _,
-    "dq_drift" -> dqDrift _,
-    "dq_freshness" -> dqFreshness _,
-    "dq_dup_keys" -> dqDupKeys _,
-    "dq_referential" -> dqReferential _,
-    "es_ab_test" -> esAbTest _,
-    "es_cooccur" -> esCooccur _,
-    "es_paths" -> esPaths _,
-    "es_rfm" -> esRfm _,
-    "es_transitions" -> esTransitions _,
-    "es_attribution" -> esAttribution _,
-    "es_retention" -> esRetention _,
-    "es_funnel" -> esFunnel _,
-    "a19_bool_agg" -> a19BoolAgg _,
-    "a21_string_agg" -> a21StringAgg _,
-    "w10_first_last" -> w10FirstLast _,
-    "a22_arg_minmax" -> a22ArgMinmax _,
-    "a23_histogram" -> a23Histogram _,
-    "ml_class_weights" -> mlClassWeights _,
-    "ta_normalize" -> taNormalize _,
-    "w13_distribution" -> w13Distribution _,
-    "w14_rolling_distinct" -> w14RollingDistinct _,
-    "w16_rolling_median" -> w16RollingMedian _,
-    "w17_ewma" -> w17Ewma _,
-    "w22_rolling_corr" -> w22RollingCorr _,
-    "a29_ks" -> a29Ks _,
-    "dq_mad" -> dqMad _,
-    "dq_psi" -> dqPsi _,
-    "es_cohort_ltv" -> esCohortLtv _,
-    "a24_topk_agg" -> a24TopkAgg _,
-    "w11_range_frame" -> w11RangeFrame _,
-    "p13_pivot" -> p13Pivot _,
-    "a17_distinct_agg" -> a17DistinctAgg _,
-    "a18_corr" -> a18Corr _,
-    "w9_rank_family" -> w9RankFamily _,
-    "ta_bigrams" -> taBigrams _)
-
-  val oracle: Map[String, String] = Map(
-    "dq_psi" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("dq_psi", dqPsi _, Oracle(
       """WITH ev AS (SELECT event_type, value, epoch_us(ts) AS us
         |  FROM events WHERE value IS NOT NULL),
         |mm AS (SELECT (min(us) + max(us)) // 2 AS mid FROM ev),
@@ -1156,8 +1117,8 @@ object Extended {
         |  CASE WHEN max(nr) > 0 AND max(nc) > 0 THEN
         |    round(CAST(sum(CAST((p - q) * ln(p / q) AS DECIMAL(38,18)))
         |      AS DOUBLE), 6) END AS psi
-        |FROM t GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "es_cohort_ltv" ->
+        |FROM t GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    QuerySpec("es_cohort_ltv", esCohortLtv _, Oracle(
       """WITH ev AS (SELECT user_id, epoch_us(ts) AS us, event_type,
         |    value FROM events),
         |coh AS (SELECT user_id, min(us) AS c_us,
@@ -1181,8 +1142,8 @@ object Extended {
         |  round(c.cum_rev, 6) AS cum_rev,
         |  round(c.cum_rev / sz.n_users, 6) AS ltv_per_user
         |FROM c JOIN sz USING (cohort_week)
-        |ORDER BY cohort_week, age_week""".stripMargin,
-    "w22_rolling_corr" ->
+        |ORDER BY cohort_week, age_week""".stripMargin)),
+    QuerySpec("w22_rolling_corr", w22RollingCorr _, Oracle(
       """WITH b AS (SELECT l_suppkey, l_orderkey, l_linenumber, l_shipdate,
         |    CAST(l_quantity AS DECIMAL(19,6)) AS x,
         |    CAST(l_extendedprice AS DECIMAL(19,6)) AS y FROM lineitem),
@@ -1202,8 +1163,8 @@ object Extended {
         |    THEN round((n * sxy - sx * sy)
         |      / sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)), 6)
         |    END AS roll_corr
-        |FROM w ORDER BY l_suppkey, l_orderkey, l_linenumber""".stripMargin,
-    "a29_ks" ->
+        |FROM w ORDER BY l_suppkey, l_orderkey, l_linenumber""".stripMargin)),
+    QuerySpec("a29_ks", a29Ks _, Oracle(
       """WITH li AS (SELECT l_returnflag AS side, l_quantity AS v
         |  FROM lineitem WHERE l_returnflag IN ('A', 'N')),
         |g AS (SELECT v,
@@ -1220,8 +1181,8 @@ object Extended {
         |  FROM li)
         |SELECT n_a, n_n, round(max(abs(CAST(cuma AS DOUBLE) / n_a
         |  - CAST(cumn AS DOUBLE) / n_n)), 6) AS ks_stat
-        |FROM c, t GROUP BY n_a, n_n""".stripMargin,
-    "dq_mad" ->
+        |FROM c, t GROUP BY n_a, n_n""".stripMargin)),
+    QuerySpec("dq_mad", dqMad _, Oracle(
       """WITH m AS (SELECT event_type,
         |    round(quantile_cont(value, 0.5), 6) AS med
         |  FROM events GROUP BY event_type),
@@ -1235,15 +1196,15 @@ object Extended {
         |  CAST(sum(CASE WHEN d.ad > CAST(4.4478 AS DOUBLE) * md.mad
         |    THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
         |FROM d JOIN md USING (event_type)
-        |GROUP BY d.event_type ORDER BY d.event_type""".stripMargin,
-    "dq_profile" ->
+        |GROUP BY d.event_type ORDER BY d.event_type""".stripMargin)),
+    QuerySpec("dq_profile", dqProfile _, Oracle(
       Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax").map(c =>
         s"""SELECT '$c' AS col_name, count(*) AS n_rows,
            |  count($c) AS n_non_null, count(DISTINCT $c) AS n_distinct,
            |  min($c) AS vmin, max($c) AS vmax,
            |  round(avg($c), 6) AS vmean FROM lineitem""".stripMargin)
-        .mkString("", "\nUNION ALL\n", "\nORDER BY col_name"),
-    "es_rfm" ->
+        .mkString("", "\nUNION ALL\n", "\nORDER BY col_name"))),
+    QuerySpec("es_rfm", esRfm _, Oracle(
       """WITH f AS (SELECT max(epoch_us(ts)) AS f_us FROM events),
         |u AS (SELECT user_id,
         |    (f_us - max(epoch_us(ts))) // 86400000000 AS recency_d,
@@ -1263,8 +1224,8 @@ object Extended {
         |    + CAST(frequency > ft2 AS INT) AS INT) AS f_score,
         |  CAST(1 + CAST(monetary > mt1 AS INT)
         |    + CAST(monetary > mt2 AS INT) AS INT) AS m_score
-        |FROM u, t ORDER BY user_id""".stripMargin,
-    "es_paths" ->
+        |FROM u, t ORDER BY user_id""".stripMargin)),
+    QuerySpec("es_paths", esPaths _, Oracle(
       """WITH r AS (SELECT user_id, event_type,
         |    row_number() OVER (PARTITION BY user_id
         |      ORDER BY epoch_us(ts), event_id) AS rn FROM events),
@@ -1272,8 +1233,8 @@ object Extended {
         |    string_agg(event_type, '>' ORDER BY rn) AS path
         |  FROM r WHERE rn <= 5 GROUP BY user_id)
         |SELECT path, count(*) AS n_users FROM p GROUP BY path
-        |ORDER BY n_users DESC, path LIMIT 20""".stripMargin,
-    "dq_dup_keys" ->
+        |ORDER BY n_users DESC, path LIMIT 20""".stripMargin)),
+    QuerySpec("dq_dup_keys", dqDupKeys _, Oracle(
       """WITH e AS (SELECT count(*) AS c FROM events GROUP BY event_id),
         |o AS (SELECT count(*) AS c FROM orders GROUP BY o_orderkey),
         |l AS (SELECT count(*) AS c FROM lineitem
@@ -1291,8 +1252,8 @@ object Extended {
         |  SELECT 'lineitem', CAST(sum(c) AS BIGINT), count(*),
         |    CAST(sum(CASE WHEN c > 1 THEN 1 ELSE 0 END) AS BIGINT),
         |    max(c) FROM l)
-        |SELECT * FROM u ORDER BY table_name""".stripMargin,
-    "dq_referential" ->
+        |SELECT * FROM u ORDER BY table_name""".stripMargin)),
+    QuerySpec("dq_referential", dqReferential _, Oracle(
       """WITH checks AS (
         |  SELECT 'customer.nation' AS relationship, c_nationkey AS k,
         |    n_nationkey AS hit FROM customer
@@ -1328,8 +1289,8 @@ object Extended {
         |  CAST(sum(CASE WHEN k IS NULL THEN 1 ELSE 0 END) AS BIGINT)
         |    AS n_null_fk
         |FROM checks GROUP BY relationship
-        |ORDER BY relationship""".stripMargin,
-    "es_ab_test" ->
+        |ORDER BY relationship""".stripMargin)),
+    QuerySpec("es_ab_test", esAbTest _, Oracle(
       """WITH per AS (SELECT user_id,
         |    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
         |      AS purchases
@@ -1362,22 +1323,22 @@ object Extended {
         |    (CAST(conv_a AS DOUBLE) / n_a - CAST(conv_b AS DOUBLE) / n_b)
         |    / sqrt(p_pool * (1.0 - p_pool) * (1.0 / n_a + 1.0 / n_b))
         |  END, 6) AS z
-        |FROM p""".stripMargin,
-    "es_cooccur" ->
+        |FROM p""".stripMargin)),
+    QuerySpec("es_cooccur", esCooccur _, Oracle(
       """WITH ut AS (SELECT DISTINCT user_id, event_type FROM events)
         |SELECT a.event_type AS type_a, b.event_type AS type_b,
         |  count(*) AS n_users
         |FROM ut a JOIN ut b ON a.user_id = b.user_id
         |  AND a.event_type < b.event_type
-        |GROUP BY 1, 2 ORDER BY type_a, type_b""".stripMargin,
-    "dq_freshness" ->
+        |GROUP BY 1, 2 ORDER BY type_a, type_b""".stripMargin)),
+    QuerySpec("dq_freshness", dqFreshness _, Oracle(
       """WITH t AS (SELECT event_type, count(*) AS n,
         |    max(epoch_us(ts)) AS last_us FROM events GROUP BY 1),
         |f AS (SELECT max(epoch_us(ts)) AS frontier_us FROM events)
         |SELECT event_type, n, last_us, frontier_us - last_us AS lag_us,
         |  CAST(frontier_us - last_us > 172800000000 AS INT) AS stale
-        |FROM t, f ORDER BY event_type""".stripMargin,
-    "es_transitions" ->
+        |FROM t, f ORDER BY event_type""".stripMargin)),
+    QuerySpec("es_transitions", esTransitions _, Oracle(
       """WITH seq AS (SELECT user_id, event_type,
         |    lead(event_type) OVER (PARTITION BY user_id
         |      ORDER BY epoch_us(ts), event_id) AS to_type
@@ -1387,8 +1348,8 @@ object Extended {
         |SELECT from_type, to_type, n,
         |  round(n / CAST(sum(n) OVER (PARTITION BY from_type) AS DOUBLE), 6)
         |    AS p
-        |FROM t ORDER BY from_type, to_type""".stripMargin,
-    "dq_drift" ->
+        |FROM t ORDER BY from_type, to_type""".stripMargin)),
+    QuerySpec("dq_drift", dqDrift _, Oracle(
       """WITH daily AS (SELECT event_type,
         |    epoch_us(ts) // 86400000000 AS day, count(*) AS n
         |  FROM events GROUP BY 1, 2),
@@ -1403,8 +1364,8 @@ object Extended {
         |  round(sigma, 6) AS sigma,
         |  CASE WHEN sigma > 0 THEN round((n - mu) / sigma, 6) END AS z
         |FROM spc WHERE n_prior = 7
-        |ORDER BY event_type, day""".stripMargin,
-    "dq_rules" ->
+        |ORDER BY event_type, day""".stripMargin)),
+    QuerySpec("dq_rules", dqRules _, Oracle(
       """WITH j AS (SELECT l.*, o.o_orderkey AS ok FROM lineitem l
         |  LEFT JOIN orders o ON l.l_orderkey = o.o_orderkey),
         |a AS (SELECT count(*) AS n,
@@ -1424,8 +1385,8 @@ object Extended {
         |UNION ALL SELECT 'price_non_negative', r_price, n FROM a
         |UNION ALL SELECT 'quantity_positive', r_qty, n FROM a
         |UNION ALL SELECT 'tax_not_null', r_tax, n FROM a
-        |ORDER BY rule""".stripMargin,
-    "es_attribution" ->
+        |ORDER BY rule""".stripMargin)),
+    QuerySpec("es_attribution", esAttribution _, Oracle(
       """SELECT user_id, purchase_id, purchase_ts_us, click_id, gap_us
         |FROM (
         |  SELECT user_id, event_type, event_id AS purchase_id,
@@ -1438,8 +1399,8 @@ object Extended {
         |  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING))
         |WHERE event_type = 'purchase'
-        |ORDER BY user_id, purchase_id""".stripMargin,
-    "es_retention" ->
+        |ORDER BY user_id, purchase_id""".stripMargin)),
+    QuerySpec("es_retention", esRetention _, Oracle(
       """WITH uw AS (SELECT DISTINCT user_id,
         |    epoch_us(ts) // 604800000000 AS wk FROM events),
         |c AS (SELECT user_id, min(wk) AS cohort_week FROM uw GROUP BY 1),
@@ -1450,8 +1411,8 @@ object Extended {
         |SELECT a.cohort_week, a."offset", a.n_active, sz.n_cohort,
         |  round(CAST(a.n_active AS DOUBLE) / sz.n_cohort, 6) AS retention
         |FROM a JOIN sz USING (cohort_week)
-        |ORDER BY cohort_week, "offset"""".stripMargin,
-    "es_funnel" ->
+        |ORDER BY cohort_week, "offset"""".stripMargin)),
+    QuerySpec("es_funnel", esFunnel _, Oracle(
       """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS tus
         |           FROM events),
         |s1 AS (SELECT user_id, min(tus) AS t_view FROM e
@@ -1470,26 +1431,26 @@ object Extended {
         |LEFT JOIN s1 USING (user_id)
         |LEFT JOIN s2 USING (user_id)
         |LEFT JOIN s3 USING (user_id)
-        |ORDER BY user_id""".stripMargin,
-    "a23_histogram" ->
+        |ORDER BY user_id""".stripMargin)),
+    QuerySpec("a23_histogram", a23Histogram _, Oracle(
       """SELECT CAST(floor(value / 25) AS BIGINT) AS bin, count(*) AS n,
         |  round(avg(value), 6) AS avg_in_bin
-        |FROM events GROUP BY bin ORDER BY bin""".stripMargin,
-    "a22_arg_minmax" ->
+        |FROM events GROUP BY bin ORDER BY bin""".stripMargin)),
+    QuerySpec("a22_arg_minmax", a22ArgMinmax _, Oracle(
       """WITH k AS (SELECT user_id, event_type,
         |  lpad(CAST(epoch_us(ts) AS VARCHAR), 20, '0') || '-' ||
         |    lpad(CAST(event_id AS VARCHAR), 10, '0') AS key
         |FROM events)
         |SELECT user_id, arg_min(event_type, key) AS first_type,
         |  arg_max(event_type, key) AS last_type, count(*) AS n
-        |FROM k GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "w16_rolling_median" ->
+        |FROM k GROUP BY user_id ORDER BY user_id""".stripMargin)),
+    QuerySpec("w16_rolling_median", w16RollingMedian _, Oracle(
       """SELECT event_id,
         |  round(median(value) OVER (PARTITION BY user_id
         |    ORDER BY ts, event_id
         |    ROWS BETWEEN 4 PRECEDING AND CURRENT ROW), 6) AS med5
-        |FROM events ORDER BY event_id""".stripMargin,
-    "w17_ewma" ->
+        |FROM events ORDER BY event_id""".stripMargin)),
+    QuerySpec("w17_ewma", w17Ewma _, Oracle(
       """WITH f AS (SELECT event_id, list(value) OVER w AS arr
         |  FROM events
         |  WINDOW w AS (PARTITION BY user_id
@@ -1501,18 +1462,18 @@ object Extended {
         |    i -> arr[CAST(i AS INT)] * pow(0.8, n - i))) /
         |  list_sum(list_transform(range(1, n + 1),
         |    i -> pow(0.8, CAST(n - i AS DOUBLE)))), 6) AS ewma20
-        |FROM g ORDER BY event_id""".stripMargin,
-    "ml_class_weights" ->
+        |FROM g ORDER BY event_id""".stripMargin)),
+    QuerySpec("ml_class_weights", mlClassWeights _, Oracle(
       """WITH c AS (SELECT label, count(*) AS n FROM embeddings GROUP BY label),
         |t AS (SELECT CAST(sum(n) AS DOUBLE) AS total, count(*) AS k FROM c)
         |SELECT label, n, round(total / (k * n), 6) AS weight
-        |FROM c, t ORDER BY label""".stripMargin,
-    "ta_normalize" ->
+        |FROM c, t ORDER BY label""".stripMargin)),
+    QuerySpec("ta_normalize", taNormalize _, Oracle(
       s"""SELECT doc_id,
          |  md5(${TextAnalysis.normTextSql("text")}) AS norm_hash,
          |  CAST(len(${TextAnalysis.normTextSql("text")}) AS INT) AS n_norm
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "w14_rolling_distinct" ->
+         |FROM documents ORDER BY doc_id""".stripMargin)),
+    QuerySpec("w14_rolling_distinct", w14RollingDistinct _, Oracle(
       """SELECT event_id,
         |  CAST(len(list_distinct(list(event_type) OVER w)) AS INT)
         |    AS d_types_5
@@ -1520,23 +1481,23 @@ object Extended {
         |WINDOW w AS (PARTITION BY user_id
         |  ORDER BY epoch_us(ts), event_id
         |  ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
-    "a24_topk_agg" ->
+        |ORDER BY event_id""".stripMargin)),
+    QuerySpec("a24_topk_agg", a24TopkAgg _, Oracle(
       """WITH ranked AS (SELECT event_type, event_id, value,
         |  CAST(row_number() OVER (PARTITION BY event_type
         |    ORDER BY value DESC, event_id) AS INT) AS rnk FROM events)
         |SELECT event_type, rnk, event_id, round(value, 6) AS value
         |FROM ranked WHERE rnk <= 3
-        |ORDER BY event_type, rnk""".stripMargin,
-    "w13_distribution" ->
+        |ORDER BY event_type, rnk""".stripMargin)),
+    QuerySpec("w13_distribution", w13Distribution _, Oracle(
       """SELECT event_id,
         |  CAST(ntile(4) OVER w AS INT) AS quartile,
         |  round(percent_rank() OVER w, 6) AS pct_rank,
         |  round(cume_dist() OVER w, 6) AS cdf
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY value, event_id)
-        |ORDER BY event_id""".stripMargin,
-    "w11_range_frame" ->
+        |ORDER BY event_id""".stripMargin)),
+    QuerySpec("w11_range_frame", w11RangeFrame _, Oracle(
       """SELECT event_id,
         |  count(*) OVER w AS n_in_band,
         |  CAST(sum(CAST(value AS DECIMAL(38,6))) OVER w AS DOUBLE)
@@ -1544,17 +1505,17 @@ object Extended {
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY value
         |  RANGE BETWEEN 10 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
-    "a19_bool_agg" ->
+        |ORDER BY event_id""".stripMargin)),
+    QuerySpec("a19_bool_agg", a19BoolAgg _, Oracle(
       """SELECT event_type, bool_and(value > 0) AS all_pos,
         |  bool_or(value > 400) AS any_big, count(*) AS n
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "a21_string_agg" ->
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    QuerySpec("a21_string_agg", a21StringAgg _, Oracle(
       """SELECT user_id,
         |  array_to_string(list_sort(list_distinct(list(event_type))), ',')
         |    AS types
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "w10_first_last" ->
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin)),
+    QuerySpec("w10_first_last", w10FirstLast _, Oracle(
       """SELECT event_id,
         |  round(first_value(value) OVER w, 6) AS first_v,
         |  round(last_value(value) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING
@@ -1562,37 +1523,37 @@ object Extended {
         |  round(nth_value(value, 2) OVER w, 6) AS second_v
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-        |ORDER BY event_id""".stripMargin,
-    "p13_pivot" -> {
+        |ORDER BY event_id""".stripMargin)),
+    QuerySpec("p13_pivot", p13Pivot _, Oracle {
       val cols = EventTypes.map(t =>
         s"round(avg(value) FILTER (event_type = '$t'), 6) AS \"$t\"")
         .mkString(",\n  ")
       s"""SELECT user_id,
          |  $cols
          |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin
-    },
-    "a17_distinct_agg" ->
+    }),
+    QuerySpec("a17_distinct_agg", a17DistinctAgg _, Oracle(
       """SELECT l_returnflag,
         |  count(DISTINCT l_partkey) AS d_parts,
         |  CAST(sum(DISTINCT CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE)
         |    AS sd_qty,
         |  count(*) AS n
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "a18_corr" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
+    QuerySpec("a18_corr", a18Corr _, Oracle(
       """SELECT l_returnflag,
         |  round(corr(l_quantity, l_extendedprice), 6) AS corr_qp,
         |  round(covar_pop(l_quantity, l_extendedprice), 6) AS cov_p,
         |  round(covar_samp(l_quantity, l_extendedprice), 6) AS cov_s
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "w9_rank_family" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
+    QuerySpec("w9_rank_family", w9RankFamily _, Oracle(
       """SELECT event_id,
         |  round(percent_rank() OVER w, 6) AS pr,
         |  round(cume_dist() OVER w, 6) AS cd,
         |  CAST(ntile(4) OVER w AS INT) AS quartile
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY value, event_id)
-        |ORDER BY event_id""".stripMargin,
-    "ta_bigrams" -> {
+        |ORDER BY event_id""".stripMargin)),
+    QuerySpec("ta_bigrams", taBigrams _, Oracle {
       val sh2 = {
         val parts = (0 until 2).map(j => s"w[i+$j]").mkString(" || ' ' || ")
         s"""list_distinct(CASE WHEN len(w) >= 2
@@ -1604,5 +1565,5 @@ object Extended {
          |e AS (SELECT unnest(sh) AS bigram FROM t)
          |SELECT bigram, count(*) AS df FROM e
          |GROUP BY bigram ORDER BY df DESC, bigram LIMIT 20""".stripMargin
-    })
+    }))
 }

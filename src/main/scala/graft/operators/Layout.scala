@@ -219,19 +219,15 @@ object Layout {
       .orderBy("o_orderpriority")
   }
 
-  val queries: Map[String, Query] = Map(
-    "o5_zorder" -> zorder _,
-    "o6_bucket_join" -> bucketJoin _)
-
-  val oracle: Map[String, String] = Map(
-    "o6_bucket_join" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("o6_bucket_join", bucketJoin _, Oracle(
       """SELECT o_orderpriority, count(*) AS n_items,
         |  CAST(sum(CAST(l_extendedprice * (1 - l_discount)
         |    AS DECIMAL(38,6))) AS DOUBLE) AS revenue
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    "o5_zorder" -> {
+        |ORDER BY o_orderpriority""".stripMargin)),
+    QuerySpec("o5_zorder", zorder _, Oracle {
       val terms =
         (0 until Bits).map(i =>
           s"((sa & ${1L << i}) << $i)") ++
@@ -249,5 +245,5 @@ object Layout {
          |  ${terms.mkString(" | ")} AS zkey
          |FROM sc
          |ORDER BY zkey, l_orderkey, l_linenumber""".stripMargin
-    })
+    }))
 }

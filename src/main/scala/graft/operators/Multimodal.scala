@@ -497,18 +497,6 @@ object Multimodal {
       .orderBy("media_id")
   }
 
-  val queries: Map[String, Query] = Map(
-    "mm_video_meta" -> video _,
-    "mm_meta" -> meta _,
-    "mm_features" -> features _,
-    "mm_pixels" -> pixels _,
-    "mm_audio" -> audio _,
-    "mm_resize" -> resize _,
-    "mm_parse" -> parse _,
-    "mm_phash_dedup" -> phashDedup _,
-    "mm_audio_dedup" -> audioDedup _,
-    "mm_frames" -> frames _)
-
   // The shared formula-recompute CTE chain for the BMP oracles. DuckDB
   // unnests ZIP in one SELECT, so each range layer gets its own CTE to
   // genuinely cross-join rows × cols × channels.
@@ -521,8 +509,8 @@ object Multimodal {
       |v AS (SELECT doc_id, ch,
       |    (doc_id + s * 7 + c * 13 + ch * 29) % 251 AS val FROM chs)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "mm_video_meta" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("mm_video_meta", video _, Oracle(
       // Every field recomputed from Mp4Walk's generating formulas,
       // including the byte length: ftyp 24 + moov header 8 + mvhd 108
       // + planted free box (16, every 5th file) + 100 per trak/tkhd.
@@ -539,12 +527,12 @@ object Multimodal {
         |  CAST(duration AS BIGINT) AS duration,
         |  CAST(n_tracks AS INT) AS n_tracks,
         |  round(CAST(duration AS DOUBLE) / timescale, 6) AS dur_s
-        |FROM geo ORDER BY media_id""".stripMargin,
-    "mm_meta" ->
+        |FROM geo ORDER BY media_id""".stripMargin)),
+    QuerySpec("mm_meta", meta _, Oracle(
       """SELECT doc_id, CAST(octet_length(encode(text)) AS INT) AS n_bytes,
         |  substr(hex(encode(text)), 1, 16) AS hex_prefix
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "mm_features" ->
+        |FROM documents ORDER BY doc_id""".stripMargin)),
+    QuerySpec("mm_features", features _, Oracle(
       s"""WITH $BmpDims,
          |st AS (SELECT doc_id, ch, sum(val) AS sm FROM v GROUP BY doc_id, ch),
          |wide AS (SELECT doc_id,
@@ -560,14 +548,14 @@ object Multimodal {
          |  round(w.gs / CAST(d.w * d.h AS DOUBLE), 6) AS g_mean,
          |  round(w.rs / CAST(d.w * d.h AS DOUBLE), 6) AS r_mean
          |FROM dims d JOIN wide w ON d.doc_id = w.doc_id
-         |ORDER BY media_id""".stripMargin,
-    "mm_pixels" ->
+         |ORDER BY media_id""".stripMargin)),
+    QuerySpec("mm_pixels", pixels _, Oracle(
       s"""WITH $BmpDims
          |SELECT doc_id AS media_id, CAST(ch AS INT) AS channel,
          |  CAST(sum(val) AS BIGINT) AS px_sum,
          |  CAST(min(val) AS INT) AS px_min, CAST(max(val) AS INT) AS px_max
-         |FROM v GROUP BY doc_id, ch ORDER BY media_id, channel""".stripMargin,
-    "mm_resize" ->
+         |FROM v GROUP BY doc_id, ch ORDER BY media_id, channel""".stripMargin)),
+    QuerySpec("mm_resize", resize _, Oracle(
       """WITH dims AS (SELECT doc_id, CAST(n_chars % 64 + 1 AS BIGINT) AS w,
         |    CAST(n_chars % 48 + 1 AS BIGINT) AS h FROM documents),
         |d2 AS (SELECT doc_id, (w + 1) // 2 AS w2, (h + 1) // 2 AS h2 FROM dims),
@@ -581,8 +569,8 @@ object Multimodal {
         |  CAST(any_value(h2) AS INT) AS out_h,
         |  CAST(sum(val) AS BIGINT) AS px_sum,
         |  CAST(min(val) AS INT) AS px_min, CAST(max(val) AS INT) AS px_max
-        |FROM v GROUP BY doc_id, ch ORDER BY media_id, channel""".stripMargin,
-    "mm_audio" ->
+        |FROM v GROUP BY doc_id, ch ORDER BY media_id, channel""".stripMargin)),
+    QuerySpec("mm_audio", audio _, Oracle(
       """WITH geo AS (SELECT doc_id, CAST(doc_id % 2 + 1 AS INT) AS channels,
         |    CAST(8000 + (n_chars % 3) * 4000 AS INT) AS sample_rate,
         |    CAST(n_chars % 500 + 1 AS BIGINT) AS n_frames FROM documents),
@@ -599,16 +587,16 @@ object Multimodal {
         |  CAST(sum(val) AS BIGINT) AS smp_sum,
         |  CAST(min(val) AS INT) AS smp_min, CAST(max(val) AS INT) AS smp_max,
         |  CAST(sum(val * val) AS BIGINT) AS smp_sumsq
-        |FROM v GROUP BY doc_id, c ORDER BY media_id, channel""".stripMargin,
-    "mm_parse" ->
+        |FROM v GROUP BY doc_id, c ORDER BY media_id, channel""".stripMargin)),
+    QuerySpec("mm_parse", parse _, Oracle(
       """SELECT doc_id AS media_id,
         |  CASE WHEN doc_id % 3 = 0 THEN 'png'
         |       WHEN doc_id % 3 = 1 THEN 'jpeg'
         |       ELSE 'gif' END AS detected_format,
         |  CAST(n_chars % 64 + 1 AS INT) AS parsed_width,
         |  CAST(n_chars % 48 + 1 AS INT) AS parsed_height
-        |FROM documents ORDER BY media_id""".stripMargin,
-    "mm_phash_dedup" ->
+        |FROM documents ORDER BY media_id""".stripMargin)),
+    QuerySpec("mm_phash_dedup", phashDedup _, Oracle(
       s"""WITH imgs AS (
          |  SELECT doc_id AS media_id, doc_id AS base, 0 AS bright,
          |    CAST(n_chars % 64 + 1 AS BIGINT) AS w,
@@ -647,8 +635,8 @@ object Multimodal {
          |  CAST(bit_count(xor(x.dhash, y.dhash)) AS INT) AS hamming
          |FROM hs x JOIN hs y ON x.media_id < y.media_id
          |WHERE bit_count(xor(x.dhash, y.dhash)) <= $PhashHamTau
-         |ORDER BY id_a, id_b""".stripMargin,
-    "mm_audio_dedup" ->
+         |ORDER BY id_a, id_b""".stripMargin)),
+    QuerySpec("mm_audio_dedup", audioDedup _, Oracle(
       s"""WITH clips AS (
          |  SELECT doc_id AS media_id, doc_id AS base,
          |    CAST(n_chars % 500 + 1 AS BIGINT) AS n FROM documents
@@ -681,8 +669,8 @@ object Multimodal {
          |  CAST(bit_count(xor(x.dhash, y.dhash)) AS INT) AS hamming
          |FROM hs x JOIN hs y ON x.media_id < y.media_id
          |WHERE bit_count(xor(x.dhash, y.dhash)) <= $PhashHamTau
-         |ORDER BY id_a, id_b""".stripMargin,
-    "mm_frames" ->
+         |ORDER BY id_a, id_b""".stripMargin)),
+    QuerySpec("mm_frames", frames _, Oracle(
       s"""WITH p AS (SELECT doc_id, hex(encode(text)) AS ph,
          |        octet_length(encode(text)) AS nb FROM documents),
          |f AS (SELECT doc_id, ph, nb, unnest(range(0, $MaxFrames))
@@ -695,5 +683,5 @@ object Multimodal {
          |SELECT doc_id, frame_idx,
          |  CAST(len(fh) / 2 AS INT) AS frame_bytes,
          |  md5(fh) AS frame_hash
-         |FROM o ORDER BY doc_id, frame_idx""".stripMargin)
+         |FROM o ORDER BY doc_id, frame_idx""".stripMargin)))
 }

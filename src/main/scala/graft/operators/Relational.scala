@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   *
   * Naming mirrors the survey: sN scans, pN projections/filters, jN joins,
   * aN aggregations, oN sort/limit, uN set ops, fN scalar-function surface.
-  * Each query has a DuckDB oracle twin in [[oracle]] with identical output
+  * Each query has a DuckDB oracle twin in [[specs]] with identical output
   * column names and ORDER BY.
   */
 object Relational {
@@ -898,78 +898,32 @@ object Relational {
 
   // ------------------------------------------------------------ registry
 
-  val queries: Map[String, Query] = Map(
-    "s1_text_scan" -> s1TextScan _,
-    "s2_indexed_scan" -> s2IndexedScan _,
-    "s3_table_scan" -> s3TableScan _,
-    "p1_project" -> p1Project _,
-    "p2_cast" -> p2Cast _,
-    "p4_isin" -> p4Isin _,
-    "p5_filter" -> p5Filter _,
-    "p6_const_cols" -> p6ConstCols _,
-    "p8_impute_median" -> p8ImputeMedian _,
-    "p9_clamp" -> p9Clamp _,
-    "p10_arith" -> p10Arith _,
-    "p11_bucket" -> p11Bucket _,
-    "j1_broadcast_join" -> j1BroadcastJoin _,
-    "j2_semi_join" -> j2SemiJoin _,
-    "j3_anti_join" -> j3AntiJoin _,
-    "j4_positional_join" -> j4Positional _,
-    "a1_group_multi" -> a1GroupMulti _,
-    "a3_last_per_group" -> a3LastPerGroup _,
-    "a5_global_measures" -> a5GlobalMeasures _,
-    "a7_two_level" -> a7TwoLevel _,
-    "a8_cond_ratio" -> a8CondRatio _,
-    "a9_stddev" -> a9Stddev _,
-    "a10_metric_rollup" -> a10MetricRollup _,
-    "a11_avg_of_avgs" -> a11AvgOfAvgs _,
-    "a12_eval_metrics" -> a12EvalMetrics _,
-    "a13_medians" -> a13Medians _,
-    "a14_rollup" -> a14Rollup _,
-    "a15_cube" -> a15Cube _,
-    "o1_sort" -> o1Sort _,
-    "o2_topk_recent" -> o2TopkRecent _,
-    "o3_topn_value" -> o3TopnValue _,
-    "u1_union" -> u1Union _,
-    "u2_intersect" -> u2Intersect _,
-    "u3_except" -> u3Except _,
-    "f1_string" -> f1String _,
-    "f2_math" -> f2Math _,
-    "f3_date" -> f3Date _,
-    "f4_json" -> f4Json _,
-    "a16_approx_distinct" -> a16ApproxDistinct _,
-    "a25_mode" -> a25Mode _,
-    "a26_moments" -> a26Moments _,
-    "a27_gini" -> a27Gini _,
-    "a28_weighted_median" -> a28WeightedMedian _,
-    "p15_winsorize" -> p15Winsorize _)
-
-  val oracle: Map[String, String] = Map(
+  val specs: Seq[QuerySpec] = Seq(
     // The exact counts verify value-for-value; the _ok flags are
     // Spark-side HLL-contract assertions the oracle pins TRUE (see
     // [[a16ApproxDistinct]]): a broken sketch hash-mismatches here.
-    "a16_approx_distinct" ->
+    QuerySpec("a16_approx_distinct", a16ApproxDistinct _, Oracle(
       """SELECT count(DISTINCT user_id) AS exact_users,
         |  count(DISTINCT value) AS exact_values,
         |  TRUE AS approx_users_ok, TRUE AS approx_values_ok
-        |FROM events""".stripMargin,
-    "p15_winsorize" ->
+        |FROM events""".stripMargin)),
+    QuerySpec("p15_winsorize", p15Winsorize _, Oracle(
       """WITH t AS (SELECT
         |    round(quantile_cont(l_extendedprice, 0.01), 6) AS p01,
         |    round(quantile_cont(l_extendedprice, 0.99), 6) AS p99
         |  FROM lineitem)
         |SELECT l_orderkey, l_linenumber,
         |  round(least(greatest(l_extendedprice, p01), p99), 6) AS price_w
-        |FROM lineitem, t ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "a28_weighted_median" ->
+        |FROM lineitem, t ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+    QuerySpec("a28_weighted_median", a28WeightedMedian _, Oracle(
       """WITH c AS (SELECT l_extendedprice AS v, sum(l_quantity) AS c
         |  FROM lineitem GROUP BY 1),
         |w AS (SELECT v, sum(c) OVER (ORDER BY v) AS cum FROM c),
         |t AS (SELECT sum(c) AS wt FROM c)
         |SELECT round(min(v), 6) AS wmedian,
         |  CAST(min(wt) AS BIGINT) AS w_total
-        |FROM w, t WHERE cum >= wt / 2""".stripMargin,
-    "a27_gini" ->
+        |FROM w, t WHERE cum >= wt / 2""".stripMargin)),
+    QuerySpec("a27_gini", a27Gini _, Oracle(
       """WITH per AS (SELECT user_id, CAST(count(*) AS DOUBLE) AS v
         |  FROM events GROUP BY user_id),
         |c AS (SELECT v, count(*) AS c FROM per GROUP BY v),
@@ -977,8 +931,8 @@ object Relational {
         |a AS (SELECT CAST(sum(c) AS BIGINT) AS n, sum(v * c) AS s,
         |    sum(v * (2 * cum - c + 1) * c / 2) AS rs FROM w)
         |SELECT n, round(2 * rs / (n * s) - (n + 1.0) / n, 6) AS gini
-        |FROM a""".stripMargin,
-    "a26_moments" ->
+        |FROM a""".stripMargin)),
+    QuerySpec("a26_moments", a26Moments _, Oracle(
       """WITH m AS (SELECT avg(value) AS mu FROM events
         |  WHERE value IS NOT NULL),
         |s AS (SELECT count(*) AS n,
@@ -987,171 +941,171 @@ object Relational {
         |    sum(power(value - mu, 4)) AS s4
         |  FROM events, m WHERE value IS NOT NULL)
         |SELECT n, round((s3 / n) / power(s2 / n, 1.5), 6) AS skew,
-        |  round((s4 / n) / power(s2 / n, 2) - 3, 6) AS kurt FROM s""".stripMargin,
-    "a25_mode" ->
+        |  round((s4 / n) / power(s2 / n, 2) - 3, 6) AS kurt FROM s""".stripMargin)),
+    QuerySpec("a25_mode", a25Mode _, Oracle(
       """WITH c AS (SELECT l_returnflag, l_quantity, count(*) AS n
         |  FROM lineitem GROUP BY 1, 2),
         |r AS (SELECT *, row_number() OVER (PARTITION BY l_returnflag
         |    ORDER BY n DESC, l_quantity) AS rk FROM c)
         |SELECT l_returnflag, l_quantity AS mode_qty, n AS mode_n
-        |FROM r WHERE rk = 1 ORDER BY l_returnflag""".stripMargin,
-    "s1_text_scan" ->
+        |FROM r WHERE rk = 1 ORDER BY l_returnflag""".stripMargin)),
+    QuerySpec("s1_text_scan", s1TextScan _, Oracle(
       """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice, l_discount
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "s2_indexed_scan" ->
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+    QuerySpec("s2_indexed_scan", s2IndexedScan _, Oracle(
       """SELECT n_nationkey, n_name,
         |  CAST(row_number() OVER (ORDER BY n_nationkey) AS INT) AS rn
-        |FROM nation ORDER BY n_nationkey""".stripMargin,
-    "s3_table_scan" -> "SELECT * FROM supplier ORDER BY s_suppkey",
-    "p1_project" ->
+        |FROM nation ORDER BY n_nationkey""".stripMargin)),
+    QuerySpec("s3_table_scan", s3TableScan _, Oracle("SELECT * FROM supplier ORDER BY s_suppkey")),
+    QuerySpec("p1_project", p1Project _, Oracle(
       """SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "p2_cast" ->
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+    QuerySpec("p2_cast", p2Cast _, Oracle(
       """SELECT o_orderkey, CAST(o_custkey AS VARCHAR) AS custkey_str,
         |  CAST(floor(o_totalprice) AS BIGINT) AS price_int,
         |  CAST(CAST(o_orderdate AS DATE) AS VARCHAR) AS order_date
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "p4_isin" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin)),
+    QuerySpec("p4_isin", p4Isin _, Oracle(
       """SELECT l_orderkey, l_linenumber, l_returnflag FROM lineitem
-        |WHERE l_returnflag IN ('A','R') ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "p5_filter" ->
+        |WHERE l_returnflag IN ('A','R') ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+    QuerySpec("p5_filter", p5Filter _, Oracle(
       """SELECT event_id, user_id, event_type, value FROM events
         |WHERE event_type <> 'error' AND value >= 50 AND props IS NOT NULL
-        |ORDER BY event_id""".stripMargin,
-    "p6_const_cols" ->
+        |ORDER BY event_id""".stripMargin)),
+    QuerySpec("p6_const_cols", p6ConstCols _, Oracle(
       """SELECT count(DISTINCT p_brand) AS d_brand, count(DISTINCT p_type) AS d_type,
         |  count(DISTINCT p_size) AS d_size,
-        |  count(DISTINCT p_retailprice) AS d_retailprice FROM part""".stripMargin,
-    "p8_impute_median" ->
+        |  count(DISTINCT p_retailprice) AS d_retailprice FROM part""".stripMargin)),
+    QuerySpec("p8_impute_median", p8ImputeMedian _, Oracle(
       """SELECT l_orderkey, l_linenumber,
         |  round(coalesce(nullif(l_discount, 0.0),
         |    (SELECT median(nullif(l_discount, 0.0)) FROM lineitem)), 6) AS disc_imputed
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "p9_clamp" ->
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+    QuerySpec("p9_clamp", p9Clamp _, Oracle(
       """SELECT event_id, round(greatest(value - 100, 0.0), 6) AS clamped
-        |FROM events ORDER BY event_id""".stripMargin,
-    "p10_arith" ->
+        |FROM events ORDER BY event_id""".stripMargin)),
+    QuerySpec("p10_arith", p10Arith _, Oracle(
       """SELECT event_id, round(abs(value - 100), 6) AS abs_err,
         |  round(pow(value - 100, 2), 6) AS sq_err,
         |  round(CASE WHEN value <> 0 THEN 100.0 / value END, 6) AS ratio
-        |FROM events ORDER BY event_id""".stripMargin,
-    "p11_bucket" ->
+        |FROM events ORDER BY event_id""".stripMargin)),
+    QuerySpec("p11_bucket", p11Bucket _, Oracle(
       """SELECT CASE WHEN o_totalprice < 50000 THEN 'low'
         |  WHEN o_totalprice < 150000 THEN 'mid'
         |  WHEN o_totalprice < 300000 THEN 'high' ELSE 'top' END AS bucket,
         |  count(*) AS n
-        |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin,
-    "j1_broadcast_join" ->
+        |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin)),
+    QuerySpec("j1_broadcast_join", j1BroadcastJoin _, Oracle(
       """SELECT r_name, n_name, count(*) AS n_orders,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS revenue
         |FROM orders
         |JOIN customer ON o_custkey = c_custkey
         |JOIN nation ON c_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin,
-    "j2_semi_join" ->
+        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin)),
+    QuerySpec("j2_semi_join", j2SemiJoin _, Oracle(
       """SELECT c_custkey, c_name FROM customer
         |WHERE EXISTS (SELECT 1 FROM orders
         |  WHERE o_custkey = c_custkey AND o_orderstatus = 'F')
-        |ORDER BY c_custkey""".stripMargin,
-    "j3_anti_join" ->
+        |ORDER BY c_custkey""".stripMargin)),
+    QuerySpec("j3_anti_join", j3AntiJoin _, Oracle(
       """SELECT c_custkey, c_name FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-    "j4_positional_join" ->
+        |ORDER BY c_custkey""".stripMargin)),
+    QuerySpec("j4_positional_join", j4Positional _, Oracle(
       """WITH r AS (SELECT r_name,
         |    CAST(row_number() OVER (ORDER BY r_regionkey) AS INT) AS rn FROM region),
         |  n AS (SELECT n_name,
         |    CAST(row_number() OVER (ORDER BY n_nationkey) AS INT) AS rn FROM nation)
         |SELECT n.rn AS rn, n_name, r_name FROM n JOIN r ON n.rn = r.rn
-        |ORDER BY n.rn""".stripMargin,
-    "a1_group_multi" ->
+        |ORDER BY n.rn""".stripMargin)),
+    QuerySpec("a1_group_multi", a1GroupMulti _, Oracle(
       """SELECT l_returnflag, l_linestatus, count(*) AS n,
         |  min(l_quantity) AS qty_min, max(l_quantity) AS qty_max,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS qty_sum,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) AS price_sum
         |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "a3_last_per_group" ->
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
+    QuerySpec("a3_last_per_group", a3LastPerGroup _, Oracle(
       """SELECT user_id, event_id, event_type, value FROM events
         |QUALIFY row_number() OVER (PARTITION BY user_id
         |  ORDER BY epoch_us(ts) DESC, event_id DESC) = 1
-        |ORDER BY user_id""".stripMargin,
-    "a5_global_measures" ->
+        |ORDER BY user_id""".stripMargin)),
+    QuerySpec("a5_global_measures", a5GlobalMeasures _, Oracle(
       """SELECT count(*) AS n_events, count(DISTINCT user_id) AS n_users,
         |  count(DISTINCT event_type) AS n_types, max(value) AS max_value,
         |  round(avg(value), 6) AS avg_value, max(epoch_us(ts)) AS max_ts_us
-        |FROM events""".stripMargin,
-    "a7_two_level" ->
+        |FROM events""".stripMargin)),
+    QuerySpec("a7_two_level", a7TwoLevel _, Oracle(
       """SELECT round(avg(mx), 6) AS avg_user_max,
         |  round(median(mx), 6) AS median_user_max
-        |FROM (SELECT user_id, max(value) AS mx FROM events GROUP BY user_id)""".stripMargin,
-    "a8_cond_ratio" ->
+        |FROM (SELECT user_id, max(value) AS mx FROM events GROUP BY user_id)""".stripMargin)),
+    QuerySpec("a8_cond_ratio", a8CondRatio _, Oracle(
       """SELECT round(avg(CASE WHEN value < 30 THEN 1.0 ELSE 0.0 END), 6) AS critical_pct,
         |  CAST(sum(CASE WHEN value < 30 THEN 1 ELSE 0 END) AS BIGINT) AS critical_n
-        |FROM events""".stripMargin,
-    "a9_stddev" ->
+        |FROM events""".stripMargin)),
+    QuerySpec("a9_stddev", a9Stddev _, Oracle(
       """SELECT round(stddev_pop(value), 6) AS sd_pop,
         |  round(stddev_samp(value), 6) AS sd_samp,
-        |  round(var_pop(value), 6) AS var_p FROM events""".stripMargin,
-    "a10_metric_rollup" ->
+        |  round(var_pop(value), 6) AS var_p FROM events""".stripMargin)),
+    QuerySpec("a10_metric_rollup", a10MetricRollup _, Oracle(
       """SELECT event_type, count(*) AS n,
         |  round(avg(abs(value - 100)), 6) AS mae_vs_100,
         |  round(sqrt(avg(pow(value - 100, 2))), 6) AS rmse_vs_100
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "a11_avg_of_avgs" ->
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    QuerySpec("a11_avg_of_avgs", a11AvgOfAvgs _, Oracle(
       """SELECT (SELECT round(avg(lang_avg), 6) FROM
         |    (SELECT avg(n_chars) AS lang_avg FROM documents GROUP BY lang)
         |  ) AS avg_of_lang_avgs,
-        |  (SELECT round(avg(n_chars), 6) FROM documents) AS global_avg""".stripMargin,
-    "a12_eval_metrics" ->
+        |  (SELECT round(avg(n_chars), 6) FROM documents) AS global_avg""".stripMargin)),
+    QuerySpec("a12_eval_metrics", a12EvalMetrics _, Oracle(
       """WITH scored AS (SELECT value AS t,
         |    avg(value) OVER (PARTITION BY user_id) AS p,
         |    avg(value) OVER () AS tbar FROM events)
         |SELECT round(sqrt(avg(pow(t - p, 2))), 6) AS rmse,
         |  round(avg(abs(t - p)), 6) AS mae,
         |  round(1.0 - sum(pow(t - p, 2)) / sum(pow(t - tbar, 2)), 6) AS r2
-        |FROM scored""".stripMargin,
-    "a13_medians" ->
+        |FROM scored""".stripMargin)),
+    QuerySpec("a13_medians", a13Medians _, Oracle(
       """SELECT round(median(l_quantity), 6) AS med_qty,
         |  round(median(l_extendedprice), 6) AS med_price,
-        |  round(median(l_discount), 6) AS med_disc FROM lineitem""".stripMargin,
-    "a14_rollup" ->
+        |  round(median(l_discount), 6) AS med_disc FROM lineitem""".stripMargin)),
+    QuerySpec("a14_rollup", a14Rollup _, Oracle(
       """SELECT event_type, user_id, count(*) AS n,
         |  CAST(sum(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
         |FROM events GROUP BY ROLLUP (event_type, user_id)
-        |ORDER BY event_type ASC NULLS FIRST, user_id ASC NULLS FIRST""".stripMargin,
-    "a15_cube" ->
+        |ORDER BY event_type ASC NULLS FIRST, user_id ASC NULLS FIRST""".stripMargin)),
+    QuerySpec("a15_cube", a15Cube _, Oracle(
       """SELECT event_type, vb, count(*) AS n
         |FROM (SELECT event_type,
         |  CASE WHEN value < 50 THEN 'lo' WHEN value < 150 THEN 'mid'
         |    ELSE 'hi' END AS vb FROM events)
         |GROUP BY CUBE (event_type, vb)
-        |ORDER BY event_type ASC NULLS FIRST, vb ASC NULLS FIRST""".stripMargin,
-    "o1_sort" ->
+        |ORDER BY event_type ASC NULLS FIRST, vb ASC NULLS FIRST""".stripMargin)),
+    QuerySpec("o1_sort", o1Sort _, Oracle(
       """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
-        |ORDER BY l_orderkey, l_linenumber LIMIT 50""".stripMargin,
-    "o2_topk_recent" ->
+        |ORDER BY l_orderkey, l_linenumber LIMIT 50""".stripMargin)),
+    QuerySpec("o2_topk_recent", o2TopkRecent _, Oracle(
       """SELECT event_id, epoch_us(ts) AS ts_us FROM events
-        |ORDER BY ts_us DESC, event_id DESC LIMIT 100""".stripMargin,
-    "o3_topn_value" ->
+        |ORDER BY ts_us DESC, event_id DESC LIMIT 100""".stripMargin)),
+    QuerySpec("o3_topn_value", o3TopnValue _, Oracle(
       """SELECT event_id, value FROM events
-        |ORDER BY value DESC, event_id LIMIT 15""".stripMargin,
-    "u1_union" ->
+        |ORDER BY value DESC, event_id LIMIT 15""".stripMargin)),
+    QuerySpec("u1_union", u1Union _, Oracle(
       """SELECT event_type, count(*) AS n FROM (
         |  SELECT * FROM events WHERE user_id % 2 = 0
         |  UNION ALL
         |  SELECT * FROM events WHERE user_id % 2 = 1)
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "u2_intersect" ->
+        |GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    QuerySpec("u2_intersect", u2Intersect _, Oracle(
       """SELECT c_nationkey AS nationkey FROM customer
         |INTERSECT
-        |SELECT s_nationkey FROM supplier ORDER BY nationkey""".stripMargin,
-    "u3_except" ->
+        |SELECT s_nationkey FROM supplier ORDER BY nationkey""".stripMargin)),
+    QuerySpec("u3_except", u3Except _, Oracle(
       """SELECT c_nationkey AS nationkey FROM customer
         |EXCEPT
-        |SELECT s_nationkey FROM supplier ORDER BY nationkey""".stripMargin,
-    "f1_string" ->
+        |SELECT s_nationkey FROM supplier ORDER BY nationkey""".stripMargin)),
+    QuerySpec("f1_string", f1String _, Oracle(
       """SELECT p_partkey, lower(p_name) AS name_lower, upper(p_brand) AS brand_upper,
         |  substr(p_type, 1, 5) AS type_pfx,
         |  split_part(p_name, ' ', 1) AS first_word,
@@ -1159,19 +1113,19 @@ object Relational {
         |  p_brand || '-' || p_type AS brand_type,
         |  starts_with(p_name, 'a') AS starts_a,
         |  regexp_matches(p_type, '[0-9]') AS has_digit
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "f2_math" ->
+        |FROM part ORDER BY p_partkey""".stripMargin)),
+    QuerySpec("f2_math", f2Math _, Oracle(
       """SELECT o_orderkey, round(sqrt(o_totalprice), 6) AS sqrt_price,
         |  round(ln(o_totalprice), 6) AS ln_price,
         |  round(exp(o_totalprice / 100000), 6) AS exp_scaled
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "f3_date" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin)),
+    QuerySpec("f3_date", f3Date _, Oracle(
       """SELECT strftime(o_orderdate, '%Y-%m') AS ym, count(*) AS n,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS total
-        |FROM orders GROUP BY 1 ORDER BY ym""".stripMargin,
-    "f4_json" ->
+        |FROM orders GROUP BY 1 ORDER BY ym""".stripMargin)),
+    QuerySpec("f4_json", f4Json _, Oracle(
       """SELECT k % 10 AS k_mod, count(*) AS n, min(k) AS k_min, max(k) AS k_max
         |FROM (SELECT CAST(json_extract_string(props, '$.k') AS INT) AS k
         |  FROM events)
-        |GROUP BY 1 ORDER BY k_mod ASC NULLS FIRST""".stripMargin)
+        |GROUP BY 1 ORDER BY k_mod ASC NULLS FIRST""".stripMargin)))
 }

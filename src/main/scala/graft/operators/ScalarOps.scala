@@ -181,20 +181,8 @@ object ScalarOps {
       .orderBy("vec_id")
   }
 
-  val queries: Map[String, Query] = Map(
-    "f14_lambda" -> f14Lambda _,
-    "f5_array" -> f5Array _,
-    "f6_regex" -> f6Regex _,
-    "f7_datetime" -> f7Datetime _,
-    "f9_bitwise" -> f9Bitwise _,
-    "f10_string" -> f10String _,
-    "f12_map" -> f12Map _,
-    "f13_encode" -> f13Encode _,
-    "o4_offset" -> o4Offset _,
-    "p14_null_semantics" -> p14NullSemantics _)
-
-  val oracle: Map[String, String] = Map(
-    "f14_lambda" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("f14_lambda", f14Lambda _, Oracle(
       """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
         |           FROM embeddings)
         |SELECT vec_id,
@@ -204,8 +192,8 @@ object ScalarOps {
         |  CAST(len(list_filter(e, x -> abs(x) >= 1.0)) = 0 AS INT)
         |    AS all_small,
         |  round(list_sum(list_sort(e, 'DESC')[1:3]), 6) AS top3_sum
-        |FROM v ORDER BY vec_id""".stripMargin,
-    "f5_array" ->
+        |FROM v ORDER BY vec_id""".stripMargin)),
+    QuerySpec("f5_array", f5Array _, Oracle(
       """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
         |           FROM embeddings)
         |SELECT vec_id, CAST(len(e) AS INT) AS dim,
@@ -213,16 +201,16 @@ object ScalarOps {
         |  round(list_max(e), 6) AS mx,
         |  round(list_min(e), 6) AS mn,
         |  round(list_sum(e[1:8]), 6) AS head_sum
-        |FROM v ORDER BY vec_id""".stripMargin,
+        |FROM v ORDER BY vec_id""".stripMargin)),
     // DuckDB regexp_replace needs the 'g' flag to match Java's
     // replace-all semantics.
-    "f6_regex" ->
+    QuerySpec("f6_regex", f6Regex _, Oracle(
       """SELECT doc_id,
         |  substr(regexp_replace(text, '[0-9]+', '#', 'g'), 1, 40) AS masked,
         |  regexp_extract(text, '([a-z]+)', 1) AS first_word,
         |  CAST(regexp_matches(text, 'data') AS INT) AS has_data
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "f7_datetime" ->
+        |FROM documents ORDER BY doc_id""".stripMargin)),
+    QuerySpec("f7_datetime", f7Datetime _, Oracle(
       """SELECT event_id,
         |  CAST(year(ts) AS INT) AS y,
         |  CAST(quarter(ts) AS INT) AS q,
@@ -232,8 +220,8 @@ object ScalarOps {
         |  CAST(dayofweek(ts) + 1 AS INT) AS dow1,
         |  CAST(weekofyear(ts) AS INT) AS iso_week,
         |  epoch_us(date_trunc('day', ts)) AS day_us
-        |FROM events ORDER BY event_id""".stripMargin,
-    "f9_bitwise" ->
+        |FROM events ORDER BY event_id""".stripMargin)),
+    QuerySpec("f9_bitwise", f9Bitwise _, Oracle(
       """SELECT event_id,
         |  event_id & 255 AS b_and,
         |  event_id | 256 AS b_or,
@@ -241,39 +229,39 @@ object ScalarOps {
         |  event_id << 3 AS shl,
         |  event_id >> 2 AS shr,
         |  CAST(bit_count(event_id) AS INT) AS popcnt
-        |FROM events ORDER BY event_id""".stripMargin,
-    "f10_string" ->
+        |FROM events ORDER BY event_id""".stripMargin)),
+    QuerySpec("f10_string", f10String _, Oracle(
       """SELECT p_partkey,
         |  lpad(p_brand, 12, '.') AS brand_pad,
         |  translate(p_type, 'aeiou', 'AEIOU') AS type_vowels,
         |  reverse(p_brand) AS brand_rev,
         |  replace(p_name, ' ', '_') AS name_snake,
         |  CAST(len(p_name) AS INT) AS name_len
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "f12_map" ->
+        |FROM part ORDER BY p_partkey""".stripMargin)),
+    QuerySpec("f12_map", f12Map _, Oracle(
       """WITH pa AS (SELECT user_id, event_type,
         |  round(avg(value), 6) AS v FROM events GROUP BY user_id, event_type)
         |SELECT user_id,
         |  CAST(count(*) AS INT) AS n_types,
         |  max(CASE WHEN event_type = 'click' THEN v END) AS click_avg,
         |  max(CASE WHEN event_type = 'error' THEN v END) AS error_avg
-        |FROM pa GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "f13_encode" ->
+        |FROM pa GROUP BY user_id ORDER BY user_id""".stripMargin)),
+    QuerySpec("f13_encode", f13Encode _, Oracle(
       """SELECT doc_id,
         |  substr(base64(encode(text)), 1, 24) AS b64_prefix,
         |  substr(hex(encode(text)), 1, 24) AS hex_prefix,
         |  CAST(len(base64(encode(text))) % 4 AS BIGINT) AS b64_pad_mod,
         |  CAST(decode(from_base64(base64(encode(text)))) = text
         |    AND decode(unhex(hex(encode(text)))) = text AS INT) AS rt_ok
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "o4_offset" ->
+        |FROM documents ORDER BY doc_id""".stripMargin)),
+    QuerySpec("o4_offset", o4Offset _, Oracle(
       """SELECT * FROM supplier ORDER BY s_suppkey
-        |LIMIT 20 OFFSET 10""".stripMargin,
-    "p14_null_semantics" ->
+        |LIMIT 20 OFFSET 10""".stripMargin)),
+    QuerySpec("p14_null_semantics", p14NullSemantics _, Oracle(
       """SELECT l_orderkey, l_linenumber,
         |  round(coalesce(nullif(l_discount, 0.0), -1.0), 6) AS disc_or_neg1,
         |  CAST(nullif(l_discount, 0.0) IS NOT DISTINCT FROM
         |    nullif(l_tax, 0.0) AS INT) AS disc_eq_tax_nullsafe,
         |  CAST(nullif(l_discount, 0.0) IS NULL AS INT) AS disc_is_null
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin)
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin)))
 }

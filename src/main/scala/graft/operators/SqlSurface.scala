@@ -254,26 +254,15 @@ object SqlSurface {
         |ORDER BY l_returnflag""".stripMargin)
   }
 
-  val queries: Map[String, Query] = Map(
-    "sql_lateral" -> lateralTopk _,
-    "sql_date_spine" -> dateSpine _,
-    "sql_dbt_features" -> dbtFeatures _,
-    "sql_grouping_sets" -> groupingSets _,
-    "sql_exists" -> existsSubquery _,
-    "sql_unpivot" -> unpivot _,
-    "sql_filter_agg" -> filterAgg _,
-    "sql_grid_mixed" -> gridMixedSql _,
-    "ml_ols" -> olsRegression _)
-
-  val oracle: Map[String, String] = Map(
-    "sql_lateral" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("sql_lateral", lateralTopk _, Oracle(
       """SELECT u.user_id, s.event_id, s.value
         |FROM (SELECT DISTINCT user_id FROM events) u,
         |LATERAL (SELECT event_id, round(value, 6) AS value FROM events e
         |         WHERE e.user_id = u.user_id
         |         ORDER BY e.value DESC, event_id LIMIT 2) s
-        |ORDER BY u.user_id, s.value DESC, s.event_id""".stripMargin,
-    "sql_date_spine" ->
+        |ORDER BY u.user_id, s.value DESC, s.event_id""".stripMargin)),
+    QuerySpec("sql_date_spine", dateSpine _, Oracle(
       """WITH RECURSIVE m(mo) AS (
         |  SELECT DATE '1995-01-01'
         |  UNION ALL SELECT CAST(mo + INTERVAL 1 MONTH AS DATE) FROM m
@@ -286,10 +275,10 @@ object SqlSurface {
         |    count(*) AS n
         |  FROM orders GROUP BY 1
         |) o ON mo = o.om
-        |ORDER BY month""".stripMargin,
+        |ORDER BY month""".stripMargin)),
     // Same semantics as wf_features — the oracle is shared by construction.
-    "sql_dbt_features" -> Windows.oracle("wf_features"),
-    "sql_grouping_sets" ->
+    QuerySpec("sql_dbt_features", dbtFeatures _, Oracle(Windows.featuresSql)),
+    QuerySpec("sql_grouping_sets", groupingSets _, Oracle(
       """SELECT event_type, user_id % 10 AS cohort,
         |  CAST(grouping(event_type) AS INT) AS g_type,
         |  CAST(grouping(user_id % 10) AS INT) AS g_cohort,
@@ -298,15 +287,15 @@ object SqlSurface {
         |FROM events
         |GROUP BY GROUPING SETS ((event_type), (user_id % 10), ())
         |ORDER BY g_type, g_cohort, event_type NULLS FIRST,
-        |  cohort NULLS FIRST""".stripMargin,
-    "sql_filter_agg" ->
+        |  cohort NULLS FIRST""".stripMargin)),
+    QuerySpec("sql_filter_agg", filterAgg _, Oracle(
       """SELECT event_type,
         |  count(*) AS n,
         |  count(*) FILTER (WHERE value < 30) AS n_low,
         |  count(*) FILTER (WHERE value >= 400) AS n_high,
         |  round(avg(value) FILTER (WHERE value >= 100), 6) AS avg_mid
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "sql_grid_mixed" ->
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    QuerySpec("sql_grid_mixed", gridMixedSql _, Oracle(
       """SELECT l_returnflag,
         |  round(median(l_quantity), 6) AS med_qty,
         |  round(quantile_cont(l_extendedprice, 0.9), 6) AS p90_price,
@@ -314,17 +303,17 @@ object SqlSurface {
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE)
         |    AS sum_price
         |FROM lineitem GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-    "sql_exists" ->
+        |ORDER BY l_returnflag""".stripMargin)),
+    QuerySpec("sql_exists", existsSubquery _, Oracle(
       """SELECT o_orderkey, round(o_totalprice, 6) AS o_totalprice
         |FROM orders o
         |WHERE EXISTS (SELECT 1 FROM lineitem l
         |              WHERE l.l_orderkey = o.o_orderkey
         |                AND l.l_quantity > 45)
         |  AND o_totalprice > (SELECT avg(o_totalprice) FROM orders)
-        |ORDER BY o_orderkey""".stripMargin,
+        |ORDER BY o_orderkey""".stripMargin)),
     // DuckDB has no stack(); the long form is the portable oracle.
-    "sql_unpivot" ->
+    QuerySpec("sql_unpivot", unpivot _, Oracle(
       """SELECT l_orderkey, l_linenumber, metric, round(value, 6) AS value
         |FROM (
         |  SELECT l_orderkey, l_linenumber, 'quantity' AS metric,
@@ -335,8 +324,8 @@ object SqlSurface {
         |  UNION ALL
         |  SELECT l_orderkey, l_linenumber, 'discount', l_discount
         |  FROM lineitem)
-        |ORDER BY l_orderkey, l_linenumber, metric""".stripMargin,
-    "ml_ols" ->
+        |ORDER BY l_orderkey, l_linenumber, metric""".stripMargin)),
+    QuerySpec("ml_ols", olsRegression _, Oracle(
       """WITH li AS (SELECT l_quantity AS x, l_extendedprice AS y FROM lineitem),
         |stats AS (SELECT
         |    CAST(count(*) AS DOUBLE) AS n,
@@ -354,5 +343,5 @@ object SqlSurface {
         |  round(any_value(intercept), 6) AS intercept,
         |  round(sqrt(avg(pow(y - p, 2))), 6) AS rmse,
         |  round(avg(abs(y - p)), 6) AS mae
-        |FROM scored""".stripMargin)
+        |FROM scored""".stripMargin)))
 }

@@ -244,18 +244,11 @@ object Stats {
       .orderBy("cw")
   }
 
-  val queries: Map[String, Query] = Map(
-    "dq_chisq" -> dqChisq _,
-    "dq_benford" -> dqBenford _,
-    "a30_hhi" -> a30Hhi _,
-    "w23_seasonal" -> w23Seasonal _,
-    "pp_weighted_sample" -> ppWeightedSample _)
-
   private val benfordValues: String = BenfordP
     .map { case (dg, p) => s"($dg, CAST($p AS DOUBLE))" }.mkString(", ")
 
-  val oracle: Map[String, String] = Map(
-    "dq_chisq" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("dq_chisq", dqChisq _, Oracle(
       """WITH ev AS (SELECT event_type, epoch_us(ts) AS us FROM events),
         |b AS (SELECT (min(us) + max(us)) // 2 AS mid FROM ev),
         |c AS (SELECT event_type,
@@ -275,8 +268,8 @@ object Stats {
         |    k, n
         |  FROM e)
         |SELECT round(CAST(sum(contrib) AS DOUBLE), 6) AS chi2,
-        |  k - 1 AS dof, n FROM cells GROUP BY k, n""".stripMargin,
-    "dq_benford" ->
+        |  k - 1 AS dof, n FROM cells GROUP BY k, n""".stripMargin)),
+    QuerySpec("dq_benford", dqBenford _, Oracle(
       s"""WITH cents AS (SELECT CAST(floor(value * 100.0) AS BIGINT) AS c
          |  FROM events WHERE floor(value * 100.0) >= 1),
          |obs AS (SELECT CAST(substr(CAST(c AS VARCHAR), 1, 1) AS INT)
@@ -290,8 +283,8 @@ object Stats {
          |  round(abs(CAST(coalesce(obs.n, 0) AS DOUBLE)
          |    / CAST(total AS DOUBLE) - benford_share), 6) AS abs_dev
          |FROM bf LEFT JOIN obs ON bf.digit = obs.digit, tot
-         |ORDER BY bf.digit""".stripMargin,
-    "a30_hhi" ->
+         |ORDER BY bf.digit""".stripMargin)),
+    QuerySpec("a30_hhi", a30Hhi _, Oracle(
       """WITH rev AS (SELECT n_name, l_suppkey,
         |    sum(CAST(l_extendedprice * (1.0 - l_discount)
         |      AS DECIMAL(38,6))) AS rev
@@ -307,8 +300,8 @@ object Stats {
         |  round(CAST(sum(CAST(share * share AS DECIMAL(38,18)))
         |    AS DOUBLE), 6) AS hhi,
         |  count(*) AS n_suppliers, round(max(share), 6) AS top_share
-        |FROM sh GROUP BY n_name ORDER BY n_name""".stripMargin,
-    "w23_seasonal" ->
+        |FROM sh GROUP BY n_name ORDER BY n_name""".stripMargin)),
+    QuerySpec("w23_seasonal", w23Seasonal _, Oracle(
       """WITH daily AS (SELECT
         |    datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))
         |      AS day,
@@ -326,8 +319,8 @@ object Stats {
         |    / CAST(count(*) AS DOUBLE), 6) AS seasonal,
         |  round(CAST(sum(CAST(rev AS DECIMAL(38,6))) AS DOUBLE)
         |    / CAST(count(*) AS DOUBLE), 6) AS avg_revenue
-        |FROM det GROUP BY 1 ORDER BY dow""".stripMargin,
-    "pp_weighted_sample" ->
+        |FROM det GROUP BY 1 ORDER BY dow""".stripMargin)),
+    QuerySpec("pp_weighted_sample", ppWeightedSample _, Oracle(
       s"""WITH docs AS (SELECT doc_id,
          |    md5(CAST(doc_id AS VARCHAR)) AS h,
          |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
@@ -342,5 +335,5 @@ object Stats {
          |FROM c
          |WHERE (cw * $PpsK) // w_total >
          |  ((cw - n_tokens) * $PpsK) // w_total
-         |ORDER BY cw""".stripMargin)
+         |ORDER BY cw""".stripMargin)))
 }

@@ -149,42 +149,35 @@ object TemporalJoins {
       .select("user_id", "day", "v_filled", "was_gap")
   }
 
-  val queries: Map[String, Query] = Map(
-    "j5_asof_join" -> j5AsofJoin _,
-    "j7_asof_custom" -> j7AsofCustom _,
-    "j6_range_join" -> j6RangeJoin _,
-    "j8_full_outer" -> j8FullOuter _,
-    "w15_gap_fill" -> w15GapFill _)
-
-  val oracle: Map[String, String] = Map(
+  val specs: Seq[QuerySpec] = Seq(
     // ASOF at epoch-µs resolution on BOTH sides: the raw column is
     // TIMESTAMP(NANOS), which Spark truncates to µs on read — comparing
     // at ns in DuckDB could order a sub-µs-later error before an event.
-    "j5_asof_join" ->
+    QuerySpec("j5_asof_join", j5AsofJoin _, Oracle(
       """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS tus FROM events),
         |r AS (SELECT user_id, epoch_us(ts) AS err_us FROM events
         |      WHERE event_type = 'error')
         |SELECT e.event_id, e.user_id, e.tus, r.err_us AS last_err_us
         |FROM e ASOF LEFT JOIN r
         |  ON e.user_id = r.user_id AND e.tus >= r.err_us
-        |ORDER BY event_id""".stripMargin,
-    "j7_asof_custom" ->
+        |ORDER BY event_id""".stripMargin)),
+    QuerySpec("j7_asof_custom", j7AsofCustom _, Oracle(
       """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS tus FROM events),
         |r AS (SELECT user_id, epoch_us(ts) AS err_us FROM events
         |      WHERE event_type = 'error')
         |SELECT e.event_id, e.user_id, e.tus, r.err_us AS last_err_us
         |FROM e ASOF LEFT JOIN r
         |  ON e.user_id = r.user_id AND e.tus >= r.err_us
-        |ORDER BY event_id""".stripMargin,
-    "j6_range_join" -> {
+        |ORDER BY event_id""".stripMargin)),
+    QuerySpec("j6_range_join", j6RangeJoin _, Oracle {
       val vals = ValueRanges.map { case (b, lo, hi) => s"($b, $lo, $hi)" }
         .mkString(", ")
       s"""SELECT bucket_id, count(*) AS n, round(avg(value), 6) AS avg_value
          |FROM events JOIN (VALUES $vals) ranges(bucket_id, lo, hi)
          |  ON value >= lo AND value < hi
          |GROUP BY bucket_id ORDER BY bucket_id""".stripMargin
-    },
-    "j8_full_outer" ->
+    }),
+    QuerySpec("j8_full_outer", j8FullOuter _, Oracle(
       """WITH e AS (SELECT user_id, CAST(ts AS DATE) AS day,
         |    count(*) AS n_err FROM events
         |    WHERE event_type = 'error' GROUP BY 1, 2),
@@ -201,8 +194,8 @@ object TemporalJoins {
         |       ELSE 'purchase_only' END AS status
         |FROM e FULL OUTER JOIN p
         |  ON e.user_id = p.user_id AND e.day = p.day
-        |ORDER BY user_id, day""".stripMargin,
-    "w15_gap_fill" ->
+        |ORDER BY user_id, day""".stripMargin)),
+    QuerySpec("w15_gap_fill", w15GapFill _, Oracle(
       """WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS day, value
         |  FROM events),
         |daily AS (SELECT user_id, day, round(avg(value), 6) AS v
@@ -218,5 +211,5 @@ object TemporalJoins {
         |    AS v_filled,
         |  CAST(v IS NULL AS INT) AS was_gap
         |FROM grid g LEFT JOIN daily USING (user_id, day)
-        |ORDER BY user_id, day""".stripMargin)
+        |ORDER BY user_id, day""".stripMargin)))
 }

@@ -360,7 +360,7 @@ object TextAnalysis {
     // but its lineage is the whole candidate+verify pipeline — caching
     // here caps a cache-miss recompute at once per run, and CacheManager
     // dedups it with any other consumer of the same pair set.
-    val dupTails = Dedup.queries("dd_ngram_jaccard")(s, d)
+    val dupTails = Dedup.ngramJaccard(s, d)
       .select(col("doc_b").as("doc_id")).distinct()
       .pinned()
     q.join(dupTails, Seq("doc_id"), "left_anti")
@@ -796,38 +796,15 @@ object TextAnalysis {
     } finally t.unpersist()
   }
 
-  val queries: Map[String, Query] = Map(
-    "ta_heavy_hitters" -> heavyHitters _,
-    "ta_chunks" -> chunk _,
-    "ta_pii" -> pii _,
-    "ta_tfidf" -> tfidf _,
-    "ta_bm25" -> bm25 _,
-    "ta_pmi" -> pmi _,
-    "ta_rep_ngrams" -> repNgrams _,
-    "f11_url" -> urlParse _,
-    "ta_unigram_logprob" -> unigramLogprob _,
-    "ta_bigram_logprob" -> bigramLogprob _,
-    "ta_langid" -> langid _,
-    "ta_entropy" -> entropy _,
-    "ta_boilerplate" -> boilerplate _,
-    "ta_quality" -> quality _,
-    "ta_tokens" -> tokens _,
-    "ta_vocab" -> vocab _,
-    "ta_simpson" -> simpson _,
-    "ta_js_divergence" -> jsDivergence _,
-    "ta_zipf" -> zipf _,
-    "ta_fingerprint" -> fingerprint _,
-    "pipe_curate" -> curate _)
-
-  val oracle: Map[String, String] = Map(
-    "ta_heavy_hitters" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("ta_heavy_hitters", heavyHitters _, Oracle(
       s"""WITH tok AS (SELECT unnest(string_split(text, ' ')) AS token
          |  FROM documents),
          |c AS (SELECT token, count(*) AS n FROM tok GROUP BY token),
          |t AS (SELECT count(*) AS total FROM tok)
          |SELECT token, n FROM c, t WHERE n * $HhK > total
-         |ORDER BY n DESC, token""".stripMargin,
-    "ta_chunks" ->
+         |ORDER BY n DESC, token""".stripMargin)),
+    QuerySpec("ta_chunks", chunk _, Oracle(
       s"""WITH w0 AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          |st AS (SELECT doc_id, w,
          |  unnest(range(1, len(w) + 1, $ChunkStride)) AS s FROM w0)
@@ -835,8 +812,8 @@ object TextAnalysis {
          |  CAST(least($ChunkLen, len(w) - s + 1) AS INT) AS n_tokens,
          |  array_to_string(list_slice(w, s, s + ${ChunkLen - 1}), ' ')
          |    AS chunk_text
-         |FROM st ORDER BY doc_id, chunk_idx""".stripMargin,
-    "ta_pii" ->
+         |FROM st ORDER BY doc_id, chunk_idx""".stripMargin)),
+    QuerySpec("ta_pii", pii _, Oracle(
       """WITH p AS (SELECT doc_id,
         |  text || ' contact ' || source || '_' || doc_id
         |    || '@mail.example.com or 555-'
@@ -851,8 +828,8 @@ object TextAnalysis {
         |  CAST(len(regexp_extract_all(wp, '555-[0-9]{4}')) AS INT) AS n_phones,
         |  CAST(len(wp) - len(red) AS INT) AS removed_chars,
         |  md5(red) AS redacted_hash
-        |FROM r ORDER BY doc_id""".stripMargin,
-    "ta_entropy" ->
+        |FROM r ORDER BY doc_id""".stripMargin)),
+    QuerySpec("ta_entropy", entropy _, Oracle(
       """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t
         |             FROM documents),
         |c AS (SELECT doc_id, t, count(*) AS c FROM tok GROUP BY doc_id, t)
@@ -861,8 +838,8 @@ object TextAnalysis {
         |  round(log2(CAST(sum(c) AS DOUBLE)) -
         |    sum(CAST(c AS DOUBLE) * log2(CAST(c AS DOUBLE))) / sum(c), 6)
         |    AS entropy
-        |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "ta_boilerplate" ->
+        |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+    QuerySpec("ta_boilerplate", boilerplate _, Oracle(
       s"""WITH w0 AS (SELECT doc_id, source, string_split(text, ' ') AS w
          |            FROM documents),
          |sh AS (SELECT doc_id, source,
@@ -882,8 +859,8 @@ object TextAnalysis {
          |  round(CAST(n_boiler AS DOUBLE) / n_shingles, 6) AS boiler_frac,
          |  CAST(round(CAST(n_boiler AS DOUBLE) / n_shingles, 6) <= 0.1
          |    AS INT) AS keep
-         |FROM per ORDER BY doc_id""".stripMargin,
-    "ta_bm25" ->
+         |FROM per ORDER BY doc_id""".stripMargin)),
+    QuerySpec("ta_bm25", bm25 _, Oracle(
       s"""WITH q(query_id, query_text) AS (VALUES
          |${Bm25Queries.map { case (i, t) =>
              s"  (CAST($i AS BIGINT), '$t')" }.mkString(",\n")}),
@@ -917,8 +894,8 @@ object TextAnalysis {
          |SELECT rr.query_id, q.query_text, CAST(rn AS INT) AS rnk,
          |  doc_id, score
          |FROM rr JOIN q USING (query_id) WHERE rn <= $Bm25TopK
-         |ORDER BY query_id, rnk""".stripMargin,
-    "ta_pmi" ->
+         |ORDER BY query_id, rnk""".stripMargin)),
+    QuerySpec("ta_pmi", pmi _, Oracle(
       s"""WITH w0 AS (SELECT string_split(text, ' ') AS w FROM documents),
          |st AS (SELECT CAST(sum(len(w)) AS DOUBLE) AS nt,
          |  CAST(sum(greatest(len(w) - 1, 0)) AS DOUBLE) AS nb FROM w0),
@@ -933,8 +910,8 @@ object TextAnalysis {
          |  round(ln(CAST(cxy AS DOUBLE) * nt / CAST(ux.c AS DOUBLE) * nt
          |    / CAST(uy.c AS DOUBLE) / nb), 6) AS pmi
          |FROM bc JOIN uc ux ON bc.x = ux.t JOIN uc uy ON bc.y = uy.t, st
-         |ORDER BY pmi DESC, x, y LIMIT 20""".stripMargin,
-    "ta_tfidf" ->
+         |ORDER BY pmi DESC, x, y LIMIT 20""".stripMargin)),
+    QuerySpec("ta_tfidf", tfidf _, Oracle(
       """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t
         |             FROM documents),
         |tf AS (SELECT doc_id, t, count(*) AS c FROM tok GROUP BY doc_id, t),
@@ -949,8 +926,8 @@ object TextAnalysis {
         |  CAST(row_number() OVER (PARTITION BY doc_id
         |    ORDER BY tfidf DESC, t) AS INT) AS rnk FROM scored)
         |SELECT doc_id, rnk, t AS term, tfidf FROM ranked WHERE rnk <= 3
-        |ORDER BY doc_id, rnk""".stripMargin,
-    "ta_rep_ngrams" ->
+        |ORDER BY doc_id, rnk""".stripMargin)),
+    QuerySpec("ta_rep_ngrams", repNgrams _, Oracle(
       """WITH w0 AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         |ut AS (SELECT doc_id, unnest(w) AS t FROM w0),
         |uc AS (SELECT doc_id, t, count(*) AS c FROM ut GROUP BY doc_id, t),
@@ -969,16 +946,16 @@ object TextAnalysis {
         |  CAST(top_uni_frac <= 0.2 AND
         |    coalesce(top_bi_frac <= 0.2, TRUE) AS INT) AS keep
         |FROM uni LEFT JOIN bi ON uni.doc_id = bi.doc_id
-        |ORDER BY uni.doc_id""".stripMargin,
-    "f11_url" ->
+        |ORDER BY uni.doc_id""".stripMargin)),
+    QuerySpec("f11_url", urlParse _, Oracle(
       """SELECT doc_id,
         |  'https://' || source || '.example.com/docs/' || doc_id
         |    || '?lang=' || lang AS url,
         |  source || '.example.com' AS host,
         |  '/docs/' || doc_id AS path,
         |  lang AS q_lang
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "ta_unigram_logprob" ->
+        |FROM documents ORDER BY doc_id""".stripMargin)),
+    QuerySpec("ta_unigram_logprob", unigramLogprob _, Oracle(
       """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
         |             FROM documents),
         |freq AS (SELECT token, count(*) AS cnt FROM tok GROUP BY token),
@@ -986,8 +963,8 @@ object TextAnalysis {
         |SELECT doc_id, count(*) AS n_tokens,
         |  round(sum(log10(CAST(cnt AS DOUBLE) / total)), 6) AS logprob
         |FROM tok JOIN freq USING (token), tot
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "ta_bigram_logprob" ->
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+    QuerySpec("ta_bigram_logprob", bigramLogprob _, Oracle(
       s"""WITH w0 AS (SELECT doc_id, string_split(text, ' ') AS w
          |            FROM documents),
          |tok AS (SELECT unnest(w) AS token FROM w0),
@@ -1006,13 +983,13 @@ object TextAnalysis {
          |FROM bi JOIN c12 USING (w1, w2)
          |  JOIN c1 ca ON ca.token = bi.w1
          |  JOIN c1 cb ON cb.token = bi.w2, tot
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "ta_langid" -> langidOracle,
-    "ta_vocab" ->
+         |GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+    QuerySpec("ta_langid", langid _, Oracle(langidOracle)),
+    QuerySpec("ta_vocab", vocab _, Oracle(
       """SELECT token, count(*) AS n
         |FROM (SELECT unnest(string_split(text, ' ')) AS token FROM documents)
-        |GROUP BY token ORDER BY n DESC, token LIMIT 20""".stripMargin,
-    "ta_js_divergence" ->
+        |GROUP BY token ORDER BY n DESC, token LIMIT 20""".stripMargin)),
+    QuerySpec("ta_js_divergence", jsDivergence _, Oracle(
       """WITH t AS (SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS is_en,
         |    unnest(string_split(text, ' ')) AS token FROM documents),
         |c AS (SELECT token, CAST(sum(is_en) AS BIGINT) AS np,
@@ -1028,8 +1005,8 @@ object TextAnalysis {
         |    sum(CASE WHEN q > 0 THEN q * ln(q / m) ELSE 0 END) AS klq
         |  FROM pq)
         |SELECT round((klp + klq) / 2, 6) AS js_nats,
-        |  round(((klp + klq) / 2) / ln(2.0), 6) AS js_bits FROM kl""".stripMargin,
-    "ta_simpson" ->
+        |  round(((klp + klq) / 2) / ln(2.0), 6) AS js_bits FROM kl""".stripMargin)),
+    QuerySpec("ta_simpson", simpson _, Oracle(
       """WITH c AS (SELECT token, count(*) AS n
         |  FROM (SELECT unnest(string_split(text, ' ')) AS token
         |        FROM documents) GROUP BY token),
@@ -1038,8 +1015,8 @@ object TextAnalysis {
         |SELECT vocab, total,
         |  round(CAST(ss AS DOUBLE) / (total * (total - 1)), 6) AS simpson,
         |  round(CAST(total * (total - 1) AS DOUBLE) / ss, 6)
-        |    AS inv_simpson FROM s""".stripMargin,
-    "ta_zipf" ->
+        |    AS inv_simpson FROM s""".stripMargin)),
+    QuerySpec("ta_zipf", zipf _, Oracle(
       """WITH c AS (SELECT token, count(*) AS n
         |  FROM (SELECT unnest(string_split(text, ' ')) AS token
         |        FROM documents)
@@ -1048,8 +1025,8 @@ object TextAnalysis {
         |    AS DOUBLE)) AS x, ln(CAST(n AS DOUBLE)) AS y FROM c)
         |SELECT round(regr_slope(y, x), 6) AS zipf_slope,
         |  round(regr_intercept(y, x), 6) AS zipf_intercept,
-        |  count(*) AS n_head FROM r""".stripMargin,
-    "pipe_curate" -> {
+        |  count(*) AS n_head FROM r""".stripMargin)),
+    QuerySpec("pipe_curate", curate _, Oracle {
       val sh3 = {
         val parts = (0 until 3).map(j => s"w[i+$j]").mkString(" || ' ' || ")
         s"""list_distinct(CASE WHEN len(w) >= 3
@@ -1071,8 +1048,8 @@ object TextAnalysis {
          |WHERE n_words >= 30 AND ttr >= 0.3
          |  AND doc_id NOT IN (SELECT doc_id FROM tails)
          |ORDER BY doc_id""".stripMargin
-    },
-    "ta_quality" ->
+    }),
+    QuerySpec("ta_quality", quality _, Oracle(
       """WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS w FROM documents)
         |SELECT doc_id, CAST(len(text) AS INT) AS n_chars_m,
         |  CAST(len(w) AS INT) AS n_words,
@@ -1083,15 +1060,15 @@ object TextAnalysis {
         |  round(CAST(len(list_filter(w, x ->
         |    list_contains(['the','a','and','of','to'], x))) AS DOUBLE) / len(w), 6)
         |    AS stop_ratio
-        |FROM t ORDER BY doc_id""".stripMargin,
-    "ta_tokens" ->
+        |FROM t ORDER BY doc_id""".stripMargin)),
+    QuerySpec("ta_tokens", tokens _, Oracle(
       """SELECT doc_id,
         |  CAST(len(string_split(text, ' ')) AS INT) AS ws_tokens,
         |  CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+')) AS INT) AS re_tokens,
         |  CAST(len(list_distinct(regexp_extract_all(text, '[a-z]+|[0-9]+'))) AS INT)
         |    AS re_vocab
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "ta_fingerprint" -> {
+        |FROM documents ORDER BY doc_id""".stripMargin)),
+    QuerySpec("ta_fingerprint", fingerprint _, Oracle {
       val sh5 = {
         val parts = (0 until 5).map(j => s"w[i+$j]").mkString(" || ' ' || ")
         s"""list_distinct(CASE WHEN len(w) >= 5
@@ -1104,5 +1081,5 @@ object TextAnalysis {
          |grp AS (SELECT fingerprint, count(*) AS n_docs FROM fp GROUP BY fingerprint)
          |SELECT doc_id, fp.fingerprint, n_docs FROM fp JOIN grp USING (fingerprint)
          |ORDER BY doc_id""".stripMargin
-    })
+    }))
 }

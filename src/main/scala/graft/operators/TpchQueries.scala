@@ -665,32 +665,8 @@ object TpchQueries {
       .limit(100)
   }
 
-  val queries: Map[String, Query] = Map(
-    "tpch_q1" -> tpchQ1 _,
-    "tpch_q2" -> tpchQ2 _,
-    "tpch_q4" -> tpchQ4 _,
-    "tpch_q9" -> tpchQ9 _,
-    "tpch_q11" -> tpchQ11 _,
-    "tpch_q12" -> tpchQ12 _,
-    "tpch_q16" -> tpchQ16 _,
-    "tpch_q19" -> tpchQ19 _,
-    "tpch_q20" -> tpchQ20 _,
-    "tpch_q21" -> tpchQ21 _,
-    "tpch_q3" -> tpchQ3 _,
-    "tpch_q5" -> tpchQ5 _,
-    "tpch_q6" -> tpchQ6 _,
-    "tpch_q7" -> tpchQ7 _,
-    "tpch_q8" -> tpchQ8 _,
-    "tpch_q10" -> tpchQ10 _,
-    "tpch_q13" -> tpchQ13 _,
-    "tpch_q14" -> tpchQ14 _,
-    "tpch_q15" -> tpchQ15 _,
-    "tpch_q17" -> tpchQ17 _,
-    "tpch_q18" -> tpchQ18 _,
-    "tpch_q22" -> tpchQ22 _)
-
-  val oracle: Map[String, String] = Map(
-    "tpch_q1" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("tpch_q1", tpchQ1 _, Oracle(
       """SELECT l_returnflag, l_linestatus,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS sum_qty,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE)
@@ -705,8 +681,8 @@ object TpchQueries {
         |  count(*) AS count_order
         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '2001-09-02'
         |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "tpch_q3" ->
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
+    QuerySpec("tpch_q3", tpchQ3 _, Oracle(
       """SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS od,
         |  CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
         |    AS DECIMAL(38,6))) AS DOUBLE) AS revenue
@@ -716,8 +692,8 @@ object TpchQueries {
         |  AND o_orderdate < TIMESTAMP '1998-03-15'
         |  AND l_shipdate > TIMESTAMP '1998-03-15'
         |GROUP BY l_orderkey, od
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-    "tpch_q5" ->
+        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin)),
+    QuerySpec("tpch_q5", tpchQ5 _, Oracle(
       """SELECT n_name,
         |  CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
         |    AS DECIMAL(38,6))) AS DOUBLE) AS revenue
@@ -732,8 +708,8 @@ object TpchQueries {
         |  AND o_orderdate >= TIMESTAMP '1996-01-01'
         |  AND o_orderdate < TIMESTAMP '1998-01-01'
         |GROUP BY n_name
-        |ORDER BY revenue DESC, n_name""".stripMargin,
-    "tpch_q6" ->
+        |ORDER BY revenue DESC, n_name""".stripMargin)),
+    QuerySpec("tpch_q6", tpchQ6 _, Oracle(
       """SELECT CAST(sum(CAST(l_extendedprice * l_discount AS DECIMAL(38,6)))
         |    AS DOUBLE) AS revenue,
         |  count(*) AS n
@@ -741,8 +717,8 @@ object TpchQueries {
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
         |  AND l_shipdate < TIMESTAMP '1997-01-01'
         |  AND l_discount BETWEEN 0.05 AND 0.07
-        |  AND l_quantity < 24""".stripMargin,
-    "tpch_q7" ->
+        |  AND l_quantity < 24""".stripMargin)),
+    QuerySpec("tpch_q7", tpchQ7 _, Oracle(
       """WITH nat AS (SELECT n_nationkey, n_name FROM nation
         |             WHERE n_name IN ('NATION_1', 'NATION_2'))
         |SELECT s.n_name AS supp_nation, c.n_name AS cust_nation,
@@ -760,8 +736,8 @@ object TpchQueries {
         |  AND ((s.n_name = 'NATION_1' AND c.n_name = 'NATION_2') OR
         |       (s.n_name = 'NATION_2' AND c.n_name = 'NATION_1'))
         |GROUP BY supp_nation, cust_nation, l_year
-        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin,
-    "tpch_q8" ->
+        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin)),
+    QuerySpec("tpch_q8", tpchQ8 _, Oracle(
       """SELECT CAST(year(o_orderdate) AS INT) AS o_year,
         |  round(
         |    CAST(sum(CAST(CASE WHEN sn.n_name = 'NATION_3'
@@ -780,8 +756,8 @@ object TpchQueries {
         |WHERE r_name = 'EUROPE' AND p_type = 'STANDARD'
         |  AND o_orderdate >= TIMESTAMP '1995-01-01'
         |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY o_year ORDER BY o_year""".stripMargin,
-    "tpch_q10" ->
+        |GROUP BY o_year ORDER BY o_year""".stripMargin)),
+    QuerySpec("tpch_q10", tpchQ10 _, Oracle(
       """SELECT c_custkey, c_name, round(c_acctbal, 6) AS c_acctbal, n_name,
         |  CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
         |    AS DECIMAL(38,6))) AS DOUBLE) AS revenue
@@ -793,8 +769,8 @@ object TpchQueries {
         |  AND o_orderdate < TIMESTAMP '1996-04-01'
         |  AND l_returnflag = 'R'
         |GROUP BY c_custkey, c_name, round(c_acctbal, 6), n_name
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
-    "tpch_q13" ->
+        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin)),
+    QuerySpec("tpch_q13", tpchQ13 _, Oracle(
       """SELECT c_count, count(*) AS custdist
         |FROM (SELECT c_custkey, count(o_orderkey) AS c_count
         |      FROM customer LEFT OUTER JOIN orders
@@ -802,8 +778,8 @@ object TpchQueries {
         |        AND o_orderpriority <> '1-URGENT'
         |      GROUP BY c_custkey) c_orders
         |GROUP BY c_count
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "tpch_q14" ->
+        |ORDER BY custdist DESC, c_count DESC""".stripMargin)),
+    QuerySpec("tpch_q14", tpchQ14 _, Oracle(
       """SELECT round(100.0 *
         |  CAST(sum(CAST(CASE WHEN p_type LIKE 'PROMO%'
         |    THEN l_extendedprice * (1.0 - l_discount) ELSE 0.0 END
@@ -813,8 +789,8 @@ object TpchQueries {
         |  count(*) AS n
         |FROM lineitem JOIN part ON l_partkey = p_partkey
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |  AND l_shipdate < TIMESTAMP '1996-02-01'""".stripMargin,
-    "tpch_q15" ->
+        |  AND l_shipdate < TIMESTAMP '1996-02-01'""".stripMargin)),
+    QuerySpec("tpch_q15", tpchQ15 _, Oracle(
       """WITH rev AS (SELECT l_suppkey AS supplier_no,
         |  CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
         |    AS DECIMAL(38,6))) AS DOUBLE) AS total_revenue
@@ -825,8 +801,8 @@ object TpchQueries {
         |SELECT s_suppkey, s_name, round(total_revenue, 6) AS total_revenue
         |FROM rev JOIN supplier ON supplier_no = s_suppkey
         |WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
-        |ORDER BY s_suppkey""".stripMargin,
-    "tpch_q17" ->
+        |ORDER BY s_suppkey""".stripMargin)),
+    QuerySpec("tpch_q17", tpchQ17 _, Oracle(
       """WITH pf AS (SELECT p_partkey FROM part
         |    WHERE p_brand = 'Brand#13' AND p_type = 'MEDIUM'),
         |  cand AS (SELECT l_partkey, l_quantity, l_extendedprice
@@ -839,8 +815,8 @@ object TpchQueries {
         |    AS DOUBLE) / 7.0, 6) AS avg_yearly,
         |  count(*) AS n
         |FROM cand JOIN th ON l_partkey = t_partkey
-        |WHERE l_quantity < qty_cut""".stripMargin,
-    "tpch_q18" ->
+        |WHERE l_quantity < qty_cut""".stripMargin)),
+    QuerySpec("tpch_q18", tpchQ18 _, Oracle(
       """WITH big AS (SELECT l_orderkey,
         |    CAST(sum(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE)
         |      AS total_qty
@@ -850,8 +826,8 @@ object TpchQueries {
         |  round(o_totalprice, 6) AS o_totalprice, total_qty
         |FROM orders JOIN big ON o_orderkey = l_orderkey
         |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin,
-    "tpch_q22" ->
+        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin)),
+    QuerySpec("tpch_q22", tpchQ22 _, Oracle(
       """SELECT c_nationkey AS cntrycode, count(*) AS numcust,
         |  CAST(sum(CAST(c_acctbal AS DECIMAL(38,6))) AS DOUBLE)
         |    AS totacctbal
@@ -861,8 +837,8 @@ object TpchQueries {
         |                   WHERE c_acctbal > 0 AND c_nationkey < 10)
         |  AND c_custkey NOT IN (SELECT o_custkey FROM orders
         |                   WHERE o_orderdate >= TIMESTAMP '2000-01-01')
-        |GROUP BY cntrycode ORDER BY cntrycode""".stripMargin,
-    "tpch_q2" ->
+        |GROUP BY cntrycode ORDER BY cntrycode""".stripMargin)),
+    QuerySpec("tpch_q2", tpchQ2 _, Oracle(
       """WITH eu AS (
         |  SELECT s_suppkey, s_name, s_acctbal, n_name
         |  FROM supplier JOIN nation ON s_nationkey = n_nationkey
@@ -882,8 +858,8 @@ object TpchQueries {
         |WHERE cost = (SELECT min(cost) FROM cat c2
         |              WHERE c2.l_partkey = cat.l_partkey)
         |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
-        |LIMIT 100""".stripMargin,
-    "tpch_q4" ->
+        |LIMIT 100""".stripMargin)),
+    QuerySpec("tpch_q4", tpchQ4 _, Oracle(
       """SELECT o_orderpriority, count(*) AS order_count
         |FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1996-07-01'
@@ -892,8 +868,8 @@ object TpchQueries {
         |              WHERE l_orderkey = o_orderkey
         |                AND l_returnflag = 'R')
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    "tpch_q9" ->
+        |ORDER BY o_orderpriority""".stripMargin)),
+    QuerySpec("tpch_q9", tpchQ9 _, Oracle(
       """SELECT n_name AS nation, CAST(year(o_orderdate) AS INT) AS o_year,
         |  CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
         |    - 0.6 * p_retailprice * l_quantity AS DECIMAL(38,6)))
@@ -905,8 +881,8 @@ object TpchQueries {
         |JOIN orders ON l_orderkey = o_orderkey
         |WHERE p_name LIKE '%bolt'
         |GROUP BY n_name, CAST(year(o_orderdate) AS INT)
-        |ORDER BY nation, o_year DESC""".stripMargin,
-    "tpch_q11" ->
+        |ORDER BY nation, o_year DESC""".stripMargin)),
+    QuerySpec("tpch_q11", tpchQ11 _, Oracle(
       """WITH slice AS (
         |  SELECT l_partkey, l_extendedprice
         |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
@@ -923,8 +899,8 @@ object TpchQueries {
         |  FROM slice)
         |SELECT p_partkey, part_value FROM per_part, tot
         |WHERE part_value > threshold
-        |ORDER BY part_value DESC, p_partkey""".stripMargin,
-    "tpch_q12" ->
+        |ORDER BY part_value DESC, p_partkey""".stripMargin)),
+    QuerySpec("tpch_q12", tpchQ12 _, Oracle(
       """SELECT l_linestatus,
         |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
         |    THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
@@ -935,8 +911,8 @@ object TpchQueries {
         |  AND l_shipdate >= TIMESTAMP '1996-01-01'
         |  AND l_shipdate < TIMESTAMP '1997-01-01'
         |GROUP BY l_linestatus
-        |ORDER BY l_linestatus""".stripMargin,
-    "tpch_q16" ->
+        |ORDER BY l_linestatus""".stripMargin)),
+    QuerySpec("tpch_q16", tpchQ16 _, Oracle(
       """SELECT p_brand, p_type, p_size,
         |  count(DISTINCT l_suppkey) AS supplier_cnt
         |FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) pairs
@@ -945,8 +921,8 @@ object TpchQueries {
         |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier
         |                        WHERE s_acctbal < 0)
         |GROUP BY p_brand, p_type, p_size
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-    "tpch_q19" ->
+        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin)),
+    QuerySpec("tpch_q19", tpchQ19 _, Oracle(
       """SELECT
         |  CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
         |    AS DECIMAL(38,6))) AS DOUBLE) AS revenue,
@@ -957,8 +933,8 @@ object TpchQueries {
         |   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10
         |       AND l_quantity BETWEEN 10 AND 20)
         |   OR (p_brand = 'Brand#4' AND p_size BETWEEN 1 AND 15
-        |       AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
-    "tpch_q20" ->
+        |       AND l_quantity BETWEEN 20 AND 30)""".stripMargin)),
+    QuerySpec("tpch_q20", tpchQ20 _, Oracle(
       """WITH per_pair AS (
         |  SELECT l_partkey, l_suppkey,
         |    CAST(sum(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS qty
@@ -979,8 +955,8 @@ object TpchQueries {
         |  AND s_suppkey IN (
         |    SELECT l_suppkey FROM per_pair JOIN cut
         |      ON l_partkey = t_partkey AND qty > qty_cut)
-        |ORDER BY s_name""".stripMargin,
-    "tpch_q21" ->
+        |ORDER BY s_name""".stripMargin)),
+    QuerySpec("tpch_q21", tpchQ21 _, Oracle(
       """SELECT s_name, count(*) AS numwait
         |FROM lineitem l1
         |JOIN orders ON l1.l_orderkey = o_orderkey
@@ -995,5 +971,5 @@ object TpchQueries {
         |      AND l3.l_returnflag = 'R')
         |GROUP BY s_name
         |ORDER BY numwait DESC, s_name
-        |LIMIT 100""".stripMargin)
+        |LIMIT 100""".stripMargin)))
 }

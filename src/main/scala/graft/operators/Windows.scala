@@ -252,30 +252,27 @@ object Windows {
       .orderBy("event_id")
   }
 
-  val queries: Map[String, Query] = Map(
-    "w21_ffill" -> w21Ffill _,
-    "w18_streak" -> w18Streak _,
-    "w20_scd2" -> w20Scd2 _,
-    "w12_session_window" -> w12SessionWindow _,
-    "w7_sessionize" -> w7Sessionize _,
-    "w8_percentiles" -> w8Percentiles _,
-    "w1_rolling5" -> w1Rolling5 _,
-    "w2_rolling20" -> w2Rolling20 _,
-    "w3_lag_diff" -> w3LagDiff _,
-    "w4_partition_max" -> w4PartitionMax _,
-    "w5_zscore" -> w5Zscore _,
-    "w6_row_number" -> w6RowNumber _,
-    "wf_features" -> (features _))
-
   private val over = "PARTITION BY user_id ORDER BY epoch_us(ts), event_id"
 
-  val oracle: Map[String, String] = Map(
-    "w21_ffill" ->
+  /** wf_features' oracle, shared with its SQL-surface twin. */
+  private[operators] val featuresSql =
+    s"""SELECT user_id, event_id,
+       |  round(max(value) OVER (PARTITION BY user_id) - value, 6) AS rul,
+       |  round(avg(value) OVER ($over ROWS BETWEEN 4 PRECEDING AND CURRENT ROW), 6) AS mean5_value,
+       |  round(avg(value) OVER ($over ROWS BETWEEN 19 PRECEDING AND CURRENT ROW), 6) AS mean20_value,
+       |  round(value - lag(value, 1) OVER ($over), 6) AS d_value,
+       |  round(CASE WHEN stddev_pop(value) OVER (PARTITION BY user_id) <> 0
+       |    THEN (value - avg(value) OVER (PARTITION BY user_id))
+       |         / stddev_pop(value) OVER (PARTITION BY user_id) END, 6) AS z_value
+       |FROM events ORDER BY event_id""".stripMargin
+
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("w21_ffill", w21Ffill _, Oracle(
       s"""SELECT event_id, user_id,
          |  last_value(props IGNORE NULLS) OVER ($over
          |    ROWS UNBOUNDED PRECEDING) AS props_ffill
-         |FROM events ORDER BY event_id""".stripMargin,
-    "w20_scd2" ->
+         |FROM events ORDER BY event_id""".stripMargin)),
+    QuerySpec("w20_scd2", w20Scd2 _, Oracle(
       """WITH e AS (SELECT user_id, event_id, event_type,
         |    epoch_us(ts) AS tus FROM events),
         |f AS (SELECT *, CASE WHEN lag(event_type) OVER w IS NULL
@@ -290,8 +287,8 @@ object Windows {
         |SELECT user_id, run_id, status, valid_from,
         |  lead(valid_from) OVER (PARTITION BY user_id ORDER BY run_id)
         |    AS valid_to
-        |FROM g ORDER BY user_id, run_id""".stripMargin,
-    "w18_streak" ->
+        |FROM g ORDER BY user_id, run_id""".stripMargin)),
+    QuerySpec("w18_streak", w18Streak _, Oracle(
       """WITH d AS (SELECT DISTINCT user_id,
         |    epoch_us(ts) // 86400000000 AS day FROM events),
         |g AS (SELECT user_id, day,
@@ -299,13 +296,13 @@ object Windows {
         |      AS grp FROM d),
         |l AS (SELECT user_id, count(*) AS len FROM g GROUP BY user_id, grp)
         |SELECT user_id, max(len) AS streak FROM l GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
+        |ORDER BY user_id""".stripMargin)),
     // Same gap-cumsum formulation as w7 rolled up to (session start,
     // count, sum) — with one boundary difference: Spark session windows
     // are end-EXCLUSIVE ([start, last_ts + gap)), so a gap of exactly
     // 24h starts a new session → the flag condition is >= here, vs the
     // strict > of w7's explicit-gap definition.
-    "w12_session_window" ->
+    QuerySpec("w12_session_window", w12SessionWindow _, Oracle(
       s"""WITH flagged AS (SELECT user_id, event_id, value, epoch_us(ts) AS tus,
          |  CASE WHEN epoch_us(ts) - lag(epoch_us(ts), 1) OVER ($over) IS NULL
          |    OR epoch_us(ts) - lag(epoch_us(ts), 1) OVER ($over) >= 86400000000
@@ -318,8 +315,8 @@ object Windows {
          |SELECT user_id, min(tus) AS start_us, count(*) AS n_events,
          |  CAST(sum(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
          |FROM sess GROUP BY user_id, session_id
-         |ORDER BY user_id, start_us""".stripMargin,
-    "w7_sessionize" ->
+         |ORDER BY user_id, start_us""".stripMargin)),
+    QuerySpec("w7_sessionize", w7Sessionize _, Oracle(
       s"""WITH flagged AS (SELECT user_id, event_id, value, epoch_us(ts) AS tus,
          |  CASE WHEN epoch_us(ts) - lag(epoch_us(ts), 1) OVER ($over) IS NULL
          |    OR epoch_us(ts) - lag(epoch_us(ts), 1) OVER ($over) > 86400000000
@@ -334,46 +331,37 @@ object Windows {
          |  min(tus) AS start_us, max(tus) AS end_us,
          |  CAST(sum(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
          |FROM sess GROUP BY user_id, session_id
-         |ORDER BY user_id, session_id""".stripMargin,
-    "w8_percentiles" ->
+         |ORDER BY user_id, session_id""".stripMargin)),
+    QuerySpec("w8_percentiles", w8Percentiles _, Oracle(
       """SELECT event_type, round(quantile_cont(value, 0.5), 6) AS p50,
         |  round(quantile_cont(value, 0.9), 6) AS p90,
         |  round(quantile_cont(value, 0.99), 6) AS p99
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "w1_rolling5" ->
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    QuerySpec("w1_rolling5", w1Rolling5 _, Oracle(
       s"""SELECT event_id, round(avg(value) OVER ($over
          |  ROWS BETWEEN 4 PRECEDING AND CURRENT ROW), 6) AS mean5
-         |FROM events ORDER BY event_id""".stripMargin,
-    "w2_rolling20" ->
+         |FROM events ORDER BY event_id""".stripMargin)),
+    QuerySpec("w2_rolling20", w2Rolling20 _, Oracle(
       s"""SELECT event_id, round(avg(value) OVER ($over
          |  ROWS BETWEEN 19 PRECEDING AND CURRENT ROW), 6) AS mean20
-         |FROM events ORDER BY event_id""".stripMargin,
-    "w3_lag_diff" ->
+         |FROM events ORDER BY event_id""".stripMargin)),
+    QuerySpec("w3_lag_diff", w3LagDiff _, Oracle(
       s"""SELECT event_id, round(value - lag(value, 1) OVER ($over), 6) AS d_value
-         |FROM events ORDER BY event_id""".stripMargin,
-    "w4_partition_max" ->
+         |FROM events ORDER BY event_id""".stripMargin)),
+    QuerySpec("w4_partition_max", w4PartitionMax _, Oracle(
       """SELECT event_id,
         |  round(max(value) OVER (PARTITION BY user_id) - value, 6) AS headroom
-        |FROM events ORDER BY event_id""".stripMargin,
-    "w5_zscore" ->
+        |FROM events ORDER BY event_id""".stripMargin)),
+    QuerySpec("w5_zscore", w5Zscore _, Oracle(
       """SELECT event_id, round(CASE WHEN sd <> 0 THEN (value - mu) / sd END, 6) AS z_value
         |FROM (SELECT event_id, value,
         |  stddev_pop(value) OVER (PARTITION BY user_id) AS sd,
         |  avg(value) OVER (PARTITION BY user_id) AS mu FROM events)
-        |ORDER BY event_id""".stripMargin,
-    "w6_row_number" ->
+        |ORDER BY event_id""".stripMargin)),
+    QuerySpec("w6_row_number", w6RowNumber _, Oracle(
       s"""SELECT event_id, CAST(row_number() OVER ($over) AS INT) AS rn,
          |  CAST(rank() OVER (PARTITION BY user_id ORDER BY event_type) AS INT) AS rk,
          |  CAST(dense_rank() OVER (PARTITION BY user_id ORDER BY event_type) AS INT) AS drk
-         |FROM events ORDER BY event_id""".stripMargin,
-    "wf_features" ->
-      s"""SELECT user_id, event_id,
-         |  round(max(value) OVER (PARTITION BY user_id) - value, 6) AS rul,
-         |  round(avg(value) OVER ($over ROWS BETWEEN 4 PRECEDING AND CURRENT ROW), 6) AS mean5_value,
-         |  round(avg(value) OVER ($over ROWS BETWEEN 19 PRECEDING AND CURRENT ROW), 6) AS mean20_value,
-         |  round(value - lag(value, 1) OVER ($over), 6) AS d_value,
-         |  round(CASE WHEN stddev_pop(value) OVER (PARTITION BY user_id) <> 0
-         |    THEN (value - avg(value) OVER (PARTITION BY user_id))
-         |         / stddev_pop(value) OVER (PARTITION BY user_id) END, 6) AS z_value
-         |FROM events ORDER BY event_id""".stripMargin)
+         |FROM events ORDER BY event_id""".stripMargin)),
+    QuerySpec("wf_features", features _, Oracle(featuresSql)))
 }

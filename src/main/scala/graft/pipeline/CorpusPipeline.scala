@@ -87,7 +87,7 @@ object CorpusPipeline {
         s.read.parquet(s"$wh/unique/documents.parquet"))
         .write.mode("overwrite").parquet(s"$wh/linededup/documents.parquet")),
     PipelineRunner.Stage("split", retries, () =>
-      operators.Dedup.queries("pp_cluster_split")(s, s"$wh/linededup")
+      operators.Dedup.clusterSplit(s, s"$wh/linededup")
         .write.mode("overwrite").parquet(s"$wh/splits/assignments.parquet")),
     PipelineRunner.Stage("screen", retries, () => {
       val docs = s.read.parquet(s"$wh/linededup/documents.parquet")

@@ -252,10 +252,11 @@ object MlPipeline {
     model.write.overwrite().save(path)
   def loadModel(path: String): PipelineModel = PipelineModel.load(path)
 
-  val queries: Map[String, graft.Query] = Map(
-    "ml_model_compare" -> (modelCompareQuery _))
-  /** Tree-ensemble metrics are not SQL-reproducible → rows-only check;
-    * spec asserts metric floors and save/load equality.
-    */
-  val oracle: Map[String, String] = Map.empty
+  val specs: Seq[graft.QuerySpec] = Seq(
+    graft.QuerySpec("ml_model_compare", modelCompareQuery _,
+      graft.Unchecked("tree-ensemble metrics are not SQL-reproducible; " +
+        "the spec asserts metric floors and save/load equality"),
+      growth = Some(graft.Exempt(40.0, 1.0,
+        "CV model training: optimizer iteration count is data-" +
+          "dependent, not a relational plan property"))))
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 class ExtendedOpsSpec extends GraftSuite {
 
   test("as-of join matches the brute-force maximum at-or-before") {
-    val got = operators.TemporalJoins.queries("j5_asof_join")(spark, sf)
+    val got = SparkEntry.queries("j5_asof_join")(spark, sf)
     // Brute force: for each event, max error ts <= event ts per user.
     val ev = Tables.events(spark, sf)
       .select(col("event_id"), col("user_id"), tsUs(col("ts")).as("tus"),
@@ -29,7 +29,7 @@ class ExtendedOpsSpec extends GraftSuite {
   }
 
   test("as-of join is inclusive: an error event matches itself") {
-    val got = operators.TemporalJoins.queries("j5_asof_join")(spark, sf)
+    val got = SparkEntry.queries("j5_asof_join")(spark, sf)
     val errRows = Tables.events(spark, sf)
       .filter(col("event_type") === "error")
       .select(col("event_id"), tsUs(col("ts")).as("own_tus"))
@@ -40,14 +40,14 @@ class ExtendedOpsSpec extends GraftSuite {
   }
 
   test("range join buckets partition all events exactly once") {
-    val got = operators.TemporalJoins.queries("j6_range_join")(spark, sf)
+    val got = SparkEntry.queries("j6_range_join")(spark, sf)
     val totalBucketed = got.agg(sum(col("n"))).first().getLong(0)
     val totalEvents = Tables.events(spark, sf).count()
     assert(totalBucketed == totalEvents)
   }
 
   test("pivot columns are the conditional aggregates") {
-    val got = Extended.queries("p13_pivot")(spark, sf)
+    val got = SparkEntry.queries("p13_pivot")(spark, sf)
     assert(got.columns.toSeq ==
       Seq("user_id", "click", "error", "purchase", "signup", "view"))
     val manual = Tables.events(spark, sf)
@@ -60,20 +60,20 @@ class ExtendedOpsSpec extends GraftSuite {
   }
 
   test("rank family: percent_rank 0..1, ntile balanced") {
-    val got = Extended.queries("w9_rank_family")(spark, sf)
+    val got = SparkEntry.queries("w9_rank_family")(spark, sf)
     assert(got.filter(col("pr") < 0 || col("pr") > 1).count() == 0)
     assert(got.filter(col("quartile") < 1 || col("quartile") > 4).count() == 0)
   }
 
   test("tpch_q3 joins are broadcast: the fact side never shuffles") {
-    val plan = operators.TpchQueries.queries("tpch_q3")(spark, sf)
+    val plan = SparkEntry.queries("tpch_q3")(spark, sf)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
     assert(!plan.contains("SortMergeJoin"), "fact-side shuffle join planned")
   }
 
   test("tpch_q6 filters push down to the parquet scan") {
-    val plan = operators.TpchQueries.queries("tpch_q6")(spark, sf)
+    val plan = SparkEntry.queries("tpch_q6")(spark, sf)
       .queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") &&
       plan.contains("l_discount"), plan.take(2000))
@@ -85,7 +85,7 @@ class ExtendedOpsSpec extends GraftSuite {
     // lineitem-only OR (quantity bounds) for the lineitem scan — at
     // 100 TB the join input is pre-pruned even though no single
     // conjunct applies to all rows.
-    val plan = operators.TpchQueries.queries("tpch_q19")(spark, sf)
+    val plan = SparkEntry.queries("tpch_q19")(spark, sf)
       .queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters: [IsNotNull(p_size)") ||
       plan.matches("(?s).*PushedFilters[^\\]]*p_brand.*"),
@@ -95,11 +95,11 @@ class ExtendedOpsSpec extends GraftSuite {
   }
 
   test("tpch_q4/q21 plan EXISTS as semi joins, NOT EXISTS as anti joins") {
-    val q4 = operators.TpchQueries.queries("tpch_q4")(spark, sf)
+    val q4 = SparkEntry.queries("tpch_q4")(spark, sf)
       .queryExecution.executedPlan.toString
     assert(q4.contains("LeftSemi"), "q4 EXISTS must be a semi join:\n" +
       q4.take(1500))
-    val q21 = operators.TpchQueries.queries("tpch_q21")(spark, sf)
+    val q21 = SparkEntry.queries("tpch_q21")(spark, sf)
       .queryExecution.executedPlan.toString
     // Both correlated probes keep orderkey as the equi half (shuffle
     // key at scale) with the suppkey inequality as a join residual —
@@ -113,7 +113,7 @@ class ExtendedOpsSpec extends GraftSuite {
     // The decorrelated MIN subquery joins catalog-vs-min on
     // (partkey, cost) equality; both sides are post-aggregate frames,
     // so the join input is |catalog|, never |lineitem|.
-    val df = operators.TpchQueries.queries("tpch_q2")(spark, sf)
+    val df = SparkEntry.queries("tpch_q2")(spark, sf)
     val plan = df.queryExecution.executedPlan.toString
     val aggs = "HashAggregate".r.findAllIn(plan).length
     assert(aggs >= 4, s"expected partial+final aggs for catalog and min, got $aggs")
@@ -268,7 +268,7 @@ class ExtendedOpsSpec extends GraftSuite {
   }
 
   test("as-of join is one shuffle: union + window, no join exchange") {
-    val plan = operators.TemporalJoins.queries("j5_asof_join")(spark, sf)
+    val plan = SparkEntry.queries("j5_asof_join")(spark, sf)
       .queryExecution.executedPlan.toString
     val hashShuffles = "Exchange hashpartitioning".r.findAllIn(plan).length
     assert(hashShuffles == 1,

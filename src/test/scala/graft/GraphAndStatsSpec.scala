@@ -18,7 +18,7 @@ class GraphAndStatsSpec extends GraftSuite {
   // ------------------------------------------------------------ BM25
 
   test("bm25: five ranked rows per query, scores descend, ids tie-break") {
-    val got = TextAnalysis.queries("ta_bm25")(spark, sf).collect()
+    val got = SparkEntry.queries("ta_bm25")(spark, sf).collect()
     assert(got.length == 25)
     got.groupBy(_.getLong(0)).foreach { case (_, rows) =>
       val byRank = rows.sortBy(_.getInt(2))
@@ -44,7 +44,7 @@ class GraphAndStatsSpec extends GraftSuite {
           (tf(t) * 2.2) / (tf(t) + 1.2 * (0.25 + 0.75 * w.length / avgdl))
       }.sum
     }
-    val got = TextAnalysis.queries("ta_bm25")(spark, sf).collect()
+    val got = SparkEntry.queries("ta_bm25")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getInt(2)) -> r.getLong(3)).toMap
     TextAnalysis.Bm25Queries.foreach { case (qid, qtext) =>
       val want = d.toSeq
@@ -59,7 +59,7 @@ class GraphAndStatsSpec extends GraftSuite {
   // ------------------------------------------------------------- PMI
 
   test("pmi: min-count gate holds and the head matches the brute force") {
-    val rows = TextAnalysis.queries("ta_pmi")(spark, sf).collect()
+    val rows = SparkEntry.queries("ta_pmi")(spark, sf).collect()
     assert(rows.length == 20)
     assert(rows.forall(_.getLong(2) >= 5L))
     val d = docs.values.toSeq
@@ -83,7 +83,7 @@ class GraphAndStatsSpec extends GraftSuite {
   // ---------------------------------------------------------- KS test
 
   test("ks statistic matches an exact driver-side two-sample computation") {
-    val r = Extended.queries("a29_ks")(spark, sf).head()
+    val r = SparkEntry.queries("a29_ks")(spark, sf).head()
     val li = Tables.lineitem(spark, sf)
       .select("l_returnflag", "l_quantity").collect()
       .map(x => (x.getString(0), x.getDouble(1)))
@@ -111,7 +111,7 @@ class GraphAndStatsSpec extends GraftSuite {
     val ev = Tables.events(spark, sf).select("event_type", "value").collect()
       .map(r => (r.getString(0), r.getDouble(1)))
       .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSeq }
-    val got = Extended.queries("dq_mad")(spark, sf).collect()
+    val got = SparkEntry.queries("dq_mad")(spark, sf).collect()
       .map(r => r.getString(0) ->
         (r.getLong(1), r.getDouble(2), r.getDouble(3), r.getLong(4))).toMap
     assert(got.keySet == ev.keySet)
@@ -126,7 +126,7 @@ class GraphAndStatsSpec extends GraftSuite {
   // ------------------------------------------------------ rolling corr
 
   test("rolling correlation: in [-1,1] or null; frame matches brute force") {
-    val got = Extended.queries("w22_rolling_corr")(spark, sf).collect()
+    val got = SparkEntry.queries("w22_rolling_corr")(spark, sf).collect()
     assert(got.length == 6000)
     got.foreach { r =>
       if (!r.isNullAt(3))
@@ -182,7 +182,7 @@ class GraphAndStatsSpec extends GraftSuite {
   // -------------------------------------------------------------- PSI
 
   test("psi matches an exact driver-side recomputation") {
-    val got = Extended.queries("dq_psi")(spark, sf).collect()
+    val got = SparkEntry.queries("dq_psi")(spark, sf).collect()
     val ev = Tables.events(spark, sf)
       .filter(col("value").isNotNull)
       .select(col("event_type"), col("value"), tsUs(col("ts")).as("us"))
@@ -227,7 +227,7 @@ class GraphAndStatsSpec extends GraftSuite {
   // ------------------------------------------------------- cohort LTV
 
   test("cohort ltv: cumulative revenue matches a driver-side rollup") {
-    val got = Extended.queries("es_cohort_ltv")(spark, sf).collect()
+    val got = SparkEntry.queries("es_cohort_ltv")(spark, sf).collect()
     val wk = 604800000000L
     val ev = Tables.events(spark, sf)
       .select(col("user_id"), tsUs(col("ts")).as("us"),
@@ -266,7 +266,7 @@ class GraphAndStatsSpec extends GraftSuite {
     // broadcast (no shuffle join anywhere), and per-query top-k runs
     // through the typed aggregator (ObjectHashAggregate), never a
     // row_number window.
-    val bm25 = TextAnalysis.queries("ta_bm25")(spark, sf)
+    val bm25 = SparkEntry.queries("ta_bm25")(spark, sf)
       .queryExecution.executedPlan.toString
     assert("BroadcastHashJoin".r.findAllIn(bm25).length >= 3, bm25.take(1200))
     assert(bm25.contains("ObjectHashAggregate"), bm25.take(1200))
@@ -281,14 +281,14 @@ class GraphAndStatsSpec extends GraftSuite {
       corrBody.take(1200))
     // The registry query itself: the checkpointed rows feed the output
     // sort directly (no window recompute in the sampling pass).
-    val corr = Extended.queries("w22_rolling_corr")(spark, sf)
+    val corr = SparkEntry.queries("w22_rolling_corr")(spark, sf)
       .queryExecution.executedPlan.toString
     assert(corr.contains("ExistingRDD") &&
       corr.contains("Exchange rangepartitioning"), corr.take(1200))
     // PSI: the filtered events projection is pinned; both halves, the
     // type skeleton and the split bound must read it from cache instead
     // of re-scanning events per consumer.
-    val psi = Extended.queries("dq_psi")(spark, sf)
+    val psi = SparkEntry.queries("dq_psi")(spark, sf)
       .queryExecution.executedPlan.toString
     assert("InMemoryTableScan".r.findAllIn(psi).length >= 3, psi.take(1200))
   }
@@ -304,7 +304,7 @@ class GraphAndStatsSpec extends GraftSuite {
     // node RANKING, which freezes long before the values do.
     def ranking(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getString(0), r.getLong(1))).toSeq
-    val fixed = ranking(Graph.queries("g1_pagerank")(spark, sf).collect())
+    val fixed = ranking(SparkEntry.queries("g1_pagerank")(spark, sf).collect())
     val (head, iters) = Graph.pagerankConverged(spark, sf, eps = 1e-3)
     val conv = ranking(head.collect())
     info(s"converged in $iters rounds (fixed mode runs 10)")
@@ -316,7 +316,7 @@ class GraphAndStatsSpec extends GraftSuite {
   }
 
   test("pagerank top-25 matches a driver-side power iteration") {
-    val got = Graph.queries("g1_pagerank")(spark, sf).collect()
+    val got = SparkEntry.queries("g1_pagerank")(spark, sf).collect()
     assert(got.length == 25)
     // Brute force on the same bipartite graph.
     val cs = Tables.lineitem(spark, sf)
@@ -364,7 +364,7 @@ class GraphAndStatsSpec extends GraftSuite {
   // ------------------------------------------- triangles + reachability
 
   test("triangles: top-15 matches driver-side set enumeration") {
-    val got = Graph.queries("g2_triangles")(spark, sf).collect()
+    val got = SparkEntry.queries("g2_triangles")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     // Brute force: same 1995 part co-purchase graph, all C(3) checks
     // over the edge SET — ordering-scheme-free, unlike the engine.
@@ -390,7 +390,7 @@ class GraphAndStatsSpec extends GraftSuite {
   }
 
   test("reach: hop profile matches a driver-side BFS") {
-    val got = Graph.queries("g3_reach")(spark, sf).collect()
+    val got = SparkEntry.queries("g3_reach")(spark, sf).collect()
       .map(r => (r.getInt(0), r.getLong(1))).toMap
     val cs = Tables.lineitem(spark, sf)
       .join(Tables.orders(spark, sf), col("l_orderkey") === col("o_orderkey"))
@@ -416,7 +416,7 @@ class GraphAndStatsSpec extends GraftSuite {
   }
 
   test("jaccard: top-20 supplier pairs match driver-side set math") {
-    val got = Graph.queries("g4_jaccard")(spark, sf).collect()
+    val got = SparkEntry.queries("g4_jaccard")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val cs = Tables.lineitem(spark, sf)
       .join(Tables.orders(spark, sf), col("l_orderkey") === col("o_orderkey"))
@@ -443,10 +443,10 @@ class GraphAndStatsSpec extends GraftSuite {
     // exact-over-capped-expansion scoring must reproduce the exact
     // operator's top-20 VERBATIM (rows, order, and scores) — the
     // property RecallGate's 0.98 floor pins at the official scale.
-    val got = Graph.queries("g4_jaccard_capped")(spark, sf).collect()
+    val got = SparkEntry.queries("g4_jaccard_capped")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(got.length == 20)
-    val exact = Graph.queries("g4_jaccard")(spark, sf).collect()
+    val exact = SparkEntry.queries("g4_jaccard")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(got.toSeq == exact.toSeq)
     // Work contract: capped candidate-pair volume only (the r14
@@ -489,7 +489,7 @@ class GraphAndStatsSpec extends GraftSuite {
   // ------------------------------------------------- statistical audits
 
   test("chi-square: matches driver-side recomputation from exact counts") {
-    val row = operators.Stats.queries("dq_chisq")(spark, sf).head()
+    val row = SparkEntry.queries("dq_chisq")(spark, sf).head()
     val ev = Tables.events(spark, sf)
       .select(col("event_type"), unix_micros(col("ts"))).collect()
       .map(r => (r.getString(0), r.getLong(1)))
@@ -511,7 +511,7 @@ class GraphAndStatsSpec extends GraftSuite {
   }
 
   test("benford: dense 9 digits, shares sum to 1, audit math checks out") {
-    val got = operators.Stats.queries("dq_benford")(spark, sf).collect()
+    val got = SparkEntry.queries("dq_benford")(spark, sf).collect()
     assert(got.map(_.getInt(0)).toSeq == (1 to 9))
     val n = got.map(_.getLong(1)).sum
     val cents = Tables.events(spark, sf).select(col("value")).collect()
@@ -529,7 +529,7 @@ class GraphAndStatsSpec extends GraftSuite {
   }
 
   test("hhi: per-nation concentration matches brute force; bounds hold") {
-    val got = operators.Stats.queries("a30_hhi")(spark, sf).collect()
+    val got = SparkEntry.queries("a30_hhi")(spark, sf).collect()
     val rev = Tables.lineitem(spark, sf)
       .join(Tables.supplier(spark, sf), col("l_suppkey") === col("s_suppkey"))
       .join(Tables.nation(spark, sf), col("s_nationkey") === col("n_nationkey"))
@@ -557,7 +557,7 @@ class GraphAndStatsSpec extends GraftSuite {
   }
 
   test("seasonal: residual means per dow match brute force; 7 dense rows") {
-    val got = operators.Stats.queries("w23_seasonal")(spark, sf).collect()
+    val got = SparkEntry.queries("w23_seasonal")(spark, sf).collect()
     assert(got.map(_.getInt(0)).toSeq == (0 to 6))
     val daily = Tables.orders(spark, sf)
       .select(to_date(col("o_orderdate")), col("o_totalprice")).collect()
@@ -592,7 +592,7 @@ class GraphAndStatsSpec extends GraftSuite {
   // ------------------------------------------------------ PPS sampling
 
   test("pps sample: exact systematic draw matches driver-side replay") {
-    val got = operators.Stats.queries("pp_weighted_sample")(spark, sf)
+    val got = SparkEntry.queries("pp_weighted_sample")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3)))
     val md = java.security.MessageDigest.getInstance("MD5")

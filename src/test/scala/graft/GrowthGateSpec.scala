@@ -95,11 +95,4 @@ class GrowthGateSpec extends AnyFunSuite {
       Map("a" -> 0.9, "b" -> 0.8, "c" -> 0.95, "zz" -> 0.0),
       floors).isEmpty)
   }
-
-  test("recall gate: every shipped pairing variant has a floor") {
-    val variants = RecallGate.Pairings.flatMap(_._2).toSet
-    assert(RecallGate.Floors.keySet == variants,
-      s"floorless variants: ${variants.diff(RecallGate.Floors.keySet)}; " +
-        s"orphan floors: ${RecallGate.Floors.keySet.diff(variants)}")
-  }
 }

@@ -18,12 +18,6 @@ class RelationalSpec extends GraftSuite {
     }
   }
 
-  test("every oracle entry has a matching query") {
-    val qs = SparkEntry.queries.keySet
-    val missing = SparkEntry.oracleSql.keySet.diff(qs)
-    assert(missing.isEmpty, s"oracles without queries: $missing")
-  }
-
   test("gridQuantiles high-cardinality fallback is bit-equal, no broadcast") {
     // lowCardGroups = false is the documented escape hatch for callers
     // grouping by a high-cardinality key, where broadcasting the
