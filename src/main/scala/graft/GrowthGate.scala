@@ -1,14 +1,15 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Inventory-wide scale gate: times EVERY declared query at 1× and at a
   * replicated `factor`× warehouse ([[ScaleData.writeScaledWarehouse]])
   * and reports the per-query growth factor — the super-linear-plan
   * detector the plan-hygiene specs cannot be (a plan can be
   * shuffle-clean and broadcast-correct and still hide accidental
   * re-evaluation, skew, or a quadratic candidate set that only shows up
-  * as wall-clock growth). ScaleSmoke measures ~40 hand-picked kernels;
-  * this runs the FULL inventory, so a creeper in any of the other ~160
-  * queries surfaces before it matters at 100 TB.
+  * as wall-clock growth). It runs the FULL inventory, so a creeper in
+  * any query surfaces before it matters at 100 TB.
   *
   * Protocol: per query, one warm pass + one measured pass at each
   * scale, in sorted name order (warm pass populates JIT, codegen
@@ -120,6 +121,34 @@ object GrowthGate {
         })
     })
 
+  /** One query's growth measurement: [[Harness.warmTimed]] at `dir1` and
+    * at `dirN`, plus the (1×, factor×) work pair when the query is
+    * [[WorkGated]] — measured once, not per timing pass: the metric is
+    * deterministic. A failure becomes the row's error, with walls -1.
+    * Prints a `[tag]` progress line so a long run is observable.
+    * Returns (name, t1, tN, err) and the work pair.
+    */
+  private[graft] def measure(spark: SparkSession, tag: String, factor: Int,
+      name: String, dir1: String, dirN: String)
+      : ((String, Double, Double, String), Option[(Double, Double)]) = {
+    val (r, work) = try {
+      val t1 = Harness.warmTimed(spark, name, dir1)
+      val tN = Harness.warmTimed(spark, name, dirN)
+      val w = workGated(name).map(w => (w.metric(spark, dir1),
+        w.metric(spark, dirN)))
+      ((name, t1, tN, ""), w)
+    } catch {
+      case e: Throwable => ((name, -1.0, -1.0, errLine(name, e)), None)
+    }
+    val g = if (r._2 > 0) r._3 / r._2 else -1.0
+    println(f"[$tag] $name%-28s t1=${r._2}%7.2f t$factor=" +
+      f"${r._3}%8.2f growth=$g%6.1f ${r._4}" +
+      work.map { case (w1, wN) =>
+        f" work=${w1}%.0f->${wN}%.0f (${wN / math.max(w1, 1)}%4.1fx)"
+      }.getOrElse(""))
+    (r, work)
+  }
+
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(10)
     val src = args.lift(1).getOrElse("/root/testdata/sf0.1")
@@ -129,30 +158,13 @@ object GrowthGate {
     val spark = Harness.session()
     ScaleData.writeScaledWarehouse(spark, src, scratch, factor, Harness.cpus)
 
-    val rows = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Double, Double, String)] // name, t1, tN, err
-    // name -> (work1, workN) for the work-gated queries — measured once
-    // per query, not per timing pass (the metric is deterministic).
-    val work = scala.collection.mutable.Map.empty[String, (Double, Double)]
-    names.foreach { name =>
-      val r = try {
-        val t1 = Harness.warmTimed(spark, name, src)
-        val tN = Harness.warmTimed(spark, name, scratch)
-        workGated(name).foreach { w =>
-          work(name) = (w.metric(spark, src), w.metric(spark, scratch))
-        }
-        (name, t1, tN, "")
-      } catch {
-        case e: Throwable => (name, -1.0, -1.0, errLine(name, e))
-      }
-      rows += r
-      val g = if (r._2 > 0) r._3 / r._2 else -1.0
-      println(f"[growth] ${r._1}%-28s t1=${r._2}%7.2f t$factor=" +
-        f"${r._3}%8.2f growth=$g%6.1f ${r._4}" +
-        work.get(r._1).map { case (w1, wN) =>
-          f" work=${w1}%.0f->${wN}%.0f (${wN / math.max(w1, 1)}%4.1fx)"
-        }.getOrElse(""))
-    }
+    val measured =
+      names.map(measure(spark, "growth", factor, _, src, scratch))
+    // name, t1, tN, err — mutable: a remeasured row is replaced below
+    val rows = scala.collection.mutable.ArrayBuffer.from(measured.map(_._1))
+    // name -> (work1, workN) for the work-gated queries
+    val work = measured.collect { case ((n, _, _, _), Some(w)) => n -> w }
+      .toMap
     def fmt(v: Double) = Harness.num(v)
     def flagsOf(rs: Seq[(String, Double, Double, String)]): Seq[String] =
       rs.collect {

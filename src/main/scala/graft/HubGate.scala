@@ -28,6 +28,12 @@ object HubGate {
     */
   val Bound = 3.0
 
+  /** Extreme-hub probe degrees (see `main`): the chunk-pair generator
+    * runs at [[GenDegree]], the full g4 query at [[FullDegree]].
+    */
+  val GenDegree = 1000000L
+  val FullDegree = 30000L
+
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(10)
     val src = args.lift(1).getOrElse("/root/testdata/sf0.1")
@@ -80,12 +86,10 @@ object HubGate {
     //  2. FULL QUERY at degree 30 000 (10× the warehouse hub; C(D,2)
     //     ≈ 4.5·10⁸ pairs) — end-to-end completion with wall recorded
     //     against the measured pair volume.
-    val genDeg = sys.env.getOrElse("GRAFT_HUB_GEN_DEG", "1000000").toLong
-    val fullDeg = sys.env.getOrElse("GRAFT_HUB_FULL_DEG", "30000").toLong
-    val genDir = s"${scratch}_xdeg$genDeg"
-    val fullDir = s"${scratch}_xdeg$fullDeg"
-    ScaleData.writeExtremeHubWarehouse(spark, src, genDir, genDeg)
-    ScaleData.writeExtremeHubWarehouse(spark, src, fullDir, fullDeg)
+    val genDir = s"${scratch}_xdeg$GenDegree"
+    val fullDir = s"${scratch}_xdeg$FullDegree"
+    ScaleData.writeExtremeHubWarehouse(spark, src, genDir, GenDegree)
+    ScaleData.writeExtremeHubWarehouse(spark, src, fullDir, FullDegree)
     val genT0 = System.nanoTime()
     val partCounts = operators.Graph.jaccardChunkPairsFor(spark, genDir)
       .queryExecution.toRdd
@@ -98,7 +102,7 @@ object HubGate {
       if (genRows == 0) 1.0
       else partCounts.max.toDouble /
         math.max(genRows.toDouble / partCounts.length, 1.0)
-    println(f"[hub] extreme gen deg=$genDeg rows=$genRows " +
+    println(f"[hub] extreme gen deg=$GenDegree rows=$genRows " +
       f"wall=$genWall%.2f max/mean=$genBalance%.2f")
     val (fullMaxDeg, fullPairs) =
       operators.Graph.customerDegreeStats(spark, fullDir)
@@ -114,7 +118,8 @@ object HubGate {
       n -> Harness.nums(Seq("plain" -> p, "hub" -> h, "inflation" -> inf))
     })
     val extremeJson = Harness.obj(Seq(
-      "gen_degree" -> genDeg.toString, "gen_chunk_pair_rows" -> genRows.toString,
+      "gen_degree" -> GenDegree.toString,
+      "gen_chunk_pair_rows" -> genRows.toString,
       "gen_wall_sec" -> fmt(genWall),
       "gen_partition_max_over_mean" -> fmt(genBalance),
       "full_degree" -> fullMaxDeg.toString,

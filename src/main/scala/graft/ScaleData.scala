@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Scaled-corpus generators shared by the scale experiments
-  * ([[ScaleSmoke]], [[GrowthGate]]). All growth is DETERMINISTIC
+/** Scaled-corpus generators shared by the scale gates ([[GrowthGate]]
+  * and the other `*Gate` mains). All growth is DETERMINISTIC
   * (sin-hash mixtures, md5 id arithmetic — no RNG) so runs are
   * reproducible and resumable, and all id remapping preserves
   * referential integrity WITHIN a replica (joins behave exactly like a
@@ -82,8 +82,7 @@ object ScaleData {
     *    corpus's planted dup structure replicates linearly instead of
     *    forming factor-sized cliques whose pair output would grow
     *    quadratically and masquerade as a plan regression in the
-    *    growth numbers. (ScaleSmoke's dup-heavy clone corpus measures
-    *    that worst case deliberately; this gate measures growth.)
+    *    growth numbers.
     *  - embeddings: [[grownVectors]] manifold mixtures (novel points,
     *    same distribution).
     */

@@ -42,25 +42,11 @@ object SkewGate {
     println(s"[skew] zipf alpha=$alpha max_customer_degree " +
       s"1x=$maxDeg1 ${factor}x=$maxDegN pair_volume_${factor}x=$pairVolN")
 
-    val work = scala.collection.mutable.Map.empty[String, (Double, Double)]
-    val rows = Names.map { name =>
-      val r = try {
-        val t1 = Harness.warmTimed(spark, name, z1)
-        val tN = Harness.warmTimed(spark, name, zN)
-        GrowthGate.workGated(name).foreach { w =>
-          work(name) = (w.metric(spark, z1), w.metric(spark, zN))
-        }
-        (name, t1, tN, "")
-      } catch {
-        case e: Throwable => (name, -1.0, -1.0, errLine(name, e))
-      }
-      println(f"[skew] ${r._1}%-18s t1=${r._2}%7.2f t$factor=${r._3}%8.2f " +
-        f"growth=${if (r._2 > 0) r._3 / r._2 else -1.0}%6.1f ${r._4}" +
-        work.get(r._1).map { case (w1, wN) =>
-          f" work=${w1}%.0f->${wN}%.0f (${wN / math.max(w1, 1)}%4.1fx)"
-        }.getOrElse(""))
-      r
-    }
+    val measured =
+      Names.map(GrowthGate.measure(spark, "skew", factor, _, z1, zN))
+    val rows = measured.map(_._1)
+    val work = measured.collect { case ((n, _, _, _), Some(w)) => n -> w }
+      .toMap
     // Curation-mode accuracy on the SKEWED corpus — the number that
     // justifies g4_jaccard_capped's existence: top-k overlap between
     // the capped variant and exact g4 on the Zipf warehouses (both

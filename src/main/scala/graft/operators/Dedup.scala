@@ -470,23 +470,8 @@ object Dedup {
     val edges = ngramJaccard(s, d)
       .select(col("doc_b").as("u"), col("doc_a").as("v"))
       .pinned()
-    // env for launch-time opt-in; the sysprop lets an in-JVM probe
-    // (ScaleSmoke's cluster-split variance captures) toggle attribution
-    // without a new process.
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG") ||
-      sys.props.contains("graft.cc.debug")
-    if (dbg) {
-      // Attribution split: materialize the pinned edge list under its
-      // own timer so round 1 reads as pure star contraction. Same total
-      // work (round 1 would populate the pin anyway), only the
-      // attribution moves — this is how the round-7 30→46s spread was
-      // pinned to the candidate-generation stage, not the iterations.
-      val t0 = System.nanoTime()
-      val ne = edges.count()
-      println(f"[cc] edges=$ne built ${(System.nanoTime() - t0) / 1e9}%.2fs")
-    }
-    connectedComponents(edges, Tables.documents(s, d).select(col("doc_id")),
-      dbg).orderBy("doc_id")
+    connectedComponents(edges, Tables.documents(s, d).select(col("doc_id")))
+      .orderBy("doc_id")
   }
 
   /** Connected components over a canonical (u, v) edge list with u > v:
@@ -533,7 +518,7 @@ object Dedup {
   private val CcBroadcastMaxNodes = 4L * 1024 * 1024
 
   private[graft] def connectedComponents(edges: DataFrame,
-      nodes: DataFrame, dbg: Boolean = false): DataFrame = {
+      nodes: DataFrame): DataFrame = {
     val HashMinRounds = 4
     val nNodes = graft.ContextCaches.decideOnce(nodes, "ccNodeCount")(
       nodes.count())
@@ -577,7 +562,6 @@ object Dedup {
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < HashMinRounds) {
-      val t0 = System.nanoTime()
       val r1 = round(labelsPin)
       val r2 = round(r1)
       changed = r2.filter(col("chg")).count()
@@ -585,21 +569,17 @@ object Dedup {
       r1.unpersist() // r2's rows are materialized; r1's cache is done
       labelsPin = r2
       iter += 2
-      if (dbg) println(f"[cc] hashmin pair=${iter / 2} changed=$changed " +
-        f"${(System.nanoTime() - t0) / 1e9}%.2fs")
     }
     if (changed == 0) labelsPin.drop("chg")
     else {
-      if (dbg) println(s"[cc] hashmin not converged after $HashMinRounds " +
-        "rounds; switching to star contraction")
       labelsPin.unpersist()
-      starContraction(edges, nodes, dbg)
+      starContraction(edges, nodes)
     }
   }
 
   /** Phase 2 of [[connectedComponents]] — see its doc. */
   private def starContraction(edges: DataFrame,
-      nodes: DataFrame, dbg: Boolean): DataFrame = {
+      nodes: DataFrame): DataFrame = {
     def sym(e: DataFrame): DataFrame =
       e.union(e.select(col("v").as("u"), col("u").as("v")))
     // large-star: per node u, m = min(N(u) ∪ {u}); emit (v, m) for every
@@ -633,12 +613,11 @@ object Dedup {
     // localCheckpoint truncates the plan to the materialized partitions
     // every round (same device GraphX/GraphFrames iterative jobs use);
     // the caller's `edges` frame itself stays pinned/unpinned on the
-    // caller's terms (ScaleSmoke's c2/c3 captures reuse it).
+    // caller's terms.
     var cur = edges
     var iter = 0
     var done = false
     while (!done && iter < MaxRounds) {
-      val t0 = System.nanoTime()
       val next = smallStar(largeStar(cur)).localCheckpoint(eager = true)
       val changed = next.join(cur, Seq("u", "v"), "left_anti").count() +
         cur.join(next, Seq("u", "v"), "left_anti").count()
@@ -646,8 +625,6 @@ object Dedup {
       if (cur ne edges) cur.unpersist()
       cur = next
       iter += 1
-      if (dbg) println(f"[cc] round=$iter changed=$changed " +
-        f"${(System.nanoTime() - t0) / 1e9}%.2fs")
     }
     require(done,
       s"connected components did not reach a star fixpoint within " +
@@ -1030,7 +1007,7 @@ object Dedup {
     // strings (the decontaminate-gram lesson): both the corpus-sized
     // postings index and the per-pair verify arrays are what this
     // operator pins and shuffles, and the string form measured 3×
-    // slower under the full ScaleSmoke's cache pressure (112s vs 36s
+    // slower under a full 10× scale run's cache pressure (112s vs 36s
     // isolated — eviction + window recompute of the string postings).
     // Correctness: the prefix filter only needs ONE consistent global
     // order — (f, gh) is one — and a digest collision can only MERGE

@@ -216,8 +216,6 @@ object Graph {
         math.max(row.getDouble(1), Double.MinPositiveValue)
       ranks = next
       iters += 1
-      if (sys.env.contains("GRAFT_PR_DEBUG"))
-        println(f"[pr_converge] round $iters rel_delta=$delta%.3e")
     }
     (prHead(ranks), iters)
   }

@@ -27,9 +27,6 @@ object TemporalJoins {
     * 100 TB this is the merge-based as-of every stream processor uses,
     * with ties resolved right-row-first so the match is inclusive,
     * exactly like DuckDB's ASOF (e.ts >= r.ts) semantics.
-    *
-    * Shared by the oracle query and ScaleSmoke so the measured plan IS
-    * the shipped plan.
     */
   private[graft] def asofLastError(ev: DataFrame): DataFrame = {
     val errs = ev.filter(col("event_type") === "error")

@@ -188,8 +188,8 @@ object TextAnalysis {
     * `array_intersect` over the un-exploded doc arrays (15.5s at sf0.1
     * — ProjectCollapse inlines the whole transform+distinct into EVERY
     * referencing expression, so it evaluates 4× per row inside one
-    * scan). The skew delta is measured by ScaleSmoke's planted
-    * hot-shingle stage against [[boilerplateWindowed]].
+    * scan). [[boilerplateWindowed]] is the retired window form, kept as
+    * the reference this form is tested against.
     */
   private def boilerplate(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
@@ -221,10 +221,10 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
-  /** The round-7 window-form boilerplate screen, kept ONLY as the skew
-    * baseline for ScaleSmoke's planted-hot-shingle comparison: the
-    * (source, g) count window routes every occurrence of a hot shingle
-    * into one window partition — the single-task straggler the shipped
+  /** The round-7 window-form boilerplate screen, kept ONLY as the
+    * reference the shipped form is tested against: the (source, g)
+    * count window routes every occurrence of a hot shingle into one
+    * window partition — the single-task straggler the shipped
     * aggregate-join form removes. Not registered as a query.
     */
   private[graft] def boilerplateWindowed(s: SparkSession,

@@ -140,25 +140,4 @@ object StreamingDedup {
     q.processAllAvailable()
     q.stop()
   }
-
-  /** Drive a stream of documents from `srcDir` (parquet drops) into an
-    * in-memory table and block until all available input is processed.
-    * `maxFilesPerTrigger` > 0 splits the backlog into several
-    * micro-batches (throughput smokes); 0 processes it as one batch.
-    */
-  def runToMemory(spark: SparkSession, srcDir: String, queryName: String,
-      maxFilesPerTrigger: Int = 0): Unit = {
-    import spark.implicits._
-    val reader = spark.readStream
-      .schema("doc_id LONG, text STRING")
-    val src = (if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader)
-      .parquet(srcDir)
-      .as[Doc]
-    val q = firstSeen(src)
-      .writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName(queryName).start()
-    q.processAllAvailable()
-    q.stop()
-  }
 }

@@ -99,7 +99,7 @@ object StreamingFunnel {
 
   /** Drive an events parquet directory as a stream into an in-memory
     * table of [[Progress]] rows and block until all input is processed
-    * (same driver contract as [[StreamingDedup.runToMemory]]).
+    * (same driver contract as [[StreamingQuota.runToMemory]]).
     *
     * The directory must hold CANONICALIZED events (as written by
     * materializing `Tables.events` output — TimestampType micros), not

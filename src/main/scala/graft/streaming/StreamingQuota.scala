@@ -59,8 +59,9 @@ object StreamingQuota {
   }
 
   /** Drive a documents parquet directory as a stream into an in-memory
-    * table and block until all input is processed (same driver contract
-    * as [[StreamingDedup.runToMemory]]).
+    * table and block until all input is processed. `maxFilesPerTrigger`
+    * > 0 splits the backlog into several micro-batches; 0 processes it
+    * as one batch.
     */
   def runToMemory(spark: SparkSession, srcDir: String, queryName: String,
       maxFilesPerTrigger: Int = 0, budget: Long = 800L): Unit = {

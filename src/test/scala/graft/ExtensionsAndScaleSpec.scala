@@ -113,8 +113,8 @@ class ExtensionsAndScaleSpec extends GraftSuite {
 
   /** Events with a synthetic hot key: every even user_id collapses onto
     * key -1, so ONE key owns ≥50% of all rows — the distribution the
-    * salted operators exist for (ScaleSmoke times the same shape at
-    * 100×; these specs pin semantic equality on it).
+    * salted operators exist for (these specs pin semantic equality on
+    * it).
     */
   private def hotKeyed = Tables.events(spark, sf)
     .withColumn("hk",
