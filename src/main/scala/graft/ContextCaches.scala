@@ -138,14 +138,15 @@ object ContextCaches {
   /** [[pin]] with a per-pool LRU bound: once a pool holds `cap` distinct
     * plans, pinning another unpersists the least-recently-pinned entry.
     *
-    * For OPTIMIZER-RULE pins (GridOrderStatsRule's shared projections):
-    * the rule fires once per DISTINCT query compilation, and an unbounded
-    * registry would grow a data-sized cache entry per distinct rewritten
-    * query for the context lifetime — a long-lived session running many
-    * ad-hoc medians would exhaust storage. Library operators keep using
-    * [[pin]] (their residency IS the contract — a vector store must not
-    * silently evict its inverted lists); rule pins are best-effort
-    * residency, and eviction is always SAFE: an unpersisted
+    * For pins an optimizer rule makes (GridOrderStatsRule's shared
+    * projections, the value-grid collapses): the rule fires once per
+    * DISTINCT query compilation, and an unbounded registry would grow a
+    * data-sized cache entry per distinct rewritten query for the context
+    * lifetime — a long-lived session running many ad-hoc medians would
+    * exhaust storage. Other library operators keep using [[pin]] (their
+    * residency IS the contract — a vector store must not silently evict
+    * its inverted lists); pool pins are best-effort residency, and
+    * eviction is always SAFE: an unpersisted
     * InMemoryRelation recomputes from its cached child plan, it does not
     * fail. Touching an already-pooled plan refreshes both its recency
     * and (via CacheManager's own dedup) its single storage entry.

@@ -19,11 +19,13 @@ import org.apache.spark.sql.functions._
   * aggregation-buffer entries, chosen to exceed the 2g test heap):
   *   median_agg      — built-in `median(x)`: expected to DIE at -Xmx2g
   *   percentile_agg  — built-in `percentile(x, 0.5)`: same buffer, DIES
-  *   grid_partitioned— exactMedians (32-way range-partitioned prefix
-  *                     sum): expected to SURVIVE
-  *   grid_one_window — exactMedians buckets=1 (single window task):
-  *                     SURVIVES via window/sort spill — its scale
-  *                     problem is the one-task straggler, not heap
+  *   grid_partitioned— exactMedians (the grid's cumsum choice takes the
+  *                     32-way range-partitioned prefix sum for a grid
+  *                     this large): expected to SURVIVE
+  *   grid_one_window — the same median over the one-window cumsum
+  *                     (single window task): SURVIVES via window/sort
+  *                     spill — its scale problem is the one-task
+  *                     straggler, not heap
   *   query:<name>    — any declared query on [sfDir], for running the
   *                     shipped grid consumers (a13_medians,
   *                     w8_percentiles, a7_two_level, es_rfm) under the
@@ -52,8 +54,11 @@ object MemSmoke {
         operators.Relational.exactMedians(frame, Seq("x" -> "med"))
           .first().getDouble(0)
       case "grid_one_window" =>
-        operators.Relational.exactMedians(frame, Seq("x" -> "med"),
-          buckets = 1).first().getDouble(0)
+        val grid = frame.groupBy(lit(0).as("k"), col("x").as("v"))
+          .agg(count(lit(1)).as("c"))
+        plans.ValueGrid.orderStats(grid,
+          plans.ValueGrid.oneWindowCumsum(grid, Seq("k")), Seq("k"),
+          Seq(0.5)).first().getDouble(1)
       case "sql_median_rewritten" =>
         // The SAME SQL text that dies as median_agg, but with
         // GridOrderStatsRule installed: the optimizer swaps the

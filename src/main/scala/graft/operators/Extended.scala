@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft._
+import graft.plans.ValueGrid
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -332,7 +333,7 @@ object Extended {
     * |F_A(v) − F_N(v)|.
     *
     * Scale shape: this is the value-grid pattern
-    * ([[Relational.rangeCumsum]]) — rows collapse map-side to
+    * ([[ValueGrid.rangeCumsum]]) — rows collapse map-side to
     * (value, side-count) grid cells, BOTH sides' cells exist at every
     * grid value (a zero-count cell is emitted for the absent side, so
     * each side's step CDF is defined at every merged-grid point), and
@@ -354,7 +355,7 @@ object Extended {
         struct(lit("N").as("side"), col("cn").as("c")))).as("e"))
       .select(col("e.side").as("side"), col("v"), col("e.c").as("c"))
     val tot = li.groupBy("side").agg(count(lit(1)).as("n"))
-    val cdf = Relational.rangeCumsum(long, Seq("side"))
+    val cdf = ValueGrid.rangeCumsum(long.pinned(), Seq("side"))
       .join(broadcast(tot), "side")
       .select(col("side"), col("v"),
         (col("cum").cast("double") / col("n").cast("double")).as("f"))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft._
+import graft.plans.ValueGrid
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -115,10 +116,8 @@ object Relational {
       .select(col("l_orderkey"), col("l_linenumber"),
         nullif(col("l_discount"), lit(0.0)).as("disc"))
     // distributed value-grid median (see exactMedians) — the buffering
-    // median aggregate would single-task the whole column. buckets=1:
-    // l_discount's grid is the 11-value ladder [0.00..0.10] at every
-    // scale, so the one-window cumsum is an 11-row sort.
-    val med = exactMedians(li, Seq("disc" -> "med"), buckets = 1)
+    // median aggregate would single-task the whole column.
+    val med = exactMedians(li, Seq("disc" -> "med"))
     // Spread the imputation chain (r16, the p15_winsorize finding): the
     // coalesce+round project and the output sort's range sampling both
     // ran as ONE task on the single-split scan. The median branch keeps
@@ -316,278 +315,34 @@ object Relational {
         sum(pow(col("t") - col("tbar"), 2))).as("r2"))
   }
 
-  /** Per-key sort-state bound under which a single window task is the
-    * RIGHT plan for a prefix sum / quantile grid at any corpus scale:
-    * 4M cells ≈ ~100 MB of spillable sort state. Shared by
-    * [[rangeCumsum]]'s runtime adaptive switch and [[gridQuantiles]]'.
-    */
-  private[graft] val CumsumSingleSortMaxCells = 4L * 1024 * 1024
-
-  /** Largest per-key cell count of a (pinned) grid — the one number
-    * the adaptive plan choice needs; an empty grid reads 0. Shared
-    * with [[graft.plans.GridOrderStatsRule]]'s rewrite.
-    */
-  private[graft] def maxCellsPerKey(cnt: DataFrame, keys: Seq[String]): Long =
-    cnt.groupBy(keys.map(col): _*).agg(count(lit(1)).as("n_cells"))
-      .agg(coalesce(max("n_cells"), lit(0L)))
-      .collect().head.getLong(0)
-
-  /** The adaptive-cumsum plan decision, MEMOIZED per canonicalized grid
-    * plan ([[graft.ContextCaches.decideOnce]]): the probe is a blocking
-    * collect(), and [[graft.plans.GridOrderStatsRule]] calls it from
-    * the optimizer thread — un-memoized, every compile/explain of a
-    * percentile query re-ran a nested cluster job (r15 ADVICE medium
-    * item). The library callers gain too: warm re-executions of the
-    * same query skip the probe job entirely. Within a session the
-    * decided grid is immutable (it reads the same pinned collapse);
-    * a different data dir or key set is a different memo key.
-    */
-  private[graft] def gridIsBounded(cnt: DataFrame, keys: Seq[String]): Boolean =
-    graft.ContextCaches.decideOnce(cnt, "maxCells:" + keys.mkString(","))(
-      maxCellsPerKey(cnt, keys)) <= CumsumSingleSortMaxCells
-
-  /** Two-phase range-partitioned prefix sum over a distinct-value grid:
-    * returns `counts` (key columns, `v`, `c`) with the per-key cumulative
-    * count `cum` — the same value `sum(c) OVER (PARTITION BY keys ORDER
-    * BY v)` yields, without that window's fatal shape. A one-partition-
-    * per-key window sorts each key's ENTIRE grid in one task; for a
-    * continuous measure the grid approaches the row count (sf0.1
-    * lineitem: 583k distinct `l_extendedprice` in 600k rows), so at
-    * 100 TB that task is the job.
-    *
-    * Phase 1 splits each key's grid into `buckets` spans at sample-
-    * quantile boundaries computed over the GRID (unweighted by `c` —
-    * the cumsum's cost is per grid cell, so cells are what need
-    * balancing), and cumsums locally within each (key, bucket) span —
-    * parallel across spans. Phase 2 cumsums the per-span totals (a
-    * keys × buckets frame — tiny by construction) and broadcasts each
-    * span's starting offset back. Counts are integral, so the split sum
-    * is bit-identical to the single-window form. Boundary assignment is
-    * any deterministic monotone rule; `v > boundary` sends boundary-
-    * equal values left. A key whose sample yields fewer boundaries than
-    * requested (tiny grids) just leaves spans empty.
-    *
-    * Boundaries come from a deterministic md5-hash sample of ~128
-    * cells per span, so a single outlier stretching the value range
-    * cannot collapse every cell into one span the way a uniform
-    * [min, max] split would (heavy range skew recreates exactly the
-    * single-task sort this two-phase form exists to delete). The
-    * sample must be DETERMINISTIC, not `percentile_approx`: `bucketed`
-    * is referenced by both the local-cumsum and the offsets branch, and
-    * a sketch whose merge is partition-order-sensitive could assign a
-    * cell different buckets in the two evaluations, silently corrupting
-    * the sum. md5-of-value sampling + a sort over the (distinct by
-    * construction) sampled values is bit-stable however many times the
-    * subplan runs. The per-key boundary-selection sort is over the
-    * SAMPLE (~buckets·128 values regardless of grid size), not the
-    * grid, so its aggregate state is bounded.
-    *
-    * `buckets = 1` short-circuits to the plain one-window form — the
-    * right shape when the caller can PROVE the grid bounded by the
-    * measure's resolution (an 11-value discount ladder, cent-granular
-    * prices ≤ ~10⁷ cells): three extra exchanges buy nothing against a
-    * provably small sort, locally or at 100 TB.
-    */
-  private[graft] def rangeCumsum(counts: DataFrame, keys: Seq[String],
-      buckets: Int = 32, pin: Boolean = true,
-      adaptive: Boolean = true): DataFrame = {
-    def oneWindow(c: DataFrame) = c.withColumn("cum", sum(col("c")).over(
-      Window.partitionBy(keys.map(col): _*).orderBy("v")))
-    if (buckets == 1) return oneWindow(counts)
-    // Pin the grid: its consumers (cell count for the sample fraction,
-    // the sample itself, the local cumsum, the span offsets, callers'
-    // group totals) each prune different columns, so their exchanges
-    // are NOT identical subtrees and exchange reuse cannot dedupe them
-    // — unpinned, the scan+collapse under `counts` executes once PER
-    // CONSUMER (the round-10 p15_winsorize plan showed five lineitem
-    // scans). One cache entry of grid-sized (v, c) rows replaces them;
-    // CacheManager plan-matching routes every reference here AND in
-    // the caller (same canonical plan) through it. `pin = false` is for
-    // callers that compile plans repeatedly (the GridOrderStatsRule
-    // rewrite), where per-query cache entries would accumulate for the
-    // context lifetime.
-    val cnt = if (pin) counts.pinned() else counts
-    // ADAPTIVE (r15, guide §1.2/§2.4 — choose the distributed
-    // algorithm from the DATA, not a constant): the two-phase form
-    // exists solely so no single task ever sorts a corpus-sized grid.
-    // When the measured grid is bounded, the plain one-window form is
-    // strictly better — it deletes the sample aggregate, two broadcast
-    // joins and the offsets window (4 exchanges) that phase-splitting
-    // costs. The bound is per-KEY cells ≤ [[CumsumSingleSortMaxCells]]
-    // (4M cells ≈ ~100 MB of sort state — a bounded, spillable window
-    // task at ANY corpus scale, the same argument the buckets = 1
-    // short-circuit's callers make by proof); a corpus whose grid
-    // outgrows it flips back to the two-phase plan at runtime, exactly
-    // like AQE's size-based plan choices. The decision costs one
-    // aggregate over the just-pinned grid (the pin was being
-    // materialized for the two-phase consumers anyway), MEMOIZED per
-    // grid plan ([[gridIsBounded]]), so it is only made on the
-    // `pin = true` path; both forms produce bit-identical `cum`
-    // (integral counts, exact arithmetic). `adaptive = false` forces
-    // the two-phase plan WITHOUT giving up the pin — before r16 the
-    // only way to force it was `pin = false`, conflating the plan-
-    // choice and caching knobs (r15 ADVICE low item).
-    if (pin && adaptive && gridIsBounded(cnt, keys))
-      return oneWindow(cnt)
-    val nc = cnt.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("n_cells"))
-    val target = buckets * 128
-    // Uniform-in-[0,1) deterministic hash of the value: md5 low 32 bits.
-    val u = conv(substring(md5(col("v").cast("string")), 25, 8), 16, 10)
-      .cast("long").cast("double") / 4294967296.0
-    // One bounded aggregate turns the sample into per-key boundaries:
-    // collect_list state is capped by the sample size (~target values
-    // per key however large the grid), and the sample quantiles are
-    // read straight out of the sorted array — no window over the
-    // sample, no second aggregate. Sub-sample duplicate indices (grids
-    // smaller than the bucket count) just repeat a boundary, which
-    // leaves that span empty.
-    val bnds = cnt.join(broadcast(nc), keys)
-      .filter(u < lit(target.toDouble) / col("n_cells"))
-      .groupBy(keys.map(col): _*)
-      .agg(sort_array(collect_list(col("v").cast("double"))).as("smp"))
-      .select((keys.map(col) :+ expr(
-        s"""transform(sequence(1, ${buckets - 1}),
-           |  i -> element_at(smp, greatest(1,
-           |         cast(i * size(smp) / $buckets as int))))
-           |""".stripMargin).as("bnds")): _*)
-    val bucketed = cnt.join(broadcast(bnds), keys, "left")
-      .withColumn("bkt", when(col("bnds").isNull, lit(0)).otherwise(
-        aggregate(col("bnds"), lit(0),
-          (acc, b) => acc + (col("v") > b).cast("int"))))
-      .drop("bnds")
-    val loc = bucketed.withColumn("loc", sum(col("c")).over(
-      Window.partitionBy((keys :+ "bkt").map(col): _*).orderBy("v")))
-    val offsets = bucketed
-      .groupBy((keys :+ "bkt").map(col): _*).agg(sum("c").as("bc"))
-      .withColumn("off", coalesce(sum(col("bc")).over(
-        Window.partitionBy(keys.map(col): _*).orderBy("bkt")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .drop("bc")
-    loc.join(broadcast(offsets), keys :+ "bkt")
-      .withColumn("cum", col("loc") + col("off"))
-      .drop("bkt", "loc", "off")
-  }
-
-  /** Distributed exact medians of several columns in one pass, returned
-    * as a single row with the given aliases.
-    *
-    * Spark's exact `median`/`percentile` aggregate buffers EVERY input
-    * value in one reducer per group — a global median over 100 TB is a
-    * single-task OOM by construction. This is the scale form: values go
-    * to long format (k = column alias), `groupBy(k, v).count()` collapses
-    * the data to the DISTINCT VALUE GRID with a map-side-combinable
-    * count, and a per-k cumulative-count window over the sorted grid
-    * locates the two middle order statistics; their mean is the
-    * interpolated median (ties resolved by the grid itself — equal
-    * values are one row with multiplicity). The cumsum itself runs as
-    * [[rangeCumsum]]'s two-phase range-partitioned prefix sum, so even a
-    * genuinely continuous column whose grid approaches the row count
-    * (sf0.1 `l_extendedprice`: 583k distinct in 600k rows) never lands
-    * in a single sort task; the r6 rounding absorbs the ulp difference
-    * between (a+b)/2 and DuckDB's a + 0.5·(b−a) interpolation. Nulls are
-    * excluded, matching both engines' aggregate semantics.
+  /** Exact medians of several columns in one pass, returned as a single
+    * row with the given aliases: the columns go to long format
+    * (k = alias) and one keyed [[ValueGrid.percentiles]] pass reads
+    * every median. Nulls are excluded, matching both engines' aggregate
+    * semantics; an all-NULL column's median is NULL.
     */
   private[graft] def exactMedians(df: DataFrame,
-      cols: Seq[(String, String)], buckets: Int = 32): DataFrame = {
+      cols: Seq[(String, String)]): DataFrame = {
     val long = df.select(explode(array(cols.map { case (c, a) =>
         struct(lit(a).as("k"), col(c).cast("double").as("v")) }: _*)).as("e"))
       .select(col("e.k").as("k"), col("e.v").as("v"))
-      .filter(col("v").isNotNull)
-    val counts = long.groupBy("k", "v").agg(count(lit(1)).as("c"))
-    val tot = counts.groupBy("k").agg(sum("c").as("n"))
-    val cum = rangeCumsum(counts, Seq("k"), buckets).join(broadcast(tot), "k")
-    // 1-based middle ranks: lo = (n+1) div 2, hi = (n+2) div 2 (equal
-    // when n is odd). A grid row covers rank r iff cum-c < r <= cum;
-    // each covered rank contributes its value once, so sum/2 is the
-    // interpolated median whether one row covers both ranks or two do.
-    val contrib = Seq("(n + 1) div 2", "(n + 2) div 2").map(r =>
-      when(col("cum") - col("c") < expr(r) && col("cum") >= expr(r),
-        col("v")).otherwise(lit(0.0))).reduce(_ + _)
-    val med = cum.withColumn("contrib", contrib)
-      .groupBy("k").agg((sum(col("contrib")) / 2).as("med"))
+    val med = ValueGrid.percentiles(long, Seq("k"), col("v"), Seq(0.5),
+      needAllKeys = false)
     val aggs = cols.map { case (_, a) =>
-      r6(min(when(col("k") === a, col("med")))).as(a) }
+      r6(min(when(col("k") === a, col("__q0")))).as(a) }
     med.groupBy().agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Grouped exact interpolated quantiles (quantile_cont semantics) on
-    * the same distributed value grid as [[exactMedians]]: one
-    * `groupBy(keys, v).count()` collapse, one per-group cumsum over the
-    * sorted grid, then each requested p reads its two bracketing order
-    * statistics out of the cumulative counts — fractional rank
-    * rf = 1 + p·(n−1), contribution v·(1−frac) at floor(rf) and v·frac
-    * at ceil(rf) (one row may cover both; the weights then sum to 1).
-    * Replaces the buffering `percentile` aggregate, whose per-group
-    * value list is a single-task OOM once any one group reaches
-    * executor-memory scale; here per-group state is the distinct value
-    * grid only, and the cumsum is [[rangeCumsum]]'s two-phase
-    * range-partitioned prefix sum (no per-group single sort task even
-    * when the grid approaches the data). floor/frac are computed from
-    * the same 1 + p·(n−1)
-    * double both engines evaluate, and r6 absorbs terminal ulp drift.
-    *
-    * A group whose value column is entirely NULL still appears in the
-    * output, with NULL quantiles — the replaced `percentile` aggregate's
-    * (and the DuckDB oracle's) row set. The null filter only prunes the
-    * grid, so the group list comes from BEFORE it and the results
-    * null-safe-left-join back onto it.
-    *
-    * `lowCardGroups` (default true) PRECONDITION: the per-group frames
-    * (`tot`, the quantile result) have one row per GROUP, and the
-    * default broadcasts them — correct and fastest when the grouping
-    * keys are low-cardinality (every current caller: flags, segments,
-    * months). A caller grouping by a high-cardinality key (user ids,
-    * order keys) must pass `lowCardGroups = false`: broadcasting a
-    * group-cardinality frame there would collect every group's
-    * quantiles to the driver — at 100 TB an OOM — where the plain
-    * shuffled join these fall back to is the right plan.
+  /** Grouped exact interpolated percentiles (the builtin `percentile`'s
+    * values and row set, NULL-keyed and all-NULL groups included), r6-
+    * rounded, one [[ValueGrid.percentiles]] pass for all of `ps`.
     */
   private[graft] def gridQuantiles(df: DataFrame, keys: Seq[String],
-      valueCol: String, ps: Seq[(Double, String)],
-      lowCardGroups: Boolean = true): DataFrame = {
-    def perGroup(f: DataFrame) = if (lowCardGroups) broadcast(f) else f
-    val proj = df
-      .select((keys.map(col) :+ col(valueCol).cast("double").as("v")): _*)
-    // ONE scan: the collapse keeps NULL-v cells so the full group list
-    // (incl. all-NULL groups) reads off the same pinned grid — r10's
-    // separate allKeys distinct() re-scanned the raw input just for the
-    // group list, a whole extra scan+shuffle charged to every caller.
-    // The pin moves HERE (pin = false below) so rangeCumsum's consumers
-    // and the allKeys branch all share the one cache entry.
-    val gridAll = proj
-      .groupBy((keys :+ "v").map(col): _*).agg(count(lit(1)).as("c"))
-      .pinned()
-    val allKeys = gridAll.select(keys.map(col): _*).distinct()
-    val counts = gridAll.filter(col("v").isNotNull)
-    val tot = counts.groupBy(keys.map(col): _*).agg(sum("c").as("n"))
-    // Same runtime-adaptive plan choice as [[rangeCumsum]]'s pinned
-    // path (the decision reads the pinned gridAll, so it costs one
-    // aggregate over cache): a bounded grid takes the plain one-window
-    // cumsum, a corpus-sized one the two-phase split.
-    val cum = rangeCumsum(counts, keys, pin = false,
-        buckets = if (gridIsBounded(counts, keys)) 1 else 32)
-      .join(perGroup(tot), keys)
-    val qs = ps.map { case (p, alias) =>
-      val rf = lit(1.0) + lit(p) * (col("n") - 1).cast("double")
-      val rlo = floor(rf)
-      val frac = rf - rlo
-      val covers = (r: Column) =>
-        (col("cum") - col("c")).cast("double") < r && col("cum") >= r
-      r6(sum(
-        when(covers(rlo), col("v") * (lit(1.0) - frac)).otherwise(lit(0.0)) +
-          when(frac > 0 && covers(rlo + 1), col("v") * frac)
-            .otherwise(lit(0.0)))).as(alias)
-    }
-    val res = cum.groupBy(keys.map(col): _*).agg(qs.head, qs.tail: _*)
-    // <=> join keeps any NULL group key working like groupBy's null
-    // group; both sides are group-cardinality frames, so the quantile
-    // side broadcasts (under the lowCardGroups precondition above).
-    val resB = perGroup(res)
-    val cond = keys.map(k => allKeys(k) <=> resB(k)).reduce(_ && _)
-    allKeys.join(resB, cond, "left")
-      .select(keys.map(allKeys(_)) ++ ps.map { case (_, a) => resB(a) }: _*)
-  }
+      valueCol: String, ps: Seq[(Double, String)]): DataFrame =
+    ValueGrid.percentiles(df, keys, col(valueCol), ps.map(_._1),
+        needAllKeys = true)
+      .select(keys.map(col) ++ ps.zipWithIndex.map { case ((_, a), i) =>
+        r6(col(s"__q$i")).as(a) }: _*)
 
   /** A13 (scripts/ml_pipeline.py:238): exact column medians in one pass
     * — via [[exactMedians]]' distributed value-grid plan rather than the
@@ -809,9 +564,9 @@ object Relational {
     * form ranks every user globally (a corpus-sized single-task sort);
     * this one needs only the VALUE GRID: ties occupy a contiguous rank
     * run, so each distinct volume's rank-weighted mass is
-    * v·(2·cum−c+1)·c/2 straight from [[rangeCumsum]]'s cumulative
-    * counts, and G = 2·Σ/(n·S) − (n+1)/n falls out of one decimal-
-    * accumulated aggregate over the grid.
+    * v·(2·cum−c+1)·c/2 straight from [[ValueGrid.rangeCumsum]]'s
+    * cumulative counts, and G = 2·Σ/(n·S) − (n+1)/n falls out of one
+    * decimal-accumulated aggregate over the grid.
     */
   private def a27Gini(s: SparkSession, d: String): DataFrame = {
     val per = Tables.events(s, d)
@@ -819,7 +574,7 @@ object Relational {
     val counts = per.groupBy("v").agg(count(lit(1)).as("c"))
       .withColumn("g", lit(1))
     val dec = (c: Column) => sum(c.cast("decimal(38,8)")).cast("double")
-    rangeCumsum(counts, Seq("g"))
+    ValueGrid.rangeCumsum(counts.pinned(), Seq("g"))
       .agg(sum(col("c")).as("n"), dec(col("v") * col("c")).as("s"),
         dec(col("v") * (lit(2) * col("cum") - col("c") + 1) * col("c") / 2)
           .as("rs"))
@@ -830,7 +585,7 @@ object Relational {
 
   /** P15: winsorization — clamp a measure into its [p01, p99] band, the
     * outlier repair a feature pipeline applies before scaling. The
-    * thresholds come from [[gridQuantiles]] (quantile_cont semantics on
+    * thresholds come from [[gridQuantiles]] (exact percentiles on
     * the distributed value grid — not a buffering percentile, not an
     * approximation) and broadcast as one row; the clamp itself is
     * rowwise codegen. Thresholds are r6-rounded on BOTH engines before
@@ -873,8 +628,8 @@ object Relational {
     * trades below) — the lower weighted median, smallest value whose
     * cumulative weight reaches W/2. Same grid machinery as the exact
     * medians: weights collapse map-side onto the distinct-value grid,
-    * [[rangeCumsum]] accumulates them without a single-task sort, and
-    * the answer is one filter + min. Weights here are integral
+    * [[ValueGrid.rangeCumsum]] accumulates them without a single-task
+    * sort, and the answer is one filter + min. Weights here are integral
     * quantities, so the split double sums stay exact.
     */
   private def a28WeightedMedian(s: SparkSession, d: String): DataFrame = {
@@ -890,7 +645,8 @@ object Relational {
       .agg(sum(col("l_quantity")).as("c"))
       .withColumn("g", lit(1))
     val tot = counts.agg(sum(col("c")).as("w_total"))
-    rangeCumsum(counts, Seq("g")).crossJoin(broadcast(tot))
+    ValueGrid.rangeCumsum(counts.pinned(), Seq("g"))
+      .crossJoin(broadcast(tot))
       .filter(col("cum") >= col("w_total") / 2)
       .agg(r6(min(col("v"))).as("wmedian"),
         min(col("w_total").cast("bigint")).as("w_total"))

@@ -75,14 +75,6 @@ object SensorStats {
   def commonVariableSensors(dfs: Seq[DataFrame], sensors: Seq[String]): Seq[String] =
     dfs.map(df => variableSensors(df, sensors).toSet)
       .reduce(_ intersect _).toSeq.sortBy(s => s.stripPrefix("sensor").toInt)
-
-  /** Exact per-column medians (ml_pipeline.py:238) in one agg job. */
-  def medians(df: DataFrame, cols: Seq[String]): Map[String, Double] = {
-    val aggs = cols.map(c => median(col(c)).as(c))
-    val row = df.agg(aggs.head, aggs.tail: _*).first()
-    cols.flatMap(c => Option(row.get(row.fieldIndex(c)))
-      .map(v => c -> v.asInstanceOf[Double])).toMap
-  }
 }
 
 /** The reference's feature engine (W1–W5) as one reusable function:

@@ -1,11 +1,9 @@
 package graft.plans
 
-import graft.operators.Relational
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, And,
-  AttributeReference, AttributeSet, Cast, CreateArray, CreateStruct,
-  EqualNullSafe, Expression, GetStructField, If, IsNull, KnownNotNull,
-  Literal, NamedExpression}
+  AttributeReference, AttributeSet, Cast, CreateArray, EqualNullSafe,
+  Expression, If, IsNull, KnownNotNull, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
   Complete, Percentile}
@@ -13,6 +11,7 @@ import org.apache.spark.sql.catalyst.plans.{Cross, LeftOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, JoinHint,
   LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftglue.Glue
 import org.apache.spark.sql.types.{ArrayType, DoubleType, NumericType}
@@ -27,18 +26,15 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, NumericType}
   * unspillable within a group): a global median over a large table is a
   * single-task OOM by construction — `MemSmoke` demonstrates it dying
   * at 30M distinct doubles under a 2g heap while the grid form
-  * survives. The rewrite produces the same dataflow the library's own
-  * a13/w8/es_rfm queries use: collapse to the distinct value grid with
-  * a map-side-combinable count, two-phase range-partitioned prefix sums
-  * ([[Relational.rangeCumsum]]), then each percentile reads its two
-  * bracketing order statistics out of the cumulative counts.
+  * survives. The rewrite calls the same kernel the library's own
+  * a13/w8/es_rfm queries use, [[ValueGrid.percentiles]]: collapse to
+  * the distinct value grid with a map-side-combinable count, a
+  * range-partitioned prefix sum ([[ValueGrid.rangeCumsum]]), then each
+  * percentile reads its two bracketing order statistics out of the
+  * cumulative counts.
   *
-  * Numerics are BIT-COMPATIBLE with the builtin: the final projection
-  * mirrors `PercentileBase.getPercentile` exactly — position
-  * `(n−1)·p`, `floor`/`ceil` bracketing ranks, the same short-circuits
-  * (integral position → lower value; equal bracketing values → lower
-  * value), and the identical IEEE expression
-  * `(ceil−pos)·lo + (pos−floor)·hi` — verified per-bit against the
+  * Numerics are BIT-COMPATIBLE with the builtin (the kernel mirrors
+  * `PercentileBase.getPercentile`), verified per-bit against the
   * builtin in `GridRewriteSpec`.
   *
   * Scope (conservative by design — anything else keeps the builtin):
@@ -208,15 +204,9 @@ object GridOrderStatsRule extends Rule[LogicalPlan] {
         graft.ContextCaches.pinBounded(sharedDf, "grid-rule-shared", 8)
       else sharedDf)
         .queryExecution.analyzed
-    // Per-grid compile. Keys travel wrapped in single-field structs:
-    // the grid's internal equi-joins (cum⋈tot, the prefix-sum offsets)
-    // would silently drop NULL-keyed groups — a struct is never null
-    // and struct comparison treats null fields as equal, making every
-    // downstream join/groupBy null-safe without touching rangeCumsum.
-    //
-    // Each grid subtree must be OPTIMIZED, not merely analyzed: it
-    // contains Deduplicate/ResolvedHint nodes that only early optimizer
-    // batches rewrite, and when this rule runs from a late batch
+    // Per-grid compile. Each grid subtree must be OPTIMIZED, not merely
+    // analyzed: it contains Deduplicate/ResolvedHint nodes that only
+    // early optimizer batches rewrite, and when this rule runs from a late batch
     // (experimental.extraOptimizations) those batches won't visit the
     // new subtree again — the planner then fails on the leftovers. It
     // must also pass through a FRESH QueryExecution for cache
@@ -237,11 +227,10 @@ object GridOrderStatsRule extends Rule[LogicalPlan] {
       exprs: Map[Expression, Expression])
     def mkGrid(g: Seq[(Expression, PHit)], needAllKeys: Boolean): Grid = {
       val projList = keys.zip(keyNames).map { case (a, n) =>
-        Alias(CreateStruct(Seq(a)), n)() } :+
-        Alias(Cast(g.head._2.pc.child, DoubleType), "v")()
+        Alias(a, n)() } :+ Alias(Cast(g.head._2.pc.child, DoubleType), "v")()
       val base = Glue.ofRows(spark, Project(projList.toSeq, shared))
-      val ps = g.flatMap(_._2.ps)
-      val res = gridPercentiles(base, keyNames, ps, needAllKeys)
+      val res = ValueGrid.percentiles(base, keyNames, col("v"),
+        g.flatMap(_._2.ps), needAllKeys)
       val resolved = res.queryExecution.optimizedPlan
       val byName = resolved.output.map(a => a.name -> a).toMap
       def hitExpr(h: PHit, off: Int): Expression =
@@ -287,10 +276,6 @@ object GridOrderStatsRule extends Rule[LogicalPlan] {
     // group by a high-cardinality key, where a forced broadcast would
     // collect every group to the driver). Global form: all sides are
     // single-row frames, a 1×1 nested-loop join.
-    // `spineKey` and `gridKey` must be the SAME representation: the
-    // pure path compares struct key to struct key; the mixed path
-    // compares the residual spine's raw key to the grid struct's
-    // unwrapped field.
     def joinBack(spine: LogicalPlan, g: Grid, spineKey: Int => Expression,
         gridKey: Int => Expression): LogicalPlan =
       if (keys.isEmpty) Join(spine, g.resolved, Cross, None, JoinHint.NONE)
@@ -302,20 +287,19 @@ object GridOrderStatsRule extends Rule[LogicalPlan] {
       }
     if (residual.isEmpty) {
       val spine = grids.head
+      def spineKey(i: Int): Expression = keyOf(spine, i)
       val joined = grids.tail.foldLeft(spine.resolved)((acc, g) =>
-        joinBack(acc, g, i => keyOf(spine, i), i => keyOf(g, i)))
-      def unwrapKey(i: Int): Expression =
-        GetStructField(keyOf(spine, i), 0, None)
+        joinBack(acc, g, spineKey, i => keyOf(g, i)))
       val outs: Seq[NamedExpression] = agg.aggregateExpressions.map {
         case ar: AttributeReference =>
           val i = keys.indexWhere(_.exprId == ar.exprId)
-          Alias(unwrapKey(i), ar.name)(exprId = ar.exprId)
+          Alias(spineKey(i), ar.name)(exprId = ar.exprId)
         case al: Alias => al.child match {
           case ar: AttributeReference =>
             val i = keys.indexWhere(_.exprId == ar.exprId)
-            Alias(unwrapKey(i), al.name)(exprId = al.exprId)
+            Alias(spineKey(i), al.name)(exprId = al.exprId)
           case _ =>
-            Alias(rewriteHitTree(al.child, unwrapKey), al.name)(
+            Alias(rewriteHitTree(al.child, spineKey), al.name)(
               exprId = al.exprId)
         }
         case other => // unreachable under eligible()
@@ -337,7 +321,7 @@ object GridOrderStatsRule extends Rule[LogicalPlan] {
         (keyAliases ++ residual).toSeq, shared)).queryExecution.optimizedPlan
       val joined = grids.foldLeft(residualAgg)((acc, g) =>
         joinBack(acc, g, i => keyAliases(i).toAttribute,
-          i => GetStructField(keyOf(g, i), 0, None)))
+          i => keyOf(g, i)))
       val outs: Seq[NamedExpression] = agg.aggregateExpressions.map {
         case ar: AttributeReference =>
           val i = keys.indexWhere(_.exprId == ar.exprId)
@@ -359,71 +343,216 @@ object GridOrderStatsRule extends Rule[LogicalPlan] {
       Project(outs, joined)
     }
   }
+}
 
-  /** The grid plan: distinct-value collapse → two-phase prefix sums →
-    * bracketing order statistics → the builtin's interpolation, one
-    * result column `__q<i>` per requested percentage.
-    *
-    * The collapse is PINNED (grid-sized: one row per distinct
-    * (keys, v) cell, NULL-v cells kept so the all-keys frame reads the
-    * same entry): unpinned, every cumsum consumer and the all-keys
-    * frame re-ran the scan+collapse — the exact multi-scan disease the
-    * library's gridQuantiles already fixed. The earlier `pin = false`
-    * rationale (cache entries accumulating per distinct rewritten
-    * query) is retired by the registry semantics: entries key on the
-    * canonicalized plan (recompiling the same query replaces, never
-    * appends), are grid-sized, and evict on context stop.
-    *
-    * No broadcast hints here, unlike the library helper: this rewrites
-    * ARBITRARY user SQL, whose grouping key may be high-cardinality
-    * (a per-group frame then must not collect to the driver). The
-    * joins stay shuffled in the plan and AQE converts them to
-    * broadcast at runtime when the group side is actually small.
-    *
-    * `pin = false` on the cumsum: the cumsum's consumers re-evaluate
-    * only the cheap filter over the pinned collapse, so a second cache
-    * entry would buy nothing.
+/** The distributed value grid: the one code path that turns a column
+  * into exact order statistics, shared by the library's median and
+  * quantile queries and by [[GridOrderStatsRule]].
+  *
+  * Spark's exact `median`/`percentile` aggregate buffers EVERY input
+  * value of a group in one reducer — a global median over 100 TB is a
+  * single-task OOM by construction. The grid form collapses the data to
+  * its DISTINCT VALUE GRID with a map-side-combinable count
+  * (`groupBy(keys, v).count()`), takes a per-key prefix sum over the
+  * sorted grid ([[rangeCumsum]]), and reads each percentile's two
+  * bracketing order statistics out of the cumulative counts. Per-group
+  * state is the distinct value set, never the value list.
+  */
+object ValueGrid {
+
+  /** Per-key sort-state bound under which a single window task is the
+    * RIGHT plan for a prefix sum at any corpus scale: 4M cells ≈ ~100 MB
+    * of spillable sort state.
     */
-  private def gridPercentiles(base: DataFrame, keyNames: Seq[String],
-      ps: Seq[Double], needAllKeys: Boolean): DataFrame = {
-    val global = keyNames.isEmpty
-    val keys = if (global) Seq("__gkc") else keyNames
-    val withKeys = if (global) base.withColumn("__gkc", lit(0)) else base
-    val gridAll = withKeys
-      .groupBy((keys :+ "v").map(col): _*).agg(count(lit(1)).as("c"))
-    val gridPin =
-      graft.ContextCaches.pinBounded(gridAll, "grid-rule-grids", 32)
-    val counts = gridPin.filter(col("v").isNotNull)
+  private val CumsumSingleSortMaxCells = 4L * 1024 * 1024
+
+  /** Largest per-key cell count of a (pinned) grid — the one number
+    * the cumsum plan choice needs; an empty grid reads 0.
+    */
+  private def maxCellsPerKey(cnt: DataFrame, keys: Seq[String]): Long =
+    cnt.groupBy(keys.map(col): _*).agg(count(lit(1)).as("n_cells"))
+      .agg(coalesce(max("n_cells"), lit(0L)))
+      .collect().head.getLong(0)
+
+  /** The cumsum plan decision, MEMOIZED per canonicalized grid plan
+    * ([[graft.ContextCaches.decideOnce]]): the probe is a blocking
+    * collect(), and [[GridOrderStatsRule]] calls it from the optimizer
+    * thread — un-memoized, every compile/explain of a percentile query
+    * re-ran a nested cluster job. Warm re-executions of the same query
+    * skip the probe job entirely. Within a session the decided grid is
+    * immutable (it reads the same pinned collapse); a different data dir
+    * or key set is a different memo key.
+    */
+  private def gridIsBounded(cnt: DataFrame, keys: Seq[String]): Boolean =
+    graft.ContextCaches.decideOnce(cnt, "maxCells:" + keys.mkString(","))(
+      maxCellsPerKey(cnt, keys)) <= CumsumSingleSortMaxCells
+
+  /** Per-key prefix sum over a distinct-value grid: returns `grid` (key
+    * columns, `v`, `c`) with the cumulative count `cum` — the value
+    * `sum(c) OVER (PARTITION BY keys ORDER BY v)` yields. The form is
+    * chosen from the data: a grid within [[CumsumSingleSortMaxCells]]
+    * per key takes [[oneWindowCumsum]] (a bounded, spillable sort task
+    * at ANY corpus scale), a corpus-sized one [[twoPhaseCumsum]]. Both
+    * forms produce bit-identical `cum` (integral counts, exact
+    * arithmetic). The probe reads `grid` once, so callers pass a pinned
+    * grid; this function never pins.
+    */
+  private[graft] def rangeCumsum(grid: DataFrame, keys: Seq[String]): DataFrame =
+    if (gridIsBounded(grid, keys)) oneWindowCumsum(grid, keys)
+    else twoPhaseCumsum(grid, keys)
+
+  /** The plain window form: one sort task per key. */
+  private[graft] def oneWindowCumsum(grid: DataFrame,
+      keys: Seq[String]): DataFrame =
+    grid.withColumn("cum", sum(col("c")).over(
+      Window.partitionBy(keys.map(col): _*).orderBy("v")))
+
+  /** Two-phase range-partitioned prefix sum: no single task ever sorts a
+    * key's whole grid. For a continuous measure the grid approaches the
+    * row count (sf0.1 lineitem: 583k distinct `l_extendedprice` in 600k
+    * rows), so at 100 TB the one-window task is the job.
+    *
+    * Phase 1 splits each key's grid into 32 spans at sample-quantile
+    * boundaries computed over the GRID (unweighted by `c` — the cumsum's
+    * cost is per grid cell, so cells are what need balancing), and
+    * cumsums locally within each (key, bucket) span — parallel across
+    * spans. Phase 2 cumsums the per-span totals (a keys × buckets frame
+    * — tiny by construction) and broadcasts each span's starting offset
+    * back. Counts are integral, so the split sum is bit-identical to the
+    * single-window form. `v > boundary` sends boundary-equal values
+    * left; a key whose sample yields fewer boundaries than requested
+    * (tiny grids) just leaves spans empty.
+    *
+    * Boundaries come from a deterministic md5-hash sample of ~128 cells
+    * per span, so a single outlier stretching the value range cannot
+    * collapse every cell into one span the way a uniform [min, max]
+    * split would. The sample must be DETERMINISTIC, not
+    * `percentile_approx`: `bucketed` is referenced by both the
+    * local-cumsum and the offsets branch, and a sketch whose merge is
+    * partition-order-sensitive could assign a cell different buckets in
+    * the two evaluations, silently corrupting the sum. The per-key
+    * boundary-selection sort is over the SAMPLE (~buckets·128 values
+    * regardless of grid size), so its aggregate state is bounded.
+    */
+  private[graft] def twoPhaseCumsum(grid: DataFrame,
+      keys: Seq[String]): DataFrame = {
+    val buckets = 32
+    val nc = grid.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("n_cells"))
+    val target = buckets * 128
+    // Uniform-in-[0,1) deterministic hash of the value: md5 low 32 bits.
+    val u = conv(substring(md5(col("v").cast("string")), 25, 8), 16, 10)
+      .cast("long").cast("double") / 4294967296.0
+    // One bounded aggregate turns the sample into per-key boundaries:
+    // collect_list state is capped by the sample size (~target values
+    // per key however large the grid), and the sample quantiles are
+    // read straight out of the sorted array. Sub-sample duplicate
+    // indices (grids smaller than the bucket count) just repeat a
+    // boundary, which leaves that span empty.
+    val bnds = grid.join(broadcast(nc), keys)
+      .filter(u < lit(target.toDouble) / col("n_cells"))
+      .groupBy(keys.map(col): _*)
+      .agg(sort_array(collect_list(col("v").cast("double"))).as("smp"))
+      .select((keys.map(col) :+ expr(
+        s"""transform(sequence(1, ${buckets - 1}),
+           |  i -> element_at(smp, greatest(1,
+           |         cast(i * size(smp) / $buckets as int))))
+           |""".stripMargin).as("bnds")): _*)
+    val bucketed = grid.join(broadcast(bnds), keys, "left")
+      .withColumn("bkt", when(col("bnds").isNull, lit(0)).otherwise(
+        aggregate(col("bnds"), lit(0),
+          (acc, b) => acc + (col("v") > b).cast("int"))))
+      .drop("bnds")
+    val loc = bucketed.withColumn("loc", sum(col("c")).over(
+      Window.partitionBy((keys :+ "bkt").map(col): _*).orderBy("v")))
+    val offsets = bucketed
+      .groupBy((keys :+ "bkt").map(col): _*).agg(sum("c").as("bc"))
+      .withColumn("off", coalesce(sum(col("bc")).over(
+        Window.partitionBy(keys.map(col): _*).orderBy("bkt")
+          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .drop("bc")
+    loc.join(broadcast(offsets), keys :+ "bkt")
+      .withColumn("cum", col("loc") + col("off"))
+      .drop("bkt", "loc", "off")
+  }
+
+  /** Grouped exact percentiles of `value` per `keys`: one result column
+    * `__q<i>` per requested percentage, NULL for a group with no
+    * non-NULL value. An empty `keys` is the global form: exactly one
+    * row, even over zero input rows.
+    *
+    * Keys travel wrapped in single-field structs: the grid's internal
+    * equi-joins (cum ⋈ tot, the prefix-sum offsets) would silently drop
+    * NULL-keyed groups — a struct is never null and struct comparison
+    * treats null fields as equal, so every join and groupBy here is
+    * null-safe. The output unwraps them under their original names.
+    *
+    * The collapse (one row per distinct (keys, v) cell, NULL-v cells
+    * kept so the group list reads the same entry) is pinned in one
+    * bounded pool shared by every caller: its consumers — the cumsum
+    * probe, the prefix sum, the group totals, the group list — prune
+    * different columns, so exchange reuse cannot dedupe them, and
+    * unpinned each would re-run the scan+collapse.
+    *
+    * `needAllKeys` keeps every group of the input in the output (an
+    * all-NULL-value group with NULL quantiles — the builtin's row set);
+    * a caller that already holds the group list (the rule's residual
+    * Aggregate) passes false and skips that join.
+    *
+    * No broadcast hints on the group-cardinality joins: a caller may
+    * group by a high-cardinality key, where a forced broadcast would
+    * collect every group to the driver. AQE converts them to broadcast
+    * joins at runtime when the group side is actually small.
+    */
+  private[graft] def percentiles(df: DataFrame, keys: Seq[String],
+      value: Column, ps: Seq[Double], needAllKeys: Boolean): DataFrame = {
+    val global = keys.isEmpty
+    val ks = if (global) Seq("__gkc") else keys
+    val base = df.select((
+      if (global) Seq(lit(0).as("__gkc"))
+      else keys.map(k => struct(col(k)).as(k))) :+
+      value.cast("double").as("v"): _*)
+    val gridAll = graft.ContextCaches.pinBounded(
+      base.groupBy((ks :+ "v").map(col): _*).agg(count(lit(1)).as("c")),
+      "value-grid", 32)
+    val counts = gridAll.filter(col("v").isNotNull)
+    val scored = orderStats(counts, rangeCumsum(counts, ks), ks, ps)
+    val qs = ps.indices.map(i => s"__q$i")
+    if (global)
+      // A global aggregate yields exactly one row even over zero input
+      // rows (value NULL) — forced by the final global min over the
+      // ≤1-row grouped result.
+      scored.groupBy().agg(min(qs.head).as(qs.head),
+        qs.tail.map(q => min(q).as(q)): _*)
+    else {
+      val rows = if (!needAllKeys) scored
+        else gridAll.select(ks.map(col): _*).distinct()
+          .join(scored, ks, "left")
+      rows.select(ks.map(k => col(k).getField(k).as(k)) ++ qs.map(col): _*)
+    }
+  }
+
+  /** Each percentage's value per key, read out of a grid's prefix sum
+    * `cum` (key columns, `v`, `c`, `cum`) with the builtin's
+    * interpolation. `counts` is the grid the prefix sum was taken over;
+    * it supplies each key's total count `n`.
+    */
+  private[graft] def orderStats(counts: DataFrame, cum: DataFrame,
+      keys: Seq[String], ps: Seq[Double]): DataFrame = {
     val tot = counts.groupBy(keys.map(col): _*).agg(sum("c").as("n"))
-    // Same runtime-adaptive plan choice as the library gridQuantiles
-    // (r15): a bounded grid takes the plain one-window cumsum instead
-    // of the 4-extra-exchange two-phase split. The decision aggregate
-    // runs over the pinBounded collapse during the rewrite — a nested
-    // job from the optimizer thread, same mechanism broadcast
-    // exchanges use; the count query contains no percentile aggregate,
-    // so the rule cannot recurse into itself. MEMOIZED per
-    // canonicalized grid plan ([[Relational.gridIsBounded]] →
-    // [[graft.ContextCaches.decideOnce]]), so only the FIRST compile of
-    // a given rewritten query pays the nested job — re-optimization
-    // passes, re-explains and warm re-executions read the memo (the
-    // r15 ADVICE medium item: an un-memoized probe ran a blocking job
-    // on the optimizer thread on every pass that saw a percentile).
-    val cum = Relational.rangeCumsum(counts, keys, pin = false,
-        buckets = if (Relational.gridIsBounded(counts, keys)) 1 else 32)
-      .join(tot, keys)
     val qs = ps.zipWithIndex.flatMap { case (p, i) =>
       // 0-based fractional position (n−1)·p, exactly the builtin's
       // arithmetic; a grid row covers 1-based rank r iff
       // cum − c < r ≤ cum.
       val pos = (col("n") - 1).cast("double") * lit(p)
-      val cover = (r: org.apache.spark.sql.Column) =>
-        col("cum") - col("c") < r && col("cum") >= r
+      val cover = (r: Column) => col("cum") - col("c") < r && col("cum") >= r
       Seq(
         min(when(cover(floor(pos) + 1), col("v"))).as(s"__lo$i"),
         min(when(cover(ceil(pos) + 1), col("v"))).as(s"__hi$i"),
         max(col("n")).as(s"__n$i"))
     }
-    val res = cum.groupBy(keys.map(col): _*).agg(qs.head, qs.tail: _*)
+    val res = cum.join(tot, keys).groupBy(keys.map(col): _*)
+      .agg(qs.head, qs.tail: _*)
     val out = ps.indices.map { i =>
       val pos = (col(s"__n$i") - 1).cast("double") * lit(ps(i))
       // Mirrors PercentileBase.getPercentile branch for branch:
@@ -436,29 +565,6 @@ object GridOrderStatsRule extends Rule[LogicalPlan] {
             (pos - floor(pos).cast("double")) * col(s"__hi$i"))
         .as(s"__q$i")
     }
-    val scored = res.select((keys.map(col) ++ out): _*)
-    if (global) {
-      // A global aggregate yields exactly one row even over zero input
-      // rows (value NULL) — forced by the final global min over the
-      // ≤1-row grouped result.
-      scored.groupBy()
-        .agg(min(col("__q0")).as("__q0"),
-          ps.indices.drop(1).map(i => min(col(s"__q$i")).as(s"__q$i")): _*)
-    } else if (!needAllKeys) {
-      // A residual Aggregate upstream already carries the full group
-      // list (incl. all-NULL-value groups); skipping the all-keys frame
-      // here avoids a second pass over the child.
-      scored
-    } else {
-      // Null-safe left join keeps all-NULL (and NULL-keyed) groups in
-      // the output with NULL quantiles — the builtin's row set. Reads
-      // the pinned collapse (which keeps NULL-v cells), not the child:
-      // the group list comes for free off the same cache entry.
-      val allKeys = gridPin.select(keys.map(col): _*).distinct()
-      val cond = keys.map(k => allKeys(k) <=> scored(k)).reduce(_ && _)
-      allKeys.join(scored, cond, "left")
-        .select(keys.map(allKeys(_)) ++
-          ps.indices.map(i => scored(s"__q$i")): _*)
-    }
+    res.select((keys.map(col) ++ out): _*)
   }
 }

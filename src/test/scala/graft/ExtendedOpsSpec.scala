@@ -180,25 +180,25 @@ class ExtendedOpsSpec extends GraftSuite {
   test("grid order statistics: cumsum plan adapts to the measured grid " +
       "— one window under the bound, range-bucketed two-phase above it") {
     // r15 adaptive contract (OPTIMIZATION_r15.md): rangeCumsum measures
-    // the pinned grid and takes the plain one-window cumsum when no key
-    // holds more cells than CumsumSingleSortMaxCells (a bounded,
-    // spillable sort task at any scale), falling back to the (k, bkt)
-    // two-phase split only for corpus-sized grids. This corpus's grids
-    // are far under the bound, so a13's plan must NOT carry the bucket
+    // the grid and takes the plain one-window cumsum when no key holds
+    // more cells than CumsumSingleSortMaxCells (a bounded, spillable
+    // sort task at any scale), falling back to the (k, bkt) two-phase
+    // split only for corpus-sized grids. This corpus's grids are far
+    // under the bound, so a13's plan must NOT carry the bucket
     // machinery (4 avoidable exchanges at bench scale)...
     val plan = SparkEntry.queries("a13_medians")(spark, sf)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("bkt"),
       "bucket machinery in an under-bound a13 plan:\n" + plan.take(1500))
-    // ...while the two-phase form (forced via the pin=false path, which
-    // never adapts) keeps its range-bucketed shape: the local cumsum
-    // partitions on (k, bkt), never one task per column.
+    // ...while the two-phase form, called directly, keeps its range-
+    // bucketed shape: the local cumsum partitions on (k, bkt), never
+    // one task per column.
+    import plans.ValueGrid
     val li = Tables.lineitem(spark, sf)
     val counts = li.select(lit("p").as("k"),
         col("l_extendedprice").cast("double").as("v"))
       .groupBy("k", "v").agg(count(lit(1)).as("c"))
-    val forced = operators.Relational.rangeCumsum(
-      counts, Seq("k"), buckets = 32, pin = false)
+    val forced = ValueGrid.twoPhaseCumsum(counts, Seq("k"))
     val fplan = forced.queryExecution.executedPlan.toString
     // The constant literal key folds out of the exchange, so the
     // local cumsum partitions on bkt alone — what matters is that a
@@ -207,20 +207,19 @@ class ExtendedOpsSpec extends GraftSuite {
       .findFirstIn(fplan).isDefined,
       "forced two-phase cumsum not bucket-partitioned:\n" +
         fplan.take(2000))
-    // And the three forms agree on the data (buckets=1 short circuit is
+    // And the three forms agree on the data (the plain SQL window is
     // the reference semantics): adaptive == one-window == forced.
-    val cols = Seq("l_quantity" -> "q", "l_extendedprice" -> "p",
-      "l_discount" -> "d")
-    val a = operators.Relational.exactMedians(li, cols).collect()(0)
-    val b = operators.Relational.exactMedians(li, cols, buckets = 1)
-      .collect()(0)
-    assert(a == b, s"adaptive $a != one-window $b")
-    val oneWin = counts.withColumn("cum", sum(col("c")).over(
+    val reference = counts.withColumn("cum", sum(col("c")).over(
       org.apache.spark.sql.expressions.Window
         .partitionBy("k").orderBy("v")))
-    val fRows = forced.orderBy("v").select("v", "cum").collect().toSeq
-    val wRows = oneWin.orderBy("v").select("v", "cum").collect().toSeq
-    assert(fRows == wRows, "forced two-phase cum != one-window cum")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("v").select("v", "cum").collect().toSeq
+    val wRows = rows(reference)
+    assert(rows(ValueGrid.rangeCumsum(counts, Seq("k"))) == wRows,
+      "adaptive cum != reference cum")
+    assert(rows(ValueGrid.oneWindowCumsum(counts, Seq("k"))) == wRows,
+      "one-window cum != reference cum")
+    assert(rows(forced) == wRows, "forced two-phase cum != reference cum")
   }
 
   test("ta_bigrams tops out in TakeOrdered, never a global sort") {

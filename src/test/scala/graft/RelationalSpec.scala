@@ -18,55 +18,63 @@ class RelationalSpec extends GraftSuite {
     }
   }
 
-  test("gridQuantiles high-cardinality fallback is bit-equal, no broadcast") {
-    // lowCardGroups = false is the documented escape hatch for callers
-    // grouping by a high-cardinality key, where broadcasting the
-    // per-group frames would collect every group's quantiles to the
-    // driver. Values must be bit-equal to the default path, and the
-    // per-group joins must carry no compile-time broadcast hint (the
-    // logical plan keeps plain joins for the shuffle path).
-    val li = Tables.lineitem(spark, sf)
-    def canon(lowCard: Boolean) = operators.Relational
-      .gridQuantiles(li, Seq("l_returnflag"), "l_extendedprice",
-        Seq(0.5 -> "p50", 0.9 -> "p90"), lowCardGroups = lowCard)
-      .collect().map(_.toString).sorted.toSeq
-    assert(canon(lowCard = true) == canon(lowCard = false))
-    // rangeCumsum's internal grid-sized broadcasts remain; the
-    // GROUP-cardinality frames (tot join, quantile join-back) must not
-    // hint. Identify those two joins STRUCTURALLY in the analyzed plan
-    // (hints resolve to strategies later) and assert the property
-    // directionally — an exact ResolvedHint count would break on any
-    // Spark change to hint resolution without a real regression:
-    //  - the join-back is the plan's only null-safe (<=>) join;
+  test("gridQuantiles per-group joins carry no broadcast hint") {
+    // The per-group frames (the group totals, the quantile result) have
+    // one row per GROUP; a caller may group by a high-cardinality key,
+    // where a compile-time broadcast would collect every group's
+    // quantiles to the driver. Identify those two joins STRUCTURALLY in
+    // the analyzed plan (hints resolve to strategies later) and assert
+    // the property directionally — an exact ResolvedHint count would
+    // break on any Spark change to hint resolution without a real
+    // regression:
+    //  - the join-back onto the group list is the plan's only left
+    //    outer join;
     //  - the tot join's right side is the Aggregate producing `n`.
+    import org.apache.spark.sql.catalyst.plans.LeftOuter
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join,
       LogicalPlan, ResolvedHint}
-    import org.apache.spark.sql.catalyst.expressions.EqualNullSafe
-    def analyzed(lowCard: Boolean): LogicalPlan = operators.Relational
+    val li = Tables.lineitem(spark, sf)
+    val analyzed = operators.Relational
       .gridQuantiles(li, Seq("l_returnflag"), "l_extendedprice",
-        Seq(0.5 -> "p50"), lowCardGroups = lowCard)
+        Seq(0.5 -> "p50"))
       .queryExecution.analyzed
     def unhint(p: LogicalPlan): LogicalPlan = p match {
       case ResolvedHint(c, _) => c
       case other => other
     }
     def hintedRoot(p: LogicalPlan): Boolean = p.isInstanceOf[ResolvedHint]
-    def perGroupJoins(plan: LogicalPlan): Seq[Join] = plan.collect {
-      case j: Join if j.condition
-        .exists(_.exists(_.isInstanceOf[EqualNullSafe])) => j
+    val perGroupJoins = analyzed.collect {
+      case j: Join if j.joinType == LeftOuter => j
       case j: Join if unhint(j.right).isInstanceOf[Aggregate] &&
         unhint(j.right).output.exists(_.name == "n") => j
     }
-    val defJoins = perGroupJoins(analyzed(lowCard = true))
-    assert(defJoins.size >= 2 && defJoins.forall(j => hintedRoot(j.right)),
-      s"default path should broadcast-hint both per-group joins: " +
-        defJoins.map(_.right.nodeName).mkString(", "))
-    val fbJoins = perGroupJoins(analyzed(lowCard = false))
-    assert(fbJoins.size >= 2 &&
-      fbJoins.forall(j => !hintedRoot(j.left) && !hintedRoot(j.right)),
-      s"fallback must leave the per-group joins unhinted: " +
-        fbJoins.map(j => s"${j.left.nodeName}/${j.right.nodeName}")
+    assert(perGroupJoins.size >= 2 &&
+      perGroupJoins.forall(j => !hintedRoot(j.left) && !hintedRoot(j.right)),
+      s"the per-group joins must stay unhinted: " +
+        perGroupJoins.map(j => s"${j.left.nodeName}/${j.right.nodeName}")
           .mkString(", "))
+  }
+
+  test("grouped quantiles equal the builtin percentile on NULL groups") {
+    // Three groups: a normal one, a NULL-keyed one and one whose values
+    // are all NULL. The library's grouped quantiles (the w8_percentiles
+    // path) must return the builtin's row set and values for each.
+    val s = spark
+    import s.implicits._
+    val df = Seq[(Option[String], Option[Double])](
+      (Some("a"), Some(1.0)), (Some("a"), Some(2.0)), (Some("a"), Some(7.5)),
+      (Some("a"), None), (None, Some(3.0)), (None, Some(5.0)),
+      (Some("c"), None), (Some("c"), None)).toDF("g", "v")
+    val ps = Seq(0.5 -> "p50", 0.9 -> "p90")
+    def canon(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(_.toSeq.toList).sortBy(r => String.valueOf(r.head))
+        .toList
+    val got = canon(operators.Relational.gridQuantiles(df, Seq("g"), "v", ps))
+    val builtin = canon(df.groupBy("g").agg(
+      r6(percentile(col("v"), lit(0.5))).as("p50"),
+      r6(percentile(col("v"), lit(0.9))).as("p90")))
+    assert(builtin.size == 3)
+    assert(got == builtin, s"\n$got\n$builtin")
   }
 
   test("s1 text roundtrip is lossless") {
