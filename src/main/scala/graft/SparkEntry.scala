@@ -7,9 +7,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * The query registry: one [[QuerySpec]] per query, declared in the
   * module that builds it. Every entry whose check is an [[Oracle]] is
   * differentially checked against DuckDB running the oracle SQL on the
-  * same parquet tables (sorted columns, hashed values) — column names and
-  * row order are kept identical by construction (see package object
-  * `graft` for the determinism helpers).
+  * same parquet tables (sorted columns, sorted rows, hashed values) —
+  * column names are kept identical by construction (see package object
+  * `graft` for the determinism helpers). Row order is part of a
+  * query's result only for the top-k/limit queries, the sort operators
+  * (`o1_sort`, `o4_offset`, `o5_zorder`) and `ml_model_compare`'s
+  * report; every other query returns its rows in no particular order.
   */
 object SparkEntry {
 

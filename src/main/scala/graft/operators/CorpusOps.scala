@@ -27,7 +27,6 @@ object CorpusOps {
     Tables.documents(s, d)
       .select(col("lang"), split.as("split"))
       .groupBy("lang", "split").agg(count(lit(1)).as("n"))
-      .orderBy("lang", "split")
   }
 
   // Round-trip scratch dirs live on the warehouse filesystem (the same
@@ -60,7 +59,7 @@ object CorpusOps {
     val dir = roundtripScratch(s, "jsonl")
     Tables.documents(s, d).write.mode("overwrite")
       .option("compression", "gzip").json(dir)
-    s.read.schema(Tables.DocumentsSchema).json(dir).orderBy("doc_id")
+    s.read.schema(Tables.DocumentsSchema).json(dir)
   }
 
   /** CSV round-trip over the same contract (header, explicit schema on
@@ -88,7 +87,6 @@ object CorpusOps {
     // trade for quoted text columns.
     s.read.schema(Tables.DocumentsSchema)
       .option("header", "true").option("multiLine", "true").csv(dir)
-      .orderBy("doc_id")
   }
 
   /** ORC corpus round-trip — the OTHER columnar interchange format a
@@ -103,7 +101,7 @@ object CorpusOps {
   private def ioOrc(s: SparkSession, d: String): DataFrame = {
     val dir = roundtripScratch(s, "orc")
     Tables.documents(s, d).write.mode("overwrite").orc(dir)
-    s.read.schema(Tables.DocumentsSchema).orc(dir).orderBy("doc_id")
+    s.read.schema(Tables.DocumentsSchema).orc(dir)
   }
 
   /** The reference's native input format (headerless whitespace-numeric
@@ -138,7 +136,6 @@ object CorpusOps {
         col("l_extendedprice"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n"), dsum(col("l_extendedprice")).as("sum_price"))
-      .orderBy("bucket")
   }
 
   /** Stratified deterministic downsampling: per-language keep rates
@@ -165,7 +162,6 @@ object CorpusOps {
       .withColumn("bucket", bucket)
       .filter(col("bucket") < rate)
       .select(col("doc_id"), col("lang"), col("bucket"))
-      .orderBy("doc_id")
   }
 
   // Sequence packing geometry: 2048-token training sequences, 16
@@ -209,7 +205,6 @@ object CorpusOps {
           java.lang.Long.numberOfTrailingZeros(PackSeqLen)).as("seq_idx"),
         (col("cum") - col("n_tokens")).bitwiseAND(lit(PackSeqLen - 1L))
           .as("seq_offset"))
-      .orderBy("shard", "doc_id")
   }
 
   /** Spec hook: pack only the doc_id prefix (growth-stability proof —
@@ -254,7 +249,6 @@ object CorpusOps {
       .withColumn("cum_tokens", sum(col("n_tokens")).over(w))
       .filter(col("cum_tokens") - col("n_tokens") < SourceTokenBudget)
       .select("doc_id", "source", "n_tokens", "cum_tokens")
-      .orderBy("doc_id")
   }
 
   // Fixed-size per-source sample: exactly k docs (or all, if fewer).
@@ -279,7 +273,6 @@ object CorpusOps {
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= FixedK)
       .select("doc_id", "source", "lang", "rank")
-      .orderBy("doc_id")
   }
 
   /** Benchmark decontamination — remove eval-set leakage from the
@@ -307,7 +300,6 @@ object CorpusOps {
       .join(broadcast(benchGramSet(docs)), "gh")
       .groupBy("doc_id")
       .agg(countDistinct(col("gh")).as("n_shared"))
-      .orderBy("doc_id")
   }
 
   /** The [[ppHashSplit]] md5 bucket — shared by the split, the
@@ -392,7 +384,6 @@ object CorpusOps {
       .withColumn("bucket", bucket)
       .filter(col("bucket") * col("n_s") < permille * col("n"))
       .select(col("doc_id"), col("source"))
-      .orderBy("doc_id")
   }
 
   // Temperature of the language-rebalancing sampler: keep rate per
@@ -432,7 +423,6 @@ object CorpusOps {
       .filter(col("bucket") * col("bucket") * col("n_l") <
         lit(1000000L) * col("n_min"))
       .select(col("doc_id"), col("lang"), col("bucket"))
-      .orderBy("doc_id")
   }
 
   // Perplexity-bucketing sample rate (permille of docs whose scores
@@ -502,7 +492,6 @@ object CorpusOps {
           .when(col("score") <= col("t2"), "middle")
           .otherwise("head"))
       .select(col("doc_id"), col("lang"), col("score"), col("bucket"))
-      .orderBy("doc_id")
   }
 
   /** Segment granularity for line-level dedup: this corpus's documents
@@ -536,7 +525,7 @@ object CorpusOps {
     * segment-key min, then doc_id reassembly.
     */
   private def ppLineDedup(s: SparkSession, d: String): DataFrame =
-    lineDedupSegments(Tables.documents(s, d)).orderBy("doc_id")
+    lineDedupSegments(Tables.documents(s, d))
 
   /** (doc_id, seg_idx, seg): every non-overlapping [[SegTokens]]-token
     * segment of every document — shared by the batch dedup and its
@@ -592,10 +581,10 @@ object CorpusOps {
     * stopword-evidence (≥2 distinct stopwords), and a repetition cap
     * (most frequent token ≤ 25% of the document). Entirely rowwise —
     * array combinators inside the row's codegen stage, no shuffle at
-    * all before the output-contract sort — so the filter scans at
-    * I/O speed at any corpus size. Thresholds are corpus-appropriate
-    * constants (the synthetic corpus mixes pass and fail on each
-    * rule); production would read them from config.
+    * all — so the filter scans at I/O speed at any corpus size.
+    * Thresholds are corpus-appropriate constants (the synthetic corpus
+    * mixes pass and fail on each rule); production would read them from
+    * config.
     */
   private def ppQualityFilter(s: SparkSession, d: String): DataFrame = {
     val w = split(col("text"), " ")
@@ -621,7 +610,6 @@ object CorpusOps {
       (topFreq <= 0.25).as("r_rep"))
       .withColumn("keep",
         col("r_len") && col("r_word_len") && col("r_stop") && col("r_rep"))
-      .orderBy("doc_id")
   }
 
   val specs: Seq[QuerySpec] = Seq(

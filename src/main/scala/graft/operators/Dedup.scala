@@ -79,7 +79,6 @@ object Dedup {
     Tables.documents(s, d)
       .groupBy(md5(col("text")).as("text_hash"))
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
-      .orderBy("keep_id")
 
   // ------------------------------- n-gram Jaccard (prefix-filter join)
 
@@ -155,7 +154,6 @@ object Dedup {
         (size(col("sha")) + size(col("shb")) - inter)))
       .filter(col("jaccard") >= JaccardTau)
       .select("doc_a", "doc_b", "jaccard")
-      .orderBy("doc_a", "doc_b")
   }
 
   // --------------------------------------------------- MinHash + LSH
@@ -212,7 +210,7 @@ object Dedup {
   }
 
   private def minhashLsh(s: SparkSession, d: String): DataFrame =
-    minhashCandidates(minhashSigsFrame(s, d)).orderBy("doc_a", "doc_b")
+    minhashCandidates(minhashSigsFrame(s, d))
 
   /** Signature-estimated Jaccard for the LSH candidate pairs: the
     * fraction of agreeing signature components, the estimator a
@@ -233,7 +231,6 @@ object Dedup {
       .join(a, "doc_a").join(b, "doc_b")
       .select(col("doc_a"), col("doc_b"),
         r6(agree.cast("double") / NumHashes).as("jac_est"))
-      .orderBy("doc_a", "doc_b")
   }
 
   /** Shared CTE block producing the minhash candidate pair set. */
@@ -278,11 +275,6 @@ object Dedup {
     */
   private val EditMax = 40
   private def editDistance(s: SparkSession, d: String): DataFrame = {
-    // minhashCandidates, NOT minhashLsh: the registry twin carries an
-    // ORDER BY for its own output contract, and inheriting it here
-    // plants a total-order range exchange (plus its sampling re-pass)
-    // under this query's own final sort — measured at 30× data the
-    // registry plan cost ~47s against ~11s for its actual components.
     val cand = minhashCandidates(minhashSigsFrame(s, d))
     val ta = Tables.documents(s, d)
       .select(col("doc_id").as("doc_a"), col("text").as("text_a"))
@@ -310,7 +302,6 @@ object Dedup {
         levenshtein(col("text_a"), col("text_b"), EditMax + 1)
           .as("edit_dist"))
       .filter(col("edit_dist").between(0, EditMax))
-      .orderBy("doc_a", "doc_b")
   }
 
   /** [[editDistance]]'s exact work contract, for
@@ -326,7 +317,7 @@ object Dedup {
     * a 2.5× work slack. Deterministic where the DP stage's wall is not.
     */
   private[graft] def editDistanceWork(s: SparkSession, d: String): Double = {
-    val cand = minhashCandidates(minhashSigsFrame(s, d)) // no inner sort
+    val cand = minhashCandidates(minhashSigsFrame(s, d))
 
     val docs = Tables.documents(s, d)
     val meanLen = docs.agg(coalesce(avg(length(col("text"))), lit(1.0)))
@@ -410,10 +401,6 @@ object Dedup {
        |SELECT doc_id, $terms AS simhash FROM dws ORDER BY doc_id""".stripMargin
   }
 
-  /** SimHash signatures per document. */
-  private def simhashSigs(s: SparkSession, d: String): DataFrame =
-    simhashSigFrame(s, d).orderBy("doc_id")
-
   /** SimHash near-dup pairs (hamming ≤ 3) via banded join: 4 bands of 15
     * bits — any pair within hamming 3 shares at least one band
     * (pigeonhole), so the banded equi-join is exact, not approximate,
@@ -434,7 +421,6 @@ object Dedup {
         bit_count(col("x.sig").bitwiseXOR(col("y.sig"))).as("hamming"))
       .distinct()
       .filter(col("hamming") <= SimHamMax)
-      .orderBy("doc_a", "doc_b")
   }
 
   private def simhashPairsOracle: String = {
@@ -471,7 +457,6 @@ object Dedup {
       .select(col("doc_b").as("u"), col("doc_a").as("v"))
       .pinned()
     connectedComponents(edges, Tables.documents(s, d).select(col("doc_id")))
-      .orderBy("doc_id")
   }
 
   /** Connected components over a canonical (u, v) edge list with u > v:
@@ -686,7 +671,6 @@ object Dedup {
     inc.join(candDup, Seq("doc_id"), "left")
       .select(col("doc_id"), col("lang"),
         coalesce(col("is_dup"), lit(0)).as("is_dup"))
-      .orderBy("doc_id")
   }
 
   /** Canonical-representative selection: for every near-dup cluster
@@ -708,7 +692,6 @@ object Dedup {
       .filter(col("rn") === 1)
       .select(col("cluster"), col("doc_id").as("keep_id"),
         col("n_docs"), col("n_words"))
-      .orderBy("cluster")
   }
 
   /** Contamination-safe train/val/test assignment: the split is decided
@@ -727,7 +710,6 @@ object Dedup {
       .otherwise("test")
     clusters(s, d)
       .select(col("doc_id"), col("cluster"), split.as("split"))
-      .orderBy("doc_id")
   }
 
   // ------------------------------------------- embedding cosine near-dup
@@ -765,7 +747,6 @@ object Dedup {
       (col("na") * col("nb")))
     a.join(broadcast(b), col("id_a") < col("id_b") && cos >= tau)
       .select(col("id_a"), col("id_b"), cos.as("cos"))
-      .orderBy("id_a", "id_b")
   }
 
   /** Spark's Round(double, 6) path (BigDecimal HALF_UP on the canonical
@@ -863,7 +844,6 @@ object Dedup {
       val (bv, bn) = bc.value
       kernelScore(it, bv, bn, tau)
     }.toDF("id_a", "id_b", "cos")
-      .orderBy("id_a", "id_b")
   }
 
   /** Tiled form of [[blockedCosinePairs]] — the 100 TB path: when the
@@ -913,7 +893,7 @@ object Dedup {
     // Explicit schema: a corpus with zero near-dup pairs may leave the
     // scratch dir without data files, and schema inference would fail.
     s.read.schema("id_a BIGINT, id_b BIGINT, cos DOUBLE")
-      .parquet(scratch).orderBy("id_a", "id_b")
+      .parquet(scratch)
   }
 
   // Span-coverage n-gram order (word 8-grams — the passage-level grain
@@ -964,7 +944,6 @@ object Dedup {
           .as("n_dup_spans"))
       .withColumn("dup_frac",
         r6(col("n_dup_spans").cast("double") / col("n_spans")))
-      .orderBy("doc_id")
   }
 
   // ------------------------------------------- asymmetric containment
@@ -1049,7 +1028,6 @@ object Dedup {
         r6(inter.cast("double") / size(col("sha"))))
       .filter(col("containment") >= ContainTau)
       .select("doc_a", "doc_b", "containment")
-      .orderBy("doc_a", "doc_b")
   }
 
   // ------------------------------------------------------------ registry
@@ -1212,7 +1190,7 @@ object Dedup {
          |  FROM lab JOIN nw USING (doc_id))
          |SELECT cluster, doc_id AS keep_id, n_docs, n_words
          |FROM r WHERE rn = 1 ORDER BY cluster""".stripMargin)),
-    QuerySpec("dd_simhash", simhashSigs _, Oracle(simhashSql)),
+    QuerySpec("dd_simhash", simhashSigFrame _, Oracle(simhashSql)),
     QuerySpec("dd_simhash_pairs", simhashPairs _, Oracle(simhashPairsOracle)),
     QuerySpec("dd_cosine_neardup", cosineNearDup _, Oracle(
       s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),

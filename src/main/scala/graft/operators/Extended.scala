@@ -31,7 +31,6 @@ object Extended {
       .groupBy("user_id")
       .pivot("event_type", EventTypes)
       .agg(r6(avg(col("value"))))
-      .orderBy("user_id")
 
   /** Distinct aggregates: grouped count-distinct and sum-distinct.
     * Catalyst plans these as a two-phase expand+aggregate; the distinct
@@ -45,7 +44,6 @@ object Extended {
         sum_distinct(col("l_quantity").cast(DecimalType(38, 6)))
           .cast("double").as("sd_qty"),
         count(lit(1)).as("n"))
-      .orderBy("l_returnflag")
 
   /** Correlation statistics: Pearson corr and covariances per group —
     * single-pass co-moment aggregates (partial+final), the textbook
@@ -58,7 +56,6 @@ object Extended {
         r6(corr(col("l_quantity"), col("l_extendedprice"))).as("corr_qp"),
         r6(covar_pop(col("l_quantity"), col("l_extendedprice"))).as("cov_p"),
         r6(covar_samp(col("l_quantity"), col("l_extendedprice"))).as("cov_s"))
-      .orderBy("l_returnflag")
 
   /** Rank-function family: percent_rank, cume_dist, ntile quartiles over
     * a per-user total order (value with event_id tiebreak — ties must be
@@ -71,7 +68,6 @@ object Extended {
         r6(percent_rank().over(w)).as("pr"),
         r6(cume_dist().over(w)).as("cd"),
         ntile(4).over(w).as("quartile"))
-      .orderBy("event_id")
   }
 
   /** Corpus bigram document frequency, top-20: per-doc distinct word
@@ -97,7 +93,6 @@ object Extended {
         bool_and(col("value") > 0).as("all_pos"),
         bool_or(col("value") > 400).as("any_big"),
         count(lit(1)).as("n"))
-      .orderBy("event_type")
 
   /** Deterministic list/string aggregation: the per-key set of event
     * types, sorted then joined — the canonical way to make a collect
@@ -108,7 +103,6 @@ object Extended {
       .groupBy("user_id")
       .agg(concat_ws(",", array_sort(collect_set(col("event_type"))))
         .as("types"))
-      .orderBy("user_id")
 
   /** first_value / last_value / nth_value window family over the
     * per-user event order (unique (ts, event_id) key, so ROWS and RANGE
@@ -122,7 +116,6 @@ object Extended {
         r6(first(col("value")).over(w)).as("first_v"),
         r6(last(col("value")).over(wAll)).as("last_v"),
         r6(nth_value(col("value"), 2).over(w)).as("second_v"))
-      .orderBy("event_id")
   }
 
   /** W13: the distribution-window family (ntile, percent_rank,
@@ -137,7 +130,6 @@ object Extended {
       ntile(4).over(w).as("quartile"),
       r6(percent_rank().over(w)).as("pct_rank"),
       r6(cume_dist().over(w)).as("cdf"))
-      .orderBy("event_id")
   }
 
   /** Per-group top-k through the custom typed Aggregator
@@ -160,7 +152,6 @@ object Extended {
       .toDF("event_type", "rnk", "event_id", "value")
       .select(col("event_type"), col("rnk"), col("event_id"),
         r6(col("value")).as("value"))
-      .orderBy("event_type", "rnk")
   }
 
   /** Rolling distinct count over a BOUNDED frame: Spark has no
@@ -177,7 +168,6 @@ object Extended {
       col("event_id"),
       size(array_distinct(collect_list(col("event_type")).over(w)))
         .as("d_types_5"))
-      .orderBy("event_id")
   }
 
   /** Rolling median over a bounded 5-row frame — the robust smoother
@@ -200,12 +190,6 @@ object Extended {
         element_at(arr, (n / 2 + 1).cast("int"))) / 2.0)
     spreadScan(Tables.events(s, d), col("user_id")).select(
       col("event_id"), r6(med).as("med5"))
-      // Lazy checkpoint BEFORE the output-contract sort (the w22
-      // pattern): the range exchange's sampling job otherwise re-runs
-      // the collect_list+sort_array frame window a second time just to
-      // pick sort boundaries. Same rows, same order.
-      .localCheckpoint(false)
-      .orderBy("event_id")
   }
 
   /** Exponentially-weighted moving average over a trailing 20-row
@@ -241,11 +225,6 @@ object Extended {
     val den = terms.map(_._2).reduce(_ + _)
     spreadScan(Tables.events(s, d), col("user_id"))
       .select(col("event_id"), r6(num / den).as("ewma20"))
-      // Lazy checkpoint BEFORE the output-contract sort (the w22
-      // pattern): the range sampling otherwise evaluates all 40 lag
-      // windows a second time. Same rows, same order.
-      .localCheckpoint(false)
-      .orderBy("event_id")
   }
 
   /** Rolling Pearson correlation between quantity and price per
@@ -266,22 +245,7 @@ object Extended {
     * evaluates all five sums in one window pass; state is one 20-row
     * frame per open partition at any history length.
     */
-  private def w22RollingCorr(s: SparkSession, d: String): DataFrame =
-    w22Body(s, d)
-      // Lazy checkpoint BEFORE the output-contract sort (r15): the
-      // range exchange's sampling job otherwise re-executes the whole
-      // two-window decimal subtree a second time just to pick sort
-      // boundaries; the checkpointed rows compute once and both the
-      // sample and the sort read them. Same rows, same order.
-      .localCheckpoint(false)
-      .orderBy("l_suppkey", "l_orderkey", "l_linenumber")
-
-  /** The pre-checkpoint correlation body — split out so the plan-shape
-    * spec can still assert its ONE-window-shuffle property (the
-    * checkpoint truncates the registry query's visible plan to a
-    * LogicalRDD leaf).
-    */
-  private[graft] def w22Body(s: SparkSession, d: String): DataFrame = {
+  private def w22RollingCorr(s: SparkSession, d: String): DataFrame = {
     val wOrd = Window.partitionBy("l_suppkey")
       .orderBy("l_shipdate", "l_orderkey", "l_linenumber")
     val wCum = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -399,7 +363,6 @@ object Extended {
       .agg(count(lit(1)).as("n"), max("med").as("med"), max("mad").as("mad"),
         sum(when(col("ad") > lit(4.4478) * col("mad"), 1L).otherwise(0L))
           .as("n_outliers"))
-      .orderBy("event_type")
   }
 
   /** Population Stability Index per event type between the first and
@@ -466,7 +429,6 @@ object Extended {
       .select(col("event_type"), col("n_ref"), col("n_cur"),
         when(col("n_ref") > 0 && col("n_cur") > 0, r6(col("psi0")))
           .as("psi"))
-      .orderBy("event_type")
   }
 
   /** Cohort lifetime-value curves: users cohorted by first-event week,
@@ -503,7 +465,6 @@ object Extended {
       .select(col("cohort_week"), col("age_week"), col("n_users"),
         r6(col("cum_rev")).as("cum_rev"),
         r6(col("cum_rev") / col("n_users")).as("ltv_per_user"))
-      .orderBy("cohort_week", "age_week")
   }
 
   /** Value-RANGE window frame: per-user trailing band [v-10, v] over the
@@ -519,7 +480,6 @@ object Extended {
         count(lit(1)).over(w).as("n_in_band"),
         sum(col("value").cast(DecimalType(38, 6))).over(w)
           .cast("double").as("band_sum"))
-      .orderBy("event_id")
   }
 
   /** arg-min/arg-max aggregates: first/last event type per user. The
@@ -536,7 +496,6 @@ object Extended {
       .agg(min_by(col("event_type"), key).as("first_type"),
         max_by(col("event_type"), key).as("last_type"),
         count(lit(1)).as("n"))
-      .orderBy("user_id")
   }
 
   /** Fixed-width histogram (the dashboard binning shape): floor-divide
@@ -546,7 +505,6 @@ object Extended {
     Tables.events(s, d)
       .groupBy(floor(col("value") / 25).cast("long").as("bin"))
       .agg(count(lit(1)).as("n"), r6(avg(col("value"))).as("avg_in_bin"))
-      .orderBy("bin")
 
   /** Inverse-frequency class weights (total / (k·n) per label) — the
     * standard imbalance correction, computed as one tiny agg + broadcast
@@ -560,7 +518,6 @@ object Extended {
     c.crossJoin(broadcast(t))
       .select(col("label"), col("n"),
         r6(col("total") / (col("k") * col("n"))).as("weight"))
-      .orderBy("label")
   }
 
   /** Text normalization: lowercase, strip non-alphanumerics, collapse
@@ -572,7 +529,6 @@ object Extended {
     Tables.documents(s, d)
       .select(col("doc_id"), md5(norm).as("norm_hash"),
         length(norm).as("n_norm"))
-      .orderBy("doc_id")
   }
 
   // ------------------------------------------------------------ registry
@@ -614,7 +570,6 @@ object Extended {
           .when(col("t_click").isNotNull, 2)
           .when(col("t_view").isNotNull, 1)
           .otherwise(0))
-      .orderBy("user_id")
   }
 
   /** Weekly cohort retention — the other canonical event-sequence
@@ -651,7 +606,6 @@ object Extended {
       .withColumn("retention",
         r6(col("n_active").cast("double") / col("n_cohort")))
       .select("cohort_week", "offset", "n_active", "n_cohort", "retention")
-      .orderBy("cohort_week", "offset")
   }
 
   /** Event-type co-occurrence (the market-basket statistic over user
@@ -671,7 +625,6 @@ object Extended {
         "user_id")
       .filter(col("type_a") < col("type_b"))
       .groupBy("type_a", "type_b").agg(count(lit(1)).as("n_users"))
-      .orderBy("type_a", "type_b")
   }
 
   /** Per-type ingest freshness: event count, last-seen timestamp, and
@@ -691,7 +644,6 @@ object Extended {
         (col("frontier_us") - col("last_us")).as("lag_us"),
         (col("frontier_us") - col("last_us") > 2L * 86400L * 1000000L)
           .cast("int").as("stale"))
-      .orderBy("event_type")
   }
 
   /** Top user-journey prefixes: each user's first five events as a
@@ -744,7 +696,6 @@ object Extended {
       .unionByName(audit(Tables.orders(s, d), "orders", Seq("o_orderkey")))
       .unionByName(audit(Tables.lineitem(s, d), "lineitem",
         Seq("l_orderkey", "l_linenumber")))
-      .orderBy("table_name")
   }
 
   /** Referential-integrity audit — the sixth standard data-quality
@@ -786,7 +737,6 @@ object Extended {
         "o_custkey", Tables.customer(s, d), "c_custkey"))
       .unionByName(fk("supplier.nation", Tables.supplier(s, d),
         "s_nationkey", Tables.nation(s, d), "n_nationkey"))
-      .orderBy("relationship")
   }
 
   /** Deterministic A/B test readout — the experimentation query every
@@ -890,7 +840,6 @@ object Extended {
         (lit(4) - hi("recency_d", "rt1", "rt2")).as("r_score"),
         hi("frequency", "ft1", "ft2").as("f_score"),
         hi("monetary", "mt1", "mt2").as("m_score"))
-      .orderBy("user_id")
   }
 
   /** Last-touch attribution — the third canonical event-sequence query
@@ -920,7 +869,6 @@ object Extended {
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), col("event_id").as("purchase_id"),
         col("ts_us").as("purchase_ts_us"), col("click_id"), col("gap_us"))
-      .orderBy("user_id", "purchase_id")
   }
 
   /** Data-quality profile — the table-stats gate a production ingest
@@ -967,7 +915,6 @@ object Extended {
         s"'$c', __n, ${c}__nn, ${c}__nd, ${c}__mn, ${c}__mx, ${c}__av")
         .mkString(", ") +
         ") as (col_name, n_rows, n_non_null, n_distinct, vmin, vmax, vmean)"))
-      .orderBy("col_name")
   }
 
   /** Data-quality rules — the sibling gate to [[dqProfile]]: violation
@@ -999,7 +946,6 @@ object Extended {
       "'quantity_positive', r_qty, n, " +
       "'tax_not_null', r_tax, n" +
       ") as (rule, n_violations, n_checked)"))
-      .orderBy("rule")
   }
 
   /** Event-type transition matrix (first-order Markov counts): for
@@ -1021,7 +967,6 @@ object Extended {
       .agg(count(lit(1)).as("n"))
       .withColumn("p", r6(col("n") /
         sum(col("n")).over(Window.partitionBy("from_type"))))
-      .orderBy("from_type", "to_type")
   }
 
   /** Daily volume drift (statistical process control over ingest
@@ -1054,7 +999,6 @@ object Extended {
         r6(col("sigma")).as("sigma"),
         when(col("sigma") > 0,
           r6((col("n") - col("mu")) / col("sigma"))).as("z"))
-      .orderBy("event_type", "day")
   }
 
   val specs: Seq[QuerySpec] = Seq(

@@ -338,7 +338,7 @@ object Graph {
         .groupBy("node").agg(min("dist").as("dist"))
         .localCheckpoint(false)
     }
-    dist.groupBy("dist").agg(count(lit(1)).as("n_nodes")).orderBy("dist")
+    dist.groupBy("dist").agg(count(lit(1)).as("n_nodes"))
   }
 
   // ------------------------------------------------- node similarity

@@ -216,7 +216,6 @@ object Layout {
       .agg(count(lit(1)).as("n_items"),
         dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
           .as("revenue"))
-      .orderBy("o_orderpriority")
   }
 
   val specs: Seq[QuerySpec] = Seq(

@@ -145,7 +145,6 @@ object Multimodal {
       }
     }.toDF("media_id", "channel", "out_w", "out_h",
       "px_sum", "px_min", "px_max")
-      .orderBy("media_id", "channel")
   }
 
   /** WAV media table: every document gets a complete PCM16 clip whose
@@ -186,7 +185,6 @@ object Multimodal {
       }
     }.toDF("media_id", "channel", "channels", "sample_rate", "n_frames",
       "smp_sum", "smp_min", "smp_max", "smp_sumsq")
-      .orderBy("media_id", "channel")
   }
 
   // dHash geometry: a 9×8 grayscale grid gives 8 horizontal gradients
@@ -254,7 +252,6 @@ object Multimodal {
           .cast("int").as("hamming"))
       .filter(col("hamming") <= PhashHamTau)
       .distinct()
-      .orderBy("id_a", "id_b")
   }
 
   /** Pack the 64 horizontal-gradient sign bits of a row-major
@@ -381,7 +378,6 @@ object Multimodal {
       col("doc_id"),
       octet_length(encode(col("text"), "UTF-8")).as("n_bytes"),
       substring(hex(encode(col("text"), "UTF-8")), 1, 16).as("hex_prefix"))
-      .orderBy("doc_id")
 
   /** Fully oracle-checked feature pipeline: BMP media table → batched
     * real decode → per-channel pixel means plus header metadata. The
@@ -398,7 +394,6 @@ object Multimodal {
         r6(col("b_sum") / px).as("b_mean"),
         r6(col("g_sum") / px).as("g_mean"),
         r6(col("r_sum") / px).as("r_mean"))
-      .orderBy("media_id")
   }
 
   /** Integer-exact per-channel pixel statistics at the (media, channel)
@@ -413,7 +408,6 @@ object Multimodal {
         (f.media_id, 1, f.g_sum, f.g_min, f.g_max),
         (f.media_id, 2, f.r_sum, f.r_min, f.r_max)))
       .toDF("media_id", "channel", "px_sum", "px_min", "px_max")
-      .orderBy("media_id", "channel")
   }
 
   /** The oracle-checkable half of the feature pipeline split out: header
@@ -424,7 +418,7 @@ object Multimodal {
     * walk) breaks the hash match.
     */
   private def parse(s: SparkSession, d: String): DataFrame =
-    parseHeaders(mediaTable(s, d)).orderBy("media_id")
+    parseHeaders(mediaTable(s, d))
 
   /** Frame sampling over an opaque binary payload: slice fixed 256-byte
     * "frames", keep every 2nd (the sample stride a video pipeline uses
@@ -453,7 +447,6 @@ object Multimodal {
         // take BLOBs, so the oracle slices hex text — Spark still does
         // the real binary slicing and only hashes via hex.
         md5(hex(col("frame"))).as("frame_hash"))
-      .orderBy("doc_id", "frame_idx")
   }
 
   /** MP4 media table: every document gets a complete ISO-BMFF container
@@ -494,7 +487,6 @@ object Multimodal {
       "n_tracks")
       .withColumn("dur_s",
         r6(col("duration").cast("double") / col("timescale")))
-      .orderBy("media_id")
   }
 
   // The shared formula-recompute CTE chain for the BMP oracles. DuckDB

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * Naming mirrors the survey: sN scans, pN projections/filters, jN joins,
   * aN aggregations, oN sort/limit, uN set ops, fN scalar-function surface.
   * Each query has a DuckDB oracle twin in [[specs]] with identical output
-  * column names and ORDER BY.
+  * column names; row order is part of the result only under a limit.
   */
 object Relational {
 
@@ -39,10 +39,6 @@ object Relational {
         expr("try_cast(element_at(f, 3) AS double)").as("l_quantity"),
         expr("try_cast(element_at(f, 4) AS double)").as("l_extendedprice"),
         expr("try_cast(element_at(f, 5) AS double)").as("l_discount"))
-      .orderBy("l_orderkey", "l_linenumber")
-    // (r15: a localCheckpoint before this sort measured NO gain — the
-    // spreadScan exchange's map output is reused by the range-sampling
-    // job, so only the cheap post-exchange parse re-runs.)
   }
 
   /** S2/J2 (scripts/ml_pipeline.py:190-191): single-column scan with
@@ -52,11 +48,10 @@ object Relational {
     Tables.nation(s, d)
       .select(col("n_nationkey"), col("n_name"),
         row_number().over(Window.orderBy("n_nationkey")).as("rn"))
-      .orderBy("n_nationkey")
 
-  /** S3 (scripts/streamlit_dashboard.py:16-19): full ordered table scan. */
+  /** S3 (scripts/streamlit_dashboard.py:16-19): full table scan. */
   private def s3TableScan(s: SparkSession, d: String): DataFrame =
-    Tables.supplier(s, d).orderBy("s_suppkey")
+    Tables.supplier(s, d)
 
   // -------------------------------------------- projections / filters
 
@@ -64,7 +59,6 @@ object Relational {
   private def p1Project(s: SparkSession, d: String): DataFrame =
     Tables.lineitem(s, d)
       .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
-      .orderBy("l_orderkey", "l_linenumber")
 
   /** P2 (turbine_etl_dbt/models/stg_cycles_raw.sql:11-21): typed
     * re-projection. floor-before-int-cast keeps Spark (truncate) and
@@ -76,14 +70,12 @@ object Relational {
       col("o_custkey").cast("string").as("custkey_str"),
       floor(col("o_totalprice")).cast("long").as("price_int"),
       col("o_orderdate").cast("date").cast("string").as("order_date"))
-      .orderBy("o_orderkey")
 
   /** P4 (scripts/streamlit_dashboard.py:85-92): value-set membership. */
   private def p4Isin(s: SparkSession, d: String): DataFrame =
     Tables.lineitem(s, d)
       .filter(col("l_returnflag").isin("A", "R"))
       .select("l_orderkey", "l_linenumber", "l_returnflag")
-      .orderBy("l_orderkey", "l_linenumber")
 
   /** P5 (scripts/streamlit_dashboard.py:43-48, ml_pipeline_gpu.py:800-810):
     * inequality / not-equal / null predicates.
@@ -94,7 +86,6 @@ object Relational {
         col("props").isNotNull)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"))
-      .orderBy("event_id")
 
   /** P6 (scripts/etl_turbofan.py:74-78): constant-column detection as a
     * statistics pass — one distributed agg job whose scalar results
@@ -119,17 +110,12 @@ object Relational {
     // median aggregate would single-task the whole column.
     val med = exactMedians(li, Seq("disc" -> "med"))
     // Spread the imputation chain (r16, the p15_winsorize finding): the
-    // coalesce+round project and the output sort's range sampling both
-    // ran as ONE task on the single-split scan. The median branch keeps
-    // the unspread scan (its grid collapse is the 11-value ladder).
+    // coalesce+round project ran as ONE task on the single-split scan.
+    // The median branch keeps the unspread scan (its grid collapse is
+    // the 11-value ladder).
     spreadScan(li, col("l_orderkey")).crossJoin(broadcast(med))
       .select(col("l_orderkey"), col("l_linenumber"),
         r6(coalesce(col("disc"), col("med"))).as("disc_imputed"))
-      // No checkpoint-before-sort here (r16, measured): unlike p15's
-      // clamp chain the imputation project is one coalesce, so the
-      // range sampling's re-run costs less than the checkpoint's row
-      // materialization — 1.27 baseline vs 1.31 checkpointed.
-      .orderBy("l_orderkey", "l_linenumber")
   }
 
   /** P9 (scripts/ml_pipeline.py:440): clamp at zero. */
@@ -137,7 +123,6 @@ object Relational {
     Tables.events(s, d)
       .select(col("event_id"),
         r6(greatest(col("value") - 100, lit(0.0))).as("clamped"))
-      .orderBy("event_id")
 
   /** P10 (scripts/ml_pipeline.py:656-659; dashboard/dax-measures:27-33):
     * derived arithmetic — abs/squared error and guarded divide.
@@ -148,7 +133,6 @@ object Relational {
       r6(abs(col("value") - 100)).as("abs_err"),
       r6(pow(col("value") - 100, 2)).as("sq_err"),
       r6(when(col("value") =!= 0, lit(100.0) / col("value"))).as("ratio"))
-      .orderBy("event_id")
 
   /** P11 (dashboard/dax-measures:36-46): CASE bucketing + grouped counts. */
   private def p11Bucket(s: SparkSession, d: String): DataFrame =
@@ -158,7 +142,6 @@ object Relational {
         .when(col("o_totalprice") < 300000, "high")
         .otherwise("top").as("bucket"))
       .groupBy("bucket").agg(count(lit(1)).as("n"))
-      .orderBy("bucket")
 
   // ---------------------------------------------------------------- joins
 
@@ -177,7 +160,6 @@ object Relational {
       .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
       .groupBy(col("r_name"), col("n_name"))
       .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("revenue"))
-      .orderBy("r_name", "n_name")
   }
 
   /** Semi join: customers having at least one finished order (EXISTS). */
@@ -186,7 +168,7 @@ object Relational {
     val o = Tables.orders(s, d).filter(col("o_orderstatus") === "F")
       .select(col("o_custkey").as("c_custkey"))
     c.join(o, Seq("c_custkey"), "left_semi")
-      .select("c_custkey", "c_name").orderBy("c_custkey")
+      .select("c_custkey", "c_name")
   }
 
   /** Anti join: customers with no orders at all (NOT EXISTS). */
@@ -194,7 +176,7 @@ object Relational {
     val c = Tables.customer(s, d)
     val o = Tables.orders(s, d).select(col("o_custkey").as("c_custkey"))
     c.join(o, Seq("c_custkey"), "left_anti")
-      .select("c_custkey", "c_name").orderBy("c_custkey")
+      .select("c_custkey", "c_name")
   }
 
   /** J2 (scripts/ml_pipeline.py:191): positional alignment — two sources
@@ -206,7 +188,7 @@ object Relational {
     val n = Tables.nation(s, d)
       .select(col("n_name"), row_number().over(Window.orderBy("n_nationkey")).as("rn"))
     n.join(broadcast(r), Seq("rn"), "inner")
-      .select("rn", "n_name", "r_name").orderBy("rn")
+      .select("rn", "n_name", "r_name")
   }
 
   // --------------------------------------------------------- aggregations
@@ -222,7 +204,6 @@ object Relational {
         max(col("l_quantity")).as("qty_max"),
         dsum(col("l_quantity")).as("qty_sum"),
         dsum(col("l_extendedprice")).as("price_sum"))
-      .orderBy("l_returnflag", "l_linestatus")
 
   /** A3 (scripts/ml_pipeline.py:194): last row per group (final-cycle
     * snapshot) via a descending row_number window.
@@ -235,7 +216,6 @@ object Relational {
       .filter(col("rn") === 1)
       .select(col("user_id"), col("event_id"), col("event_type"),
         col("value"))
-      .orderBy("user_id")
   }
 
   /** A5+A6 (dashboard/dax-measures:2-12): global scalar measures. */
@@ -285,7 +265,6 @@ object Relational {
       .agg(count(lit(1)).as("n"),
         r6(avg(abs(col("value") - 100))).as("mae_vs_100"),
         r6(sqrt(avg(pow(col("value") - 100, 2)))).as("rmse_vs_100"))
-      .orderBy("event_type")
 
   /** A11 (dashboard/dax-measures:62-72): unweighted average of per-group
     * averages vs the global average (DAX filter-context semantics).
@@ -369,7 +348,6 @@ object Relational {
     Tables.events(s, d)
       .rollup("event_type", "user_id")
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-      .orderBy(col("event_type").asc_nulls_first, col("user_id").asc_nulls_first)
 
   /** Cube over two low-cardinality dimensions. */
   private def a15Cube(s: SparkSession, d: String): DataFrame = {
@@ -379,7 +357,6 @@ object Relational {
       .withColumn("vb", bucket)
       .cube("event_type", "vb")
       .agg(count(lit(1)).as("n"))
-      .orderBy(col("event_type").asc_nulls_first, col("vb").asc_nulls_first)
   }
 
   // -------------------------------------------------------- sort / top-k
@@ -418,7 +395,6 @@ object Relational {
     val odd = e.filter(col("user_id") % 2 === 1)
     even.unionByName(odd)
       .groupBy("event_type").agg(count(lit(1)).as("n"))
-      .orderBy("event_type")
   }
 
   /** U2 (scripts/etl_turbofan.py:196-204): set intersection (nations with
@@ -427,13 +403,11 @@ object Relational {
   private def u2Intersect(s: SparkSession, d: String): DataFrame =
     Tables.customer(s, d).select(col("c_nationkey").as("nationkey"))
       .intersect(Tables.supplier(s, d).select(col("s_nationkey").as("nationkey")))
-      .orderBy("nationkey")
 
   /** Set difference: nations with customers but no suppliers. */
   private def u3Except(s: SparkSession, d: String): DataFrame =
     Tables.customer(s, d).select(col("c_nationkey").as("nationkey"))
       .except(Tables.supplier(s, d).select(col("s_nationkey").as("nationkey")))
-      .orderBy("nationkey")
 
   // ------------------------------------------- scalar function surface
 
@@ -451,7 +425,6 @@ object Relational {
       concat_ws("-", col("p_brand"), col("p_type")).as("brand_type"),
       col("p_name").startsWith("a").as("starts_a"),
       col("p_type").rlike("[0-9]").as("has_digit"))
-      .orderBy("p_partkey")
 
   /** §2.9 math functions: sqrt/ln/exp/abs/pow on order totals. */
   private def f2Math(s: SparkSession, d: String): DataFrame =
@@ -460,7 +433,6 @@ object Relational {
       r6(sqrt(col("o_totalprice"))).as("sqrt_price"),
       r6(log(col("o_totalprice"))).as("ln_price"),
       r6(exp(col("o_totalprice") / 100000)).as("exp_scaled"))
-      .orderBy("o_orderkey")
 
   /** §2.9 date functions: extract + format + grouped monthly rollup. */
   private def f3Date(s: SparkSession, d: String): DataFrame =
@@ -469,7 +441,6 @@ object Relational {
         col("o_totalprice"))
       .groupBy("ym")
       .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
-      .orderBy("ym")
 
   /** JSON field extraction from the events props column (semi-structured
     * source surface): parse, cast, aggregate by extracted value.
@@ -479,7 +450,6 @@ object Relational {
       .select(get_json_object(col("props"), "$.k").cast("int").as("k"))
       .groupBy((col("k") % 10).as("k_mod"))
       .agg(count(lit(1)).as("n"), min(col("k")).as("k_min"), max(col("k")).as("k_max"))
-      .orderBy(col("k_mod").asc_nulls_first)
 
   /** Approximate distinct (HLL) vs exact — the 100 TB cardinality
     * estimator. The HLL estimates themselves are engine-specific (no
@@ -529,7 +499,6 @@ object Relational {
       .agg(max(struct(col("n"), (-col("l_quantity")).as("nq"))).as("m"))
       .select(col("l_returnflag"), (-col("m.nq")).as("mode_qty"),
         col("m.n").as("mode_n"))
-      .orderBy("l_returnflag")
 
   /** A26: skewness and excess kurtosis via explicit TWO-PASS central
     * moments — mean first, then decimal-accumulated Σ(x−μ)^{2,3,4}.
@@ -591,28 +560,11 @@ object Relational {
     * rowwise codegen. Thresholds are r6-rounded on BOTH engines before
     * comparing, so the band edges are bit-identical.
     */
-  private def p15Winsorize(s: SparkSession, d: String): DataFrame =
-    p15Body(s, d)
-      // Lazy checkpoint BEFORE the output-contract sort (the w22
-      // pattern): the range sampling otherwise runs the 600k-row clamp
-      // chain a second time for boundaries. Same rows, same order.
-      // 2.73 → 2.44 s measured this container.
-      .localCheckpoint(false)
-      .orderBy("l_orderkey", "l_linenumber")
-
-  /** The pre-checkpoint winsorize body — split out so the grid-reuse
-    * plan spec can still count the pinned grid's cache reads (the
-    * checkpoint truncates the registry query's visible plan to a
-    * LogicalRDD leaf).
-    */
-  private[graft] def p15Body(s: SparkSession, d: String): DataFrame = {
+  private def p15Winsorize(s: SparkSession, d: String): DataFrame = {
     // Spread (r16): the executed plan showed the clamp chain — scan +
     // broadcast-join thresholds + round/least/greatest project — running
-    // as ONE task over the single-split scan, and the output sort's
-    // range-boundary sampling ran that same 1-task stage a second time.
-    // Spread, the clamp runs 32-way and the sampling reads the already-
-    // materialized AQE stage. (The r15 "residual is the contract sort"
-    // note under-attributed this: the sort's INPUT stage was serial.)
+    // as ONE task over the single-split scan. Spread, the clamp runs
+    // in parallel.
     val li = spreadScan(Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice")),
       col("l_orderkey"))

@@ -24,7 +24,6 @@ object ScalarOps {
       r6(array_max(e)).as("mx"),
       r6(array_min(e)).as("mn"),
       r6(aggregate(slice(e, 1, 8), lit(0.0), _ + _)).as("head_sum"))
-      .orderBy("vec_id")
   }
 
   /** Regex function surface: global replace, group extraction, match
@@ -37,7 +36,6 @@ object ScalarOps {
       substring(regexp_replace(col("text"), "[0-9]+", "#"), 1, 40).as("masked"),
       regexp_extract(col("text"), "([a-z]+)", 1).as("first_word"),
       col("text").rlike("data").cast("int").as("has_data"))
-      .orderBy("doc_id")
 
   /** Bitwise scalar surface: and/or/xor/shifts/bit_count — the hash and
     * signature pipelines use these internally; declared here as a
@@ -52,7 +50,6 @@ object ScalarOps {
       shiftleft(col("event_id"), 3).as("shl"),
       shiftrightunsigned(col("event_id"), 2).as("shr"),
       bit_count(col("event_id")).as("popcnt"))
-      .orderBy("event_id")
 
   /** Extended string surface: pad/translate/repeat/reverse/replace —
     * the remainder of the scalar string family beyond f1.
@@ -65,7 +62,6 @@ object ScalarOps {
       reverse(col("p_brand")).as("brand_rev"),
       regexp_replace(col("p_name"), " ", "_").as("name_snake"),
       length(col("p_name")).as("name_len"))
-      .orderBy("p_partkey")
 
   /** Datetime extraction surface: calendar fields + truncation. The
     * dayofweek convention differs between engines (Spark 1=Sunday,
@@ -83,7 +79,6 @@ object ScalarOps {
       dayofweek(col("ts")).as("dow1"), // 1 = Sunday
       weekofyear(col("ts")).as("iso_week"),
       tsUs(date_trunc("day", col("ts"))).as("day_us"))
-      .orderBy("event_id")
 
   /** Map-typed column surface: per-user event_type → mean-value map
     * built with map_from_entries over a collected struct list, then
@@ -107,7 +102,6 @@ object ScalarOps {
         // must yield null here, as the oracle's conditional aggregate does.
         try_element_at(col("m"), lit("click")).as("click_avg"),
         try_element_at(col("m"), lit("error")).as("error_avg"))
-      .orderBy("user_id")
   }
 
   /** Binary encode/decode surface: base64 and hex round-trips over the
@@ -132,7 +126,6 @@ object ScalarOps {
       (decode(unbase64(b64), "UTF-8") === col("text") &&
         decode(unhex(hex(payload)), "UTF-8") === col("text"))
         .cast("int").as("rt_ok"))
-      .orderBy("doc_id")
   }
 
   /** Offset pagination: ORDER BY + OFFSET + LIMIT (the dashboard's
@@ -157,7 +150,6 @@ object ScalarOps {
       r6(coalesce(dsc, lit(-1.0))).as("disc_or_neg1"),
       (dsc <=> tax).cast("int").as("disc_eq_tax_nullsafe"),
       dsc.isNull.cast("int").as("disc_is_null"))
-      .orderBy("l_orderkey", "l_linenumber")
   }
 
   /** Higher-order lambda surface (transform / filter / exists / forall
@@ -178,7 +170,6 @@ object ScalarOps {
       forall(e, x => abs(x) < lit(1.0)).cast("int").as("all_small"),
       r6(aggregate(slice(sort_array(e, asc = false), 1, 3),
         lit(0.0), _ + _)).as("top3_sum"))
-      .orderBy("vec_id")
   }
 
   val specs: Seq[QuerySpec] = Seq(

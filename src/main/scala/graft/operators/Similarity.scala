@@ -89,7 +89,6 @@ object Similarity {
         .as(s"q$i"))
     Tables.embeddings(s, d)
       .select(Seq(col("vec_id"), r6(mn).as("mn"), r6(mx).as("mx")) ++ codes: _*)
-      .orderBy("vec_id")
   }
 
   /** Exact brute-force top-k cosine neighbors for each query vector. */
@@ -105,7 +104,6 @@ object Similarity {
         .orderBy(col("cos").desc, col("neighbor_id"))))
       .filter(col("rnk") <= K)
       .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cos"))
-      .orderBy("query_id", "rnk")
   }
 
   // ------------------------------------------------ LSH-bucketed variant
@@ -236,7 +234,6 @@ object Similarity {
         .orderBy(col("cos").desc, col("neighbor_id"))))
       .filter(col("rnk") <= K)
       .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cos"))
-      .orderBy("query_id", "rnk")
   }
 
   // ------------------------------------------------------- IVF variant
@@ -483,7 +480,6 @@ object Similarity {
         .orderBy(col("cos").desc, col("neighbor_id"))))
       .filter(col("rnk") <= K)
       .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cos"))
-      .orderBy("query_id", "rnk")
   }
 
   // --------------------------------------------------- SemDeDup variant
@@ -591,7 +587,6 @@ object Similarity {
       .select(col("id_a"), col("id_b"), cos.as("cos"))
       // multi-assignment can meet the same pair in up to nAssign cells
       .dropDuplicates("id_a", "id_b")
-      .orderBy("id_a", "id_b")
   }
 
   /** The salted/blocked side of the SemDeDup pair join: one row per
@@ -1362,7 +1357,6 @@ object Similarity {
         .orderBy(col("cos").desc, col("neighbor_id"))))
       .filter(col("rnk") <= K)
       .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cos"))
-      .orderBy("query_id", "rnk")
   }
 
   // ------------------------------------------------- index persistence
@@ -1464,7 +1458,6 @@ object Similarity {
         .orderBy(col("cos").desc, col("neighbor_id"))))
       .filter(col("rnk") <= K)
       .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cos"))
-      .orderBy("query_id", "rnk")
   }
 
   /** Append new vectors to a persisted IVF-Flat index without
@@ -1782,7 +1775,6 @@ object Similarity {
         count(lit(1)).as("n_vecs"))
       .select(col("label"), (col("pos0") + 1).as("pos"), r6(col("m")).as("c"),
         col("n_vecs"))
-      .orderBy("label", "pos")
 
   // Corpus-size cutoff for the broadcast 1-NN kernel: beyond this many
   // vectors the corpus no longer fits one broadcast and the SAME argmax
@@ -1825,7 +1817,6 @@ object Similarity {
         struct(col("cos"), (-col("nid")).as("neg"))).as("b"))
       .select(col("vec_id"), col("b.nid").as("neighbor_id"),
         col("b.cos").as("cos"))
-      .orderBy("vec_id")
 
   /** Tiled exact 1-NN — the 100 TB path (the
     * [[Dedup.blockedCosinePairsTiled]] pattern): split the vec_id
@@ -1917,7 +1908,6 @@ object Similarity {
           (d18(col("x")) / n) * (d18(col("x")) / n)).as("var_pop"),
         r6(min(col("x"))).as("mn"),
         r6(max(col("x"))).as("mx"))
-      .orderBy("pos")
   }
 
   /** Eigenvalues (descending) of the normalized corpus' covariance —
@@ -1998,7 +1988,6 @@ object Similarity {
       .select(col("vec_id"), col("label"),
         r6(col("dp") / col("cn")).as("cos_centroid"),
         (col("dp") < 0).as("is_outlier"))
-      .orderBy("vec_id")
   }
 
   private val AnnPairKeys = Seq("query_id", "neighbor_id")

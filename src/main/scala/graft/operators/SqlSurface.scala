@@ -66,7 +66,7 @@ object SqlSurface {
         |  round(CASE WHEN stddev_pop(value) OVER (PARTITION BY user_id) <> 0
         |    THEN (value - avg(value) OVER (PARTITION BY user_id))
         |         / stddev_pop(value) OVER (PARTITION BY user_id) END, 6) AS z_value
-        |FROM events_spread ORDER BY event_id""".stripMargin)
+        |FROM events_spread""".stripMargin)
   }
 
   /** OLS y~x (l_extendedprice ~ l_quantity) in closed form: the five
@@ -112,9 +112,7 @@ object SqlSurface {
         |  count(*) AS n,
         |  CAST(sum(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
         |FROM events
-        |GROUP BY GROUPING SETS ((event_type), (user_id % 10), ())
-        |ORDER BY g_type, g_cohort, event_type NULLS FIRST,
-        |  cohort NULLS FIRST""".stripMargin)
+        |GROUP BY GROUPING SETS ((event_type), (user_id % 10), ())""".stripMargin)
   }
 
   /** Correlated EXISTS + scalar subquery through the SQL entry —
@@ -130,8 +128,7 @@ object SqlSurface {
         |WHERE EXISTS (SELECT 1 FROM lineitem l
         |              WHERE l.l_orderkey = o.o_orderkey
         |                AND l.l_quantity > 45)
-        |  AND o_totalprice > (SELECT avg(o_totalprice) FROM orders)
-        |ORDER BY o_orderkey""".stripMargin)
+        |  AND o_totalprice > (SELECT avg(o_totalprice) FROM orders)""".stripMargin)
   }
 
   /** UNPIVOT (wide → long): three measure columns become (metric, value)
@@ -140,8 +137,8 @@ object SqlSurface {
   private def unpivot(s: SparkSession, d: String): DataFrame = {
     val exec = registerViews(s, d)
     // spreadScan under a temp view: the stack() Generate (600k → 1.8M
-    // rows) and the range-sort sampling pass above it otherwise both
-    // run the single-split scan stage on one core (r15 plan audit).
+    // rows) otherwise runs in the single-split scan stage on one core
+    // (r15 plan audit).
     spreadScan(Tables.lineitem(exec, d), org.apache.spark.sql.functions
       .col("l_orderkey")).createOrReplaceTempView("lineitem_spread")
     exec.sql(
@@ -150,8 +147,7 @@ object SqlSurface {
         |        stack(3, 'quantity', l_quantity,
         |                 'extendedprice', l_extendedprice,
         |                 'discount', l_discount) AS (metric, value)
-        |      FROM lineitem_spread)
-        |ORDER BY l_orderkey, l_linenumber, metric""".stripMargin)
+        |      FROM lineitem_spread)""".stripMargin)
   }
 
   /** Aggregate FILTER clauses — per-aggregate predicates in one pass
@@ -165,7 +161,7 @@ object SqlSurface {
         |  count(*) FILTER (WHERE value < 30) AS n_low,
         |  count(*) FILTER (WHERE value >= 400) AS n_high,
         |  round(avg(value) FILTER (WHERE value >= 100), 6) AS avg_mid
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)
+        |FROM events GROUP BY event_type""".stripMargin)
   }
 
   /** Correlated LATERAL subquery: per-user top-2 events by value —
@@ -188,8 +184,7 @@ object SqlSurface {
         |LATERAL (SELECT event_id, round(value, 6) AS value
         |         FROM events_spread e
         |         WHERE e.user_id = u.user_id
-        |         ORDER BY e.value DESC, event_id LIMIT 2) s
-        |ORDER BY u.user_id, s.value DESC, s.event_id""".stripMargin)
+        |         ORDER BY e.value DESC, event_id LIMIT 2) s""".stripMargin)
   }
 
   /** Recursive-CTE date spine (the dbt calendar-spine pattern): generate
@@ -210,8 +205,7 @@ object SqlSurface {
         |FROM m LEFT JOIN (
         |  SELECT trunc(o_orderdate, 'MM') AS om, count(*) AS n
         |  FROM orders GROUP BY trunc(o_orderdate, 'MM')
-        |) o ON mo = o.om
-        |ORDER BY month""".stripMargin)
+        |) o ON mo = o.om""".stripMargin)
   }
 
   // One rule-installed session clone per context, so sql_grid_mixed
@@ -250,8 +244,7 @@ object SqlSurface {
         |  count(*) AS n,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE)
         |    AS sum_price
-        |FROM lineitem GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin)
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin)
   }
 
   val specs: Seq[QuerySpec] = Seq(

@@ -105,7 +105,6 @@ object Stats {
         col("benford_share"),
         r6(abs(col("n").cast("double") / col("total").cast("double") -
           col("benford_share"))).as("abs_dev"))
-      .orderBy("digit")
   }
 
   /** Herfindahl–Hirschman market-concentration index of supplier revenue
@@ -149,7 +148,6 @@ object Stats {
         .as("hhi"),
         count(lit(1)).as("n_suppliers"),
         r6(max(col("share"))).as("top_share"))
-      .orderBy("n_name")
   }
 
   /** Classical seasonal decomposition of the daily order-revenue series:
@@ -190,7 +188,6 @@ object Stats {
           count(lit(1)).cast("double")).as("seasonal"),
         r6(sum(col("rev")).cast("double") / count(lit(1)).cast("double"))
           .as("avg_revenue"))
-      .orderBy("dow")
   }
 
   // Sample size for the systematic PPS draw: k strata over the total
@@ -241,7 +238,6 @@ object Stats {
         expr(s"((cw - n_tokens) * $PpsK) div w_total"))
       .select(col("doc_id"), col("n_tokens"), col("cw"),
         expr(s"(cw * $PpsK) div w_total").as("stratum"))
-      .orderBy("cw")
   }
 
   private val benfordValues: String = BenfordP

@@ -49,7 +49,6 @@ object TemporalJoins {
     asofLastError(Tables.events(s, d)
       .select(col("event_id"), col("user_id"), tsUs(col("ts")).as("tus"),
         col("event_type")))
-      .orderBy("event_id")
 
   /** The same as-of semantics through the custom whole-operator path
     * ([[graft.plans.AsOfJoinPlan]] + strategy + merge exec) instead of
@@ -64,7 +63,6 @@ object TemporalJoins {
       .select(col("user_id").as("err_user"), tsUs(col("ts")).as("err_tus"))
     graft.plans.AsOf.lastMatch(ev, errs,
       "user_id", "tus", "err_user", "err_tus", "last_err_us")
-      .orderBy("event_id")
   }
 
   /** Range join: events binned into value intervals from a (tiny) ranges
@@ -84,7 +82,6 @@ object TemporalJoins {
         col("value") >= col("lo") && col("value") < col("hi"))
       .groupBy("bucket_id")
       .agg(count(lit(1)).as("n"), r6(avg(col("value"))).as("avg_value"))
-      .orderBy("bucket_id")
   }
 
   /** First-class FULL OUTER JOIN: daily error/purchase reconciliation
@@ -110,7 +107,6 @@ object TemporalJoins {
       .withColumn("status",
         when(col("n_err") > 0 && col("n_pur") > 0, "both")
           .when(col("n_err") > 0, "error_only").otherwise("purchase_only"))
-      .orderBy("user_id", "day")
   }
 
   /** Gap-fill with forward interpolation — the time-series
@@ -127,7 +123,6 @@ object TemporalJoins {
   private def w15GapFill(s: SparkSession, d: String): DataFrame =
     gapFill(Tables.events(s, d)
       .select(col("user_id"), to_date(col("ts")).as("day"), col("value")))
-      .orderBy("user_id", "day")
 
   /** The gap-fill plan over an (user_id, day, value) frame — shared by
     * the query and the 100× scale smoke.

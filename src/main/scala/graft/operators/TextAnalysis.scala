@@ -57,7 +57,6 @@ object TextAnalysis {
     }
     scored.withColumn("pred", pred)
       .withColumn("hit", (col("pred") === col("lang")).cast("int"))
-      .orderBy("doc_id")
   }
 
   private def langidOracle: String = {
@@ -95,7 +94,6 @@ object TextAnalysis {
         size(words)).as("avg_word_len"),
       r6(size(filter(words, w => array_contains(stop, w))).cast("double") /
         size(words)).as("stop_ratio"))
-      .orderBy("doc_id")
   }
 
   /** Token counting: whitespace tokens and a regex token family (a
@@ -108,7 +106,6 @@ object TextAnalysis {
       size(regexp_extract_all(col("text"), lit("[a-z]+|[0-9]+"), lit(0))).as("re_tokens"),
       size(array_distinct(regexp_extract_all(col("text"), lit("[a-z]+|[0-9]+"),
         lit(0)))).as("re_vocab"))
-      .orderBy("doc_id")
 
   /** Document fingerprint: minimum md5 over 5-gram shingles (a
     * deterministic rolling-hash analog — near-identical docs collide
@@ -123,7 +120,6 @@ object TextAnalysis {
     val grp = fp.groupBy("fingerprint").agg(count(lit(1)).as("n_docs"))
     fp.join(grp, Seq("fingerprint"))
       .select("doc_id", "fingerprint", "n_docs")
-      .orderBy("doc_id")
   }
 
   /** Word-distribution Shannon entropy per document — the information-
@@ -143,7 +139,6 @@ object TextAnalysis {
       r6(log2(sum(col("c")).cast("double")) -
         sum(col("c").cast("double") * log2(col("c").cast("double"))) /
           sum(col("c"))).as("entropy"))
-      .orderBy("doc_id")
   }
 
   // Boilerplate detection knobs: bigram shingles whose within-source
@@ -218,7 +213,6 @@ object TextAnalysis {
       .withColumn("boiler_frac",
         r6(col("n_boiler").cast("double") / col("n_shingles")))
       .withColumn("keep", (col("boiler_frac") <= 0.1).cast("int"))
-      .orderBy("doc_id")
   }
 
   /** The round-7 window-form boilerplate screen, kept ONLY as the
@@ -247,7 +241,6 @@ object TextAnalysis {
       .withColumn("boiler_frac",
         r6(col("n_boiler").cast("double") / col("n_shingles")))
       .withColumn("keep", (col("boiler_frac") <= 0.1).cast("int"))
-      .orderBy("doc_id")
   }
 
   /** Corpus vocabulary rollup: top-k tokens by frequency. The shuffle
@@ -365,7 +358,6 @@ object TextAnalysis {
       .pinned()
     q.join(dupTails, Seq("doc_id"), "left_anti")
       .select("doc_id", "lang", "n_chars")
-      .orderBy("doc_id")
   }
 
   /** Unigram log-probability scoring: corpus token frequencies (one
@@ -385,7 +377,6 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_tokens"),
         r6(sum(log10(col("cnt").cast("double") / col("total"))))
           .as("logprob"))
-      .orderBy("doc_id")
   }
 
   // Interpolation weight of the bigram-LM scorer: λ·P(w2|w1) +
@@ -433,7 +424,6 @@ object TextAnalysis {
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_bigrams"),
         r6(sum(log10(p))).as("logprob"))
-      .orderBy("doc_id")
   }
 
   /** Gopher-style repetition ratios (Rae et al. 2021 §A1.1, the
@@ -470,7 +460,6 @@ object TextAnalysis {
       .withColumn("keep",
         (col("top_uni_frac") <= 0.2 &&
           coalesce(col("top_bi_frac") <= 0.2, lit(true))).cast("int"))
-      .orderBy("doc_id")
   }
 
   /** URL parsing for web-corpus normalization: host / path / query-param
@@ -488,7 +477,6 @@ object TextAnalysis {
       parse_url(url, lit("HOST")).as("host"),
       parse_url(url, lit("PATH")).as("path"),
       parse_url(url, lit("QUERY"), lit("lang")).as("q_lang"))
-      .orderBy("doc_id")
   }
 
   /** Per-document top-3 TF-IDF terms: tf = in-doc frequency ratio,
@@ -530,7 +518,6 @@ object TextAnalysis {
           .orderBy(col("tfidf").desc, col("t"))))
       .filter(col("rnk") <= 3)
       .select(col("doc_id"), col("rnk"), col("t").as("term"), col("tfidf"))
-      .orderBy("doc_id", "rnk")
   }
 
   // ------------------------------------------------------------- BM25
@@ -623,7 +610,6 @@ object TextAnalysis {
       .join(broadcast(q), "query_id")
       .select(col("query_id"), col("query_text"), col("rnk"),
         col("doc_id"), col("score"))
-      .orderBy("query_id", "rnk")
   }
 
   // -------------------------------------------------- PMI collocations
@@ -700,7 +686,6 @@ object TextAnalysis {
         least(lit(ChunkLen), size(col("w")) - col("start")).as("n_tokens"),
         array_join(slice(col("w"), col("start") + 1, lit(ChunkLen)), " ")
           .as("chunk_text"))
-      .orderBy("doc_id", "chunk_idx")
   }
 
   /** PII redaction: emails and phone-shaped tokens are scrubbed with
@@ -730,7 +715,6 @@ object TextAnalysis {
       size(regexp_extract_all(withPii, lit(PhoneRe), lit(0))).as("n_phones"),
       (length(withPii) - length(redacted)).as("removed_chars"),
       md5(redacted).as("redacted_hash"))
-      .orderBy("doc_id")
   }
 
   // Heavy-hitter sketch width for the corpus query. The pinned corpus
@@ -789,7 +773,6 @@ object TextAnalysis {
       val out = t.filter(col("token").isin(cands: _*))
         .groupBy("token").agg(count(lit(1)).as("n"))
         .filter(col("n") * k > lit(total))
-        .orderBy(col("n").desc, col("token"))
       val rows = out.collect() // < k rows, bounded model-size state
       tok.sparkSession.createDataFrame(
         java.util.Arrays.asList(rows: _*), out.schema)

@@ -58,7 +58,6 @@ object TpchQueries {
         col("sum_qty"), col("sum_base_price"), col("sum_disc_price"),
         col("sum_charge"), col("avg_qty"), col("avg_price"),
         col("avg_disc"), col("count_order"))
-      .orderBy("l_returnflag", "l_linestatus")
   }
 
   /** TPC-H Q3 (shipping priority): selective dimension filter → joined
@@ -126,7 +125,6 @@ object TpchQueries {
       .groupBy("n_name")
       .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
         .as("revenue"))
-      .orderBy(col("revenue").desc, col("n_name"))
   }
 
   /** TPC-H Q10 (returned-item revenue): customers who returned items in
@@ -207,7 +205,6 @@ object TpchQueries {
         year(col("l_shipdate")).as("l_year"))
       .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
         .as("revenue"))
-      .orderBy("supp_nation", "cust_nation", "l_year")
   }
 
   /** TPC-H Q8 (national market share): the widest feasible join tree on
@@ -247,7 +244,6 @@ object TpchQueries {
         sum(when(col("supp_nation") === "NATION_3", vol).otherwise(lit(0.0))
           .cast("decimal(38,6)")).cast("double") /
         sum(vol.cast("decimal(38,6)")).cast("double")).as("mkt_share"))
-      .orderBy("o_year")
   }
 
   /** TPC-H Q15 (top supplier): revenue per supplier over a quarter, then
@@ -268,7 +264,6 @@ object TpchQueries {
         col("supplier_no") === col("s_suppkey"))
       .select(col("s_suppkey"), col("s_name"),
         r6(col("total_revenue")).as("total_revenue"))
-      .orderBy("s_suppkey")
   }
 
   /** TPC-H Q22 (global sales opportunity), adapted: country code comes
@@ -293,7 +288,6 @@ object TpchQueries {
       .groupBy("cntrycode")
       .agg(count(lit(1)).as("numcust"),
         dsum(col("c_acctbal")).as("totacctbal"))
-      .orderBy("cntrycode")
   }
 
   /** TPC-H Q18 (large-volume customers): a grouped HAVING filter feeding
@@ -339,7 +333,6 @@ object TpchQueries {
       .agg(count(col("o_orderkey")).as("c_count"))
     perCust.groupBy(col("c_count"))
       .agg(count(lit(1)).as("custdist"))
-      .orderBy(col("custdist").desc, col("c_count").desc)
   }
 
   /** TPC-H Q17 (small-quantity-order revenue), adapted: `p_container`
@@ -437,7 +430,6 @@ object TpchQueries {
         col("o_orderkey") === col("l_orderkey"), "left_semi")
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("order_count"))
-      .orderBy("o_orderpriority")
 
   /** TPC-H Q9 (product-type profit), adapted: with no partsupp,
     * supply cost is proxied as 60% of the part's retail price (a
@@ -466,7 +458,6 @@ object TpchQueries {
       .join(o, col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("n_name").as("nation"), col("o_year"))
       .agg(dsum(amount).as("sum_profit"))
-      .orderBy(col("nation"), col("o_year").desc)
   }
 
   /** TPC-H Q11 (important stock), adapted: part "value" held by one
@@ -499,7 +490,6 @@ object TpchQueries {
         2.0).as("threshold"))
     perPart.join(broadcast(total), col("part_value") > col("threshold"))
       .select(col("l_partkey").as("p_partkey"), col("part_value"))
-      .orderBy(col("part_value").desc, col("p_partkey"))
   }
 
   /** TPC-H Q12 (shipping-mode priority split), adapted: the schema has
@@ -523,7 +513,6 @@ object TpchQueries {
       .groupBy("l_linestatus")
       .agg(sum(when(urgent, 1L).otherwise(0L)).as("high_line_count"),
         sum(when(urgent, 0L).otherwise(1L)).as("low_line_count"))
-      .orderBy("l_linestatus")
   }
 
   /** TPC-H Q16 (parts/supplier relationship), adapted: the
@@ -560,8 +549,6 @@ object TpchQueries {
     pairs.join(pf, col("l_partkey") === col("p_partkey"))
       .groupBy("p_brand", "p_type", "p_size")
       .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
-      .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_type"),
-        col("p_size"))
   }
 
   /** TPC-H Q19 (discounted revenue): the disjunctive-predicate
@@ -623,7 +610,6 @@ object TpchQueries {
           .filter(col("n_name") === "NATION_3")),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("s_name"), r6(col("s_acctbal")).as("s_acctbal"))
-      .orderBy("s_name")
   }
 
   /** TPC-H Q21 (suppliers who kept orders waiting), adapted: the

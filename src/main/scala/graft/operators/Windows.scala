@@ -28,9 +28,8 @@ object Windows {
     * here does nontrivial per-row work (frame aggregates, rank
     * bookkeeping), so AQE's byte-based coalescing collapsed the
     * ENSURE_REQUIREMENTS exchange to ONE partition and the whole
-    * WindowExec ran serially — and the output-contract sort's range
-    * sampling re-ran that serial stage a second time (every executed
-    * plan showed `AQEShuffleRead coalesced` under the window). The
+    * WindowExec ran serially (every executed plan showed
+    * `AQEShuffleRead coalesced` under the window). The
     * spread IS the window's own exchange (same key, so EnsureRequirements
     * adds nothing on top — exchange count unchanged), just pinned past
     * the byte-stats coalesce; [[graft.spreadScan]]'s guard declines on a
@@ -51,14 +50,12 @@ object Windows {
     eventsSpread(s, d)
       .select(col("event_id"),
         r6(avg(col("value")).over(ordered.rowsBetween(-4, 0))).as("mean5"))
-      .orderBy("event_id")
 
   /** W2 (fct_cycles_features.sql:37-43): trailing 20-row mean. */
   private def w2Rolling20(s: SparkSession, d: String): DataFrame =
     eventsSpread(s, d)
       .select(col("event_id"),
         r6(avg(col("value")).over(ordered.rowsBetween(-19, 0))).as("mean20"))
-      .orderBy("event_id")
 
   /** W3 (fct_cycles_features.sql:45-47): first difference via lag; first
     * row per partition → null.
@@ -67,7 +64,6 @@ object Windows {
     eventsSpread(s, d)
       .select(col("event_id"),
         r6(col("value") - lag(col("value"), 1).over(ordered)).as("d_value"))
-      .orderBy("event_id")
 
   /** W4/A2 (fct_cycles_features.sql:23-26): unbounded partition max minus
     * current (the RUL shape: distance to the partition's peak).
@@ -79,7 +75,6 @@ object Windows {
     Tables.events(s, d)
       .select(col("event_id"),
         r6(max(col("value")).over(unordered) - col("value")).as("headroom"))
-      .orderBy("event_id")
 
   /** W5 (scripts/etl_turbofan.py:27-31): per-partition z-score with
     * population stddev (pandas ddof=0) and a 0/0→null guard for constant
@@ -91,7 +86,6 @@ object Windows {
     eventsSpread(s, d)
       .select(col("event_id"),
         r6(when(sd =!= 0, (col("value") - mu) / sd)).as("z_value"))
-      .orderBy("event_id")
   }
 
   /** W6 (scripts/ml_pipeline.py:191): ranking family. */
@@ -101,7 +95,6 @@ object Windows {
         row_number().over(ordered).as("rn"),
         rank().over(Window.partitionBy("user_id").orderBy("event_type")).as("rk"),
         dense_rank().over(Window.partitionBy("user_id").orderBy("event_type")).as("drk"))
-      .orderBy("event_id")
 
   /** Flagship: the whole CMAPSS feature table in ONE plan — rul (W4),
     * mean5/mean20 (W1/W2), diff (W3), z-score (W5) as a single select over
@@ -119,7 +112,6 @@ object Windows {
       r6(avg(col("value")).over(ordered.rowsBetween(-19, 0))).as("mean20_value"),
       r6(col("value") - lag(col("value"), 1).over(ordered)).as("d_value"),
       r6(when(sd =!= 0, (col("value") - mu) / sd)).as("z_value"))
-      .orderBy("event_id")
   }
 
   /** W7 (extension): gap-based sessionization — the standard log-pipeline
@@ -143,7 +135,6 @@ object Windows {
         min(tsUs(col("ts"))).as("start_us"),
         max(tsUs(col("ts"))).as("end_us"),
         dsum(col("value")).as("sum_value"))
-      .orderBy("user_id", "session_id")
   }
 
   /** W12: the same gap-sessionization as [[w7Sessionize]] but through
@@ -161,7 +152,6 @@ object Windows {
       .select(col("user_id"),
         tsUs(col("session_window.start")).as("start_us"),
         col("n_events"), col("sum_value"))
-      .orderBy("user_id", "start_us")
 
   /** Grouped exact percentiles (interpolated, matching quantile_cont) —
     * on [[Relational.gridQuantiles]]' distributed value grid: Spark's
@@ -173,7 +163,6 @@ object Windows {
   private def w8Percentiles(s: SparkSession, d: String): DataFrame =
     Relational.gridQuantiles(eventsSpread(s, d), Seq("event_type"),
       "value", Seq(0.5 -> "p50", 0.9 -> "p90", 0.99 -> "p99"))
-      .orderBy("event_type")
 
   /** W18: longest consecutive-day activity streak per user — the
     * gaps-and-islands idiom. Distinct (user, epoch-day) pairs fall out
@@ -198,7 +187,6 @@ object Windows {
       .withColumn("grp", col("day") - row_number().over(w))
       .groupBy("user_id", "grp").agg(count(lit(1)).as("len"))
       .groupBy("user_id").agg(max(col("len")).as("streak"))
-      .orderBy("user_id")
   }
 
   /** W20: SCD-2 status history — collapse each user's event stream into
@@ -225,7 +213,6 @@ object Windows {
         min(col("tus")).as("valid_from"))
       .withColumn("valid_to", lead(col("valid_from"), 1).over(
         Window.partitionBy("user_id").orderBy("run_id")))
-      .orderBy("user_id", "run_id")
   }
 
   /** W21 — forward fill (last observation carried forward): each
@@ -249,7 +236,6 @@ object Windows {
       .withColumn("props_ffill",
         last(col("props"), ignoreNulls = true).over(w))
       .select("event_id", "user_id", "props_ffill")
-      .orderBy("event_id")
   }
 
   private val over = "PARTITION BY user_id ORDER BY epoch_us(ts), event_id"

@@ -243,10 +243,7 @@ class ExtendedOpsSpec extends GraftSuite {
     // total) must read the one materialized grid — the plan string
     // reprints the cached build plan under each reference, so the
     // meaningful count is cache REFERENCES, not FileScan lines.
-    // Asserted on the pre-checkpoint body (the registry query's
-    // checkpoint-before-contract-sort truncates its visible plan to a
-    // LogicalRDD leaf — the w22 pattern).
-    val plan = operators.Relational.p15Body(spark, sf)
+    val plan = SparkEntry.queries("p15_winsorize")(spark, sf)
       .queryExecution.executedPlan.toString
     val cacheReads = "InMemoryTableScan".r.findAllIn(plan).length
     assert(cacheReads >= 3,
@@ -318,8 +315,10 @@ class ExtendedOpsSpec extends GraftSuite {
   test("blocked cosine kernel is bit-identical to the composed plan") {
     // Lower tau than the query's 0.45 so the comparison covers real pairs.
     val kernel = operators.Dedup.blockedCosinePairs(spark, sf, 0.3)
+      .orderBy("id_a", "id_b")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     val composed = operators.Dedup.cosineNearDupComposed(spark, sf, 0.3)
+      .orderBy("id_a", "id_b")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(kernel.nonEmpty, "tau 0.3 should yield pairs at sf0.001")
     assert(kernel == composed)
@@ -339,8 +338,10 @@ class ExtendedOpsSpec extends GraftSuite {
 
   test("tiled cosine kernel equals the single-tile kernel exactly") {
     val one = operators.Dedup.blockedCosinePairs(spark, sf, 0.3)
+      .orderBy("id_a", "id_b")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     val tiled = operators.Dedup.blockedCosinePairsTiled(spark, sf, 0.3, 4)
+      .orderBy("id_a", "id_b")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(one.nonEmpty && tiled == one)
   }
@@ -531,7 +532,7 @@ class ExtendedOpsSpec extends GraftSuite {
         "io_orc_roundtrip" -> data(""))) {
       val dir = java.nio.file.Files.createTempDirectory("graft_gnarly").toString
       gnarly.write.parquet(s"$dir/documents.parquet")
-      val back = SparkEntry.queries(q)(spark, dir).collect()
+      val back = SparkEntry.queries(q)(spark, dir).orderBy("doc_id").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2),
           r.getString(3), r.getLong(4))).toSeq
       val src = gnarly.orderBy("doc_id").collect()
@@ -543,6 +544,7 @@ class ExtendedOpsSpec extends GraftSuite {
 
   test("jsonl round-trip writes distributed gzip parts and loses nothing") {
     val out = SparkEntry.queries("io_jsonl_roundtrip")(spark, sf)
+      .orderBy("doc_id")
     val src = Tables.documents(spark, sf).orderBy("doc_id")
     assert(out.collect().toSeq == src.collect().toSeq)
     // the scratch dir holds gzipped JSONL part files (not a single blob)
@@ -568,7 +570,8 @@ class ExtendedOpsSpec extends GraftSuite {
       .map { case (id, t) => (id, t, "en", "planted", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
-    val out = SparkEntry.queries("pp_line_dedup")(spark, dir).collect()
+    val out = SparkEntry.queries("pp_line_dedup")(spark, dir)
+      .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
     assert(out.toSeq == Seq(
       (0L, 2L, s"$a $b"),   // hosts both first occurrences
@@ -622,7 +625,8 @@ class ExtendedOpsSpec extends GraftSuite {
   test("stratified sample keeps per-lang fractions near the configured rates") {
     val docs = Tables.documents(spark, sf).groupBy("lang").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val kept = SparkEntry.queries("pp_stratified")(spark, sf).collect()
+    val kept = SparkEntry.queries("pp_stratified")(spark, sf)
+      .orderBy("doc_id").collect()
     val keptBy = kept.groupBy(_.getString(1)).view.mapValues(_.length.toLong)
     val rates = Map("en" -> 0.9, "es" -> 0.7, "de" -> 0.5,
       "fr" -> 0.3, "zh" -> 0.1)
@@ -632,7 +636,8 @@ class ExtendedOpsSpec extends GraftSuite {
       assert(math.abs(frac - r) <= 0.15, s"$l kept $frac vs rate $r")
     }
     // deterministic: the kept id set is identical across invocations
-    val again = SparkEntry.queries("pp_stratified")(spark, sf).collect()
+    val again = SparkEntry.queries("pp_stratified")(spark, sf)
+      .orderBy("doc_id").collect()
     assert(kept.map(_.getLong(0)).toSeq == again.map(_.getLong(0)).toSeq)
   }
 
@@ -660,7 +665,8 @@ class ExtendedOpsSpec extends GraftSuite {
     val expected = docs.filter(d => bucket(d._1) < 80)
       .map { case (id, t) => id -> grams(t).count(bench).toLong }
       .filter(_._2 > 0).sortBy(_._1).toSeq
-    val got = SparkEntry.queries("pp_decontaminate")(spark, sf).collect()
+    val got = SparkEntry.queries("pp_decontaminate")(spark, sf)
+      .orderBy("doc_id").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toSeq
     assert(got == expected, s"got ${got.size} contaminated, expected ${expected.size}")
     assert(expected.nonEmpty, "corpus should contain cross-split leakage")
@@ -677,7 +683,8 @@ class ExtendedOpsSpec extends GraftSuite {
       b * bySrc(src) < permille * n
     }.sortBy(_._1).toSeq
     val df = SparkEntry.queries("pp_domain_mix")(spark, sf)
-    val got = df.collect().map(r => r.getLong(0) -> r.getString(1)).toSeq
+    val got = df.orderBy("doc_id").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toSeq
     assert(got == expected)
     // the aggregates join back as broadcasts; the corpus never shuffles
     val plan = df.queryExecution.executedPlan.toString
@@ -704,7 +711,8 @@ class ExtendedOpsSpec extends GraftSuite {
     val docs = Tables.documents(spark, sf).groupBy("lang").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val nMin = docs.values.min
-    val kept = SparkEntry.queries("pp_temperature_mix")(spark, sf).collect()
+    val kept = SparkEntry.queries("pp_temperature_mix")(spark, sf)
+      .orderBy("doc_id").collect()
     val keptBy = kept.groupBy(_.getString(1)).view.mapValues(_.length.toLong)
     docs.foreach { case (l, nL) =>
       // expected kept count at alpha=0.5 is sqrt(n_min * n_l); md5
@@ -729,7 +737,8 @@ class ExtendedOpsSpec extends GraftSuite {
   }
 
   test("ppl buckets: per-lang tertile cut is ordered, total, and sample-derived") {
-    val rows = SparkEntry.queries("pp_ppl_buckets")(spark, sf).collect()
+    val rows = SparkEntry.queries("pp_ppl_buckets")(spark, sf)
+      .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getString(3)))
     // total: every document is bucketed exactly once
     val nDocs = Tables.documents(spark, sf).count()
@@ -756,7 +765,8 @@ class ExtendedOpsSpec extends GraftSuite {
     }
     // deterministic across invocations (hash sample, order-statistic
     // thresholds — nothing seeded or partition-ordered)
-    val again = SparkEntry.queries("pp_ppl_buckets")(spark, sf).collect()
+    val again = SparkEntry.queries("pp_ppl_buckets")(spark, sf)
+      .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getString(3)))
     assert(rows.toSeq == again.toSeq)
   }

@@ -155,10 +155,12 @@ class ExtensionsAndScaleSpec extends GraftSuite {
   }
 
   test("custom as-of operator agrees bit-for-bit with the composed plan") {
-    val composed = SparkEntry.queries("j5_asof_join")(spark, sf).collect()
+    val composed = SparkEntry.queries("j5_asof_join")(spark, sf)
+      .orderBy("event_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         Option(r.get(3)).map(_.asInstanceOf[Long])))
-    val custom = SparkEntry.queries("j7_asof_custom")(spark, sf).collect()
+    val custom = SparkEntry.queries("j7_asof_custom")(spark, sf)
+      .orderBy("event_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         Option(r.get(3)).map(_.asInstanceOf[Long])))
     assert(composed.nonEmpty && custom.toSeq == composed.toSeq)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Extended, Graph, TextAnalysis}
+import graft.operators.{Graph, TextAnalysis}
 import org.apache.spark.sql.functions._
 
 /** Brute-force driver-side twins for the round-10 statistics/retrieval
@@ -126,7 +126,8 @@ class GraphAndStatsSpec extends GraftSuite {
   // ------------------------------------------------------ rolling corr
 
   test("rolling correlation: in [-1,1] or null; frame matches brute force") {
-    val got = SparkEntry.queries("w22_rolling_corr")(spark, sf).collect()
+    val got = SparkEntry.queries("w22_rolling_corr")(spark, sf)
+      .orderBy("l_suppkey", "l_orderkey", "l_linenumber").collect()
     assert(got.length == 6000)
     got.foreach { r =>
       if (!r.isNullAt(3))
@@ -182,7 +183,8 @@ class GraphAndStatsSpec extends GraftSuite {
   // -------------------------------------------------------------- PSI
 
   test("psi matches an exact driver-side recomputation") {
-    val got = SparkEntry.queries("dq_psi")(spark, sf).collect()
+    val got = SparkEntry.queries("dq_psi")(spark, sf).orderBy("event_type")
+      .collect()
     val ev = Tables.events(spark, sf)
       .filter(col("value").isNotNull)
       .select(col("event_type"), col("value"), tsUs(col("ts")).as("us"))
@@ -272,19 +274,13 @@ class GraphAndStatsSpec extends GraftSuite {
     assert(bm25.contains("ObjectHashAggregate"), bm25.take(1200))
     assert(!bm25.contains("Window"), "top-k must not be a window")
     // Rolling corr: prefix sums + lag differences stack on ONE window
-    // shuffle (same partitioning/ordering) — asserted on the
-    // pre-checkpoint body, since the r15 checkpoint-before-sort
-    // truncates the registry query's visible plan to a LogicalRDD.
-    val corrBody = Extended.w22Body(spark, sf)
-      .queryExecution.executedPlan.toString
-    assert("Exchange hashpartitioning".r.findAllIn(corrBody).length == 1,
-      corrBody.take(1200))
-    // The registry query itself: the checkpointed rows feed the output
-    // sort directly (no window recompute in the sampling pass).
+    // shuffle (same partitioning/ordering), and nothing sorts the
+    // output globally.
     val corr = SparkEntry.queries("w22_rolling_corr")(spark, sf)
       .queryExecution.executedPlan.toString
-    assert(corr.contains("ExistingRDD") &&
-      corr.contains("Exchange rangepartitioning"), corr.take(1200))
+    assert("Exchange hashpartitioning".r.findAllIn(corr).length == 1,
+      corr.take(1200))
+    assert(!corr.contains("Exchange rangepartitioning"), corr.take(1200))
     // PSI: the filtered events projection is pinned; both halves, the
     // type skeleton and the split bound must read it from cache instead
     // of re-scanning events per consumer.
@@ -511,7 +507,8 @@ class GraphAndStatsSpec extends GraftSuite {
   }
 
   test("benford: dense 9 digits, shares sum to 1, audit math checks out") {
-    val got = SparkEntry.queries("dq_benford")(spark, sf).collect()
+    val got = SparkEntry.queries("dq_benford")(spark, sf).orderBy("digit")
+      .collect()
     assert(got.map(_.getInt(0)).toSeq == (1 to 9))
     val n = got.map(_.getLong(1)).sum
     val cents = Tables.events(spark, sf).select(col("value")).collect()
@@ -529,7 +526,8 @@ class GraphAndStatsSpec extends GraftSuite {
   }
 
   test("hhi: per-nation concentration matches brute force; bounds hold") {
-    val got = SparkEntry.queries("a30_hhi")(spark, sf).collect()
+    val got = SparkEntry.queries("a30_hhi")(spark, sf).orderBy("n_name")
+      .collect()
     val rev = Tables.lineitem(spark, sf)
       .join(Tables.supplier(spark, sf), col("l_suppkey") === col("s_suppkey"))
       .join(Tables.nation(spark, sf), col("s_nationkey") === col("n_nationkey"))
@@ -557,7 +555,8 @@ class GraphAndStatsSpec extends GraftSuite {
   }
 
   test("seasonal: residual means per dow match brute force; 7 dense rows") {
-    val got = SparkEntry.queries("w23_seasonal")(spark, sf).collect()
+    val got = SparkEntry.queries("w23_seasonal")(spark, sf).orderBy("dow")
+      .collect()
     assert(got.map(_.getInt(0)).toSeq == (0 to 6))
     val daily = Tables.orders(spark, sf)
       .select(to_date(col("o_orderdate")), col("o_totalprice")).collect()
@@ -593,7 +592,7 @@ class GraphAndStatsSpec extends GraftSuite {
 
   test("pps sample: exact systematic draw matches driver-side replay") {
     val got = SparkEntry.queries("pp_weighted_sample")(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+      .orderBy("cw").collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3)))
     val md = java.security.MessageDigest.getInstance("MD5")
     def md5hex(v: String): String =

@@ -114,7 +114,7 @@ class RelationalSpec extends GraftSuite {
   test("u1 union equals direct aggregation (append protocol)") {
     val direct = Tables.events(spark, sf).groupBy("event_type")
       .agg(count(lit(1)).as("n")).orderBy("event_type").collect()
-    val unioned = run("u1_union").collect()
+    val unioned = run("u1_union").orderBy("event_type").collect()
     assert(direct.map(r => (r.getString(0), r.getLong(1))).toSeq ==
       unioned.map(r => (r.getString(0), r.getLong(1))).toSeq)
   }

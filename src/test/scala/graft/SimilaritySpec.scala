@@ -155,8 +155,9 @@ class SimilaritySpec extends GraftSuite {
   }
 
   test("SemDeDup blocked pair join is bit-equal to the unblocked cell join") {
-    def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("id_a", "id_b").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     val shipped = pairs(SparkEntry.queries("dd_semantic")(spark, sf))
     // block=16 forces every cell at this corpus size into multiple
     // sub-blocks; Int.MaxValue is the unblocked single-key plan. All
@@ -239,8 +240,9 @@ class SimilaritySpec extends GraftSuite {
   }
 
   test("1-NN tiled kernel is bit-equal to the broadcast plan") {
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("vec_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     val broadcastPlan = rows(operators.Similarity.knnSelfBroadcast(spark, sf))
     // 4 tiles: several genuine block boundaries at this corpus size
     val tiled = rows(operators.Similarity.knnSelfTiled(spark, sf, 4))
@@ -296,8 +298,10 @@ class SimilaritySpec extends GraftSuite {
   }
 
   test("LSH index save/load: a fresh session answers identically from disk") {
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("query_id", "rnk").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+        .toSeq
     val inSession = rows(SparkEntry.queries("ann_topk_lsh")(spark, sf))
     val dir = java.nio.file.Files
       .createTempDirectory("graft_lsh").toString + "/index"
@@ -308,8 +312,10 @@ class SimilaritySpec extends GraftSuite {
   }
 
   test("IVF index save/load: a fresh session answers identically from disk") {
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("query_id", "rnk").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+        .toSeq
     val trained = rows(SparkEntry.queries("ann_topk_ivf")(spark, sf))
     val dir = java.nio.file.Files
       .createTempDirectory("graft_ivf").toString + "/index"
@@ -347,8 +353,9 @@ class SimilaritySpec extends GraftSuite {
 
   test("IVFPQ index round-trip: serves identically from disk; probe scan is partition-pruned") {
     def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-        r.getDouble(3))).toSeq
+      df.orderBy("query_id", "rnk").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+        .toSeq
     val trained = rows(SparkEntry.queries("ann_topk_ivfpq")(spark, sf))
     val dir = java.nio.file.Files
       .createTempDirectory("graft_ivfpq").toString + "/index"
@@ -400,19 +407,22 @@ class SimilaritySpec extends GraftSuite {
     val viaIndex = operators.Similarity.topkAgainstIvfPqIndex(
       Tables.embeddings(spark, sf).select("vec_id", "embedding")
         .filter(col("vec_id") < 10), s"$base/index")
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-        r.getDouble(3))).toSeq
+      .orderBy("query_id", "rnk").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+      .toSeq
     val registered = SparkEntry.queries("ann_topk_ivfpq")(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-        r.getDouble(3))).toSeq
+      .orderBy("query_id", "rnk").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+      .toSeq
     assert(viaIndex == registered)
   }
 
   test("IVF-Flat index: external serving equals the in-session IVF answer; probes are partition-pruned") {
     import org.apache.spark.sql.functions._
     def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-        r.getDouble(3))).toSeq
+      df.orderBy("query_id", "rnk").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+        .toSeq
     val dir = java.nio.file.Files
       .createTempDirectory("graft_ivfflat").toString + "/index"
     operators.Similarity.saveIvfFlatIndex(spark, sf, dir)
@@ -626,10 +636,12 @@ class SimilaritySpec extends GraftSuite {
     // same blocked pair join → the index serve answers bit-identically
     // to the in-session dd_semantic (doubles round-trip parquet exactly).
     operators.Similarity.saveSemDedupIndex(spark, sf, s"$base/index")
-    val inSession = SparkEntry.queries("dd_semantic")(spark, sf).collect()
+    val inSession = SparkEntry.queries("dd_semantic")(spark, sf)
+      .orderBy("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     val served = operators.Similarity
-      .semanticPairsAgainstIndex(spark, s"$base/index").collect()
+      .semanticPairsAgainstIndex(spark, s"$base/index")
+      .orderBy("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(inSession.nonEmpty && served == inSession)
     // Incremental lifecycle: build on the even half, append the odd
@@ -737,8 +749,9 @@ class SimilaritySpec extends GraftSuite {
       .filter(col("vec_id") >= 10 && col("vec_id") % 2 === 1)
     operators.Similarity.appendToLshIndex(appendBatch, s"$base/index")
     def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-        r.getDouble(3))).toSeq
+      df.orderBy("query_id", "rnk").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+        .toSeq
     // no trained state → appended serving equals the full-corpus build
     val appended = rows(
       operators.Similarity.annTopkLshFrom(spark, s"$base/index"))
@@ -765,8 +778,9 @@ class SimilaritySpec extends GraftSuite {
     streaming.StreamingSimilarity.appendStreamToLshIndex(spark,
       s"$base/src", s"$base/index", maxFilesPerTrigger = 1)
     def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-        r.getDouble(3))).toSeq
+      df.orderBy("query_id", "rnk").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+        .toSeq
     val maintained = rows(
       operators.Similarity.annTopkLshFrom(spark, s"$base/index"))
     val rebuilt = rows(SparkEntry.queries("ann_topk_lsh")(spark, sf))
@@ -792,8 +806,9 @@ class SimilaritySpec extends GraftSuite {
     def rows(idx: String) = operators.Similarity.topkAgainstIvfFlatIndex(
       Tables.embeddings(spark, sf).select("vec_id", "embedding")
         .filter(col("vec_id") < 10), idx)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-        r.getDouble(3))).toSeq
+      .orderBy("query_id", "rnk").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+      .toSeq
     val streamed = rows(s"$base/s_idx")
     // assignment to immutable centroids is per-row, so micro-batch
     // partitioning cannot change the maintained index's answers
@@ -817,8 +832,9 @@ class SimilaritySpec extends GraftSuite {
 
   test("PQ index round-trip: a fresh session serves bit-identically from disk") {
     def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-        r.getDouble(3))).toSeq
+      df.orderBy("query_id", "rnk").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+        .toSeq
     val trained = rows(SparkEntry.queries("ann_topk_pq")(spark, sf))
     val dir = java.nio.file.Files
       .createTempDirectory("graft_pq").toString + "/index"

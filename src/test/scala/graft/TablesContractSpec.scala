@@ -127,7 +127,8 @@ class TablesContractSpec extends GraftSuite {
     val nanosDir = tableDir(writeNanosFixture(_))
     val microsDir = tableDir(writeMicrosFixture)
     def run(d: String) =
-      SparkEntry.queries("sql_dbt_features")(spark, d).collect()
+      SparkEntry.queries("sql_dbt_features")(spark, d).orderBy("event_id")
+        .collect()
         .map(_.toSeq).toSeq
     val fromNanos = run(nanosDir)
     assert(fromNanos.nonEmpty)

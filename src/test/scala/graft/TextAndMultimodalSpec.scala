@@ -113,13 +113,15 @@ class TextAndMultimodalSpec extends GraftSuite {
   }
 
   test("pii redaction leaves no email or phone pattern behind") {
-    val rows = SparkEntry.queries("ta_pii")(spark, sf).collect()
+    val rows = SparkEntry.queries("ta_pii")(spark, sf).orderBy("doc_id")
+      .collect()
     // injected contact line guarantees at least one of each per doc
     assert(rows.forall(_.getInt(1) >= 1))
     assert(rows.forall(_.getInt(2) >= 1))
     // redaction strictly shrinks the injected text and is deterministic
     assert(rows.forall(_.getInt(3) > 0))
-    val again = SparkEntry.queries("ta_pii")(spark, sf).collect()
+    val again = SparkEntry.queries("ta_pii")(spark, sf).orderBy("doc_id")
+      .collect()
     assert(rows.map(_.getString(4)).toSeq == again.map(_.getString(4)).toSeq)
   }
 
