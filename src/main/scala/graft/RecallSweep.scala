@@ -64,7 +64,7 @@ object RecallSweep {
       // append:<ivfflat|ivfpq>:<pct> — add-without-retrain drift curve:
       // build the index on (100-pct)% of the corpus, append the rest,
       // measure serving recall over the FULL corpus vs exact. The curve
-      // is the rebuild-scheduling signal the append docstrings cite.
+      // is the rebuild-scheduling signal the append docstring cites.
       case cfg if cfg.startsWith("append:") =>
         val Array(_, fam, pctS) = cfg.split(":")
         driftPoint(spark, sfDir, exact, "append", fam, pctS.toInt,
@@ -150,7 +150,6 @@ object RecallSweep {
       exact: Set[(Long, Long)], label: String, fam: String, pct: Int,
       rebuild: Boolean): Unit = {
     import org.apache.spark.sql.functions.col
-    val Sim = operators.Similarity
     val base = java.nio.file.Files
       .createTempDirectory(s"graft_sweep_$label$fam$pct").toString
     val all = Tables.embeddings(spark, sfDir)
@@ -161,28 +160,16 @@ object RecallSweep {
       .filter(col("vec_id") >= 10 && col("vec_id") % 100 < pct)
     val queries10 = all.select("vec_id", "embedding")
       .filter(col("vec_id") < 10)
-    val (save, append, rebuildIdx, serve): (
-        (SparkSession, String, String) => Unit,
-        (org.apache.spark.sql.DataFrame, String) => Unit,
-        (SparkSession, String, String) => Unit,
-        (org.apache.spark.sql.DataFrame, String) =>
-          org.apache.spark.sql.DataFrame) = fam match {
-      case "ivfflat" => (
-        (s, d, p) => Sim.saveIvfFlatIndex(s, d, p),
-        Sim.appendToIvfFlatIndex _, Sim.rebuildIvfFlatIndex _,
-        (q, p) => Sim.topkAgainstIvfFlatIndex(q, p))
-      case "ivfpq" => (
-        Sim.saveIvfPqIndex _, Sim.appendToIvfPqIndex _,
-        Sim.rebuildIvfPqIndex _,
-        (q, p) => Sim.topkAgainstIvfPqIndex(q, p))
-    }
+    val kind = Map("ivfflat" -> "ivf_flat", "ivfpq" -> "ivf_pq")(fam)
     val t0 = System.nanoTime()
-    save(spark, s"$base/sub", s"$base/idx")
-    if (pct > 0) append(batch, s"$base/idx")
+    operators.VectorIndex.build(spark, s"$base/sub", s"$base/idx", kind)
+    if (pct > 0) operators.VectorIndex.append(batch, s"$base/idx")
     val serveDir = if (rebuild) {
-      rebuildIdx(spark, s"$base/idx", s"$base/idx2"); s"$base/idx2"
+      operators.VectorIndex.rebuild(spark, s"$base/idx", s"$base/idx2")
+      s"$base/idx2"
     } else s"$base/idx"
-    val served = serve(queries10, serveDir)
+    val served = operators.VectorIndex
+      .topk(queries10, operators.VectorIndex.load(spark, serveDir))
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     val sec = (System.nanoTime() - t0) / 1e9
     val recall = exact.count(served.contains).toDouble / exact.size

@@ -39,18 +39,19 @@ object SemIndexGate {
     val coldNs = consume(SparkEntry.queries("dd_semantic")(spark, scratch))
     val warmNs = consume(SparkEntry.queries("dd_semantic")(spark, scratch))
     // Persisted-index lifecycle: one-time build, then serve-only walls
-    // (every serve re-reads the assignment table — no session state).
+    // (every serve loads the index and reads its assignments — no
+    // session state).
     val tb0 = System.nanoTime()
-    operators.Similarity.saveSemDedupIndex(spark, scratch, indexPath)
+    operators.VectorIndex.build(spark, scratch, indexPath, "sem")
     val buildNs = System.nanoTime() - tb0
     // Two serve passes: first is the JIT/codegen warm, second is the
     // steady-state serve a deployment sees.
-    consume(operators.Similarity.semanticPairsAgainstIndex(spark, indexPath))
-    val serveNs = consume(
-      operators.Similarity.semanticPairsAgainstIndex(spark, indexPath))
-    val pairs = operators.Similarity
-      .semanticPairsAgainstIndex(spark, indexPath).count()
-    val nVec = spark.read.parquet(s"$indexPath/assignments")
+    def serve() = operators.VectorIndex.pairs(
+      operators.VectorIndex.load(spark, indexPath))
+    consume(serve())
+    val serveNs = consume(serve())
+    val pairs = serve().count()
+    val nVec = spark.read.parquet(s"$indexPath/vectors")
       .select("vec_id").distinct().count()
     def s(ns: Long) = Harness.num(ns / 1e9)
     Harness.emit(s"sem_index_gate_${factor}x.json", Harness.obj(Seq(

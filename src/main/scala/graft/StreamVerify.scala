@@ -251,8 +251,7 @@ object StreamVerify {
     //    LSH index (stateless; the union of per-batch answers must
     //    equal one batch call over the same query set).
     twin("similarity_serve") {
-      operators.Similarity.saveLshIndex(spark, sfDir,
-        s"$scratch/lsh_index")
+      operators.VectorIndex.build(spark, sfDir, s"$scratch/lsh_index", "lsh")
       Tables.embeddings(spark, sfDir)
         .select("vec_id", "embedding").filter(col("vec_id") < 40)
         .repartition(4).write.parquet(s"$scratch/sim_src")
@@ -261,10 +260,10 @@ object StreamVerify {
       val streamed = spark.read.parquet(s"$scratch/sim_out")
         .select("query_id", "rnk", "neighbor_id").collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-      val batch = operators.Similarity.topkAgainstLshIndex(
+      val batch = operators.VectorIndex.topk(
         Tables.embeddings(spark, sfDir)
           .select("vec_id", "embedding").filter(col("vec_id") < 40),
-        s"$scratch/lsh_index")
+        operators.VectorIndex.load(spark, s"$scratch/lsh_index"))
         .select("query_id", "rnk", "neighbor_id").collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
       (streamed.nonEmpty && streamed == batch,

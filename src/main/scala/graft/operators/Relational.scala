@@ -362,12 +362,14 @@ object Relational {
   // -------------------------------------------------------- sort / top-k
 
   /** O1 (scripts/etl_turbofan.py:36): composite sort (with limit so the
-    * result is a deterministic prefix).
+    * result is a deterministic prefix). `(l_orderkey, l_linenumber)` is
+    * not a key of the testdata's lineitem, so `l_quantity` breaks its
+    * ties; rows that tie on all three are identical.
     */
   private def o1Sort(s: SparkSession, d: String): DataFrame =
     Tables.lineitem(s, d)
       .select("l_orderkey", "l_linenumber", "l_quantity")
-      .orderBy("l_orderkey", "l_linenumber").limit(50)
+      .orderBy("l_orderkey", "l_linenumber", "l_quantity").limit(50)
 
   /** O2 (scripts/streamlit_dashboard.py:43-49): top-k by recency →
     * TakeOrderedAndProject, no full sort at scale.
@@ -792,7 +794,7 @@ object Relational {
         |ORDER BY event_type ASC NULLS FIRST, vb ASC NULLS FIRST""".stripMargin)),
     QuerySpec("o1_sort", o1Sort _, Oracle(
       """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
-        |ORDER BY l_orderkey, l_linenumber LIMIT 50""".stripMargin)),
+        |ORDER BY l_orderkey, l_linenumber, l_quantity LIMIT 50""".stripMargin)),
     QuerySpec("o2_topk_recent", o2TopkRecent _, Oracle(
       """SELECT event_id, epoch_us(ts) AS ts_us FROM events
         |ORDER BY ts_us DESC, event_id DESC LIMIT 100""".stripMargin)),

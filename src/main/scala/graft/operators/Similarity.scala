@@ -15,10 +15,13 @@ import org.apache.spark.sql.functions._
   *    Sign-bit signatures bucket the corpus; only bucket-mates are
   *    scored. Deterministic planes (md5-derived), no oracle (approximate
   *    by construction); recall vs the exact baseline is spec-tested.
+  *
+  * The persisted-index lifecycle over these kernels (build, load,
+  * serve, append, rebuild) is [[VectorIndex]].
   */
 object Similarity {
 
-  private val K = 10
+  private[operators] val K = 10
   private val NumQueries = 10 // vec_id < 10 are the query vectors
 
   /** L2-normalized double vectors, persisted: every ANN variant reads the
@@ -36,14 +39,13 @@ object Similarity {
     * ann_topk_ivfpq 2.11 → 1.68 s, ann_topk_ivf 1.0 → 0.77 s; recalls
     * unchanged (lsh 1.00, ivf 0.90, pq 0.92, ivfpq 0.93, sem 0.938).
     */
-  private def normalized(s: SparkSession, d: String): DataFrame =
+  private[operators] def normalized(s: SparkSession, d: String): DataFrame =
     graft.spreadScan(normalizeFrame(Tables.embeddings(s, d)),
       col("vec_id")).pinned()
 
   // Corpus row count, cached per (context, dir): the PQ rerank sizing and
   // the 1-NN tile dispatch both need it, and an uncached count() would add
-  // a full corpus-scan job to EVERY search invocation — including the
-  // saved-index serving path whose whole point is to avoid corpus passes.
+  // a full corpus-scan job to EVERY search invocation.
   // Same immutable-dir assumption and stop-eviction as the model caches.
   private val countCache = scala.collection.concurrent.TrieMap
     .empty[(org.apache.spark.SparkContext, String), Long]
@@ -61,7 +63,7 @@ object Similarity {
   private val dimCache = scala.collection.concurrent.TrieMap
     .empty[(org.apache.spark.SparkContext, String), Int]
 
-  private def corpusDim(s: SparkSession, d: String): Int = {
+  private[operators] def corpusDim(s: SparkSession, d: String): Int = {
     graft.ContextCaches.evictOnStop(s.sparkContext, "sim-corpus-dim")(() =>
       dimCache.filterInPlace { case ((c, _), _) => c ne s.sparkContext })
     dimCache.getOrElseUpdate((s.sparkContext, d),
@@ -96,15 +98,21 @@ object Similarity {
     val v = normalized(s, d)
     val q = v.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("u").as("qu"))
-    val scored = v.join(broadcast(q), col("vec_id") =!= col("query_id"))
+    topK(v.join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        r6(dot(col("qu"), col("u"))).as("cos"))
+        r6(dot(col("qu"), col("u"))).as("cos")))
+  }
+
+  /** Each query's K best (query_id, neighbor_id, cos) rows, ranked by
+    * cosine descending and then neighbor id — the last step of every
+    * search variant and of the persisted-index serve.
+    */
+  private[operators] def topK(scored: DataFrame): DataFrame =
     scored
       .withColumn("rnk", row_number().over(Window.partitionBy("query_id")
         .orderBy(col("cos").desc, col("neighbor_id"))))
       .filter(col("rnk") <= K)
       .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cos"))
-  }
 
   // ------------------------------------------------ LSH-bucketed variant
 
@@ -137,21 +145,15 @@ object Similarity {
     * ≈ 0.76 single-probe — while the corpus-side index and shuffle are
     * unchanged; only the (tiny) query side fans out 4×.
     */
-  def annTopkLsh(s: SparkSession, d: String): DataFrame =
-    lshSearch(signedCorpus(s, d))
-
-  /** The LSH "index": every corpus vector with its normalized form and
-    * sign-bit signature — the enriched-row layout a production vector
-    * store persists (id, vector, signature) so serving never recomputes
-    * the NumPlanes dot products per vector.
-    */
-  private def signedCorpus(s: SparkSession, d: String): DataFrame = {
-    val dim = corpusDim(s, d)
-    signFrame(normalized(s, d), dim)
+  def annTopkLsh(s: SparkSession, d: String): DataFrame = {
+    val sig = signFrame(normalized(s, d), corpusDim(s, d))
+    lshSearchWith(sig, sig.filter(col("vec_id") < NumQueries)
+      .select(col("vec_id").as("query_id"), col("u").as("qu"), col("sig")))
   }
 
-  /** Sign an arbitrary (vec_id, u) frame with the deterministic planes
-    * — shared by index construction and streaming query batches.
+  /** Sign an arbitrary (vec_id, u) frame with the deterministic planes:
+    * the (id, vector, signature) rows an LSH index persists, so serving
+    * never recomputes the NumPlanes dot products per vector.
     */
   private[graft] def signFrame(v: DataFrame, dim: Int): DataFrame = {
     val pl = planes(dim)
@@ -168,40 +170,9 @@ object Similarity {
       .withColumn("nrm", sqrt(aggregate(col("e"), lit(0.0), (a, x) => a + x * x)))
       .select(col("vec_id"), transform(col("e"), x => x / col("nrm")).as("u"))
 
-  /** Top-k for an EXTERNAL query batch against a persisted LSH index —
-    * the serving entry a vector store exposes: the index is a static
-    * table, the batch is whatever arrived (e.g. one micro-batch of a
-    * stream), and nothing about the call keeps state. Queries matching
-    * a corpus vec_id are excluded from their own results, mirroring the
-    * self-query semantics of the batch variants.
-    */
-  def topkAgainstLshIndex(queries: DataFrame, indexPath: String): DataFrame = {
-    val idx = queries.sparkSession.read.parquet(indexPath)
-    topkAgainstLshIndex(queries, idx,
-      idx.select(size(col("u"))).first().getInt(0))
-  }
-
-  /** Frame-accepting overload: callers serving many batches (streaming)
-    * load the index and its dimension ONCE and reuse them — the
-    * path-based entry would re-read parquet footers and run a dim probe
-    * job per batch.
-    */
-  def topkAgainstLshIndex(queries: DataFrame, idx: DataFrame,
-      dim: Int): DataFrame = {
-    val qs = signFrame(normalizeFrame(queries), dim)
-      .select(col("vec_id").as("query_id"), col("u").as("qu"), col("sig"))
-    lshSearchWith(idx, qs)
-  }
-
-  /** Banded probe + rerank over a (vec_id, u, sig) frame — shared by
-    * the in-session path and the persisted-index path.
-    */
-  private def lshSearch(sig: DataFrame): DataFrame =
-    lshSearchWith(sig, sig.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("u").as("qu"), col("sig")))
-
   /** Banded probe + rerank of an arbitrary signed query frame
-    * (query_id, qu, sig) against a signed corpus (vec_id, u, sig).
+    * (query_id, qu, sig) against a signed corpus (vec_id, u, sig) —
+    * shared by the in-session query and the persisted LSH index.
     */
   private[graft] def lshSearchWith(sig: DataFrame, qsig: DataFrame): DataFrame = {
     val banded = sig.select(col("vec_id"), col("u"),
@@ -228,12 +199,8 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("qu"), col("vec_id").as("neighbor_id"), col("u"))
       .dropDuplicates("query_id", "neighbor_id")
-    cand.select(col("query_id"), col("neighbor_id"),
-      r6(dot(col("qu"), col("u"))).as("cos"))
-      .withColumn("rnk", row_number().over(Window.partitionBy("query_id")
-        .orderBy(col("cos").desc, col("neighbor_id"))))
-      .filter(col("rnk") <= K)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cos"))
+    topK(cand.select(col("query_id"), col("neighbor_id"),
+      r6(dot(col("qu"), col("u"))).as("cos")))
   }
 
   // ------------------------------------------------------- IVF variant
@@ -338,7 +305,7 @@ object Similarity {
     math.min(cells,
       math.ceil(IvfPqProbeBoost * probesFor(cells, n)).toInt)
 
-  private val IvfIters = 4
+  private[operators] val IvfIters = 4
   // Coarse-quantizer seeding, measured by RecallSweep's mm: mode
   // (round-10): see the sweep notes in SURVEY before changing.
   private[graft] val IvfSeeding = "kmeanspp"
@@ -360,7 +327,7 @@ object Similarity {
     * broadcast) centroid table — nAssign = 1 is the IVF corpus
     * assignment; SemDeDup multi-assigns (its recall knob).
     */
-  private def assignCells(v: DataFrame, cent: DataFrame,
+  private[operators] def assignCells(v: DataFrame, cent: DataFrame,
       nAssign: Int = 1): DataFrame =
     if (nAssign == 1)
       // Argmax as an AGGREGATE, not a window: the broadcast nested-loop
@@ -423,11 +390,11 @@ object Similarity {
 
   /** The cached trained-centroid table for (dir, cells, iters, seed) —
     * the one eviction-hooked lookup every centroid consumer (IVF
-    * search, index save, SemDeDup) goes through, so cache keying and
-    * eviction cannot diverge between them.
+    * search, SemDeDup, [[VectorIndex.build]]) goes through, so cache
+    * keying and eviction cannot diverge between them.
     */
-  private def trainedCentroids(s: SparkSession, d: String, cells: Int,
-      iters: Int, seed: String = IvfSeeding): DataFrame = {
+  private[operators] def trainedCentroids(s: SparkSession, d: String,
+      cells: Int, iters: Int, seed: String = IvfSeeding): DataFrame = {
     import s.implicits._
     graft.ContextCaches.evictOnStop(s.sparkContext, "ivf-centroids")(() =>
       centroidCache.filterInPlace { case ((c, _, _, _, _), _) =>
@@ -445,18 +412,16 @@ object Similarity {
     ivfSearch(s, d, trainedCentroids(s, d, cells, iters, seed), probes,
       nAssign)
 
-  /** Probe-and-rerank against a given centroid table — shared by the
-    * train-resident path and the persisted-index path, so a reloaded
-    * index answers bit-identically to the session that trained it.
-    * `nAssign` > 1 is corpus-side spill (each vector indexed under its
-    * nAssign nearest cells): a true neighbor sitting just across the
+  /** Probe-and-rerank against a given centroid table. `nAssign` > 1
+    * is corpus-side spill (each vector indexed under its nAssign
+    * nearest cells): a true neighbor sitting just across the
     * query's probed boundary is still found through its second cell —
     * the recall knob that attacks boundary misses directly, paid as an
     * nAssign× larger index (NOT more probe work per cell scan fraction
     * at fixed probes·nAssign/cells).
     */
   private def ivfSearch(s: SparkSession, d: String, cent: DataFrame,
-      probes: Int, nAssign: Int = IvfCorpusAssign): DataFrame = {
+      probes: Int, nAssign: Int): DataFrame = {
     val v = normalized(s, d)
     // Pinned: the corpus-side assignment IS the inverted index — a
     // vector store serves queries against materialized inverted lists,
@@ -471,15 +436,11 @@ object Similarity {
         .orderBy(col("cs").desc, col("cell"))))
       .filter(col("rn") <= probes)
       .select(col("vec_id").as("query_id"), col("u").as("qu"), col("cell"))
-    qcells.join(assign, Seq("cell"))
+    topK(qcells.join(assign, Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         r6(dot(col("qu"), col("u"))).as("cos"))
-      .dropDuplicates("query_id", "neighbor_id")
-      .withColumn("rnk", row_number().over(Window.partitionBy("query_id")
-        .orderBy(col("cos").desc, col("neighbor_id"))))
-      .filter(col("rnk") <= K)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cos"))
+      .dropDuplicates("query_id", "neighbor_id"))
   }
 
   // --------------------------------------------------- SemDeDup variant
@@ -560,11 +521,10 @@ object Similarity {
       semanticBlockedFrame(s, d, cells, nAssign, block), tau)
 
   /** The within-cell pair join over an already-blocked frame — shared
-    * verbatim by the in-session path and the persisted-index serve, so
-    * a loaded index answers bit-identically to the session that built
-    * it (the IVF family's contract, applied to dedup).
+    * verbatim by the in-session path and [[VectorIndex.pairs]], so a
+    * loaded index answers bit-identically to the session that built it.
     */
-  private def semanticPairsOfBlocked(f: DataFrame,
+  private[operators] def semanticPairsOfBlocked(f: DataFrame,
       tau: Double): DataFrame = {
     val a = f.select(col("cell").as("cell_a"), col("bi").as("bi_a"),
       col("bj").as("bj_a"), col("salt").as("salt_a"),
@@ -599,7 +559,8 @@ object Similarity {
       cells: Int, nAssign: Int, block: Int): DataFrame =
     blockedFrameOf(semanticAssignments(s, d, cells, nAssign), block)
 
-  private def blockedFrameOf(assign: DataFrame, block: Int): DataFrame = {
+  private[operators] def blockedFrameOf(assign: DataFrame,
+      block: Int): DataFrame = {
     val sizes = assign.groupBy("cell").agg(count(lit(1)).as("n_cell"))
     assign.join(broadcast(sizes), "cell")
       .withColumn("k",
@@ -634,165 +595,6 @@ object Similarity {
       trainedCentroids(s, d, cells, IvfIters, seed = "rank"), nAssign)
       .pinned()
 
-  // --------------------------------------- SemDeDup persisted index
-
-  /** Persist the SemDeDup index: the rank-seeded coarse centroids plus
-    * the [[SemAssign]]-way cell assignments in a cell-partitioned
-    * layout — the dedup twin of [[saveIvfFlatIndex]]. The k-means
-    * train over the full corpus (the dominant one-time cost — ~200k
-    * vectors × ~3k cells at the 100× warehouse) and the N·cells
-    * assignment pass both happen HERE, once per corpus; serving
-    * ([[semanticPairsAgainstIndex]]) and incremental ingest
-    * ([[appendToSemDedupIndex]]) never retrain. Training, assignment,
-    * and salting are all deterministic, so build → load → serve is
-    * bit-identical to the in-session `dd_semantic` on the same corpus
-    * (spec-asserted).
-    */
-  def saveSemDedupIndex(s: SparkSession, d: String, path: String,
-      cells: Int = 0): Unit = {
-    val nCells = if (cells > 0) cells else semCells(s, d)
-    val cent = trainedCentroids(s, d, nCells, IvfIters, seed = "rank")
-    cent.coalesce(1).write.mode("overwrite").parquet(s"$path/coarse")
-    assignCells(normalized(s, d), cent, SemAssign)
-      .select(col("vec_id"), col("u"), col("cell").as("ccell"))
-      // Cluster by cell BEFORE the partitioned write: without it every
-      // shuffle partition holds rows of ~every cell and the writer
-      // fans out cells × partitions files (the 100× bulk build paid
-      // 4096-way × ~3k cells — the dominant one-time cost in
-      // sem_index_gate_100x). Hashing ccell lands each cell's rows in
-      // exactly one task → exactly one file per cell, and the serve
-      // path's per-cell reads touch one file instead of thousands.
-      .repartition(col("ccell"))
-      .write.mode("overwrite").partitionBy("ccell")
-      .parquet(s"$path/assignments")
-  }
-
-  /** Near-dup pairs served straight from a persisted SemDeDup index —
-    * no training, no corpus read, no resident-cache dependency: a
-    * fresh session (or a different cluster) serves immediately, and
-    * the per-corpus k-means cost is amortized across every serve the
-    * way the IVF search family already amortizes it. The blocked pair
-    * join is the SAME code path as the in-session operator
-    * ([[semanticPairsOfBlocked]]), fed from the index's assignment
-    * table instead of the pinned in-session frame.
-    */
-  def semanticPairsAgainstIndex(s: SparkSession, indexPath: String,
-      tau: Double = Dedup.CosTau, block: Int = SemCellBlock): DataFrame = {
-    // Pinned: the pair join reads the assignment table on BOTH sides
-    // (plus the cell-size aggregate), and a serving deployment keeps
-    // the loaded index resident across serves anyway — unpinned, the
-    // 100× probe measured the serve re-scanning its 1.4 GB parquet
-    // per consumer and losing to the in-session recompute path.
-    val assign = s.read.parquet(s"$indexPath/assignments")
-      .select(col("ccell").cast("long").as("cell"), col("vec_id"),
-        col("u"))
-      .pinned()
-    semanticPairsOfBlocked(blockedFrameOf(assign, block), tau)
-  }
-
-  /** Append new vectors to a persisted SemDeDup index without
-    * retraining: assign to the EXISTING (immutable) centroids under
-    * the same [[SemAssign]] breadth and append into the
-    * cell-partitioned layout — only the new rows' cells are touched.
-    * The next serve then finds new↔old pairs through the shared
-    * cells, which is the whole point of an INCREMENTAL dedup index: a
-    * daily crawl batch dedups against the full historical corpus at
-    * the cost of assigning only the batch. Add-without-retrain costs
-    * cell-boundary drift exactly as the IVF appends do — centroids
-    * reflect the build corpus — so the same rebuild cadence applies
-    * ([[rebuildSemDedupIndex]]).
-    *
-    * Batch guards: empty no-op, loud dimension mismatch — and the
-    * vec_id-collision guard distinguishes REPLAY from CONFLICT, which
-    * is what makes the append safe under at-least-once ingest (a crash
-    * between the parquet commit and the caller's offset commit replays
-    * the batch): rows whose vec_id is already resident with the SAME
-    * vector are silently skipped (the whole pipeline is deterministic
-    * — normalization, assignment, salting — so a replayed row is
-    * bit-identical and re-appending it would only duplicate
-    * assignments), while a resident vec_id carrying a DIFFERENT vector
-    * still fails loudly (that is data corruption, not retry).
-    * Re-appending an already-applied batch is therefore a committed
-    * no-op: index bytes and serve results unchanged (spec-asserted).
-    * Replay identity is PER INDEX GENERATION: a rebuild re-normalizes
-    * its residents (last-ulp drift), so replaying a batch from an
-    * older generation into a rebuilt index conflicts loudly — correct,
-    * because ingest offsets pair with the generation they loaded into
-    * (blue/green swaps move the offsets with the pointer).
-    */
-  def appendToSemDedupIndex(newVectors: DataFrame,
-      indexPath: String): Unit = {
-    val s = newVectors.sparkSession
-    val coarse = s.read.parquet(s"$indexPath/coarse").select("cell", "cu")
-    val dim = coarse.select(size(col("cu"))).first().getInt(0)
-    val v = normalizeFrame(newVectors)
-    val stats = v.agg(count(lit(1)).as("n"),
-      min(size(col("u"))).as("lo"), max(size(col("u"))).as("hi")).first()
-    if (stats.getLong(0) == 0) return
-    require(stats.getInt(1) == dim && stats.getInt(2) == dim,
-      s"append batch dimension ${stats.getInt(1)}..${stats.getInt(2)} " +
-        s"does not match index dimension $dim")
-    // NOT pinned: the pin registry dedups by canonicalized plan, and a
-    // frame scanning the index's own (mutable, append-target) path
-    // cached across two appends in one session could serve the
-    // pre-append file list — exactly the staleness that would turn a
-    // replay check into a double-append. One aggregate pass classifies
-    // the batch; the append below re-derives the fresh rows.
-    def joined = v.join(
-      s.read.parquet(s"$indexPath/assignments")
-        .select(col("vec_id"), col("u").as("u_res"))
-        .dropDuplicates("vec_id"),
-      Seq("vec_id"), "left")
-    val cls = joined.agg(
-      count(when(col("u_res").isNotNull && !(col("u") === col("u_res")),
-        1)).as("conflicts"),
-      count(when(col("u_res").isNull, 1)).as("fresh")).first()
-    require(cls.getLong(0) == 0,
-      s"append would overwrite ${cls.getLong(0)} resident vec_ids with " +
-        "DIFFERENT vectors — not a replay; refusing to corrupt the index")
-    if (cls.getLong(1) == 0) return // full replay: committed no-op
-    val fresh = joined.filter(col("u_res").isNull).drop("u_res")
-    assignCells(fresh, coarse, SemAssign)
-      .select(col("vec_id"), col("u"), col("cell").as("ccell"))
-      .repartition(col("ccell")) // one file per touched cell, as the build
-      .write.mode("append").partitionBy("ccell")
-      .parquet(s"$indexPath/assignments")
-  }
-
-  /** Full rebuild of a persisted SemDeDup index from its own resident
-    * vectors — the STALE-INDEX REFRESH step: once appended batches
-    * make the build-time centroids a poor quantizer for the resident
-    * population (boundary-straddling pairs stop sharing cells and
-    * recall drifts down), retrain on everything resident and land a
-    * fresh index at `outPath`. Same blue/green contract as the IVF
-    * rebuilds: the old index is never modified, serving swaps by
-    * repointing. The multi-assigned layout is deduplicated to one row
-    * per vector before it becomes the training corpus.
-    */
-  def rebuildSemDedupIndex(s: SparkSession, indexPath: String,
-      outPath: String): Unit = {
-    require(java.nio.file.Paths.get(outPath).normalize() !=
-        java.nio.file.Paths.get(indexPath).normalize(),
-      "rebuild writes a FRESH index: an in-place rebuild would yank " +
-        "the layout out from under concurrent readers — write to a " +
-        "new path and repoint serving after the build commits")
-    val vecs = s.read.parquet(s"$indexPath/assignments")
-      .dropDuplicates("vec_id")
-    val n = vecs.count()
-    require(n > 0, s"index at $indexPath has no resident vectors")
-    // Training snapshot on warehouse-FS SCRATCH (deleted at context
-    // stop), NOT inside the new index: a resident copy under outPath
-    // would ship with — and roughly double — every rebuilt index
-    // forever (the 100× index is ~1.4 GB of assignments alone). The
-    // scratch dir is unique per rebuild, so the per-dir pin caches'
-    // immutable-dir contract holds for the session it lives in.
-    val corpus = s"${TileScratch.newDir(s, s"semrebuild-n$n")}/corpus"
-    vecs.select(col("vec_id"), col("u").as("embedding"),
-        lit(0L).as("label"))
-      .write.mode("overwrite").parquet(s"$corpus/embeddings.parquet")
-    saveSemDedupIndex(s, corpus, outPath)
-  }
-
   // -------------------------------------------------------- PQ variant
 
   // Product quantization (Jégou et al. 2011, "Product Quantization for
@@ -805,7 +607,7 @@ object Similarity {
   // asymmetric distance computation (ADC): per-subspace lookup tables
   // of query·centroid dots, summed over the codes — no full vector is
   // touched until the exact rerank of a small shortlist.
-  private val PqM = 8
+  private[operators] val PqM = 8
   // Codebook size per subspace. Retuned round 7 via RecallSweep's
   // pq:<k>:<rerank%> mode (measured at sf0.1, same 10% rerank):
   // k=16 → recall 0.67 (warm 1.1s), k=32 → 0.89 (1.3s), k=64 → 0.93
@@ -838,7 +640,7 @@ object Similarity {
   private val PqRerankFrac = 0.15
 
   /** (vec_id, m, sv): the PqM subvectors of every normalized vector. */
-  private def subvectors(v: DataFrame, dim: Int): DataFrame = {
+  private[operators] def subvectors(v: DataFrame, dim: Int): DataFrame = {
     // Fail loudly on a non-divisible dimension: integer division below
     // would silently drop the trailing dim % PqM components from PQ
     // assignment and ADC scoring, quietly degrading recall.
@@ -859,7 +661,7 @@ object Similarity {
     * collapses MAP-SIDE; a window row_number would shuffle and sort all
     * N·PqM·PqK scored rows instead of N·PqM.
     */
-  private def pqAssign(sv: DataFrame, cent: DataFrame): DataFrame =
+  private[operators] def pqAssign(sv: DataFrame, cent: DataFrame): DataFrame =
     sv.join(broadcast(cent), Seq("m"))
       .withColumn("d2", l2(col("sv"), col("cu")))
       .groupBy("vec_id", "m")
@@ -930,10 +732,10 @@ object Similarity {
   }
 
   /** The cached trained PQ codebooks as a (m, cell, cu) frame — the one
-    * eviction-hooked lookup every PQ consumer (flat search, index save,
-    * composed IVFPQ) goes through.
+    * eviction-hooked lookup every PQ consumer (flat search, composed
+    * IVFPQ, [[VectorIndex.build]]) goes through.
     */
-  private def trainedPqCodebooks(s: SparkSession, d: String,
+  private[operators] def trainedPqCodebooks(s: SparkSession, d: String,
       k: Int = PqK): DataFrame = {
     import s.implicits._
     graft.ContextCaches.evictOnStop(s.sparkContext, "pq-codebooks")(() =>
@@ -953,8 +755,7 @@ object Similarity {
     val cent = trainedPqCodebooks(s, d, k)
     val v = normalized(s, d)
     pqSearch(s, d, cent, pqAssign(subvectors(v, corpusDim(s, d)), cent),
-      rerankN = Some(math.max(PqRerankMin.toLong,
-        math.ceil(corpusCount(s, d) * frac).toLong)))
+      rerankN = Some(rerankBudget(corpusCount(s, d), frac)))
   }
 
   /** ANN via the composed IVF+PQ index — the IVFADC architecture
@@ -996,10 +797,9 @@ object Similarity {
 
   /** (query_id, ccell): each (query_id, qu) row's `probes` nearest
     * coarse cells against an arbitrary (cell, cu) centroid table —
-    * shared by the in-session, persisted-index and external-batch
-    * IVFPQ paths.
+    * shared by the in-session IVFPQ query and [[VectorIndex.topk]].
     */
-  private def probeCellsOf(qn: DataFrame, coarse: DataFrame,
+  private[operators] def probeCellsOf(qn: DataFrame, coarse: DataFrame,
       probes: Int): DataFrame =
     qn.crossJoin(broadcast(coarse))
       .withColumn("cs", dot(col("qu"), col("cu")))
@@ -1038,264 +838,8 @@ object Similarity {
       .select(col("query_id"), col("vec_id"))
   }
 
-  /** Persist the composed IVF+PQ index in its SERVING layout: the tiny
-    * coarse centroids and PQ codebooks (model state, one file each),
-    * plus the inverted lists — every vector's PQ codes partitioned BY
-    * ITS COARSE CELL (`partitionBy(ccell)`), which is what makes a
-    * probe at 100 TB a partition-pruned scan rather than a filter over
-    * the full codes table. Training and assignment are deterministic,
-    * so save → load → search is bit-identical to the training session.
-    */
-  def saveIvfPqIndex(s: SparkSession, d: String, path: String): Unit = {
-    // Same single-assignment contract as ivfPqCandidates: the lists and
-    // vectors layouts assume one ccell per vector.
-    require(IvfCorpusAssign == 1,
-      "the IVFPQ index layout assumes single corpus assignment")
-    val coarse = trainedCentroids(s, d, ivfCells(s, d), IvfIters)
-    coarse.coalesce(1).write.mode("overwrite").parquet(s"$path/coarse")
-    val cbs = trainedPqCodebooks(s, d)
-    cbs.coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
-    val v = normalized(s, d)
-    val assign = assignCells(v, coarse)
-      .select(col("vec_id"), col("cell").as("ccell"))
-    pqAssign(subvectors(v, corpusDim(s, d)), cbs)
-      .join(assign, "vec_id")
-      .write.mode("overwrite").partitionBy("ccell")
-      .parquet(s"$path/lists")
-    // The refine tier: normalized full vectors in the SAME cell-
-    // partitioned layout, so the exact rerank also reads only probed
-    // partitions (the vector store every reranking ANN deployment
-    // keeps beside its codes — DiskANN/SPANN-style).
-    v.join(assign, "vec_id")
-      .write.mode("overwrite").partitionBy("ccell")
-      .parquet(s"$path/vectors")
-    // A save must never leave an unservable index on disk: the round-9
-    // sweep caught an empty-codebook build writing zero-row lists with
-    // no error (the failure then surfaced two calls later as an
-    // unreadable parquet dir). Both counts are metadata-only.
-    val nVec = s.read.parquet(s"$path/vectors").count()
-    require(nVec > 0, s"saveIvfPqIndex wrote an empty index at $path")
-    requireIvfPqConsistent(s, path, nVec)
-  }
-
-  /** Append new vectors to a persisted IVFPQ index WITHOUT retraining —
-    * the index-lifecycle step a growing corpus needs between full
-    * rebuilds (FAISS's `add` on a trained index): normalize, assign to
-    * the EXISTING coarse centroids and PQ codebooks (model state is
-    * immutable — never rewritten — so concurrent readers stay
-    * consistent), and append the code and vector rows into the
-    * cell-partitioned layouts. Dynamic partition APPEND touches only
-    * the new rows' cells; serving picks the new vectors up with no
-    * other change because every serving path derives corpus size and
-    * probe width from the index's own tables. Quantization error for
-    * appended vectors reflects the build-time training distribution —
-    * the documented drift cost of any add-without-retrain index, paid
-    * until the next rebuild; the spec measures serving recall over an
-    * appended half stays at the composed-index floor. Fails loudly on
-    * vec_id collision with the resident lists (a silent duplicate
-    * would double-count in ADC scoring).
-    */
-  def appendToIvfPqIndex(newVectors: DataFrame, indexPath: String): Unit = {
-    val s = newVectors.sparkSession
-    val coarse = s.read.parquet(s"$indexPath/coarse").select("cell", "cu")
-    val cbs = s.read.parquet(s"$indexPath/codebooks").select("m", "cell", "cu")
-    val dim = coarse.select(size(col("cu"))).first().getInt(0)
-    val v = normalizeFrame(newVectors)
-    // Same guards as the LSH append: empty micro-batches no-op, and a
-    // batch whose dimension differs from the index's fails loudly
-    // (zip_with over mismatched arrays would silently mis-assign).
-    val stats = v.agg(count(lit(1)).as("n"),
-      min(size(col("u"))).as("lo"), max(size(col("u"))).as("hi")).first()
-    if (stats.getLong(0) == 0) return
-    require(stats.getInt(1) == dim && stats.getInt(2) == dim,
-      s"append batch dimension ${stats.getInt(1)}..${stats.getInt(2)} " +
-        s"does not match index dimension $dim")
-    // Collision guard: column-pruned scan of one code row per resident
-    // vector joined against the (small) append batch's ids.
-    val clash = s.read.parquet(s"$indexPath/lists")
-      .filter(col("m") === 0).select("vec_id")
-      .join(v.select("vec_id"), "vec_id").count()
-    require(clash == 0,
-      s"append would duplicate $clash vec_ids already in the index")
-    val assign = assignCells(v, coarse)
-      .select(col("vec_id"), col("u"), col("cell").as("ccell"))
-    pqAssign(subvectors(v, dim), cbs)
-      .join(assign.select("vec_id", "ccell"), "vec_id")
-      .write.mode("append").partitionBy("ccell").parquet(s"$indexPath/lists")
-    assign.select("vec_id", "u", "ccell")
-      .write.mode("append").partitionBy("ccell").parquet(s"$indexPath/vectors")
-    // The two appends above are independent (parquet has no cross-dir
-    // transaction); verify the PqM-rows-per-vector invariant before
-    // returning so a torn append from a PRIOR crashed writer — or a
-    // concurrent-writer race this single-writer contract forbids —
-    // surfaces here rather than as silently-dropped rerank candidates.
-    requireIvfPqConsistent(s, indexPath,
-      s.read.parquet(s"$indexPath/vectors").count())
-  }
-
-  /** Serve the IVFPQ query from a saved index: the probed cell ids are
-    * collected to a LITERAL partition filter (bounded by
-    * queries × probes values — driver-side by design, like a predicate
-    * a query planner inlines), so the lists scan reads ONLY the probed
-    * cells' partitions — spec-asserted via PartitionFilters in the
-    * physical plan. No training, no resident-cache dependency; full
-    * vectors are touched only for the query side and the rerank.
-    */
-  def annTopkIvfPqFrom(s: SparkSession, d: String,
-      indexPath: String): DataFrame = {
-    val coarse = s.read.parquet(s"$indexPath/coarse").select("cell", "cu")
-    val cbs = s.read.parquet(s"$indexPath/codebooks")
-      .select("m", "cell", "cu")
-    val dim = coarse.select(size(col("cu"))).first().getInt(0)
-    // NOT pinned: the probe frame is a tiny broadcast crossJoin and
-    // this entry can run per micro-batch from the streaming server —
-    // a per-call pin would grow the cache registry for the life of the
-    // context (each batch's plan is distinct). Recomputing it for the
-    // probed-cell collect + candidate join is cheaper than retaining it.
-    // Probe breadth AND corpus size derive from the INDEX's own tables
-    // (cell count from coarse, N from the vectors layout's row-count
-    // metadata — no data scan), so a loaded index serves at its
-    // build-time scan fraction and, after appendToIvfPqIndex, sizes
-    // probes and the rerank budget from the index's TRUE size rather
-    // than whatever the original corpus dir holds (deriving from the
-    // dir would silently halve the shortlist after appending a second
-    // corpus half — the append contract says the index is
-    // self-describing).
-    val indexN = s.read.parquet(s"$indexPath/vectors").count()
-    requireIvfPqConsistent(s, indexPath, indexN)
-    val qn = normalized(s, d).filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("u").as("qu"))
-    val qcells = probeCellsOf(qn, coarse,
-      ivfPqProbes(coarse.count().toInt, indexN))
-    val probed = qcells.select("ccell").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val lists = s.read.parquet(s"$indexPath/lists")
-      .filter(col("ccell").isin(probed: _*))
-    // One row per vector WITHOUT a distinct shuffle: every vector has
-    // exactly one m = 0 code row (subspace ids are dense 0..PqM-1).
-    val cand = lists.filter(col("m") === 0).select("vec_id", "ccell")
-      .join(broadcast(qcells), Seq("ccell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"))
-    // Rerank from the INDEX's own cell-partitioned vector table (probed
-    // cells only — same partition-pruned read the external-batch entry
-    // uses), NOT the corpus dir: after appendToIvfPqIndex the index
-    // holds vectors the dir does not, and the self-describing contract
-    // promises every serving entry sees them. For a freshly built index
-    // the two sources are bit-identical, so this is output-equal on the
-    // non-appended path. Only the QUERY side still reads the dir (this
-    // entry's queries are, by definition, the corpus's first vectors).
-    val vecs = s.read.parquet(s"$indexPath/vectors")
-      .filter(col("ccell").isin(probed: _*))
-      .select("vec_id", "u")
-    pqSearchFrames(qn, vecs, dim, cbs,
-      lists.select("vec_id", "m", "cell"), Some(cand),
-      math.max(PqRerankMin.toLong,
-        math.ceil(indexN * PqRerankFrac).toLong))
-  }
-
-  /** Torn-index guard: `lists` must hold exactly PqM code rows per
-    * `vectors` row. appendToIvfPqIndex issues two independent parquet
-    * appends (lists, then vectors), so a crash between them leaves
-    * appended ids ADC-scorable but invisible to the rerank; both counts
-    * here are parquet row-group-metadata reads (no data scan), so the
-    * check is cheap enough to run at every index load. Repair: delete
-    * the orphaned lists rows' files or re-run the append idempotently
-    * after removing the partial write.
-    */
-  private def requireIvfPqConsistent(s: SparkSession, indexPath: String,
-      vectorsN: Long): Unit = {
-    val listsN = s.read.parquet(s"$indexPath/lists").count()
-    require(listsN == vectorsN * PqM,
-      s"IVFPQ index at $indexPath is torn: lists has $listsN code rows " +
-        s"but vectors × PqM = ${vectorsN * PqM} — likely a crashed " +
-        "append (lists written, vectors not); repair before serving")
-  }
-
-  /** Top-k for an EXTERNAL query batch against a persisted IVFPQ index
-    * — the serving entry of the composed index, self-contained on the
-    * index directory (codes for ADC, the cell-partitioned vector table
-    * for the exact rerank; the corpus parquet is never touched).
-    * Queries matching a corpus vec_id are excluded from their own
-    * results, mirroring the LSH serving semantics.
-    */
-  def topkAgainstIvfPqIndex(queries: DataFrame, indexPath: String): DataFrame = {
-    val s = queries.sparkSession
-    val coarse = s.read.parquet(s"$indexPath/coarse").select("cell", "cu")
-    // parquet row-count metadata — no data scan
-    val indexN = s.read.parquet(s"$indexPath/vectors").count()
-    // Torn-append check once per index load; the preloaded-state
-    // overload below runs per micro-batch and relies on this entry (or
-    // the streaming server's own load step) having verified the index.
-    requireIvfPqConsistent(s, indexPath, indexN)
-    topkAgainstIvfPqIndex(queries, indexPath, coarse,
-      s.read.parquet(s"$indexPath/codebooks").select("m", "cell", "cu"),
-      coarse.select(size(col("cu"))).first().getInt(0),
-      indexN)
-  }
-
-  /** Preloaded-state overload: streaming callers load the (tiny) coarse
-    * and codebook tables, the dimension and the corpus size ONCE and
-    * serve every micro-batch with them; only the cell-partitioned lists
-    * and vectors are re-read per batch — with that batch's probed cells
-    * as partition filters.
-    */
-  def topkAgainstIvfPqIndex(queries: DataFrame, indexPath: String,
-      coarse: DataFrame, cbs: DataFrame, dim: Int,
-      corpusN: Long): DataFrame = {
-    val s = queries.sparkSession
-    val qn = normalizeFrame(queries)
-      .select(col("vec_id").as("query_id"), col("u").as("qu"))
-    // NOT pinned — see annTopkIvfPqFrom: this runs once per micro-batch.
-    // coarse is tiny (the preloaded model table); counting it per batch
-    // is a one-file job, and deriving probes from the index's own cell
-    // count keeps the serving scan fraction at the build-time target.
-    val qcells = probeCellsOf(qn, coarse,
-      ivfPqProbes(coarse.count().toInt, corpusN))
-    val probed = qcells.select("ccell").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val lists = s.read.parquet(s"$indexPath/lists")
-      .filter(col("ccell").isin(probed: _*))
-    val cand = lists.filter(col("m") === 0).select("vec_id", "ccell")
-      .join(broadcast(qcells), Seq("ccell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"))
-    val vecs = s.read.parquet(s"$indexPath/vectors")
-      .filter(col("ccell").isin(probed: _*))
-      .select("vec_id", "u")
-    pqSearchFrames(qn, vecs, dim, cbs,
-      lists.select("vec_id", "m", "cell"), Some(cand),
-      math.max(PqRerankMin.toLong,
-        math.ceil(corpusN * PqRerankFrac).toLong))
-  }
-
-  /** Persist the full PQ index: the codebooks (tiny, one file) and the
-    * per-vector codes (the PqM·log2(PqK)-bit-per-vector serving table
-    * — scales with the corpus, written distributed like the LSH
-    * index). Training
-    * and assignment are deterministic, so save → load → search is
-    * bit-identical to the training session.
-    */
-  def savePqIndex(s: SparkSession, d: String, path: String): Unit = {
-    val cent = trainedPqCodebooks(s, d)
-    cent.coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
-    val dim = corpusDim(s, d)
-    pqAssign(subvectors(normalized(s, d), dim), cent)
-      .write.mode("overwrite").parquet(s"$path/codes")
-  }
-
-  /** Serve the PQ query from a saved index: codes are scanned as-is (no
-    * re-assignment, no training); full vectors are touched only for the
-    * query side and the shortlist rerank — exactly a vector store's
-    * serving path.
-    */
-  def annTopkPqFrom(s: SparkSession, d: String, indexPath: String): DataFrame =
-    pqSearch(s, d,
-      s.read.parquet(s"$indexPath/codebooks").select("m", "cell", "cu"),
-      s.read.parquet(s"$indexPath/codes").select("vec_id", "m", "cell"))
-
-  /** ADC + rerank over given codebooks and codes — shared by the
-    * train-resident, persisted-index and composed-IVFPQ paths.
+  /** ADC + rerank over given codebooks and codes — shared by the flat
+    * and composed-IVFPQ in-session queries.
     * `restrict` (query_id, vec_id), when present, limits ADC scoring to
     * those candidate pairs (the IVF coarse stage); `rerankN` overrides
     * the shortlist size (the composed index reranks a fraction of the
@@ -1308,17 +852,20 @@ object Similarity {
     val q = v.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("u").as("qu"))
     pqSearchFrames(q, v, corpusDim(s, d), cent, codes, restrict,
-      rerankN.getOrElse(math.max(PqRerankMin.toLong,
-        math.ceil(corpusCount(s, d) * PqRerankFrac).toLong)))
+      rerankN.getOrElse(rerankBudget(corpusCount(s, d))))
   }
+
+  /** The exact-rerank shortlist size for an `n`-vector corpus. */
+  private[operators] def rerankBudget(n: Long,
+      frac: Double = PqRerankFrac): Long =
+    math.max(PqRerankMin.toLong, math.ceil(n * frac).toLong)
 
   /** The frame-level ADC + rerank: arbitrary (query_id, qu) queries
     * against arbitrary (vec_id, u) rerank vectors — shared by the
-    * corpus-query paths above and the external-batch serving entry
-    * ([[topkAgainstIvfPqIndex]], including its streaming caller).
+    * corpus-query paths above and [[VectorIndex.topk]].
     */
-  private def pqSearchFrames(q: DataFrame, vecs: DataFrame, dim: Int,
-      cent: DataFrame, codes: DataFrame, restrict: Option[DataFrame],
+  private[operators] def pqSearchFrames(q: DataFrame, vecs: DataFrame,
+      dim: Int, cent: DataFrame, codes: DataFrame, restrict: Option[DataFrame],
       rerankN: Long): DataFrame = {
     val tables = subvectors(
       q.select(col("query_id").as("vec_id"), col("qu").as("u")), dim)
@@ -1348,259 +895,11 @@ object Similarity {
         .orderBy(col("adc").desc, col("vec_id"))))
       .filter(col("rn") <= rerankN)
       .select(col("query_id"), col("vec_id"))
-    shortlist
+    topK(shortlist
       .join(vecs, "vec_id")
       .join(broadcast(q), Seq("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        r6(dot(col("qu"), col("u"))).as("cos"))
-      .withColumn("rnk", row_number().over(Window.partitionBy("query_id")
-        .orderBy(col("cos").desc, col("neighbor_id"))))
-      .filter(col("rnk") <= K)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cos"))
-  }
-
-  // ------------------------------------------------- index persistence
-
-  /** Persist the trained IVF index (the centroid table — the entire
-    * model state, exactly what spark.ml KMeans persists) as parquet,
-    * mirroring the PipelineModel save/load round-trip. A production
-    * vector store serves from a saved index rather than re-running
-    * Lloyd on restart; this also retires the resident cache's
-    * dir-immutability caveat for any caller that pins an index version
-    * on disk. Training is deterministic (DECIMAL means, sorted collect),
-    * so save → load → search is bit-identical to the training session.
-    */
-  def saveIvfIndex(s: SparkSession, d: String, path: String,
-      cells: Int = 0, iters: Int = IvfIters): Unit =
-    // cells × dim doubles — a single tiny file, readable anywhere. The
-    // shared cache lookup carries the eviction hook, so a save-only
-    // caller leaves nothing resident past its context. cells = 0 (the
-    // default) derives the corpus-proportional count.
-    trainedCentroids(s, d,
-      if (cells > 0) cells else ivfCells(s, d), iters).coalesce(1)
-      .write.mode("overwrite").parquet(path)
-
-  /** Run the IVF query against a previously saved index — no training,
-    * no resident-cache dependency (a fresh session can serve
-    * immediately). probes = 0 (the default) derives the build-time
-    * scan fraction from the index's own cell count.
-    */
-  def annTopkIvfFrom(s: SparkSession, d: String, indexPath: String,
-      probes: Int = 0): DataFrame = {
-    val cent = s.read.parquet(indexPath).select(col("cell"), col("cu"))
-    ivfSearch(s, d, cent,
-      if (probes > 0) probes
-      else probesFor(cent.count().toInt, corpusCount(s, d)))
-  }
-
-  // ------------------------------------------- IVF-Flat persisted index
-
-  /** Persist the IVF-FLAT index: the trained coarse centroids plus the
-    * FULL corpus vectors in a cell-partitioned serving layout — the
-    * middle member of the persisted-index family (LSH / IVF-Flat /
-    * IVFPQ; FAISS's IndexIVFFlat): probes become partition-pruned file
-    * reads exactly like IVFPQ's, but probed members are scored EXACTLY
-    * — no ADC stage, no codebook drift on later appends, no rerank
-    * tier — paying full-vector storage for it. Unlike [[saveIvfIndex]]
-    * (centroids only; serving still reads the corpus dir), this index
-    * is fully self-contained: the serving entry never touches the
-    * corpus parquet. Training and assignment are deterministic, so
-    * save → load → search is bit-identical to the training session.
-    */
-  def saveIvfFlatIndex(s: SparkSession, d: String, path: String,
-      cells: Int = 0, iters: Int = IvfIters): Unit = {
-    val cent = trainedCentroids(s, d,
-      if (cells > 0) cells else ivfCells(s, d), iters)
-    cent.coalesce(1).write.mode("overwrite").parquet(s"$path/coarse")
-    assignCells(normalized(s, d), cent, IvfCorpusAssign)
-      .select(col("vec_id"), col("u"), col("cell").as("ccell"))
-      .write.mode("overwrite").partitionBy("ccell").parquet(s"$path/vectors")
-  }
-
-  /** Top-k for an EXTERNAL query batch against a persisted IVF-Flat
-    * index — self-contained on the index directory. Probe breadth
-    * derives from the index's own tables (cell count from coarse, N
-    * from the vectors layout's row-count metadata — no data scan), so
-    * a loaded index serves at its build-time scan fraction and sizes
-    * probes from its TRUE size after appends. The probed cell ids
-    * become a literal partition filter on the vectors read (bounded by
-    * queries × probes values), so non-probed cells' files are never
-    * opened; the query batch is broadcast twice (probe table, then
-    * exact scoring) — external batches are bounded by the caller, the
-    * same contract as the LSH/IVFPQ serving entries. With corpus-side
-    * spill (IvfCorpusAssign > 1) the metadata count tallies
-    * assignments rather than vectors, which only WIDENS probes —
-    * conservative — and the duplicate (query, neighbor) pairs spill
-    * produces collapse in the dropDuplicates below, as in
-    * [[ivfSearch]]. Queries matching a corpus vec_id are excluded from
-    * their own results, mirroring the other serving entries.
-    */
-  def topkAgainstIvfFlatIndex(queries: DataFrame,
-      indexPath: String): DataFrame = {
-    val s = queries.sparkSession
-    val coarse = s.read.parquet(s"$indexPath/coarse").select("cell", "cu")
-    val indexN = s.read.parquet(s"$indexPath/vectors").count()
-    val probes = probesFor(coarse.count().toInt, indexN)
-    val qn = normalizeFrame(queries)
-      .select(col("vec_id").as("query_id"), col("u").as("qu"))
-    val qcells = probeCellsOf(qn, coarse, probes)
-    val probed = qcells.select("ccell").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    s.read.parquet(s"$indexPath/vectors")
-      .filter(col("ccell").isin(probed: _*))
-      .join(broadcast(qcells), Seq("ccell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .join(broadcast(qn), Seq("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        r6(dot(col("qu"), col("u"))).as("cos"))
-      .dropDuplicates("query_id", "neighbor_id")
-      .withColumn("rnk", row_number().over(Window.partitionBy("query_id")
-        .orderBy(col("cos").desc, col("neighbor_id"))))
-      .filter(col("rnk") <= K)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cos"))
-  }
-
-  /** Append new vectors to a persisted IVF-Flat index without
-    * retraining: assign to the EXISTING (immutable) centroids and
-    * append into the cell-partitioned vectors layout — dynamic
-    * partition APPEND touches only the new rows' cells. The per-vector
-    * state is ONE table, so unlike the IVFPQ append there is no torn
-    * cross-table window to guard: the single parquet append commits or
-    * it doesn't. Appended vectors are scored exactly at serve time —
-    * the flat index has no quantization, so add-without-retrain costs
-    * only cell-boundary drift (centroids reflect the build corpus),
-    * not codebook error on top. Same batch guards as the other
-    * appends: empty no-op, loud dimension mismatch, loud vec_id
-    * collision.
-    */
-  def appendToIvfFlatIndex(newVectors: DataFrame, indexPath: String): Unit = {
-    val s = newVectors.sparkSession
-    val coarse = s.read.parquet(s"$indexPath/coarse").select("cell", "cu")
-    val dim = coarse.select(size(col("cu"))).first().getInt(0)
-    val v = normalizeFrame(newVectors)
-    val stats = v.agg(count(lit(1)).as("n"),
-      min(size(col("u"))).as("lo"), max(size(col("u"))).as("hi")).first()
-    if (stats.getLong(0) == 0) return
-    require(stats.getInt(1) == dim && stats.getInt(2) == dim,
-      s"append batch dimension ${stats.getInt(1)}..${stats.getInt(2)} " +
-        s"does not match index dimension $dim")
-    val clash = s.read.parquet(s"$indexPath/vectors").select("vec_id")
-      .join(v.select("vec_id"), "vec_id").count()
-    require(clash == 0,
-      s"append would duplicate $clash vec_ids already in the index")
-    assignCells(v, coarse, IvfCorpusAssign)
-      .select(col("vec_id"), col("u"), col("cell").as("ccell"))
-      .write.mode("append").partitionBy("ccell").parquet(s"$indexPath/vectors")
-  }
-
-  /** Snapshot a persisted index's resident vectors as a training corpus
-    * on warehouse-FS SCRATCH (deleted at context stop) and return the
-    * snapshot dir — the shared first step of both rebuilds. The scratch
-    * nonce makes every snapshot path unique, keeping the per-dir model/
-    * count/pin caches' immutable-dir contract intact; writing it under
-    * the NEW index path instead (the pre-r15 layout) shipped a full
-    * resident-vector copy inside every rebuilt index forever.
-    */
-  private def snapshotResident(s: SparkSession, indexPath: String,
-      outPath: String): String = {
-    require(java.nio.file.Paths.get(outPath).normalize() !=
-        java.nio.file.Paths.get(indexPath).normalize(),
-      "rebuild writes a FRESH index: an in-place rebuild would yank the " +
-        "layout out from under concurrent readers — write to a new path " +
-        "and repoint serving after the build commits (blue/green swap)")
-    val vecs = s.read.parquet(s"$indexPath/vectors")
-    val n = vecs.count()
-    require(n > 0, s"index at $indexPath has no resident vectors")
-    val corpus = s"${TileScratch.newDir(s, s"ivfrebuild-n$n")}/corpus"
-    // label satisfies the embeddings load contract; the index layout
-    // does not carry labels and no training path reads them.
-    vecs.select(col("vec_id"), col("u").as("embedding"),
-        lit(0L).as("label"))
-      .write.mode("overwrite").parquet(s"$corpus/embeddings.parquet")
-    corpus
-  }
-
-  /** Full rebuild of a persisted IVFPQ index from its own resident
-    * vectors — the lifecycle step the measured append-drift curve
-    * schedules (recall falls to the coarse-stage floor once ~half the
-    * index is appended; see SURVEY's add-without-retrain table).
-    * Coarse centroids and PQ codebooks retrain on the ENTIRE resident
-    * population (build-time vectors plus every appended batch, read
-    * from the index's own cell-partitioned vectors table — the corpus
-    * parquet is never touched, so a rebuild needs only the index), and
-    * a fresh index lands at `outPath` with the appended fraction reset
-    * to zero. The old index is never modified: concurrent readers stay
-    * consistent and serving swaps by repointing at the new path. A torn
-    * source index refuses to rebuild — retraining on a population whose
-    * rerank tier disagrees with its code tier would bake the damage in.
-    */
-  def rebuildIvfPqIndex(s: SparkSession, indexPath: String,
-      outPath: String): Unit = {
-    requireIvfPqConsistent(s, indexPath,
-      s.read.parquet(s"$indexPath/vectors").count())
-    saveIvfPqIndex(s, snapshotResident(s, indexPath, outPath), outPath)
-  }
-
-  /** Full rebuild of a persisted IVF-Flat index from its own resident
-    * vectors: same blue/green contract as [[rebuildIvfPqIndex]], only
-    * cheaper — flat serving stores exact vectors, so a rebuild buys
-    * back ONLY cell-boundary drift (the measured curve is ±0.02 around
-    * the build floor on this corpus), and the operational rule in the
-    * append docstring holds: flat indexes can defer rebuilds far
-    * longer. The LSH index needs no rebuild at all — its append is
-    * drift-free by construction (signatures are data-independent).
-    */
-  def rebuildIvfFlatIndex(s: SparkSession, indexPath: String,
-      outPath: String): Unit =
-    saveIvfFlatIndex(s, snapshotResident(s, indexPath, outPath), outPath)
-
-  /** Persist the LSH index: the full signed corpus (vec_id, normalized
-    * vector, signature) — unlike IVF's tiny centroid table this index
-    * scales WITH the corpus, so it persists as a distributed write and
-    * serves as a distributed read; signatures are deterministic
-    * (md5-derived planes), so save → load → search is bit-identical.
-    */
-  def saveLshIndex(s: SparkSession, d: String, path: String): Unit =
-    signedCorpus(s, d).write.mode("overwrite").parquet(path)
-
-  /** Serve the LSH query straight from a saved index — the NumPlanes
-    * signature dot products per corpus vector never recompute.
-    */
-  def annTopkLshFrom(s: SparkSession, indexPath: String): DataFrame =
-    lshSearch(s.read.parquet(indexPath))
-
-  /** Append new vectors to a persisted LSH index. Unlike the IVFPQ
-    * append there is NO trained state and therefore NO drift: the
-    * hyperplanes are deterministic md5-derived constants, so an
-    * appended index is BIT-IDENTICAL to a from-scratch rebuild over
-    * the union (spec-asserted) — append is the only maintenance this
-    * index family ever needs. Same loud vec_id-collision guard as the
-    * IVFPQ append.
-    */
-  def appendToLshIndex(newVectors: DataFrame, path: String): Unit = {
-    val s = newVectors.sparkSession
-    val v = normalizeFrame(newVectors)
-    val idx = s.read.parquet(path)
-    // Dimension comes from the INDEX (like the IVFPQ append reads its
-    // coarse table), never from the batch: plane length must match the
-    // resident signatures, and a mismatched batch must fail loudly —
-    // zip_with over different-length arrays would silently compute
-    // inconsistent signatures. The index is never empty (save writes
-    // the full corpus), so first() here is total.
-    val dim = idx.select(size(col("u"))).first().getInt(0)
-    val stats = v.agg(count(lit(1)).as("n"),
-      min(size(col("u"))).as("lo"), max(size(col("u"))).as("hi")).first()
-    // Empty micro-batch (a trigger with no new files): no-op, not a
-    // crash — the maintenance stream must survive idle triggers.
-    if (stats.getLong(0) == 0) return
-    require(stats.getInt(1) == dim && stats.getInt(2) == dim,
-      s"append batch dimension ${stats.getInt(1)}..${stats.getInt(2)} " +
-        s"does not match index dimension $dim")
-    val clash = idx.select("vec_id")
-      .join(v.select("vec_id"), "vec_id").count()
-    require(clash == 0,
-      s"append would duplicate $clash vec_ids already in the index")
-    signFrame(v, dim).write.mode("append").parquet(path)
+        r6(dot(col("qu"), col("u"))).as("cos")))
   }
 
   /** k-means++ seeding, deterministic and scale-bounded: a

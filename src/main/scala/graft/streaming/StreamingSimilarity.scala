@@ -1,20 +1,20 @@
 package graft.streaming
 
+import graft.operators.VectorIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Streaming similarity serving — the online half of a vector store:
-  * vectors arrive on a stream and each micro-batch is answered top-k
-  * against a PERSISTED LSH index
-  * ([[graft.operators.Similarity.saveLshIndex]] output).
+/** Streaming similarity — the online half of a vector store, over a
+  * persisted [[graft.operators.VectorIndex]] of any kind: one stream
+  * answers arriving vectors top-k against the index, another appends
+  * arriving corpus vectors to it.
   *
-  * Shape: the stream is STATELESS — every trigger is an independent
-  * batch-semantics join (foreachBatch) of the arriving vectors against
-  * the static index table, so there is no state store, watermarks play
-  * no role, and throughput scales with executors × index partitioning
-  * alone. This is deliberately NOT a streaming aggregation: per-query
-  * top-k needs full intra-batch semantics (window rank over the
-  * candidate set), which foreachBatch provides and append-mode
-  * streaming aggregation cannot.
+  * Shape: the streams are STATELESS — every trigger is an independent
+  * batch-semantics step (foreachBatch) against the index directory, so
+  * there is no state store, watermarks play no role, and throughput
+  * scales with executors × index partitioning alone. This is
+  * deliberately NOT a streaming aggregation: per-query top-k needs full
+  * intra-batch semantics (window rank over the candidate set), which
+  * foreachBatch provides and append-mode streaming aggregation cannot.
   */
 object StreamingSimilarity {
 
@@ -23,108 +23,45 @@ object StreamingSimilarity {
     * written as they are computed, never buffered on the driver, and
     * OVERWRITTEN per batch id so a failed-then-rerun invocation (which
     * replays the source from scratch, batch ids restarting at 0)
-    * converges to the same output instead of appending duplicates.
-    * The index frame and its dimension load ONCE, outside the loop.
+    * converges to the same output instead of appending duplicates. The
+    * index loads ONCE, outside the loop; a coarse-quantized index then
+    * reads only each batch's probed cells.
     * Blocks until all available input is processed.
     */
   def serveTopk(spark: SparkSession, srcDir: String, indexPath: String,
       outDir: String, maxFilesPerTrigger: Int = 0): Unit = {
-    import org.apache.spark.sql.functions._
-    val idx = spark.read.parquet(indexPath)
-    val dim = idx.select(size(col("u"))).first().getInt(0)
-    val reader = spark.readStream
-      .schema("vec_id LONG, embedding ARRAY<FLOAT>")
-    val src = (if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader)
-      .parquet(srcDir)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Similarity.topkAgainstLshIndex(batch, idx, dim)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
-
-  /** The same serving shape against a persisted composed IVFPQ index
-    * ([[graft.operators.Similarity.saveIvfPqIndex]] output): the tiny
-    * model state (coarse centroids, codebooks, dimension, corpus size)
-    * loads ONCE outside the loop; each micro-batch re-reads only the
-    * cell-partitioned lists/vectors WITH that batch's probed cells as
-    * partition filters — so per-trigger serving cost tracks the probed
-    * fraction, not the index size. Stateless foreachBatch like the LSH
-    * path; overwrite-per-batch-id keeps replays idempotent.
-    */
-  def serveTopkIvfPq(spark: SparkSession, srcDir: String, indexPath: String,
-      outDir: String, maxFilesPerTrigger: Int = 0): Unit = {
-    import org.apache.spark.sql.functions._
-    val coarse = spark.read.parquet(s"$indexPath/coarse").select("cell", "cu")
-    val cbs = spark.read.parquet(s"$indexPath/codebooks")
-      .select("m", "cell", "cu")
-    val dim = coarse.select(size(col("cu"))).first().getInt(0)
-    val corpusN = spark.read.parquet(s"$indexPath/vectors").count()
-    val reader = spark.readStream
-      .schema("vec_id LONG, embedding ARRAY<FLOAT>")
-    val src = (if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader)
-      .parquet(srcDir)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Similarity.topkAgainstIvfPqIndex(
-          batch, indexPath, coarse, cbs, dim, corpusN)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    val ix = VectorIndex.load(spark, indexPath)
+    run(spark, srcDir, maxFilesPerTrigger) { (batch, batchId) =>
+      VectorIndex.topk(batch, ix)
+        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+    }
   }
 
   /** ONLINE INDEX MAINTENANCE: drive a (vec_id, embedding) parquet-drop
-    * stream of NEW corpus vectors into a persisted LSH index — each
-    * micro-batch appends through
-    * [[graft.operators.Similarity.appendToLshIndex]], so a query served
-    * after batch N sees every vector ingested through batch N. The LSH
-    * family is the right target for online maintenance because its
-    * append is DRIFT-FREE (deterministic hyperplanes, no trained
-    * state): the index after any number of micro-batches is
-    * bit-identical to a from-scratch rebuild, which the spec asserts.
-    * The collision guard doubles as replay protection: re-delivery of
-    * an already-appended batch fails loudly rather than silently
-    * double-indexing (at-least-once file sources + idempotence by
-    * refusal, mirroring the quota twin's honest-contract style).
+    * stream of NEW corpus vectors into the index — each micro-batch goes
+    * through [[graft.operators.VectorIndex.append]], so a query served
+    * after batch N sees every vector ingested through batch N. The
+    * query keeps no checkpoint, so every start replays the whole
+    * source; the append's replay policy makes that safe: rows already
+    * resident with the same vector are skipped, so a restarted stream
+    * is a no-op, while a resident vec_id arriving with a different
+    * vector still fails. An `lsh` index stays bit-identical to a build
+    * over the union; the trained kinds drift until a rebuild.
     */
-  def appendStreamToLshIndex(spark: SparkSession, srcDir: String,
+  def appendStream(spark: SparkSession, srcDir: String,
       indexPath: String, maxFilesPerTrigger: Int = 0): Unit =
-    appendStream(spark, srcDir, maxFilesPerTrigger) { batch =>
-      graft.operators.Similarity.appendToLshIndex(batch, indexPath)
+    run(spark, srcDir, maxFilesPerTrigger) { (batch, _) =>
+      VectorIndex.append(batch, indexPath)
     }
 
-  /** Streaming IVF-Flat index maintenance — the same micro-batch append
-    * contract as the LSH twin (empty-trigger no-op, loud dimension /
-    * replay refusal), against the cell-partitioned flat index: each
-    * batch assigns to the immutable build-time centroids and
-    * dynamic-partition-appends only its own cells' files. Serving
-    * reads concurrent with an append see either the old or the new
-    * file set per cell (parquet append is add-only), never torn
-    * per-vector state — the flat index has one table.
-    */
-  def appendStreamToIvfFlatIndex(spark: SparkSession, srcDir: String,
-      indexPath: String, maxFilesPerTrigger: Int = 0): Unit =
-    appendStream(spark, srcDir, maxFilesPerTrigger) { batch =>
-      graft.operators.Similarity.appendToIvfFlatIndex(batch, indexPath)
-    }
-
-  private def appendStream(spark: SparkSession, srcDir: String,
-      maxFilesPerTrigger: Int)(append: DataFrame => Unit): Unit = {
+  private def run(spark: SparkSession, srcDir: String,
+      maxFilesPerTrigger: Int)(step: (DataFrame, Long) => Unit): Unit = {
     val reader = spark.readStream
       .schema("vec_id LONG, embedding ARRAY<FLOAT>")
     val src = (if (maxFilesPerTrigger > 0)
       reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader)
       .parquet(srcDir)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) => append(batch) }
-      .start()
+    val q = src.writeStream.foreachBatch(step).start()
     q.processAllAvailable()
     q.stop()
   }

@@ -10,9 +10,11 @@ import org.apache.spark.sql.Row
 class RowOrderSpec extends GraftSuite {
 
   // Query → its sort keys, each with `true` for ascending. `o4_offset`
-  // is not here: its offset skips all ten suppliers at sf0.001.
+  // is checked at sf0.01 below: its offset skips all ten suppliers at
+  // sf0.001.
   private val ordered = Seq(
-    "o1_sort" -> Seq("l_orderkey" -> true, "l_linenumber" -> true),
+    "o1_sort" -> Seq("l_orderkey" -> true, "l_linenumber" -> true,
+      "l_quantity" -> true),
     "o2_topk_recent" -> Seq("ts_us" -> false, "event_id" -> false),
     "o3_topn_value" -> Seq("value" -> false, "event_id" -> true),
     "o5_zorder" -> Seq("zkey" -> true, "l_orderkey" -> true,
@@ -32,6 +34,19 @@ class RowOrderSpec extends GraftSuite {
         assert(compareKeys(a, b, keys) <= 0, s"$name: out of order at $a, $b")
       }
     }
+  }
+
+  test("o4_offset returns the 20 suppliers after the 10 smallest keys, in key order") {
+    // the sf0.01 testdata beside sf0.001: 100 suppliers
+    val sf01 = java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
+    val keys = SparkEntry.queries("o4_offset")(spark, sf01).collect()
+      .map(_.getAs[Long]("s_suppkey")).toSeq
+    assert(keys.length == 20)
+    assert(keys.sliding(2).forall { case Seq(a, b) => a < b },
+      s"not strictly ascending: $keys")
+    val eleventh = Tables.supplier(spark, sf01).select("s_suppkey").collect()
+      .map(_.getLong(0)).sorted.apply(10)
+    assert(keys.head == eleventh)
   }
 
   test("w16_rolling_median pins nothing new when it runs again") {

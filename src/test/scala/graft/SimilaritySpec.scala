@@ -1,5 +1,12 @@
 package graft
 
+import graft.operators.VectorIndex
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{In, InSet}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.functions._
+
 class SimilaritySpec extends GraftSuite {
 
   test("derived IVF/Sem geometry at the tuned anchors matches the " +
@@ -297,86 +304,125 @@ class SimilaritySpec extends GraftSuite {
     assert(p1.flatten.forall(v => v >= -1 && v <= 1))
   }
 
-  test("LSH index save/load: a fresh session answers identically from disk") {
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("query_id", "rnk").collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-        .toSeq
-    val inSession = rows(SparkEntry.queries("ann_topk_lsh")(spark, sf))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_lsh").toString + "/index"
-    operators.Similarity.saveLshIndex(spark, sf, dir)
-    val loaded = rows(
-      operators.Similarity.annTopkLshFrom(spark.newSession(), dir))
-    assert(inSession.nonEmpty && loaded == inSession)
+  private def rows(df: DataFrame) =
+    df.orderBy("query_id", "rnk").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+      .toSeq
+
+  private def neighbors(df: DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+
+  private def tmp(prefix: String) =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** The registry queries' query set: the corpus's first 10 vectors. */
+  private def queries10(s: SparkSession = spark) =
+    Tables.embeddings(s, sf).select("vec_id", "embedding")
+      .filter(col("vec_id") < 10)
+
+  /** Writes the build half of the corpus (the queries and the even ids)
+    * under `base` and returns its dir; [[oddHalf]] is the append half.
+    */
+  private def evenHalf(base: String): String = {
+    Tables.embeddings(spark, sf)
+      .filter(col("vec_id") < 10 || col("vec_id") % 2 === 0)
+      .write.parquet(s"$base/sub/embeddings.parquet")
+    s"$base/sub"
   }
 
-  test("IVF index save/load: a fresh session answers identically from disk") {
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("query_id", "rnk").collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-        .toSeq
-    val trained = rows(SparkEntry.queries("ann_topk_ivf")(spark, sf))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivf").toString + "/index"
-    operators.Similarity.saveIvfIndex(spark, sf, dir)
-    // newSession: separate session state; the loaded path must not rely
-    // on the training session's resident centroid cache.
-    val loaded = rows(
-      operators.Similarity.annTopkIvfFrom(spark.newSession(), sf, dir))
-    assert(trained.nonEmpty && loaded == trained)
+  private def oddHalf = Tables.embeddings(spark, sf)
+    .select("vec_id", "embedding")
+    .filter(col("vec_id") >= 10 && col("vec_id") % 2 === 1)
+
+  private def serve(path: String) =
+    VectorIndex.topk(queries10(), VectorIndex.load(spark, path))
+
+  private def vectorRows(path: String) =
+    spark.read.parquet(s"$path/vectors").count()
+
+  /** Every partitioned scan in `df`'s plan carries the probed cells as
+    * a `ccell IN (...)` partition filter, so a probe reads only their
+    * partitions. The `isnotnull(ccell)` that Spark infers from the probe
+    * join does not count: it prunes nothing.
+    */
+  private def assertCcellPruned(df: DataFrame): Unit = {
+    val plan = df.queryExecution.executedPlan
+    val scans = new AdaptiveSparkPlanHelper {}.collect(plan) {
+      case f: FileSourceScanExec if f.relation.partitionSchema.nonEmpty =>
+        f.partitionFilters.exists(e =>
+          e.references.exists(_.name == "ccell") &&
+            e.exists(x => x.isInstanceOf[In] || x.isInstanceOf[InSet]))
+    }
+    assert(scans.nonEmpty && scans.forall(identity),
+      "partitioned scans must prune on the probed ccell partitions:\n" +
+        plan.toString.take(2000))
   }
+
+  /** Appending `batch` again leaves `vectors/` and `answers` unchanged;
+    * the same ids with changed vectors fail with DIFFERENT.
+    */
+  private def assertReplaySafe(path: String, batch: DataFrame)(
+      answers: => Any): Unit = {
+    val before = (vectorRows(path), answers)
+    VectorIndex.append(batch, path)
+    assert((vectorRows(path), answers) == before,
+      "a replayed append changed the index")
+    val conflict = intercept[IllegalArgumentException] {
+      VectorIndex.append(batch.withColumn("embedding",
+        transform(col("embedding"), e => e + lit(1.0f))), path)
+    }
+    assert(conflict.getMessage.contains("DIFFERENT"))
+  }
+
+  // Each kind's index, built at sf0.001 and loaded in a fresh session,
+  // answers exactly like its registry query.
+  for ((kind, query) <- Seq("lsh" -> "ann_topk_lsh",
+      "ivf_flat" -> "ann_topk_ivf", "pq" -> "ann_topk_pq",
+      "ivf_pq" -> "ann_topk_ivfpq", "sem" -> "dd_semantic"))
+    test(s"VectorIndex $kind: a fresh session serves $query's answer " +
+        "from disk") {
+      val dir = tmp(s"graft_$kind") + "/index"
+      VectorIndex.build(spark, sf, dir, kind)
+      // newSession: separate session state; the loaded index must not
+      // rely on the building session's resident model caches.
+      val fresh = spark.newSession()
+      val ix = VectorIndex.load(fresh, dir)
+      val registered = SparkEntry.queries(query)(spark, sf)
+      if (kind == "sem") {
+        def triples(df: DataFrame) = df.orderBy("id_a", "id_b").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+        val want = triples(registered)
+        assert(want.nonEmpty && triples(VectorIndex.pairs(ix)) == want)
+      } else {
+        val served = VectorIndex.topk(queries10(fresh), ix)
+        val want = rows(registered)
+        assert(want.nonEmpty && rows(served) == want)
+        if (kind == "ivf_pq") assertCcellPruned(served)
+      }
+    }
 
   test("streaming LSH serving equals the batch answer across micro-batches") {
-    import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files.createTempDirectory("graft_serve").toString
-    operators.Similarity.saveLshIndex(spark, sf, s"$base/index")
+    val base = tmp("graft_serve")
+    VectorIndex.build(spark, sf, s"$base/index", "lsh")
     // 4 source files → 4 micro-batches with maxFilesPerTrigger=1
     Tables.embeddings(spark, sf).select("vec_id", "embedding")
       .repartition(4).write.parquet(s"$base/src")
     streaming.StreamingSimilarity.serveTopk(spark, s"$base/src",
       s"$base/index", s"$base/out", maxFilesPerTrigger = 1)
-    val streamed = spark.read.parquet(s"$base/out")
-      .orderBy("query_id", "rnk").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
+    val streamed = rows(spark.read.parquet(s"$base/out"))
     // batch twin: the same serving entry fed the whole table at once
-    val batch = operators.Similarity.topkAgainstLshIndex(
+    val batch = rows(VectorIndex.topk(
       Tables.embeddings(spark, sf).select("vec_id", "embedding"),
-      s"$base/index")
-      .orderBy("query_id", "rnk").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
+      VectorIndex.load(spark, s"$base/index")))
     assert(streamed.nonEmpty && streamed == batch)
     // every corpus vector was answered
     assert(streamed.map(_._1).distinct.length ==
       Tables.embeddings(spark, sf).count())
   }
 
-  test("IVFPQ index round-trip: serves identically from disk; probe scan is partition-pruned") {
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("query_id", "rnk").collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-        .toSeq
-    val trained = rows(SparkEntry.queries("ann_topk_ivfpq")(spark, sf))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq").toString + "/index"
-    operators.Similarity.saveIvfPqIndex(spark, sf, dir)
-    val served = operators.Similarity.annTopkIvfPqFrom(spark.newSession(), sf, dir)
-    assert(trained.nonEmpty && rows(served) == trained)
-    // the 100 TB claim made real: the inverted-lists scan carries the
-    // probed cells as PARTITION filters (partitionBy(ccell) layout +
-    // literal isin), so non-probed cells' files are never read
-    val plan = operators.Similarity.annTopkIvfPqFrom(spark, sf, dir)
-      .queryExecution.executedPlan.toString
-    val pf = plan.linesIterator.filter(_.contains("PartitionFilters:")).toSeq
-    assert(pf.exists(_.contains("ccell")),
-      "lists scan must prune on the probed ccell partitions:\n" +
-        plan.take(2000))
-  }
-
   test("streaming IVFPQ serving equals the batch answer across micro-batches") {
-    import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files.createTempDirectory("graft_ivfpq_serve").toString
-    operators.Similarity.saveIvfPqIndex(spark, sf, s"$base/index")
+    val base = tmp("graft_ivfpq_serve")
+    VectorIndex.build(spark, sf, s"$base/index", "ivf_pq")
     // 4 source files → 4 micro-batches with maxFilesPerTrigger=1
     Tables.embeddings(spark, sf).select("vec_id", "embedding")
       .repartition(4).write.parquet(s"$base/src")
@@ -384,19 +430,15 @@ class SimilaritySpec extends GraftSuite {
     // serving path would add one registry entry per micro-batch for
     // the life of the context (each batch's plan is distinct)
     val persistedBefore = spark.sparkContext.getPersistentRDDs.size
-    streaming.StreamingSimilarity.serveTopkIvfPq(spark, s"$base/src",
+    streaming.StreamingSimilarity.serveTopk(spark, s"$base/src",
       s"$base/index", s"$base/out", maxFilesPerTrigger = 1)
     assert(spark.sparkContext.getPersistentRDDs.size == persistedBefore,
       "streaming IVFPQ serving grew the persisted-RDD registry")
-    val streamed = spark.read.parquet(s"$base/out")
-      .orderBy("query_id", "rnk").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
+    val streamed = rows(spark.read.parquet(s"$base/out"))
     // batch twin: the same serving entry fed the whole table at once
-    val batch = operators.Similarity.topkAgainstIvfPqIndex(
+    val batch = rows(VectorIndex.topk(
       Tables.embeddings(spark, sf).select("vec_id", "embedding"),
-      s"$base/index")
-      .orderBy("query_id", "rnk").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
+      VectorIndex.load(spark, s"$base/index")))
     assert(streamed.nonEmpty && streamed == batch)
     // every corpus vector was answered, from the index alone (the
     // corpus parquet is not an input to either serving call)
@@ -404,79 +446,41 @@ class SimilaritySpec extends GraftSuite {
       Tables.embeddings(spark, sf).count())
     // and the standard-query batch reproduces the registered query's
     // reranked answers (same models, same rerank budget)
-    val viaIndex = operators.Similarity.topkAgainstIvfPqIndex(
-      Tables.embeddings(spark, sf).select("vec_id", "embedding")
-        .filter(col("vec_id") < 10), s"$base/index")
-      .orderBy("query_id", "rnk").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-      .toSeq
-    val registered = SparkEntry.queries("ann_topk_ivfpq")(spark, sf)
-      .orderBy("query_id", "rnk").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-      .toSeq
-    assert(viaIndex == registered)
+    assert(rows(serve(s"$base/index")) ==
+      rows(SparkEntry.queries("ann_topk_ivfpq")(spark, sf)))
   }
 
   test("IVF-Flat index: external serving equals the in-session IVF answer; probes are partition-pruned") {
-    import org.apache.spark.sql.functions._
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("query_id", "rnk").collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-        .toSeq
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivfflat").toString + "/index"
-    operators.Similarity.saveIvfFlatIndex(spark, sf, dir)
+    val dir = tmp("graft_ivfflat") + "/index"
+    VectorIndex.build(spark, sf, dir, "ivf_flat")
     // same centroids, same derived probe width, exact scoring → the
     // self-contained serving entry answers bit-identically to the
     // in-session (corpus-reading) IVF query for the standard queries
     val trained = rows(SparkEntry.queries("ann_topk_ivf")(spark, sf))
-    val served = operators.Similarity.topkAgainstIvfFlatIndex(
-      Tables.embeddings(spark, sf).select("vec_id", "embedding")
-        .filter(col("vec_id") < 10), dir)
+    val served = serve(dir)
     assert(trained.nonEmpty && rows(served) == trained)
-    // the probed cells reach the vectors scan as PARTITION filters
-    val plan = operators.Similarity.topkAgainstIvfFlatIndex(
-      Tables.embeddings(spark, sf).select("vec_id", "embedding")
-        .filter(col("vec_id") < 10), dir)
-      .queryExecution.executedPlan.toString
-    assert(plan.linesIterator.filter(_.contains("PartitionFilters:"))
-      .exists(_.contains("ccell")),
-      "vectors scan must prune on the probed ccell partitions:\n" +
-        plan.take(2000))
+    assertCcellPruned(served)
   }
 
   test("IVF-Flat append: appended vectors serve exactly with no retrain; guards fire") {
-    import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_ivfflat_append").toString
-    val all = Tables.embeddings(spark, sf).select("vec_id", "embedding")
-    Tables.embeddings(spark, sf)
-      .filter(col("vec_id") < 10 || col("vec_id") % 2 === 0)
-      .write.parquet(s"$base/sub/embeddings.parquet")
-    operators.Similarity.saveIvfFlatIndex(spark, s"$base/sub", s"$base/index")
-    val appendBatch = all.filter(col("vec_id") >= 10 && col("vec_id") % 2 === 1)
-    operators.Similarity.appendToIvfFlatIndex(appendBatch, s"$base/index")
-    val served = operators.Similarity.topkAgainstIvfFlatIndex(
-      all.filter(col("vec_id") < 10), s"$base/index")
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+    val base = tmp("graft_ivfflat_append")
+    VectorIndex.build(spark, evenHalf(base), s"$base/index", "ivf_flat")
+    VectorIndex.append(oddHalf, s"$base/index")
+    val served = neighbors(serve(s"$base/index"))
     assert(served.exists(_._2 % 2 == 1),
       "no appended (odd) vector ever served as a neighbor")
     // flat scoring has no quantization drift, so the appended index's
     // only recall loss vs a full build is cell-boundary drift (probes
     // chosen against centroids trained on half the corpus) — it should
     // meet or beat the composed IVFPQ appended-index floor
-    val exact = SparkEntry.queries("ann_topk_exact")(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+    val exact = neighbors(SparkEntry.queries("ann_topk_exact")(spark, sf))
     val recall = served.count(exact.contains).toDouble / exact.size
     info(f"appended IVF-Flat serving recall: $recall%.3f")
     assert(recall >= 0.7, s"appended IVF-Flat serving recall $recall")
-    val clash = intercept[IllegalArgumentException] {
-      operators.Similarity.appendToIvfFlatIndex(appendBatch, s"$base/index")
-    }
-    assert(clash.getMessage.contains("duplicate"))
+    assertReplaySafe(s"$base/index", oddHalf)(rows(serve(s"$base/index")))
     val badDim = intercept[IllegalArgumentException] {
-      operators.Similarity.appendToIvfFlatIndex(
-        appendBatch.withColumn("embedding",
+      VectorIndex.append(
+        oddHalf.withColumn("embedding",
           slice(col("embedding"), 1, 3)).withColumn("vec_id",
           col("vec_id") + 500000L), s"$base/index")
     }
@@ -484,24 +488,16 @@ class SimilaritySpec extends GraftSuite {
   }
 
   test("IVFPQ append: new vectors serve with no retrain; collision guard fires") {
-    import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_append").toString
+    val base = tmp("graft_ivfpq_append")
     // build the index on HALF the corpus (queries + even ids), then
     // append the odd ids — centroids/codebooks are trained only on the
     // build half, the drift case the append contract documents
-    val all = Tables.embeddings(spark, sf).select("vec_id", "embedding")
-    // keep the full contract schema (label included) in the sub-corpus
-    Tables.embeddings(spark, sf)
-      .filter(col("vec_id") < 10 || col("vec_id") % 2 === 0)
-      .write.parquet(s"$base/sub/embeddings.parquet")
-    operators.Similarity.saveIvfPqIndex(spark, s"$base/sub", s"$base/index")
-    val appendBatch = all.filter(col("vec_id") >= 10 && col("vec_id") % 2 === 1)
-    operators.Similarity.appendToIvfPqIndex(appendBatch, s"$base/index")
-    val served = operators.Similarity.topkAgainstIvfPqIndex(
-      all.filter(col("vec_id") < 10), s"$base/index")
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    // appended vectors are reachable: some served neighbor is odd
+    VectorIndex.build(spark, evenHalf(base), s"$base/index", "ivf_pq")
+    VectorIndex.append(oddHalf, s"$base/index")
+    val served = neighbors(serve(s"$base/index"))
+    // appended vectors are reachable: some served neighbor is odd (the
+    // rerank reads the index's own vectors table, so odd ids — absent
+    // from the build dir — can win rerank slots)
     assert(served.exists(_._2 % 2 == 1),
       "no appended (odd) vector ever served as a neighbor")
     // serving recall vs the exact scan over the FULL corpus despite
@@ -513,79 +509,48 @@ class SimilaritySpec extends GraftSuite {
     // — the MEANINGFUL drift measurement is RecallSweep append:/
     // rebuild: at sf0.1 (round 10: append 0.78, rebuild recovers
     // 0.92). Here we only pin that drift hasn't collapsed.
-    val exact = SparkEntry.queries("ann_topk_exact")(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+    val exact = neighbors(SparkEntry.queries("ann_topk_exact")(spark, sf))
     val recall = served.count(exact.contains).toDouble / exact.size
     info(f"appended-index serving recall: $recall%.3f")
     assert(recall >= 0.55, s"appended-index serving recall $recall")
-    // appending the same ids again must fail loudly, not duplicate
-    val clash = intercept[IllegalArgumentException] {
-      operators.Similarity.appendToIvfPqIndex(appendBatch, s"$base/index")
-    }
-    assert(clash.getMessage.contains("duplicate"))
-    // the CORPUS-QUERY serving entry sees appended vectors too: its
-    // rerank reads the index's own vectors table, so odd ids (absent
-    // from the build dir the queries come from) can win rerank slots
-    val fromEntry = operators.Similarity.annTopkIvfPqFrom(
-      spark, s"$base/sub", s"$base/index")
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    assert(fromEntry.exists(_._2 % 2 == 1),
-      "annTopkIvfPqFrom never served an appended (odd) neighbor")
+    // appending the same ids again is a no-op; changed vectors fail
+    assertReplaySafe(s"$base/index", oddHalf)(rows(serve(s"$base/index")))
     // torn-append detection: a vectors row with no code rows breaks the
-    // PqM-rows-per-vector invariant; every index-load entry refuses to
-    // serve rather than silently dropping rerank candidates
+    // PqM-rows-per-vector invariant; loading (and so serving and
+    // appending) refuses rather than silently dropping rerank candidates
     spark.read.parquet(s"$base/index/vectors").limit(1)
       .withColumn("vec_id", col("vec_id") + 1000000L)
       .write.mode("append").partitionBy("ccell")
       .parquet(s"$base/index/vectors")
     val torn = intercept[IllegalArgumentException] {
-      operators.Similarity.topkAgainstIvfPqIndex(
-        all.filter(col("vec_id") < 10), s"$base/index")
+      VectorIndex.load(spark, s"$base/index")
     }
     assert(torn.getMessage.contains("torn"))
-    val tornFrom = intercept[IllegalArgumentException] {
-      operators.Similarity.annTopkIvfPqFrom(
-        spark, s"$base/sub", s"$base/index")
+    val tornAppend = intercept[IllegalArgumentException] {
+      VectorIndex.append(oddHalf, s"$base/index")
     }
-    assert(tornFrom.getMessage.contains("torn"))
+    assert(tornAppend.getMessage.contains("torn"))
   }
 
   test("IVFPQ rebuild: retrains on the resident population; recall recovers from append drift") {
-    import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_rebuild").toString
-    val all = Tables.embeddings(spark, sf).select("vec_id", "embedding")
-    Tables.embeddings(spark, sf)
-      .filter(col("vec_id") < 10 || col("vec_id") % 2 === 0)
-      .write.parquet(s"$base/sub/embeddings.parquet")
-    operators.Similarity.saveIvfPqIndex(spark, s"$base/sub", s"$base/index")
-    operators.Similarity.appendToIvfPqIndex(
-      all.filter(col("vec_id") >= 10 && col("vec_id") % 2 === 1),
-      s"$base/index")
-    val queries10 = all.filter(col("vec_id") < 10)
-    val appended = operators.Similarity.topkAgainstIvfPqIndex(
-      queries10, s"$base/index")
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+    val base = tmp("graft_ivfpq_rebuild")
+    VectorIndex.build(spark, evenHalf(base), s"$base/index", "ivf_pq")
+    VectorIndex.append(oddHalf, s"$base/index")
+    val appended = neighbors(serve(s"$base/index"))
     // in-place rebuild is refused: readers of the old path must never
     // see a half-written layout
     val inPlace = intercept[IllegalArgumentException] {
-      operators.Similarity.rebuildIvfPqIndex(
-        spark, s"$base/index", s"$base/index")
+      VectorIndex.rebuild(spark, s"$base/index", s"$base/index")
     }
     assert(inPlace.getMessage.contains("FRESH"))
-    operators.Similarity.rebuildIvfPqIndex(
-      spark, s"$base/index", s"$base/index2")
+    VectorIndex.rebuild(spark, s"$base/index", s"$base/index2")
     // the fresh index holds the ENTIRE resident population (both
-    // halves), consistently (serving runs the torn-index check)
-    assert(spark.read.parquet(s"$base/index2/vectors").count() ==
-      spark.read.parquet(s"$base/index/vectors").count())
-    val rebuilt = operators.Similarity.topkAgainstIvfPqIndex(
-      queries10, s"$base/index2")
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+    // halves), consistently (loading runs the torn-index check)
+    assert(vectorRows(s"$base/index2") == vectorRows(s"$base/index"))
+    val rebuilt = neighbors(serve(s"$base/index2"))
     assert(rebuilt.exists(_._2 % 2 == 1),
       "rebuilt index never served a formerly-appended (odd) neighbor")
-    val exact = SparkEntry.queries("ann_topk_exact")(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+    val exact = neighbors(SparkEntry.queries("ann_topk_exact")(spark, sf))
     val rAppend = appended.count(exact.contains).toDouble / exact.size
     val rRebuild = rebuilt.count(exact.contains).toDouble / exact.size
     info(f"appended recall $rAppend%.3f -> rebuilt recall $rRebuild%.3f")
@@ -598,52 +563,27 @@ class SimilaritySpec extends GraftSuite {
   }
 
   test("IVF-Flat rebuild: fresh index serves the full resident population") {
-    import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_ivfflat_rebuild").toString
-    val all = Tables.embeddings(spark, sf).select("vec_id", "embedding")
-    Tables.embeddings(spark, sf)
-      .filter(col("vec_id") < 10 || col("vec_id") % 2 === 0)
-      .write.parquet(s"$base/sub/embeddings.parquet")
-    operators.Similarity.saveIvfFlatIndex(spark, s"$base/sub", s"$base/index")
-    operators.Similarity.appendToIvfFlatIndex(
-      all.filter(col("vec_id") >= 10 && col("vec_id") % 2 === 1),
-      s"$base/index")
-    operators.Similarity.rebuildIvfFlatIndex(
-      spark, s"$base/index", s"$base/index2")
-    assert(spark.read.parquet(s"$base/index2/vectors").count() ==
-      spark.read.parquet(s"$base/index/vectors").count())
-    val served = operators.Similarity.topkAgainstIvfFlatIndex(
-      all.filter(col("vec_id") < 10), s"$base/index2")
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+    val base = tmp("graft_ivfflat_rebuild")
+    VectorIndex.build(spark, evenHalf(base), s"$base/index", "ivf_flat")
+    VectorIndex.append(oddHalf, s"$base/index")
+    VectorIndex.rebuild(spark, s"$base/index", s"$base/index2")
+    assert(vectorRows(s"$base/index2") == vectorRows(s"$base/index"))
+    val served = neighbors(serve(s"$base/index2"))
     assert(served.exists(_._2 % 2 == 1),
       "rebuilt IVF-Flat index never served a formerly-appended neighbor")
-    val exact = SparkEntry.queries("ann_topk_exact")(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+    val exact = neighbors(SparkEntry.queries("ann_topk_exact")(spark, sf))
     val recall = served.count(exact.contains).toDouble / exact.size
     info(f"rebuilt IVF-Flat serving recall: $recall%.3f")
     assert(recall >= 0.7, f"rebuilt IVF-Flat serving recall $recall%.3f")
   }
 
-  test("SemDeDup persisted index: serve is bit-identical to in-session; " +
-      "append dedups cross-batch; rebuild refreshes a stale index") {
-    import org.apache.spark.sql.functions._
-    def pairSet(df: org.apache.spark.sql.DataFrame) = df.collect()
+  test("SemDeDup index: cross-batch append, no-op replay, rebuild of a " +
+      "stale index") {
+    def pairSet(df: DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_semdedup_index").toString
-    // Build on the full corpus: same cached centroids, same assignment,
-    // same blocked pair join → the index serve answers bit-identically
-    // to the in-session dd_semantic (doubles round-trip parquet exactly).
-    operators.Similarity.saveSemDedupIndex(spark, sf, s"$base/index")
-    val inSession = SparkEntry.queries("dd_semantic")(spark, sf)
-      .orderBy("id_a", "id_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val served = operators.Similarity
-      .semanticPairsAgainstIndex(spark, s"$base/index")
-      .orderBy("id_a", "id_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(inSession.nonEmpty && served == inSession)
+    def served(path: String) =
+      pairSet(VectorIndex.pairs(VectorIndex.load(spark, path)))
+    val base = tmp("graft_semdedup_index")
     // Incremental lifecycle: build on the even half, append the odd
     // half WITHOUT retraining — the serve must then find pairs that
     // straddle the two batches (the point of an incremental dedup
@@ -651,12 +591,11 @@ class SimilaritySpec extends GraftSuite {
     val all = Tables.embeddings(spark, sf)
     all.filter(col("vec_id") % 2 === 0)
       .write.parquet(s"$base/sub/embeddings.parquet")
-    operators.Similarity.saveSemDedupIndex(spark, s"$base/sub", s"$base/inc")
-    operators.Similarity.appendToSemDedupIndex(
-      all.filter(col("vec_id") % 2 === 1).select("vec_id", "embedding"),
-      s"$base/inc")
-    val incr = pairSet(operators.Similarity
-      .semanticPairsAgainstIndex(spark, s"$base/inc"))
+    val odd = all.filter(col("vec_id") % 2 === 1)
+      .select("vec_id", "embedding")
+    VectorIndex.build(spark, s"$base/sub", s"$base/inc", "sem")
+    VectorIndex.append(odd, s"$base/inc")
+    val incr = served(s"$base/inc")
     val exact = pairSet(SparkEntry.queries("dd_cosine_neardup")(spark, sf))
     assert(incr.subsetOf(exact), s"phantom pairs: ${incr.diff(exact)}")
     assert(incr.exists { case (a, b) => a % 2 != b % 2 },
@@ -665,29 +604,11 @@ class SimilaritySpec extends GraftSuite {
     // at-least-once ingest replay after a crash between the parquet
     // commit and the caller's offset commit) is a committed no-op —
     // assignment rows and serve results unchanged, read straight from
-    // disk (not through any session cache).
-    val beforeRows = spark.read.parquet(s"$base/inc/assignments").count()
-    operators.Similarity.appendToSemDedupIndex(
-      all.filter(col("vec_id") % 2 === 1).select("vec_id", "embedding"),
-      s"$base/inc")
-    assert(spark.read.parquet(s"$base/inc/assignments").count()
-      == beforeRows, "replayed append changed the index")
-    assert(pairSet(operators.Similarity
-      .semanticPairsAgainstIndex(spark, s"$base/inc")) == incr,
-      "replayed append changed serve results")
-    // A resident vec_id carrying a DIFFERENT vector is corruption, not
-    // replay — still loud.
-    val conflict = intercept[IllegalArgumentException] {
-      operators.Similarity.appendToSemDedupIndex(
-        all.filter(col("vec_id") % 2 === 1)
-          .select(col("vec_id"),
-            transform(col("embedding"), e => e + lit(1.0f))
-              .as("embedding")),
-        s"$base/inc")
-    }
-    assert(conflict.getMessage.contains("DIFFERENT"))
+    // disk; a resident vec_id carrying a DIFFERENT vector is
+    // corruption, not replay — still loud.
+    assertReplaySafe(s"$base/inc", odd)(served(s"$base/inc"))
     val badDim = intercept[IllegalArgumentException] {
-      operators.Similarity.appendToSemDedupIndex(
+      VectorIndex.append(
         all.select(col("vec_id") + 500000L as "vec_id",
           slice(col("embedding"), 1, 3).as("embedding")),
         s"$base/inc")
@@ -697,22 +618,18 @@ class SimilaritySpec extends GraftSuite {
     // retrains on the FULL resident population (both batches) and must
     // recover at least the drifted index's recall, still sound.
     val inPlace = intercept[IllegalArgumentException] {
-      operators.Similarity.rebuildSemDedupIndex(
-        spark, s"$base/inc", s"$base/inc")
+      VectorIndex.rebuild(spark, s"$base/inc", s"$base/inc")
     }
     assert(inPlace.getMessage.contains("FRESH"))
-    operators.Similarity.rebuildSemDedupIndex(
-      spark, s"$base/inc", s"$base/inc2")
-    assert(spark.read.parquet(s"$base/inc2/assignments")
+    VectorIndex.rebuild(spark, s"$base/inc", s"$base/inc2")
+    assert(spark.read.parquet(s"$base/inc2/vectors")
       .select("vec_id").distinct().count() == all.count())
-    val rebuilt = pairSet(operators.Similarity
-      .semanticPairsAgainstIndex(spark, s"$base/inc2"))
+    val rebuilt = served(s"$base/inc2")
     assert(rebuilt.subsetOf(exact), s"phantom pairs: ${rebuilt.diff(exact)}")
     val rIncr = incr.size.toDouble / exact.size
     val rRebuilt = rebuilt.size.toDouble / exact.size
     info(f"SemDeDup index recall: appended $rIncr%.3f -> " +
-      f"rebuilt $rRebuilt%.3f (in-session ${
-        inSession.size.toDouble / exact.size}%.3f)")
+      f"rebuilt $rRebuilt%.3f")
     assert(rRebuilt >= rIncr - 0.01,
       f"rebuild lost recall: $rIncr%.3f -> $rRebuilt%.3f")
     // A PARTIAL replay (some rows already resident, some new — a torn
@@ -723,13 +640,11 @@ class SimilaritySpec extends GraftSuite {
     // rebuilt index re-normalizes its residents, so upstream ingest
     // offsets pair with the generation they loaded into — replaying an
     // old generation's batch into a new one is a conflict, correctly).
-    operators.Similarity.appendToSemDedupIndex(
-      all.filter(col("vec_id") % 2 === 1).select("vec_id", "embedding")
-        .unionByName(all.orderBy("vec_id").limit(1)
-          .select((col("vec_id") + 998244L).as("vec_id"),
-            col("embedding"))),
+    VectorIndex.append(
+      odd.unionByName(all.orderBy("vec_id").limit(1)
+        .select((col("vec_id") + 998244L).as("vec_id"), col("embedding"))),
       s"$base/inc")
-    val afterPartial = spark.read.parquet(s"$base/inc/assignments")
+    val afterPartial = spark.read.parquet(s"$base/inc/vectors")
       .select("vec_id").distinct().count()
     assert(afterPartial == all.count() + 1,
       s"partial replay: expected exactly one new vec_id, got " +
@@ -737,82 +652,61 @@ class SimilaritySpec extends GraftSuite {
   }
 
   test("LSH append: appended index is bit-identical to a rebuild over the union") {
-    import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_lsh_append").toString
-    Tables.embeddings(spark, sf)
-      .filter(col("vec_id") < 10 || col("vec_id") % 2 === 0)
-      .write.parquet(s"$base/sub/embeddings.parquet")
-    operators.Similarity.saveLshIndex(spark, s"$base/sub", s"$base/index")
-    val appendBatch = Tables.embeddings(spark, sf)
-      .select("vec_id", "embedding")
-      .filter(col("vec_id") >= 10 && col("vec_id") % 2 === 1)
-    operators.Similarity.appendToLshIndex(appendBatch, s"$base/index")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("query_id", "rnk").collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-        .toSeq
+    val base = tmp("graft_lsh_append")
+    VectorIndex.build(spark, evenHalf(base), s"$base/index", "lsh")
+    VectorIndex.append(oddHalf, s"$base/index")
     // no trained state → appended serving equals the full-corpus build
-    val appended = rows(
-      operators.Similarity.annTopkLshFrom(spark, s"$base/index"))
+    val appended = rows(serve(s"$base/index"))
     val rebuilt = rows(SparkEntry.queries("ann_topk_lsh")(spark, sf))
     assert(appended.nonEmpty && appended == rebuilt)
-    val clash = intercept[IllegalArgumentException] {
-      operators.Similarity.appendToLshIndex(appendBatch, s"$base/index")
-    }
-    assert(clash.getMessage.contains("duplicate"))
+    assertReplaySafe(s"$base/index", oddHalf)(rows(serve(s"$base/index")))
   }
 
   test("streaming LSH index maintenance: micro-batch appends equal a rebuild") {
-    import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_lsh_stream_append").toString
-    Tables.embeddings(spark, sf)
-      .filter(col("vec_id") < 10 || col("vec_id") % 2 === 0)
-      .write.parquet(s"$base/sub/embeddings.parquet")
-    operators.Similarity.saveLshIndex(spark, s"$base/sub", s"$base/index")
+    val base = tmp("graft_lsh_stream_append")
+    VectorIndex.build(spark, evenHalf(base), s"$base/index", "lsh")
     // the odd half arrives as a 3-file stream → 3 append micro-batches
-    Tables.embeddings(spark, sf).select("vec_id", "embedding")
-      .filter(col("vec_id") >= 10 && col("vec_id") % 2 === 1)
-      .repartition(3).write.parquet(s"$base/src")
-    streaming.StreamingSimilarity.appendStreamToLshIndex(spark,
+    oddHalf.repartition(3).write.parquet(s"$base/src")
+    streaming.StreamingSimilarity.appendStream(spark,
       s"$base/src", s"$base/index", maxFilesPerTrigger = 1)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("query_id", "rnk").collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-        .toSeq
-    val maintained = rows(
-      operators.Similarity.annTopkLshFrom(spark, s"$base/index"))
+    val maintained = rows(serve(s"$base/index"))
     val rebuilt = rows(SparkEntry.queries("ann_topk_lsh")(spark, sf))
     assert(maintained.nonEmpty && maintained == rebuilt)
   }
 
   test("streaming IVF-Flat index maintenance: micro-batch appends serve like one batch append") {
-    import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_ivfflat_stream").toString
-    Tables.embeddings(spark, sf)
-      .filter(col("vec_id") < 10 || col("vec_id") % 2 === 0)
-      .write.parquet(s"$base/sub/embeddings.parquet")
-    operators.Similarity.saveIvfFlatIndex(spark, s"$base/sub", s"$base/s_idx")
-    operators.Similarity.saveIvfFlatIndex(spark, s"$base/sub", s"$base/b_idx")
-    val odds = Tables.embeddings(spark, sf).select("vec_id", "embedding")
-      .filter(col("vec_id") >= 10 && col("vec_id") % 2 === 1)
-    odds.repartition(3).write.parquet(s"$base/src")
+    val base = tmp("graft_ivfflat_stream")
+    val sub = evenHalf(base)
+    VectorIndex.build(spark, sub, s"$base/s_idx", "ivf_flat")
+    VectorIndex.build(spark, sub, s"$base/b_idx", "ivf_flat")
+    oddHalf.repartition(3).write.parquet(s"$base/src")
     // stream: 3 append micro-batches; batch: one append of the same rows
-    streaming.StreamingSimilarity.appendStreamToIvfFlatIndex(spark,
+    streaming.StreamingSimilarity.appendStream(spark,
       s"$base/src", s"$base/s_idx", maxFilesPerTrigger = 1)
-    operators.Similarity.appendToIvfFlatIndex(odds, s"$base/b_idx")
-    def rows(idx: String) = operators.Similarity.topkAgainstIvfFlatIndex(
-      Tables.embeddings(spark, sf).select("vec_id", "embedding")
-        .filter(col("vec_id") < 10), idx)
-      .orderBy("query_id", "rnk").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-      .toSeq
-    val streamed = rows(s"$base/s_idx")
+    VectorIndex.append(oddHalf, s"$base/b_idx")
+    val streamed = rows(serve(s"$base/s_idx"))
     // assignment to immutable centroids is per-row, so micro-batch
     // partitioning cannot change the maintained index's answers
-    assert(streamed.nonEmpty && streamed == rows(s"$base/b_idx"))
+    assert(streamed.nonEmpty && streamed == rows(serve(s"$base/b_idx")))
+  }
+
+  test("a restarted append stream is a no-op for lsh and ivf_flat indexes") {
+    // The append stream keeps no checkpoint, so a second start replays
+    // the whole source; every replayed row is resident already.
+    val base = tmp("graft_stream_restart")
+    val sub = evenHalf(base)
+    oddHalf.repartition(3).write.parquet(s"$base/src")
+    for (kind <- Seq("lsh", "ivf_flat")) {
+      val path = s"$base/$kind"
+      VectorIndex.build(spark, sub, path, kind)
+      def appendAll(): (Long, Seq[(Long, Int, Long, Double)]) = {
+        streaming.StreamingSimilarity.appendStream(spark,
+          s"$base/src", path, maxFilesPerTrigger = 1)
+        (vectorRows(path), rows(serve(path)))
+      }
+      val first = appendAll()
+      assert(appendAll() == first, s"restarting the $kind stream changed it")
+    }
   }
 
   test("sim_outliers: flag matches the sign, every vector scored once, outliers exist") {
@@ -828,20 +722,6 @@ class SimilaritySpec extends GraftSuite {
     }
     val frac = rows.count(_._4).toDouble / rows.length
     assert(frac > 0.01 && frac < 0.6, s"outlier fraction $frac implausible")
-  }
-
-  test("PQ index round-trip: a fresh session serves bit-identically from disk") {
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("query_id", "rnk").collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-        .toSeq
-    val trained = rows(SparkEntry.queries("ann_topk_pq")(spark, sf))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_pq").toString + "/index"
-    operators.Similarity.savePqIndex(spark, sf, dir)
-    val loaded = rows(
-      operators.Similarity.annTopkPqFrom(spark.newSession(), sf, dir))
-    assert(trained.nonEmpty && loaded == trained)
   }
 
   test("embedding spectrum: valid covariance eigenvalues; corpus is isotropic (the OPQ no-go)") {
