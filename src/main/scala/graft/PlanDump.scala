@@ -53,7 +53,7 @@ object PlanDump {
     val built = System.nanoTime() - t0
     // Explain a separate QueryExecution of the same analyzed plan, in
     // the frame's own session (a query may build in a session clone with
-    // its own temp views and optimizer rules): the frame's own
+    // its own confs and optimizer rules): the frame's own
     // QueryExecution would carry the optimized and physical plan into
     // the drain, taking planning out of the timed wall.
     val txt = df.sparkSession.sessionState

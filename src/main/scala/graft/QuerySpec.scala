@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Everything the repo knows about one registered query, in one record:
   * how to build it, how its output is checked, and how the growth gate
@@ -14,6 +14,12 @@ final case class QuerySpec(name: String, build: Query, check: Check,
     growth: Option[Growth] = None)
 
 object QuerySpec {
+  /** A query stated once: `text` is both its Spark build and its
+    * DuckDB oracle.
+    */
+  def sql(name: String, text: String, growth: Option[Growth] = None): QuerySpec =
+    QuerySpec(name, SqlText(text), Oracle(text), growth)
+
   /** Name → spec. Throws on a duplicate name: two same-named entries
     * would otherwise silently shadow each other.
     */
@@ -25,6 +31,13 @@ object QuerySpec {
       s"duplicate query name(s): ${dups.toSeq.sorted.mkString(", ")}")
     specs.map(s => s.name -> s).toMap
   }
+}
+
+/** The build of a query whose Spark form is one SQL text, run by
+  * [[Tables.sql]]; a value, so a spec can tell it from a Scala body.
+  */
+final case class SqlText(text: String) extends Query {
+  def apply(s: SparkSession, d: String): DataFrame = Tables.sql(s, d, text)
 }
 
 /** How a query's output is checked. */

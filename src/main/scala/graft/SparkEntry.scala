@@ -5,9 +5,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * The query registry: one [[QuerySpec]] per query, declared in the
-  * module that builds it. Every entry whose check is an [[Oracle]] is
-  * differentially checked against DuckDB running the oracle SQL on the
-  * same parquet tables (sorted columns, sorted rows, hashed values) —
+  * module that builds it. A query is built one of two ways. Where
+  * Spark SQL runs the oracle's own text, that text is the build
+  * ([[QuerySpec.sql]] → [[SqlText]], run by [[Tables.sql]] over the
+  * dir's tables), so the query is stated once. Otherwise the build is
+  * a Scala body: the operator under test, a plan pinned by the
+  * benchmark, or a form the text cannot match (SqlTextRatchetSpec
+  * names each one whose oracle text Spark could run).
+  *
+  * Every entry whose check is an [[Oracle]] is differentially checked
+  * against DuckDB running the oracle SQL on the same parquet tables
+  * (sorted columns, sorted rows, hashed values) —
   * column names are kept identical by construction (see package object
   * `graft` for the determinism helpers). Row order is part of a
   * query's result only for the top-k/limit queries, the sort operators

@@ -3,6 +3,10 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias,
+  UnresolvedWith}
+import org.apache.spark.sql.graftglue.Glue
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.types._
 
@@ -61,6 +65,46 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame    = apply(s, d, "events")
   def documents(s: SparkSession, d: String): DataFrame = apply(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")
+
+  /** One SQL text over the tables of `sfDir`: the build of every query
+    * whose Spark form is its oracle's own text. Each single-part relation
+    * named in [[names]] becomes that table's loaded plan, so no temp view
+    * is registered and two dirs can be built in one session. A
+    * nanos-encoded events scan keeps its [[eventsFrom]] clone's conf, as
+    * a scan reads through its relation's session. A CTE that shadows a
+    * table, or a relation that is neither a table nor a CTE, is refused
+    * by name: it would otherwise resolve against whatever the caller's
+    * catalog holds.
+    */
+  def sql(spark: SparkSession, sfDir: String, text: String): DataFrame = {
+    val parsed = Glue.parsePlan(spark, text)
+    // CTE bodies sit in `cteRelations`, which are not children: every
+    // walk over the plan descends into them by hand.
+    def refs(p: LogicalPlan): Seq[Either[String, Seq[String]]] =
+      p.collectWithSubqueries {
+        case w: UnresolvedWith =>
+          w.cteRelations.flatMap { case (n, q, _) => Left(n) +: refs(q) }
+        case r: UnresolvedRelation => Seq(Right(r.multipartIdentifier))
+      }.flatten
+    val (ctes, rels) = refs(parsed).partitionMap(identity)
+    val cteSet = ctes.map(_.toLowerCase).toSet
+    cteSet.find(names.contains).foreach(n => throw new IllegalArgumentException(
+      s"Tables.sql: CTE '$n' shadows the table of that name"))
+    rels.find(r => r.size != 1 || !(names.contains(r.head.toLowerCase) ||
+        cteSet(r.head.toLowerCase))).foreach(r =>
+      throw new IllegalArgumentException(s"Tables.sql: relation " +
+        s"'${r.mkString(".")}' is neither a table of $sfDir nor a CTE"))
+    val plans = rels.map(_.head.toLowerCase).filterNot(cteSet).distinct
+      .map(n => n -> apply(spark, sfDir, n).queryExecution.analyzed).toMap
+    def bind(p: LogicalPlan): LogicalPlan = p.transformUpWithSubqueries {
+      case w: UnresolvedWith => w.copy(cteRelations = w.cteRelations.map {
+        case (n, q, depth) => (n, bind(q).asInstanceOf[SubqueryAlias], depth)
+      })
+      case UnresolvedRelation(Seq(n), _, _) if plans.contains(n.toLowerCase) =>
+        SubqueryAlias(n, plans(n.toLowerCase))
+    }
+    Glue.ofRows(spark, bind(parsed))
+  }
 
   // One nanos-enabled clone per parent session, created on the first
   // nanos-encoded read and evicted with the context: cloning per read

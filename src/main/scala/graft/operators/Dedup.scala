@@ -69,17 +69,6 @@ object Dedup {
        |      ceil($overlapD * (x.n + y.n)))""".stripMargin
   }
 
-  // -------------------------------------------------------- exact dedup
-
-  /** Exact dedup via hash-groupBy (one shuffle on md5(text); the text
-    * itself never becomes a join key, so 100 TB of documents shuffle only
-    * 32-byte digests + ids). keep_id = min doc_id per group (keep-first).
-    */
-  private def exact(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
-      .groupBy(md5(col("text")).as("text_hash"))
-      .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
-
   // ------------------------------- n-gram Jaccard (prefix-filter join)
 
   private val JaccardTau = 0.6
@@ -1119,10 +1108,10 @@ object Dedup {
          |  CASE WHEN h IN (SELECT h FROM hist) THEN 1 ELSE 0 END AS is_dup
          |FROM inc ORDER BY doc_id""".stripMargin
     }),
-    QuerySpec("dd_exact", exact _, Oracle(
+    QuerySpec.sql("dd_exact",
       """SELECT md5(text) AS text_hash, min(doc_id) AS keep_id,
         |  count(*) AS n_copies
-        |FROM documents GROUP BY md5(text) ORDER BY keep_id""".stripMargin)),
+        |FROM documents GROUP BY md5(text)""".stripMargin),
     QuerySpec("dd_ngram_jaccard", ngramJaccard _, Oracle(
       s"""WITH w0 AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          |t AS (SELECT doc_id, ${shinglesSql(3)} AS sh FROM w0),

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft._
-import graft.plans.ValueGrid
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -32,44 +31,6 @@ object Extended {
       .pivot("event_type", EventTypes)
       .agg(r6(avg(col("value"))))
 
-  /** Distinct aggregates: grouped count-distinct and sum-distinct.
-    * Catalyst plans these as a two-phase expand+aggregate; the distinct
-    * sum accumulates in DECIMAL so both engines agree bit-exactly.
-    */
-  private def a17DistinctAgg(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .groupBy("l_returnflag")
-      .agg(
-        countDistinct(col("l_partkey")).as("d_parts"),
-        sum_distinct(col("l_quantity").cast(DecimalType(38, 6)))
-          .cast("double").as("sd_qty"),
-        count(lit(1)).as("n"))
-
-  /** Correlation statistics: Pearson corr and covariances per group —
-    * single-pass co-moment aggregates (partial+final), the textbook
-    * map-side-combine shape.
-    */
-  private def a18Corr(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .groupBy("l_returnflag")
-      .agg(
-        r6(corr(col("l_quantity"), col("l_extendedprice"))).as("corr_qp"),
-        r6(covar_pop(col("l_quantity"), col("l_extendedprice"))).as("cov_p"),
-        r6(covar_samp(col("l_quantity"), col("l_extendedprice"))).as("cov_s"))
-
-  /** Rank-function family: percent_rank, cume_dist, ntile quartiles over
-    * a per-user total order (value with event_id tiebreak — ties must be
-    * broken identically in both engines for determinism).
-    */
-  private def w9RankFamily(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("value"), col("event_id"))
-    spreadScan(Tables.events(s, d), col("user_id"))
-      .select(col("event_id"),
-        r6(percent_rank().over(w)).as("pr"),
-        r6(cume_dist().over(w)).as("cd"),
-        ntile(4).over(w).as("quartile"))
-  }
-
   /** Corpus bigram document frequency, top-20: per-doc distinct word
     * bigrams explode into a combiner-friendly count (map-side partials on
     * the shuffle), then TakeOrdered — the n-gram statistics pass of a
@@ -82,17 +43,6 @@ object Extended {
       .select(explode(Dedup.shingles(col("text"), 2)).as("bigram"))
       .groupBy("bigram").agg(count(lit(1)).as("df"))
       .orderBy(col("df").desc, col("bigram")).limit(20)
-
-  /** Boolean aggregates: per-group every/any — partial+final, one bit of
-    * state per group per predicate.
-    */
-  private def a19BoolAgg(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d)
-      .groupBy("event_type")
-      .agg(
-        bool_and(col("value") > 0).as("all_pos"),
-        bool_or(col("value") > 400).as("any_big"),
-        count(lit(1)).as("n"))
 
   /** Deterministic list/string aggregation: the per-key set of event
     * types, sorted then joined — the canonical way to make a collect
@@ -116,42 +66,6 @@ object Extended {
         r6(first(col("value")).over(w)).as("first_v"),
         r6(last(col("value")).over(wAll)).as("last_v"),
         r6(nth_value(col("value"), 2).over(w)).as("second_v"))
-  }
-
-  /** W13: the distribution-window family (ntile, percent_rank,
-    * cume_dist) — completes the rank family of w9 with the quantile-
-    * bucket/empirical-CDF shapes used for per-group score calibration.
-    */
-  private def w13Distribution(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy("user_id")
-      .orderBy(col("value"), col("event_id"))
-    spreadScan(Tables.events(s, d), col("user_id")).select(
-      col("event_id"),
-      ntile(4).over(w).as("quartile"),
-      r6(percent_rank().over(w)).as("pct_rank"),
-      r6(cume_dist().over(w)).as("cdf"))
-  }
-
-  /** Per-group top-k through the custom typed Aggregator
-    * ([[graft.functions.TopKAggregator]]): only k-row buffers shuffle
-    * (map-side partial heaps), unlike the window row_number form that
-    * sorts and shuffles every row — oracle-checked against exactly that
-    * window form in DuckDB.
-    */
-  private def a24TopkAgg(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val ds = Tables.events(s, d)
-      .select(col("event_type"), col("value"), col("event_id"))
-      .as[(String, Double, Long)]
-    ds.groupByKey(_._1)
-      .mapValues(v => graft.functions.ScoredId(v._2, v._3))
-      .agg(new graft.functions.TopKAggregator(3).toColumn)
-      .flatMap { case (et, top) =>
-        top.zipWithIndex.map { case (r, i) => (et, i + 1, r.id, r.score) }
-      }
-      .toDF("event_type", "rnk", "event_id", "value")
-      .select(col("event_type"), col("rnk"), col("event_id"),
-        r6(col("value")).as("value"))
   }
 
   /** Rolling distinct count over a BOUNDED frame: Spark has no
@@ -290,50 +204,6 @@ object Extended {
           r6((n * sxy - sx * sy) / sqrt(vx * vy))).as("roll_corr"))
   }
 
-  /** Two-sample Kolmogorov–Smirnov statistic between the l_quantity
-    * distributions of returned ('A') vs delivered ('N') lineitems —
-    * the canonical distribution-shift test a data-quality layer runs
-    * between cohorts. D = max over the merged value grid of
-    * |F_A(v) − F_N(v)|.
-    *
-    * Scale shape: this is the value-grid pattern
-    * ([[ValueGrid.rangeCumsum]]) — rows collapse map-side to
-    * (value, side-count) grid cells, BOTH sides' cells exist at every
-    * grid value (a zero-count cell is emitted for the absent side, so
-    * each side's step CDF is defined at every merged-grid point), and
-    * the two prefix sums run range-partitioned with no single big sort
-    * task. The final max is an ordinary partial+final aggregate. No
-    * per-group buffering anywhere — the same plan family MemSmoke
-    * proved under a 2g heap.
-    */
-  private def a29Ks(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d)
-      .filter(col("l_returnflag").isin("A", "N"))
-      .select(col("l_returnflag").as("side"),
-        col("l_quantity").cast("double").as("v"))
-    val grid = li.groupBy("v").agg(
-      sum(when(col("side") === "A", 1L).otherwise(0L)).as("ca"),
-      sum(when(col("side") === "N", 1L).otherwise(0L)).as("cn"))
-    val long = grid.select(col("v"), explode(array(
-        struct(lit("A").as("side"), col("ca").as("c")),
-        struct(lit("N").as("side"), col("cn").as("c")))).as("e"))
-      .select(col("e.side").as("side"), col("v"), col("e.c").as("c"))
-    val tot = li.groupBy("side").agg(count(lit(1)).as("n"))
-    val cdf = ValueGrid.rangeCumsum(long.pinned(), Seq("side"))
-      .join(broadcast(tot), "side")
-      .select(col("side"), col("v"),
-        (col("cum").cast("double") / col("n").cast("double")).as("f"))
-    val d2 = cdf.groupBy("v").agg(
-      max(when(col("side") === "A", col("f"))).as("fa"),
-      max(when(col("side") === "N", col("f"))).as("fn"))
-    val ns = tot.select(
-      max(when(col("side") === "A", col("n"))).as("n_a"),
-      max(when(col("side") === "N", col("n"))).as("n_n"))
-    d2.select(max(abs(col("fa") - col("fn"))).as("ks"))
-      .crossJoin(broadcast(ns)) // 1-row stats frames
-      .select(col("n_a"), col("n_n"), r6(col("ks")).as("ks_stat"))
-  }
-
   /** Robust outlier audit per event type: median, MAD (median absolute
     * deviation), and the count beyond the 3σ-equivalent robust band
     * |v − med| > 3·1.4826·MAD — the anomaly gate that, unlike dq_drift's
@@ -467,21 +337,6 @@ object Extended {
         r6(col("cum_rev") / col("n_users")).as("ltv_per_user"))
   }
 
-  /** Value-RANGE window frame: per-user trailing band [v-10, v] over the
-    * value order — frames defined by the ORDER key's values, not row
-    * counts (the other half of the SQL window-frame spec; W1/W2 cover
-    * ROWS frames).
-    */
-  private def w11RangeFrame(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("value"))
-      .rangeBetween(-10L, 0L)
-    spreadScan(Tables.events(s, d), col("user_id"))
-      .select(col("event_id"),
-        count(lit(1)).over(w).as("n_in_band"),
-        sum(col("value").cast(DecimalType(38, 6))).over(w)
-          .cast("double").as("band_sum"))
-  }
-
   /** arg-min/arg-max aggregates: first/last event type per user. The
     * selector key is a zero-padded (epoch-µs, event_id) string — unique
     * and identically ordered in both engines, making the arg aggregates
@@ -496,28 +351,6 @@ object Extended {
       .agg(min_by(col("event_type"), key).as("first_type"),
         max_by(col("event_type"), key).as("last_type"),
         count(lit(1)).as("n"))
-  }
-
-  /** Fixed-width histogram (the dashboard binning shape): floor-divide
-    * into bins, count per bin — one combiner-friendly aggregate.
-    */
-  private def a23Histogram(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d)
-      .groupBy(floor(col("value") / 25).cast("long").as("bin"))
-      .agg(count(lit(1)).as("n"), r6(avg(col("value"))).as("avg_in_bin"))
-
-  /** Inverse-frequency class weights (total / (k·n) per label) — the
-    * standard imbalance correction, computed as one tiny agg + broadcast
-    * of the per-class stats.
-    */
-  private def mlClassWeights(s: SparkSession, d: String): DataFrame = {
-    val c = Tables.embeddings(s, d)
-      .groupBy("label").agg(count(lit(1)).as("n"))
-    val t = c.agg(sum(col("n")).cast("double").as("total"),
-      count(lit(1)).as("k"))
-    c.crossJoin(broadcast(t))
-      .select(col("label"), col("n"),
-        r6(col("total") / (col("k") * col("n"))).as("weight"))
   }
 
   /** Text normalization: lowercase, strip non-alphanumerics, collapse
@@ -608,25 +441,6 @@ object Extended {
       .select("cohort_week", "offset", "n_active", "n_cohort", "retention")
   }
 
-  /** Event-type co-occurrence (the market-basket statistic over user
-    * behavior): for each unordered type pair, how many users produced
-    * both. The per-user type set collapses FIRST (a map-side-combinable
-    * aggregate — the shuffle carries ≤ users × types rows, never raw
-    * events), and the pair join is co-partitioned on user_id with
-    * fan-out bounded by types² per user — a bot with 10⁸ events still
-    * contributes exactly one row per type.
-    */
-  private def esCooccur(s: SparkSession, d: String): DataFrame = {
-    val ut = Tables.events(s, d)
-      .groupBy("user_id", "event_type").agg(count(lit(1)).as("_n"))
-      .select("user_id", "event_type")
-    ut.select(col("user_id"), col("event_type").as("type_a"))
-      .join(ut.select(col("user_id"), col("event_type").as("type_b")),
-        "user_id")
-      .filter(col("type_a") < col("type_b"))
-      .groupBy("type_a", "type_b").agg(count(lit(1)).as("n_users"))
-  }
-
   /** Per-type ingest freshness: event count, last-seen timestamp, and
     * the lag behind the corpus frontier — the staleness gate a feed
     * monitor alarms on (a type whose producer died stops advancing
@@ -668,75 +482,6 @@ object Extended {
         _.getField("event_type")), ">").as("path"))
       .groupBy("path").agg(count(lit(1)).as("n_users"))
       .orderBy(col("n_users").desc, col("path")).limit(20)
-  }
-
-  /** Key-uniqueness audit across the warehouse's primary keys — the DQ
-    * gate that catches a double-loaded partition or a broken upsert
-    * before a join fans out downstream. Per declared key: row count,
-    * distinct keys, duplicated keys, and the worst multiplicity — each
-    * table one map-side-combinable grid aggregate (`groupBy(key)` then
-    * a global rollup of the count grid), unioned into one report. No
-    * distinct-subquery per metric, no window.
-    */
-  private def dqDupKeys(s: SparkSession, d: String): DataFrame = {
-    // No spreadScan (r16, measured): a spread keyed on exactly the
-    // audited keys (eliding the count's exchange, guide §2.4) read
-    // 1.20/0.98s vs 0.94 baseline — the keys are unique or near-unique,
-    // so the partial aggregate reduces nothing and moving it off the
-    // scan task only re-times the same shuffle volume.
-    def audit(df: DataFrame, table: String, keys: Seq[String]): DataFrame =
-      df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("c"))
-        .agg(count(lit(1)).as("n_keys"),
-          sum(col("c")).as("n_rows"),
-          sum(when(col("c") > 1, 1L).otherwise(0L)).as("dup_keys"),
-          max(col("c")).as("max_mult"))
-        .select(lit(table).as("table_name"), col("n_rows"), col("n_keys"),
-          col("dup_keys"), col("max_mult"))
-    audit(Tables.events(s, d), "events", Seq("event_id"))
-      .unionByName(audit(Tables.orders(s, d), "orders", Seq("o_orderkey")))
-      .unionByName(audit(Tables.lineitem(s, d), "lineitem",
-        Seq("l_orderkey", "l_linenumber")))
-  }
-
-  /** Referential-integrity audit — the sixth standard data-quality
-    * gate: every declared foreign key checked for orphaned child rows
-    * in one pass per relationship. Each check is a left join of the
-    * child's key column against the parent's distinct key set with an
-    * unmatched-count aggregate — at scale that is a shuffle (or
-    * broadcast, for dimensions) semi-join probe, never a collect; NULL
-    * foreign keys are reported separately (SQL FK semantics: NULL is
-    * not a violation). Synthetic corpus ships referentially intact, so
-    * the audit's green state is itself the assertion.
-    */
-  private def dqReferential(s: SparkSession, d: String): DataFrame = {
-    def fk(name: String, child: DataFrame, ck: String,
-        parent: DataFrame, pk: String): DataFrame =
-      // No spreadScan on the probes (r15, measured): the per-check
-      // BHJ+count work is one narrow column, and adding 7 repartition
-      // exchanges + task waves measured NET SLOWER (1.40 → 1.63s).
-      child.select(col(ck).as("k"))
-        .join(parent.select(col(pk).as("k")).distinct()
-          .withColumn("hit", lit(1)), Seq("k"), "left")
-        .agg(count(lit(1)).as("n_rows"),
-          count(when(col("k").isNotNull && col("hit").isNull, 1))
-            .as("n_orphans"),
-          count(when(col("k").isNull, 1)).as("n_null_fk"))
-        .select(lit(name).as("relationship"), col("n_rows"),
-          col("n_orphans"), col("n_null_fk"))
-    fk("customer.nation", Tables.customer(s, d), "c_nationkey",
-        Tables.nation(s, d), "n_nationkey")
-      .unionByName(fk("lineitem.orders", Tables.lineitem(s, d),
-        "l_orderkey", Tables.orders(s, d), "o_orderkey"))
-      .unionByName(fk("lineitem.part", Tables.lineitem(s, d),
-        "l_partkey", Tables.part(s, d), "p_partkey"))
-      .unionByName(fk("lineitem.supplier", Tables.lineitem(s, d),
-        "l_suppkey", Tables.supplier(s, d), "s_suppkey"))
-      .unionByName(fk("nation.region", Tables.nation(s, d),
-        "n_regionkey", Tables.region(s, d), "r_regionkey"))
-      .unionByName(fk("orders.customer", Tables.orders(s, d),
-        "o_custkey", Tables.customer(s, d), "c_custkey"))
-      .unionByName(fk("supplier.nation", Tables.supplier(s, d),
-        "s_nationkey", Tables.nation(s, d), "n_nationkey"))
   }
 
   /** Deterministic A/B test readout — the experimentation query every
@@ -917,37 +662,6 @@ object Extended {
         ") as (col_name, n_rows, n_non_null, n_distinct, vmin, vmax, vmean)"))
   }
 
-  /** Data-quality rules — the sibling gate to [[dqProfile]]: violation
-    * counts per declared rule (domain checks plus the orders FK),
-    * (rule, n_violations, n_checked). The FK check is folded into the
-    * SAME single pass as the domain rules: a left join flags orphan
-    * lineitems and every rule is a conditional sum in one aggregate —
-    * no per-rule scan, no separate anti-join job. The join shuffles
-    * both sides on the order key (or broadcasts when orders is small)
-    * — the standard FK-validation shape.
-    */
-  private def dqRules(s: SparkSession, d: String): DataFrame = {
-    val flagged = Tables.lineitem(s, d)
-      .join(Tables.orders(s, d)
-        .select(col("o_orderkey").as("l_orderkey"), lit(1).as("__ok")),
-        Seq("l_orderkey"), "left")
-    val one = flagged.agg(
-      count(lit(1)).as("n"),
-      sum(when(col("l_quantity") <= 0, 1L).otherwise(0L)).as("r_qty"),
-      sum(when(col("l_discount") < 0 || col("l_discount") > 1, 1L)
-        .otherwise(0L)).as("r_disc"),
-      sum(when(col("l_extendedprice") < 0, 1L).otherwise(0L)).as("r_price"),
-      sum(when(col("l_tax").isNull, 1L).otherwise(0L)).as("r_tax"),
-      sum(when(col("__ok").isNull, 1L).otherwise(0L)).as("r_fk"))
-    one.select(expr("stack(5, " +
-      "'discount_in_unit_interval', r_disc, n, " +
-      "'orderkey_fk_resolves', r_fk, n, " +
-      "'price_non_negative', r_price, n, " +
-      "'quantity_positive', r_qty, n, " +
-      "'tax_not_null', r_tax, n" +
-      ") as (rule, n_violations, n_checked)"))
-  }
-
   /** Event-type transition matrix (first-order Markov counts): for
     * every consecutive pair in each user's (ts, event_id)-ordered
     * stream, count (from_type → to_type) and the per-from-type
@@ -1109,7 +823,7 @@ object Extended {
         |      / sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)), 6)
         |    END AS roll_corr
         |FROM w ORDER BY l_suppkey, l_orderkey, l_linenumber""".stripMargin)),
-    QuerySpec("a29_ks", a29Ks _, Oracle(
+    QuerySpec.sql("a29_ks",
       """WITH li AS (SELECT l_returnflag AS side, l_quantity AS v
         |  FROM lineitem WHERE l_returnflag IN ('A', 'N')),
         |g AS (SELECT v,
@@ -1126,7 +840,7 @@ object Extended {
         |  FROM li)
         |SELECT n_a, n_n, round(max(abs(CAST(cuma AS DOUBLE) / n_a
         |  - CAST(cumn AS DOUBLE) / n_n)), 6) AS ks_stat
-        |FROM c, t GROUP BY n_a, n_n""".stripMargin)),
+        |FROM c, t GROUP BY n_a, n_n""".stripMargin),
     QuerySpec("dq_mad", dqMad _, Oracle(
       """WITH m AS (SELECT event_type,
         |    round(quantile_cont(value, 0.5), 6) AS med
@@ -1179,7 +893,7 @@ object Extended {
         |  FROM r WHERE rn <= 5 GROUP BY user_id)
         |SELECT path, count(*) AS n_users FROM p GROUP BY path
         |ORDER BY n_users DESC, path LIMIT 20""".stripMargin)),
-    QuerySpec("dq_dup_keys", dqDupKeys _, Oracle(
+    QuerySpec.sql("dq_dup_keys",
       """WITH e AS (SELECT count(*) AS c FROM events GROUP BY event_id),
         |o AS (SELECT count(*) AS c FROM orders GROUP BY o_orderkey),
         |l AS (SELECT count(*) AS c FROM lineitem
@@ -1197,8 +911,8 @@ object Extended {
         |  SELECT 'lineitem', CAST(sum(c) AS BIGINT), count(*),
         |    CAST(sum(CASE WHEN c > 1 THEN 1 ELSE 0 END) AS BIGINT),
         |    max(c) FROM l)
-        |SELECT * FROM u ORDER BY table_name""".stripMargin)),
-    QuerySpec("dq_referential", dqReferential _, Oracle(
+        |SELECT * FROM u""".stripMargin),
+    QuerySpec.sql("dq_referential",
       """WITH checks AS (
         |  SELECT 'customer.nation' AS relationship, c_nationkey AS k,
         |    n_nationkey AS hit FROM customer
@@ -1233,8 +947,7 @@ object Extended {
         |    THEN 1 ELSE 0 END) AS BIGINT) AS n_orphans,
         |  CAST(sum(CASE WHEN k IS NULL THEN 1 ELSE 0 END) AS BIGINT)
         |    AS n_null_fk
-        |FROM checks GROUP BY relationship
-        |ORDER BY relationship""".stripMargin)),
+        |FROM checks GROUP BY relationship""".stripMargin),
     QuerySpec("es_ab_test", esAbTest _, Oracle(
       """WITH per AS (SELECT user_id,
         |    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
@@ -1269,13 +982,13 @@ object Extended {
         |    / sqrt(p_pool * (1.0 - p_pool) * (1.0 / n_a + 1.0 / n_b))
         |  END, 6) AS z
         |FROM p""".stripMargin)),
-    QuerySpec("es_cooccur", esCooccur _, Oracle(
+    QuerySpec.sql("es_cooccur",
       """WITH ut AS (SELECT DISTINCT user_id, event_type FROM events)
         |SELECT a.event_type AS type_a, b.event_type AS type_b,
         |  count(*) AS n_users
         |FROM ut a JOIN ut b ON a.user_id = b.user_id
         |  AND a.event_type < b.event_type
-        |GROUP BY 1, 2 ORDER BY type_a, type_b""".stripMargin)),
+        |GROUP BY 1, 2""".stripMargin),
     QuerySpec("dq_freshness", dqFreshness _, Oracle(
       """WITH t AS (SELECT event_type, count(*) AS n,
         |    max(epoch_us(ts)) AS last_us FROM events GROUP BY 1),
@@ -1310,7 +1023,7 @@ object Extended {
         |  CASE WHEN sigma > 0 THEN round((n - mu) / sigma, 6) END AS z
         |FROM spc WHERE n_prior = 7
         |ORDER BY event_type, day""".stripMargin)),
-    QuerySpec("dq_rules", dqRules _, Oracle(
+    QuerySpec.sql("dq_rules",
       """WITH j AS (SELECT l.*, o.o_orderkey AS ok FROM lineitem l
         |  LEFT JOIN orders o ON l.l_orderkey = o.o_orderkey),
         |a AS (SELECT count(*) AS n,
@@ -1329,8 +1042,7 @@ object Extended {
         |UNION ALL SELECT 'orderkey_fk_resolves', r_fk, n FROM a
         |UNION ALL SELECT 'price_non_negative', r_price, n FROM a
         |UNION ALL SELECT 'quantity_positive', r_qty, n FROM a
-        |UNION ALL SELECT 'tax_not_null', r_tax, n FROM a
-        |ORDER BY rule""".stripMargin)),
+        |UNION ALL SELECT 'tax_not_null', r_tax, n FROM a""".stripMargin),
     QuerySpec("es_attribution", esAttribution _, Oracle(
       """SELECT user_id, purchase_id, purchase_ts_us, click_id, gap_us
         |FROM (
@@ -1377,10 +1089,10 @@ object Extended {
         |LEFT JOIN s2 USING (user_id)
         |LEFT JOIN s3 USING (user_id)
         |ORDER BY user_id""".stripMargin)),
-    QuerySpec("a23_histogram", a23Histogram _, Oracle(
+    QuerySpec.sql("a23_histogram",
       """SELECT CAST(floor(value / 25) AS BIGINT) AS bin, count(*) AS n,
         |  round(avg(value), 6) AS avg_in_bin
-        |FROM events GROUP BY bin ORDER BY bin""".stripMargin)),
+        |FROM events GROUP BY bin""".stripMargin),
     QuerySpec("a22_arg_minmax", a22ArgMinmax _, Oracle(
       """WITH k AS (SELECT user_id, event_type,
         |  lpad(CAST(epoch_us(ts) AS VARCHAR), 20, '0') || '-' ||
@@ -1408,11 +1120,11 @@ object Extended {
         |  list_sum(list_transform(range(1, n + 1),
         |    i -> pow(0.8, CAST(n - i AS DOUBLE)))), 6) AS ewma20
         |FROM g ORDER BY event_id""".stripMargin)),
-    QuerySpec("ml_class_weights", mlClassWeights _, Oracle(
+    QuerySpec.sql("ml_class_weights",
       """WITH c AS (SELECT label, count(*) AS n FROM embeddings GROUP BY label),
         |t AS (SELECT CAST(sum(n) AS DOUBLE) AS total, count(*) AS k FROM c)
         |SELECT label, n, round(total / (k * n), 6) AS weight
-        |FROM c, t ORDER BY label""".stripMargin)),
+        |FROM c, t""".stripMargin),
     QuerySpec("ta_normalize", taNormalize _, Oracle(
       s"""SELECT doc_id,
          |  md5(${TextAnalysis.normTextSql("text")}) AS norm_hash,
@@ -1427,34 +1139,31 @@ object Extended {
         |  ORDER BY epoch_us(ts), event_id
         |  ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
         |ORDER BY event_id""".stripMargin)),
-    QuerySpec("a24_topk_agg", a24TopkAgg _, Oracle(
+    QuerySpec.sql("a24_topk_agg",
       """WITH ranked AS (SELECT event_type, event_id, value,
         |  CAST(row_number() OVER (PARTITION BY event_type
         |    ORDER BY value DESC, event_id) AS INT) AS rnk FROM events)
         |SELECT event_type, rnk, event_id, round(value, 6) AS value
-        |FROM ranked WHERE rnk <= 3
-        |ORDER BY event_type, rnk""".stripMargin)),
-    QuerySpec("w13_distribution", w13Distribution _, Oracle(
+        |FROM ranked WHERE rnk <= 3""".stripMargin),
+    QuerySpec.sql("w13_distribution",
       """SELECT event_id,
         |  CAST(ntile(4) OVER w AS INT) AS quartile,
         |  round(percent_rank() OVER w, 6) AS pct_rank,
         |  round(cume_dist() OVER w, 6) AS cdf
         |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY value, event_id)
-        |ORDER BY event_id""".stripMargin)),
-    QuerySpec("w11_range_frame", w11RangeFrame _, Oracle(
+        |WINDOW w AS (PARTITION BY user_id ORDER BY value, event_id)""".stripMargin),
+    QuerySpec.sql("w11_range_frame",
       """SELECT event_id,
         |  count(*) OVER w AS n_in_band,
         |  CAST(sum(CAST(value AS DECIMAL(38,6))) OVER w AS DOUBLE)
         |    AS band_sum
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY value
-        |  RANGE BETWEEN 10 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin)),
-    QuerySpec("a19_bool_agg", a19BoolAgg _, Oracle(
+        |  RANGE BETWEEN 10 PRECEDING AND CURRENT ROW)""".stripMargin),
+    QuerySpec.sql("a19_bool_agg",
       """SELECT event_type, bool_and(value > 0) AS all_pos,
         |  bool_or(value > 400) AS any_big, count(*) AS n
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
+        |FROM events GROUP BY event_type""".stripMargin),
     QuerySpec("a21_string_agg", a21StringAgg _, Oracle(
       """SELECT user_id,
         |  array_to_string(list_sort(list_distinct(list(event_type))), ',')
@@ -1477,27 +1186,26 @@ object Extended {
          |  $cols
          |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin
     }),
-    QuerySpec("a17_distinct_agg", a17DistinctAgg _, Oracle(
+    QuerySpec.sql("a17_distinct_agg",
       """SELECT l_returnflag,
         |  count(DISTINCT l_partkey) AS d_parts,
         |  CAST(sum(DISTINCT CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE)
         |    AS sd_qty,
         |  count(*) AS n
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
-    QuerySpec("a18_corr", a18Corr _, Oracle(
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin),
+    QuerySpec.sql("a18_corr",
       """SELECT l_returnflag,
         |  round(corr(l_quantity, l_extendedprice), 6) AS corr_qp,
         |  round(covar_pop(l_quantity, l_extendedprice), 6) AS cov_p,
         |  round(covar_samp(l_quantity, l_extendedprice), 6) AS cov_s
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
-    QuerySpec("w9_rank_family", w9RankFamily _, Oracle(
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin),
+    QuerySpec.sql("w9_rank_family",
       """SELECT event_id,
         |  round(percent_rank() OVER w, 6) AS pr,
         |  round(cume_dist() OVER w, 6) AS cd,
         |  CAST(ntile(4) OVER w AS INT) AS quartile
         |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY value, event_id)
-        |ORDER BY event_id""".stripMargin)),
+        |WINDOW w AS (PARTITION BY user_id ORDER BY value, event_id)""".stripMargin),
     QuerySpec("ta_bigrams", taBigrams _, Oracle {
       val sh2 = {
         val parts = (0 until 2).map(j => s"w[i+$j]").mkString(" || ' ' || ")

@@ -51,18 +51,6 @@ object ScalarOps {
       shiftrightunsigned(col("event_id"), 2).as("shr"),
       bit_count(col("event_id")).as("popcnt"))
 
-  /** Extended string surface: pad/translate/repeat/reverse/replace —
-    * the remainder of the scalar string family beyond f1.
-    */
-  private def f10String(s: SparkSession, d: String): DataFrame =
-    Tables.part(s, d).select(
-      col("p_partkey"),
-      lpad(col("p_brand"), 12, ".").as("brand_pad"),
-      translate(col("p_type"), "aeiou", "AEIOU").as("type_vowels"),
-      reverse(col("p_brand")).as("brand_rev"),
-      regexp_replace(col("p_name"), " ", "_").as("name_snake"),
-      length(col("p_name")).as("name_len"))
-
   /** Datetime extraction surface: calendar fields + truncation. The
     * dayofweek convention differs between engines (Spark 1=Sunday,
     * DuckDB 0=Sunday) — the oracle maps explicitly rather than trusting
@@ -79,30 +67,6 @@ object ScalarOps {
       dayofweek(col("ts")).as("dow1"), // 1 = Sunday
       weekofyear(col("ts")).as("iso_week"),
       tsUs(date_trunc("day", col("ts"))).as("day_us"))
-
-  /** Map-typed column surface: per-user event_type → mean-value map
-    * built with map_from_entries over a collected struct list, then
-    * consumed with element_at / map_keys. The map stays internal to the
-    * Spark plan; the output is plain columns, so the oracle recomputes
-    * the same values with conditional aggregation — map construction is
-    * checked against semantics ground truth rather than an
-    * engine-specific map rendering.
-    */
-  private def f12Map(s: SparkSession, d: String): DataFrame = {
-    Tables.events(s, d)
-      .groupBy("user_id", "event_type")
-      .agg(r6(avg(col("value"))).as("v"))
-      .groupBy("user_id")
-      .agg(map_from_entries(array_sort(collect_list(
-        struct(col("event_type"), col("v"))))).as("m"))
-      .select(col("user_id"),
-        size(map_keys(col("m"))).as("n_types"),
-        // try_element_at: under ANSI mode (Spark 4 default) element_at
-        // THROWS on a missing map key; a user with no 'click' events
-        // must yield null here, as the oracle's conditional aggregate does.
-        try_element_at(col("m"), lit("click")).as("click_avg"),
-        try_element_at(col("m"), lit("error")).as("error_avg"))
-  }
 
   /** Binary encode/decode surface: base64 and hex round-trips over the
     * utf-8 payload — the wire formats multimodal binary columns cross
@@ -126,30 +90,6 @@ object ScalarOps {
       (decode(unbase64(b64), "UTF-8") === col("text") &&
         decode(unhex(hex(payload)), "UTF-8") === col("text"))
         .cast("int").as("rt_ok"))
-  }
-
-  /** Offset pagination: ORDER BY + OFFSET + LIMIT (the dashboard's
-    * page-2 query). At scale offset pagination degrades (the sort must
-    * still produce the skipped prefix) — keyset pagination (WHERE key >
-    * last_seen, as in o2) is the 100 TB form; this covers the operator.
-    */
-  private def o4Offset(s: SparkSession, d: String): DataFrame =
-    Tables.supplier(s, d)
-      .orderBy("s_suppkey")
-      .offset(10).limit(20)
-
-  /** Null-semantics surface: nullif/coalesce/null-safe equality — the
-    * three-valued-logic cases that diverge between engines if handled
-    * casually (Spark `<=>` ≡ SQL IS NOT DISTINCT FROM).
-    */
-  private def p14NullSemantics(s: SparkSession, d: String): DataFrame = {
-    val dsc = nullif(col("l_discount"), lit(0.0))
-    val tax = nullif(col("l_tax"), lit(0.0))
-    Tables.lineitem(s, d).select(
-      col("l_orderkey"), col("l_linenumber"),
-      r6(coalesce(dsc, lit(-1.0))).as("disc_or_neg1"),
-      (dsc <=> tax).cast("int").as("disc_eq_tax_nullsafe"),
-      dsc.isNull.cast("int").as("disc_is_null"))
   }
 
   /** Higher-order lambda surface (transform / filter / exists / forall
@@ -221,22 +161,22 @@ object ScalarOps {
         |  event_id >> 2 AS shr,
         |  CAST(bit_count(event_id) AS INT) AS popcnt
         |FROM events ORDER BY event_id""".stripMargin)),
-    QuerySpec("f10_string", f10String _, Oracle(
+    QuerySpec.sql("f10_string",
       """SELECT p_partkey,
         |  lpad(p_brand, 12, '.') AS brand_pad,
         |  translate(p_type, 'aeiou', 'AEIOU') AS type_vowels,
         |  reverse(p_brand) AS brand_rev,
         |  replace(p_name, ' ', '_') AS name_snake,
         |  CAST(len(p_name) AS INT) AS name_len
-        |FROM part ORDER BY p_partkey""".stripMargin)),
-    QuerySpec("f12_map", f12Map _, Oracle(
+        |FROM part""".stripMargin),
+    QuerySpec.sql("f12_map",
       """WITH pa AS (SELECT user_id, event_type,
         |  round(avg(value), 6) AS v FROM events GROUP BY user_id, event_type)
         |SELECT user_id,
         |  CAST(count(*) AS INT) AS n_types,
         |  max(CASE WHEN event_type = 'click' THEN v END) AS click_avg,
         |  max(CASE WHEN event_type = 'error' THEN v END) AS error_avg
-        |FROM pa GROUP BY user_id ORDER BY user_id""".stripMargin)),
+        |FROM pa GROUP BY user_id""".stripMargin),
     QuerySpec("f13_encode", f13Encode _, Oracle(
       """SELECT doc_id,
         |  substr(base64(encode(text)), 1, 24) AS b64_prefix,
@@ -245,14 +185,14 @@ object ScalarOps {
         |  CAST(decode(from_base64(base64(encode(text)))) = text
         |    AND decode(unhex(hex(encode(text)))) = text AS INT) AS rt_ok
         |FROM documents ORDER BY doc_id""".stripMargin)),
-    QuerySpec("o4_offset", o4Offset _, Oracle(
+    QuerySpec.sql("o4_offset",
       """SELECT * FROM supplier ORDER BY s_suppkey
-        |LIMIT 20 OFFSET 10""".stripMargin)),
-    QuerySpec("p14_null_semantics", p14NullSemantics _, Oracle(
+        |LIMIT 20 OFFSET 10""".stripMargin),
+    QuerySpec.sql("p14_null_semantics",
       """SELECT l_orderkey, l_linenumber,
         |  round(coalesce(nullif(l_discount, 0.0), -1.0), 6) AS disc_or_neg1,
         |  CAST(nullif(l_discount, 0.0) IS NOT DISTINCT FROM
         |    nullif(l_tax, 0.0) AS INT) AS disc_eq_tax_nullsafe,
         |  CAST(nullif(l_discount, 0.0) IS NULL AS INT) AS disc_is_null
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin)))
+        |FROM lineitem""".stripMargin))
 }

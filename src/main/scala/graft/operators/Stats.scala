@@ -107,49 +107,6 @@ object Stats {
           col("benford_share"))).as("abs_dev"))
   }
 
-  /** Herfindahl–Hirschman market-concentration index of supplier revenue
-    * within each nation — the standard antitrust/concentration readout
-    * (Σ share², share in [0,1]; 1/n ≤ HHI ≤ 1).
-    *
-    * Scale shape: revenue per supplier is one fact-table aggregate with
-    * DECIMAL-exact sums (the supplier dimension broadcasts); nation
-    * totals and shares come from a window over the supplier-cardinality
-    * frame — no second fact pass. Shares are doubles from exact decimal
-    * inputs (bit-identical across engines) and the share² sum
-    * accumulates per-addend in DECIMAL(38,18).
-    */
-  private def a30Hhi(s: SparkSession, d: String): DataFrame = {
-    val sup = Tables.supplier(s, d).select(col("s_suppkey"), col("s_nationkey"))
-    val nat = Tables.nation(s, d).select(col("n_nationkey"), col("n_name"))
-    // Spread keyed on l_suppkey (r16): hash(l_suppkey) satisfies the
-    // (n_name, l_suppkey) clustering of the revenue aggregate (subset
-    // key, guide §2.4), so the spread REPLACES the aggregate's own
-    // exchange — same exchange count, and the two join probes + the
-    // DECIMAL(38,6) partial sums leave the single-split scan task.
-    val rev = spreadScan(Tables.lineitem(s, d)
-        .select(col("l_suppkey"), col("l_extendedprice"), col("l_discount")),
-        col("l_suppkey"))
-      .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
-      .groupBy(col("n_name"), col("l_suppkey"))
-      .agg(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-        .cast(DecimalType(38, 6))).as("rev"))
-    val wNat = Window.partitionBy("n_name")
-    // Numerator and denominator are exact decimals cast to double BEFORE
-    // the division (decimal→double is correctly rounded in both engines);
-    // dividing decimals directly would pit Spark's decimal-division
-    // rounding against DuckDB's.
-    rev
-      .withColumn("share",
-        col("rev").cast("double") /
-          sum(col("rev")).over(wNat).cast("double"))
-      .groupBy("n_name")
-      .agg(r6(sum((col("share") * col("share")).cast(D18)).cast("double"))
-        .as("hhi"),
-        count(lit(1)).as("n_suppliers"),
-        r6(max(col("share"))).as("top_share"))
-  }
-
   /** Classical seasonal decomposition of the daily order-revenue series:
     * trend = centered ±3-day moving average, seasonal = mean detrended
     * value per day-of-week. Day-of-week is integer epoch-day arithmetic
@@ -280,7 +237,7 @@ object Stats {
          |    / CAST(total AS DOUBLE) - benford_share), 6) AS abs_dev
          |FROM bf LEFT JOIN obs ON bf.digit = obs.digit, tot
          |ORDER BY bf.digit""".stripMargin)),
-    QuerySpec("a30_hhi", a30Hhi _, Oracle(
+    QuerySpec.sql("a30_hhi",
       """WITH rev AS (SELECT n_name, l_suppkey,
         |    sum(CAST(l_extendedprice * (1.0 - l_discount)
         |      AS DECIMAL(38,6))) AS rev
@@ -296,7 +253,7 @@ object Stats {
         |  round(CAST(sum(CAST(share * share AS DECIMAL(38,18)))
         |    AS DOUBLE), 6) AS hhi,
         |  count(*) AS n_suppliers, round(max(share), 6) AS top_share
-        |FROM sh GROUP BY n_name ORDER BY n_name""".stripMargin)),
+        |FROM sh GROUP BY n_name""".stripMargin),
     QuerySpec("w23_seasonal", w23Seasonal _, Oracle(
       """WITH daily AS (SELECT
         |    datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))

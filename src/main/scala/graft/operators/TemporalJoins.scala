@@ -74,41 +74,6 @@ object TemporalJoins {
   private val ValueRanges: Seq[(Int, Double, Double)] = Seq(
     (0, 0.0, 50.0), (1, 50.0, 100.0), (2, 100.0, 200.0), (3, 200.0, 1e9))
 
-  private def j6RangeJoin(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val ranges = ValueRanges.toDF("bucket_id", "lo", "hi")
-    Tables.events(s, d)
-      .join(broadcast(ranges),
-        col("value") >= col("lo") && col("value") < col("hi"))
-      .groupBy("bucket_id")
-      .agg(count(lit(1)).as("n"), r6(avg(col("value"))).as("avg_value"))
-  }
-
-  /** First-class FULL OUTER JOIN: daily error/purchase reconciliation
-    * per user. At the (user_id, day) grain the testdata genuinely
-    * exercises all three match states (sf0.01: 1026 error-only days,
-    * 1018 purchase-only, 586 both), so the null-extension on BOTH sides
-    * is load-bearing, not decorative. The join keys pass as a Seq so
-    * Spark emits the coalesced USING-style key columns; the two sides
-    * are independently filtered aggregates (two scans of the fact
-    * table — no subplan sharing applies), and the join itself shuffles
-    * only the already-aggregated day grain.
-    */
-  private def j8FullOuter(s: SparkSession, d: String): DataFrame = {
-    def side(t: String, cnt: String) = Tables.events(s, d)
-      .filter(col("event_type") === t)
-      .groupBy(col("user_id"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as(cnt))
-    side("error", "n_err")
-      .join(side("purchase", "n_pur"), Seq("user_id", "day"), "full_outer")
-      .select(col("user_id"), col("day"),
-        coalesce(col("n_err"), lit(0L)).as("n_err"),
-        coalesce(col("n_pur"), lit(0L)).as("n_pur"))
-      .withColumn("status",
-        when(col("n_err") > 0 && col("n_pur") > 0, "both")
-          .when(col("n_err") > 0, "error_only").otherwise("purchase_only"))
-  }
-
   /** Gap-fill with forward interpolation — the time-series
     * regularization every metrics/feature pipeline runs before
     * windowed modeling: a (user × day) grid from the global date spine,
@@ -161,15 +126,15 @@ object TemporalJoins {
         |FROM e ASOF LEFT JOIN r
         |  ON e.user_id = r.user_id AND e.tus >= r.err_us
         |ORDER BY event_id""".stripMargin)),
-    QuerySpec("j6_range_join", j6RangeJoin _, Oracle {
+    QuerySpec.sql("j6_range_join", {
       val vals = ValueRanges.map { case (b, lo, hi) => s"($b, $lo, $hi)" }
         .mkString(", ")
       s"""SELECT bucket_id, count(*) AS n, round(avg(value), 6) AS avg_value
          |FROM events JOIN (VALUES $vals) ranges(bucket_id, lo, hi)
          |  ON value >= lo AND value < hi
-         |GROUP BY bucket_id ORDER BY bucket_id""".stripMargin
+         |GROUP BY bucket_id""".stripMargin
     }),
-    QuerySpec("j8_full_outer", j8FullOuter _, Oracle(
+    QuerySpec.sql("j8_full_outer",
       """WITH e AS (SELECT user_id, CAST(ts AS DATE) AS day,
         |    count(*) AS n_err FROM events
         |    WHERE event_type = 'error' GROUP BY 1, 2),
@@ -185,8 +150,7 @@ object TemporalJoins {
         |       WHEN coalesce(n_err, 0) > 0 THEN 'error_only'
         |       ELSE 'purchase_only' END AS status
         |FROM e FULL OUTER JOIN p
-        |  ON e.user_id = p.user_id AND e.day = p.day
-        |ORDER BY user_id, day""".stripMargin)),
+        |  ON e.user_id = p.user_id AND e.day = p.day""".stripMargin),
     QuerySpec("w15_gap_fill", w15GapFill _, Oracle(
       """WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS day, value
         |  FROM events),

@@ -462,23 +462,6 @@ object TextAnalysis {
           coalesce(col("top_bi_frac") <= 0.2, lit(true))).cast("int"))
   }
 
-  /** URL parsing for web-corpus normalization: host / path / query-param
-    * extraction with Spark's codegen'd parse_url. URLs are synthesized
-    * deterministically from document metadata, so the DuckDB oracle
-    * reconstructs the expected fields from the same metadata — the
-    * parser is checked against ground truth by construction.
-    */
-  private def urlParse(s: SparkSession, d: String): DataFrame = {
-    val url = concat(lit("https://"), col("source"), lit(".example.com/docs/"),
-      col("doc_id"), lit("?lang="), col("lang"))
-    Tables.documents(s, d).select(
-      col("doc_id"),
-      url.as("url"),
-      parse_url(url, lit("HOST")).as("host"),
-      parse_url(url, lit("PATH")).as("path"),
-      parse_url(url, lit("QUERY"), lit("lang")).as("q_lang"))
-  }
-
   /** Per-document top-3 TF-IDF terms: tf = in-doc frequency ratio,
     * idf = ln(N/df) from a document-frequency dictionary. The df
     * dictionary is a stats table bounded by the vocabulary — broadcast
@@ -930,14 +913,14 @@ object TextAnalysis {
         |    coalesce(top_bi_frac <= 0.2, TRUE) AS INT) AS keep
         |FROM uni LEFT JOIN bi ON uni.doc_id = bi.doc_id
         |ORDER BY uni.doc_id""".stripMargin)),
-    QuerySpec("f11_url", urlParse _, Oracle(
+    QuerySpec.sql("f11_url",
       """SELECT doc_id,
         |  'https://' || source || '.example.com/docs/' || doc_id
         |    || '?lang=' || lang AS url,
         |  source || '.example.com' AS host,
         |  '/docs/' || doc_id AS path,
         |  lang AS q_lang
-        |FROM documents ORDER BY doc_id""".stripMargin)),
+        |FROM documents""".stripMargin),
     QuerySpec("ta_unigram_logprob", unigramLogprob _, Oracle(
       """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
         |             FROM documents),

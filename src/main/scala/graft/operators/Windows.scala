@@ -65,29 +65,6 @@ object Windows {
       .select(col("event_id"),
         r6(col("value") - lag(col("value"), 1).over(ordered)).as("d_value"))
 
-  /** W4/A2 (fct_cycles_features.sql:23-26): unbounded partition max minus
-    * current (the RUL shape: distance to the partition's peak).
-    */
-  private def w4PartitionMax(s: SparkSession, d: String): DataFrame =
-    // No eventsSpread (r16, measured): the running max is O(1)/row with
-    // no frame state, so the serial window beats the 32-task waves —
-    // 0.59 baseline vs 0.67/0.71 spread in two subset runs.
-    Tables.events(s, d)
-      .select(col("event_id"),
-        r6(max(col("value")).over(unordered) - col("value")).as("headroom"))
-
-  /** W5 (scripts/etl_turbofan.py:27-31): per-partition z-score with
-    * population stddev (pandas ddof=0) and a 0/0→null guard for constant
-    * partitions (SURVEY.md §7.4.1).
-    */
-  private def w5Zscore(s: SparkSession, d: String): DataFrame = {
-    val sd = stddev_pop(col("value")).over(unordered)
-    val mu = avg(col("value")).over(unordered)
-    eventsSpread(s, d)
-      .select(col("event_id"),
-        r6(when(sd =!= 0, (col("value") - mu) / sd)).as("z_value"))
-  }
-
   /** W6 (scripts/ml_pipeline.py:191): ranking family. */
   private def w6RowNumber(s: SparkSession, d: String): DataFrame =
     eventsSpread(s, d)
@@ -334,16 +311,15 @@ object Windows {
     QuerySpec("w3_lag_diff", w3LagDiff _, Oracle(
       s"""SELECT event_id, round(value - lag(value, 1) OVER ($over), 6) AS d_value
          |FROM events ORDER BY event_id""".stripMargin)),
-    QuerySpec("w4_partition_max", w4PartitionMax _, Oracle(
+    QuerySpec.sql("w4_partition_max",
       """SELECT event_id,
         |  round(max(value) OVER (PARTITION BY user_id) - value, 6) AS headroom
-        |FROM events ORDER BY event_id""".stripMargin)),
-    QuerySpec("w5_zscore", w5Zscore _, Oracle(
+        |FROM events""".stripMargin),
+    QuerySpec.sql("w5_zscore",
       """SELECT event_id, round(CASE WHEN sd <> 0 THEN (value - mu) / sd END, 6) AS z_value
         |FROM (SELECT event_id, value,
         |  stddev_pop(value) OVER (PARTITION BY user_id) AS sd,
-        |  avg(value) OVER (PARTITION BY user_id) AS mu FROM events)
-        |ORDER BY event_id""".stripMargin)),
+        |  avg(value) OVER (PARTITION BY user_id) AS mu FROM events)""".stripMargin),
     QuerySpec("w6_row_number", w6RowNumber _, Oracle(
       s"""SELECT event_id, CAST(row_number() OVER ($over) AS INT) AS rn,
          |  CAST(rank() OVER (PARTITION BY user_id ORDER BY event_type) AS INT) AS rk,

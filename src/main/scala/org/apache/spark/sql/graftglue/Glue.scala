@@ -22,6 +22,14 @@ object Glue {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** Parse SQL text into an unresolved logical plan with the session's
+    * own parser (`sessionState` is not on the API-level session).
+    */
+  def parsePlan(spark: org.apache.spark.sql.SparkSession, text: String)
+      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.sqlParser.parsePlan(text)
+
   /** Full session clone (`cloneSession` is private[sql]): same
     * SparkContext and shared state, but an independent copy of the
     * session state — runtime SQL confs included. Needed to scope a

@@ -73,10 +73,12 @@ class ExtendedOpsSpec extends GraftSuite {
   }
 
   test("tpch_q6 filters push down to the parquet scan") {
-    val plan = SparkEntry.queries("tpch_q6")(spark, sf)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") &&
-      plan.contains("l_discount"), plan.take(2000))
+    val scans = PlanNodes.scansOf(SparkEntry.queries("tpch_q6")(spark, sf),
+      "l_discount")
+    assert(scans.size == 1)
+    val cols = PlanNodes.filterCols(scans.head)
+    assert(Set("l_shipdate", "l_discount", "l_quantity").subsetOf(cols),
+      s"pushed filters: ${scans.head.dataFilters}")
   }
 
   test("tpch_q19 pushes each side's disjunction implications to its scan") {
@@ -85,28 +87,30 @@ class ExtendedOpsSpec extends GraftSuite {
     // lineitem-only OR (quantity bounds) for the lineitem scan — at
     // 100 TB the join input is pre-pruned even though no single
     // conjunct applies to all rows.
-    val plan = SparkEntry.queries("tpch_q19")(spark, sf)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [IsNotNull(p_size)") ||
-      plan.matches("(?s).*PushedFilters[^\\]]*p_brand.*"),
-      "part-side OR not pushed:\n" + plan.take(2000))
-    assert(plan.matches("(?s).*PushedFilters[^\\]]*l_quantity.*"),
-      "lineitem-side OR not pushed:\n" + plan.take(2000))
+    val df = SparkEntry.queries("tpch_q19")(spark, sf)
+    val part = PlanNodes.scansOf(df, "p_brand")
+    val li = PlanNodes.scansOf(df, "l_quantity")
+    assert(part.size == 1 && li.size == 1)
+    assert(PlanNodes.pushedOrs(part.head).contains(Set("p_brand", "p_size")),
+      s"part-side OR not pushed: ${part.head.dataFilters}")
+    assert(PlanNodes.pushedOrs(li.head).contains(Set("l_quantity")),
+      s"lineitem-side OR not pushed: ${li.head.dataFilters}")
   }
 
   test("tpch_q4/q21 plan EXISTS as semi joins, NOT EXISTS as anti joins") {
-    val q4 = SparkEntry.queries("tpch_q4")(spark, sf)
-      .queryExecution.executedPlan.toString
-    assert(q4.contains("LeftSemi"), "q4 EXISTS must be a semi join:\n" +
-      q4.take(1500))
-    val q21 = SparkEntry.queries("tpch_q21")(spark, sf)
-      .queryExecution.executedPlan.toString
+    import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
+    import org.apache.spark.sql.execution.joins.CartesianProductExec
+    val q4 = PlanNodes.joins(SparkEntry.queries("tpch_q4")(spark, sf))
+      .map(_.joinType)
+    assert(q4.contains(LeftSemi), s"q4 EXISTS must be a semi join: $q4")
     // Both correlated probes keep orderkey as the equi half (shuffle
     // key at scale) with the suppkey inequality as a join residual —
     // never a cartesian pair blow-up.
-    assert(q21.contains("LeftSemi") && q21.contains("LeftAnti"),
-      "q21 must plan semi + anti joins:\n" + q21.take(1500))
-    assert(!q21.contains("CartesianProduct"))
+    val q21 = SparkEntry.queries("tpch_q21")(spark, sf)
+    val q21Joins = PlanNodes.joins(q21).map(_.joinType)
+    assert(q21Joins.contains(LeftSemi) && q21Joins.contains(LeftAnti),
+      s"q21 must plan semi + anti joins: $q21Joins")
+    assert(!PlanNodes.nodes(q21).exists(_.isInstanceOf[CartesianProductExec]))
   }
 
   test("tpch_q2 min-cost catalog: aggregate collapses before the equality join") {

@@ -92,8 +92,10 @@ class RelationalSpec extends GraftSuite {
   }
 
   test("j1 broadcast join plans a broadcast, not a shuffle join") {
-    val plan = run("j1_broadcast_join").queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), s"expected broadcast join:\n$plan")
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val joins = PlanNodes.joins(run("j1_broadcast_join"))
+    assert(joins.size == 3 && joins.forall(_.isInstanceOf[BroadcastHashJoinExec]),
+      s"expected three broadcast joins: ${joins.map(_.nodeName)}")
   }
 
   test("o2 top-k plans TakeOrderedAndProject (no global sort)") {
@@ -102,13 +104,23 @@ class RelationalSpec extends GraftSuite {
   }
 
   test("p1 projection prunes the parquet scan to selected columns") {
-    val plan = run("p1_project").queryExecution.executedPlan.toString
-    assert(!plan.contains("l_shipdate"), "scan should not read unused columns")
+    val scans = PlanNodes.scansOf(run("p1_project"), "l_orderkey")
+    assert(scans.size == 1)
+    assert(scans.head.requiredSchema.fieldNames.toSet ==
+      Set("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag"),
+      "scan should not read unused columns: " + scans.head.requiredSchema)
   }
 
   test("p4 filter is pushed down to the parquet scan") {
-    val plan = run("p4_isin").queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [In(l_returnflag"), s"plan was:\n$plan")
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, In, Literal}
+    val scans = PlanNodes.scansOf(run("p4_isin"), "l_returnflag")
+    assert(scans.size == 1)
+    val ins = scans.head.dataFilters.collect {
+      case In(a: Attribute, vs) if a.name == "l_returnflag" =>
+        vs.collect { case l: Literal => l.toString }.toSet
+    }
+    assert(ins == Seq(Set("A", "R")),
+      s"pushed filters: ${scans.head.dataFilters}")
   }
 
   test("u1 union equals direct aggregation (append protocol)") {

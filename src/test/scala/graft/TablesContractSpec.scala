@@ -107,13 +107,11 @@ class TablesContractSpec extends GraftSuite {
 
   test("SQL surface resolves the events view under the nanos encoding") {
     // Regression guard for the clone-session fix: a nanos events frame
-    // is bound to Tables' internal cloned session, and a temp view
-    // registers in its frame's OWN session — so registerViews must
-    // route the whole SQL-surface query through that session, or
-    // `FROM events` throws TABLE_OR_VIEW_NOT_FOUND. Build two full
-    // table dirs (other tables symlinked from the sf dir) differing
-    // only in the events encoding and assert the SQL query resolves
-    // AND agrees across encodings.
+    // is bound to Tables' internal cloned session, whose conf its scan
+    // still needs at run time, also inside a Tables.sql query run on
+    // the caller's session. Build two full table dirs (other tables
+    // symlinked from the sf dir) differing only in the events encoding
+    // and assert the SQL queries resolve AND agree across encodings.
     def tableDir(writeEvents: String => Unit): String = {
       val dir = Files.createTempDirectory("graft-ev-sql").toString
       Tables.names.filterNot(_ == "events").foreach { n =>
@@ -126,13 +124,15 @@ class TablesContractSpec extends GraftSuite {
     }
     val nanosDir = tableDir(writeNanosFixture(_))
     val microsDir = tableDir(writeMicrosFixture)
-    def run(d: String) =
-      SparkEntry.queries("sql_dbt_features")(spark, d).orderBy("event_id")
-        .collect()
-        .map(_.toSeq).toSeq
-    val fromNanos = run(nanosDir)
-    assert(fromNanos.nonEmpty)
-    assert(fromNanos === run(microsDir))
+    // j8_full_outer is a one-text query that reads ts
+    for (q <- Seq("sql_dbt_features", "j8_full_outer")) {
+      def run(d: String) =
+        SparkEntry.queries(q)(spark, d).collect()
+          .map(_.toSeq).toSeq.sortBy(_.mkString("|"))
+      val fromNanos = run(nanosDir)
+      assert(fromNanos.nonEmpty, q)
+      assert(fromNanos === run(microsDir), q)
+    }
   }
 
   test("unannotated BIGINT ts fails loudly instead of guessing the unit") {
