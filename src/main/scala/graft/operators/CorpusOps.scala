@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft._
+import graft.pipeline.CmapssReader
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -105,16 +106,14 @@ object CorpusOps {
   }
 
   /** The reference's native input format (headerless whitespace-numeric
-    * sensor text) through the first-class DSv2 connector
-    * ([[graft.sources.WhitespaceText]]) instead of s1's per-query
-    * split/try_cast pipeline: lineitem serializes to text, reads back
-    * via `format("graft-text")` with a quantity filter and a
-    * 3-of-5-column projection — BOTH pushed into the scan (byte-range
-    * splittable; PushedFilters/ReadSchema are plan-spec-pinned in
-    * SourcesSpec) — then aggregates per orderkey bucket. The roundtrip
-    * is exact: Spark's double→string is shortest-roundtrip and the
-    * reader parses with Double.parseDouble, so the oracle simply
-    * recomputes from the parquet table.
+    * sensor text) written to disk and read back: lineitem serializes to
+    * text, `read.text` splits the files by byte range, and
+    * [[graft.pipeline.CmapssReader.parse]] (the CMAPSS reader's parser)
+    * types the tokens; a quantity filter and a 3-of-5-column projection
+    * leave the unused casts for Catalyst to prune, then it aggregates
+    * per orderkey bucket. The roundtrip is exact: Spark's double→string
+    * is shortest-roundtrip, so the oracle simply recomputes from the
+    * parquet table.
     */
   private def ioTextScan(s: SparkSession, d: String): DataFrame = {
     val dir = roundtripScratch(s, "gtext")
@@ -127,13 +126,9 @@ object CorpusOps {
         col("l_quantity"), col("l_extendedprice"), col("l_discount"))
         .as("value"))
       .write.mode("overwrite").text(dir)
-    s.read.format("graft-text")
-      .schema("l_orderkey DOUBLE, l_linenumber DOUBLE, l_quantity DOUBLE," +
-        " l_extendedprice DOUBLE, l_discount DOUBLE")
-      .load(dir)
+    CmapssReader.parse(s.read.text(dir), Relational.LineitemTextSchema)
       .filter(col("l_quantity") > 25.0)
-      .select((col("l_orderkey").cast("long") % 7).as("bucket"),
-        col("l_extendedprice"))
+      .select((col("l_orderkey") % 7).as("bucket"), col("l_extendedprice"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n"), dsum(col("l_extendedprice")).as("sum_price"))
   }

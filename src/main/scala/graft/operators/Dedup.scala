@@ -330,7 +330,6 @@ object Dedup {
 
   // ----------------------------------------------------------- SimHash
 
-  private val SimBits = 60 // 15 hex digits of md5 → fits a positive long
   private val SimHamMax = 3
   private val SimBands = 4 // 4 bands × 15 bits; pigeonhole-exact for ≤3
 

@@ -1037,12 +1037,15 @@ object Extended {
         |    AS r_tax,
         |  CAST(sum(CASE WHEN ok IS NULL THEN 1 ELSE 0 END) AS BIGINT)
         |    AS r_fk FROM j)
-        |SELECT 'discount_in_unit_interval' AS rule,
-        |  r_disc AS n_violations, n AS n_checked FROM a
-        |UNION ALL SELECT 'orderkey_fk_resolves', r_fk, n FROM a
-        |UNION ALL SELECT 'price_non_negative', r_price, n FROM a
-        |UNION ALL SELECT 'quantity_positive', r_qty, n FROM a
-        |UNION ALL SELECT 'tax_not_null', r_tax, n FROM a""".stripMargin),
+        |SELECT rule, CASE rule WHEN 'discount_in_unit_interval' THEN r_disc
+        |  WHEN 'orderkey_fk_resolves' THEN r_fk
+        |  WHEN 'price_non_negative' THEN r_price
+        |  WHEN 'quantity_positive' THEN r_qty
+        |  WHEN 'tax_not_null' THEN r_tax END AS n_violations,
+        |  n AS n_checked
+        |FROM a CROSS JOIN (VALUES ('discount_in_unit_interval'),
+        |  ('orderkey_fk_resolves'), ('price_non_negative'),
+        |  ('quantity_positive'), ('tax_not_null')) AS r(rule)""".stripMargin),
     QuerySpec("es_attribution", esAttribution _, Oracle(
       """SELECT user_id, purchase_id, purchase_ts_us, click_id, gap_us
         |FROM (

@@ -1,10 +1,12 @@
 package graft.operators
 
 import graft._
+import graft.pipeline.CmapssReader
 import graft.plans.ValueGrid
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Relational operator inventory (SURVEY.md §2.1–2.5, §2.7–2.9), expressed
   * as declarative DataFrame plans over the TESTDATA tables so Catalyst
@@ -21,8 +23,8 @@ object Relational {
 
   /** S1 (scripts/etl_turbofan.py:10-19): whitespace-text positional scan
     * with numeric coercion. Demonstrated as a lossless roundtrip: serialize
-    * lineitem rows to space-separated lines, then parse them back with the
-    * positional split + try_cast pipeline the CMAPSS reader uses.
+    * lineitem rows to space-separated lines, then parse them back with
+    * [[graft.pipeline.CmapssReader.parse]], the CMAPSS reader's parser.
     */
   private def s1TextScan(s: SparkSession, d: String): DataFrame = {
     // spreadScan: the serialize→trim→regex-split→try_cast chain is the
@@ -31,15 +33,15 @@ object Relational {
     val li = spreadScan(Tables.lineitem(s, d), col("l_orderkey"))
     val line = concat_ws(" ", col("l_orderkey"), col("l_linenumber"),
       col("l_quantity"), col("l_extendedprice"), col("l_discount"))
-    li.select(line.as("value"))
-      .select(split(trim(col("value")), "\\s+").as("f"))
-      .select(
-        element_at(col("f"), 1).cast("long").as("l_orderkey"),
-        element_at(col("f"), 2).cast("int").as("l_linenumber"),
-        expr("try_cast(element_at(f, 3) AS double)").as("l_quantity"),
-        expr("try_cast(element_at(f, 4) AS double)").as("l_extendedprice"),
-        expr("try_cast(element_at(f, 5) AS double)").as("l_discount"))
+    CmapssReader.parse(li.select(line.as("value")), LineitemTextSchema)
   }
+
+  /** The five lineitem columns [[s1TextScan]] and `io_text_scan` write
+    * as text and parse back.
+    */
+  private[operators] val LineitemTextSchema: StructType = StructType.fromDDL(
+    "l_orderkey LONG, l_linenumber INT, l_quantity DOUBLE," +
+      " l_extendedprice DOUBLE, l_discount DOUBLE")
 
   // -------------------------------------------- projections / filters
 

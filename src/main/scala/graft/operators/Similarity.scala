@@ -1008,7 +1008,7 @@ object Similarity {
 
   private def trainCentroids(s: SparkSession, d: String,
       cells: Int, iters: Int,
-      seed: String = IvfSeeding): Seq[(Long, Seq[Double])] = {
+      seed: String): Seq[(Long, Seq[Double])] = {
     import s.implicits._
     val v = normalized(s, d)
     // Seeding ("rank", the pre-round-10 default): the first `cells`

@@ -3,6 +3,9 @@ package graft
 import java.nio.file.Files
 
 import graft.pipeline._
+import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.catalyst.expressions.Cast
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
 
 /** Golden tests against the real CMAPSS FD001 file shipped with the
@@ -109,12 +112,57 @@ class CmapssPipelineSpec extends GraftSuite {
     java.nio.file.Files.writeString(tmp,
       "1 1 0.5 0.6 100 641.82 abc 1587.99\n" + // junk sensor2
         "\n" + // blank line dropped
-        "2 1 0.1 0.2 100 642.0 1588.0 1400.0 extra extra extra\n")
+        " \t  \n" + // whitespace-only line dropped
+        "2 1 0.1 0.2 100 642.0 1588.0 1400.0 extra extra extra\n" +
+        "3 1 0.1\n" + // short row: trailing fields null
+        "\t4 2 0.1 0.2 100 642.0 1588.0 1400.0\n") // tab-led: no shift
     val df = CmapssReader.read(spark, tmp.toString, "T", nSensors = 3)
     val rows = df.orderBy("unit_nr").collect()
-    assert(rows.length == 2)
+    assert(rows.length == 4)
     assert(rows(0).isNullAt(rows(0).fieldIndex("sensor2"))) // 'abc' -> null
     assert(rows(1).getDouble(rows(1).fieldIndex("sensor3")) == 1400.0)
+    val short = rows(2)
+    assert(short.getInt(short.fieldIndex("time_cycles")) == 1)
+    assert(short.getDouble(short.fieldIndex("setting1")) == 0.1)
+    assert(Seq("setting2", "setting3", "sensor1", "sensor2", "sensor3")
+      .forall(c => short.isNullAt(short.fieldIndex(c))))
+    assert(rows(3).getInt(rows(3).fieldIndex("time_cycles")) == 2)
+    assert(rows(3).getDouble(rows(3).fieldIndex("sensor3")) == 1400.0)
+  }
+
+  test("reader casts only the tokens a query keeps") {
+    val tmp = Files.createTempFile("graft_prune", ".txt")
+    Files.writeString(tmp, "1 1 0.5 0.6 100 641.82 1589.7 1400.6\n")
+    val plan = CmapssReader.read(spark, tmp.toString, "T", nSensors = 3)
+      .select("unit_nr", "sensor2").queryExecution.optimizedPlan
+    val casts = plan.collect { case p: Project =>
+      p.projectList.flatMap(_.collect { case c: Cast => c })
+    }.flatten
+    assert(casts.size == 2, plan.treeString)
+  }
+
+  test("reader splits a file by byte range and returns every line once") {
+    val tmp = Files.createTempFile("graft_split", ".txt")
+    Files.writeString(tmp,
+      (1 to 500).map(i => s"$i 1 ${i * 0.25} 0 0").mkString("\n"))
+    withSQLConf("spark.sql.files.maxPartitionBytes" -> "64") {
+      val df = CmapssReader.read(spark, tmp.toString, "T", nSensors = 0)
+      assert(df.rdd.getNumPartitions > 5,
+        s"expected many splits, got ${df.rdd.getNumPartitions}")
+      val got = df.select("unit_nr", "setting1").collect()
+        .map(r => (r.getInt(0), r.getDouble(1))).sorted.toSeq
+      assert(got == (1 to 500).map(i => (i, i * 0.25)))
+    }
+  }
+
+  test("reader fails on a missing path or an empty glob") {
+    val dir = Files.createTempDirectory("graft_missing")
+    Seq(dir.resolve("absent.txt").toString, s"$dir/*.nothing").foreach { p =>
+      val e = intercept[AnalysisException](
+        CmapssReader.read(spark, p, "T").collect())
+      assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
+      assert(e.getMessage.contains(p), e.getMessage)
+    }
   }
 
   test("units_summary and measures shapes") {

@@ -125,7 +125,7 @@ class CodecPropertySpec extends AnyFunSuite {
       BmpCodec.encode(1L, 8, 8),
       WavCodec.encode(1L, 1, 8000, 4),
       Array[Byte](0xFF.toByte, 0xD8.toByte) ++ Array.fill(24)(0.toByte))
-    for (i <- 1 to 2000) {
+    for (_ <- 1 to 2000) {
       val base = seeds(rnd.nextInt(seeds.length))
       val c = java.util.Arrays.copyOf(base, 1 + rnd.nextInt(base.length))
       for (_ <- 0 to rnd.nextInt(8))

@@ -184,7 +184,6 @@ class DedupSpec extends GraftSuite {
   }
 
   test("incremental dedup is exact and applies the bloom before the verify join") {
-    import org.apache.spark.sql.functions._
     // Exact twin computed driver-side from fingerprints.
     def md5hex(s: String) =
       java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))

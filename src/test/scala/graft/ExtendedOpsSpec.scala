@@ -2,8 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-import graft.operators.Extended
 import graft.streaming.{StreamingDedup, UpsertSink}
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.functions._
 
 class ExtendedOpsSpec extends GraftSuite {
@@ -802,5 +802,14 @@ class ExtendedOpsSpec extends GraftSuite {
     }
     assert(agree.toDouble / rows.length >= 0.97,
       s"sketch bucketing agrees on only $agree/${rows.length}")
+  }
+
+  test("dq_rules scans lineitem once and reuses no exchange") {
+    val df = SparkEntry.queries("dq_rules")(spark, sf)
+    assert(PlanNodes.scansOf(df, "l_orderkey").size == 1)
+    assert(df.collect().map(_.getString(0)).toSet == Set(
+      "discount_in_unit_interval", "orderkey_fk_resolves",
+      "price_non_negative", "quantity_positive", "tax_not_null"))
+    assert(!PlanNodes.nodes(df).exists(_.isInstanceOf[ReusedExchangeExec]))
   }
 }

@@ -262,23 +262,16 @@ class ExtensionsAndScaleSpec extends GraftSuite {
     // shuffle join, the probe side's scan gains a bloom pre-filter.
     // Thresholds are tuned down because test data is tiny; on a real
     // cluster the defaults (10MB creation / 10GB probe) gate it.
-    val confs = Map(
+    withSQLConf(
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.keys.map(k =>
-      k -> scala.util.Try(spark.conf.get(k)).toOption).toMap
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val li = Tables.lineitem(spark, sf)
       val p = Tables.part(spark, sf).filter(col("p_brand") === "Brand#19")
       val plan = li.join(p, li("l_partkey") === p("p_partkey"))
         .queryExecution.executedPlan.toString
       assert(plan.contains("might_contain"), plan.take(1200))
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 

@@ -2,7 +2,6 @@ package graft
 
 import graft.plans.GridOrderStatsRule
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftglue.Glue
 
 /** GridOrderStatsRule: the optimizer rewrite of median()/percentile()

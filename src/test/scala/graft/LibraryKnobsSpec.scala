@@ -13,7 +13,7 @@ import scala.jdk.CollectionConverters._
   */
 class LibraryKnobsSpec extends AnyFunSuite {
   private val LibraryDirs = Seq("operators", "plans", "functions",
-    "pipeline", "streaming", "sources")
+    "pipeline", "streaming")
   private val Knob =
     raw"sys\.env|sys\.props|System\.getenv|System\.getProperty".r
 

@@ -80,7 +80,6 @@ class SimilaritySpec extends GraftSuite {
   }
 
   test("IVFPQ composed index: recall floor, exact reranked cosines, restricted scan") {
-    import org.apache.spark.sql.functions._
     val exactRows = SparkEntry.queries("ann_topk_exact")(spark, sf).collect()
     val exact = exactRows.map(r => (r.getLong(0), r.getLong(2))).toSet
     val got = SparkEntry.queries("ann_topk_ivfpq")(spark, sf).collect()

@@ -21,4 +21,14 @@ object TestSpark {
 abstract class GraftSuite extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Run `f` with session confs set, restoring the previous values. */
+  def withSQLConf[T](confs: (String, String)*)(f: => T): T = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

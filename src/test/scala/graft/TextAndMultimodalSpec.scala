@@ -91,7 +91,6 @@ class TextAndMultimodalSpec extends GraftSuite {
   }
 
   test("chunking: stride reconstruction recovers every document") {
-    import org.apache.spark.sql.functions._
     // Concatenating the first `stride` tokens of every chunk plus the
     // tail of the final chunk must reproduce the original text exactly.
     val chunks = SparkEntry.queries("ta_chunks")(spark, sf).collect()
@@ -367,7 +366,7 @@ class TextAndMultimodalSpec extends GraftSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(4))).toList
     // s1 docs: shingles = 5 per doc; 'click here'/'here now' shared by
     // all 12/12 docs of s1 → 2 boilerplate shingles → frac 0.4 → keep=0
-    rows.filter(_._1 <= 12L).foreach { case (id, nSh, nBo, keep) =>
+    rows.filter(_._1 <= 12L).foreach { case (id, _, nBo, keep) =>
       assert(nBo == 2L, s"doc $id: expected 2 boilerplate shingles, got $nBo")
       assert(keep == 0, s"doc $id should fail the keep gate")
     }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
