@@ -2,10 +2,13 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import graft.pipeline.CmapssReader
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-/** The graft-text DSv2 connector: byte-range splitting, pruned parsing,
-  * pushed filters, null/blank semantics, schema inference.
+/** The one parser for headerless whitespace-separated text,
+  * `CmapssReader.parse`, under a caller-given schema: null and blank-line
+  * semantics of a plain `spark.read.text` source.
   */
 class SourcesSpec extends GraftSuite {
 
@@ -14,49 +17,6 @@ class SourcesSpec extends GraftSuite {
     Files.write(Paths.get(dir.toString, "part-0.txt"),
       lines.mkString("\n").getBytes("UTF-8"))
     dir.toString
-  }
-
-  test("schema inference names c0..cN doubles from the first line") {
-    val dir = writeFixture("infer", Seq("1 2.5 3", "4 5 6"))
-    val df = spark.read.format("graft-text").load(dir)
-    assert(df.schema.fieldNames.toSeq == Seq("c0", "c1", "c2"))
-    assert(df.schema.fields.forall(_.dataType.typeName == "double"))
-    assert(df.count() == 2)
-  }
-
-  test("pruning and filters are pushed into the scan") {
-    val dir = writeFixture("push",
-      (1 to 100).map(i => s"$i ${i * 2} ${i * 3.5} ${i % 7} ${i % 11}"))
-    val df = spark.read.format("graft-text").load(dir)
-      .filter(col("c2") > 70.0)
-      .select("c0", "c2")
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [") &&
-      plan.contains("GreaterThan(c2,70.0)"), plan.take(800))
-    assert(plan.contains("ReadSchema: struct<c0:double,c2:double>"),
-      plan.take(800))
-    val got = df.collect().map(r => (r.getDouble(0), r.getDouble(1)))
-    val want = (1 to 100).filter(_ * 3.5 > 70.0)
-      .map(i => (i.toDouble, i * 3.5))
-    assert(got.sortBy(_._1).toSeq == want)
-  }
-
-  test("byte-range splits cover every line exactly once") {
-    val lines = (1 to 500).map(i => s"$i ${i * 0.25}")
-    val dir = writeFixture("split", lines)
-    val whole = spark.read.format("graft-text").load(dir)
-    val split = spark.read.format("graft-text")
-      .option("maxSplitBytes", "64").load(dir)
-    assert(split.rdd.getNumPartitions > 5,
-      s"expected many splits, got ${split.rdd.getNumPartitions}")
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getDouble(0), r.getDouble(1)))
-        .sortBy(_._1).toSeq
-    assert(canon(split) == canon(whole))
-    assert(canon(whole) == lines.indices.map(i =>
-      ((i + 1).toDouble, (i + 1) * 0.25)))
-    // Projection-free count (no required columns) still sees each line.
-    assert(split.count() == 500)
   }
 
   test("malformed tokens, short rows and blank lines follow try_cast") {
@@ -68,64 +28,17 @@ class SourcesSpec extends GraftSuite {
       "   ",        // whitespace-only -> skipped
       "9 10 11 12", // extra token ignored by a 3-col schema
       "13 14 15"))
-    val df = spark.read.format("graft-text")
-      .schema("a DOUBLE, b DOUBLE, c DOUBLE").load(dir)
-    val rows = df.collect().map(r => (0 to 2).map(i =>
+    val schema = StructType.fromDDL("a DOUBLE, b DOUBLE, c DOUBLE")
+    def load() = CmapssReader.parse(spark.read.text(dir), schema)
+    val rows = load().collect().map(r => (0 to 2).map(i =>
       if (r.isNullAt(i)) None else Some(r.getDouble(i))))
       .sortBy(_.head.getOrElse(Double.MaxValue))
     assert(rows.length == 5)
     assert(rows(1) == Seq(Some(4.0), None, Some(6.0)))
     assert(rows(2) == Seq(Some(7.0), Some(8.0), None))
-    // Three-valued logic on pushed Not: NULL b must NOT pass NOT(b > 5).
-    val notRows = spark.read.format("graft-text")
-      .schema("a DOUBLE, b DOUBLE, c DOUBLE").load(dir)
-      .filter(!(col("b") > 5.0)).collect()
+    assert(rows(3) == Seq(Some(9.0), Some(10.0), Some(11.0)))
+    // Three-valued logic on Not: NULL b must NOT pass NOT(b > 5).
+    val notRows = load().filter(!(col("b") > 5.0)).collect()
     assert(notRows.map(_.getDouble(0)).sorted.toSeq == Seq(1.0))
-  }
-
-  test("pushed-filter result equals post-scan filtering") {
-    val dir = writeFixture("equiv",
-      (1 to 300).map(i => s"${i % 13} ${i * 1.5} ${i % 3}"))
-    val base = spark.read.format("graft-text").load(dir)
-    val pred = (col("c0") >= 4.0 && col("c1") < 300.0) || col("c2") === 0.0
-    val pushedRes = base.filter(pred).agg(count(lit(1)), sum("c1")).head()
-    // Same data through a format with no pushdown surface at all.
-    val rawRes = base.collect().toSeq
-      .filter { r =>
-        val (a, b, c) = (r.getDouble(0), r.getDouble(1), r.getDouble(2))
-        (a >= 4.0 && b < 300.0) || c == 0.0
-      }
-    assert(pushedRes.getLong(0) == rawRes.length)
-    // Tolerance, not exact equality: Spark's sum("c1") adds in
-    // partition order, the driver-side Seq.sum in line order — equal
-    // bit patterns are only guaranteed while the fixture lands in one
-    // input split, and a split-size or parallelism change must not
-    // flake this test.
-    assert(math.abs(
-      pushedRes.getDouble(1) - rawRes.map(_.getDouble(1)).sum) < 1e-6)
-  }
-
-  test("pushed comparisons use Spark's NaN/-0.0 ordering, not Java's") {
-    // Double.parseDouble accepts "NaN" and "Infinity" tokens, and
-    // pushFilters() returns only the residual — Spark never re-checks a
-    // pushed predicate, so the scan-side comparator must match Spark's
-    // ordering (NaN = NaN true, NaN greater than everything, -0.0 =
-    // 0.0) or pushdown silently changes the row set.
-    val dir = writeFixture("nan_order", Seq(
-      "1.0 NaN", "2.0 5.0", "3.0 Infinity", "4.0 -0.0"))
-    def scan = spark.read.format("graft-text")
-      .schema("a DOUBLE, b DOUBLE").load(dir)
-    // NaN passes b > 5.0 (sorts greater than any double, incl. +Inf).
-    assert(scan.filter(col("b") > 5.0).collect().map(_.getDouble(0))
-      .sorted.toSeq == Seq(1.0, 3.0))
-    // NaN = NaN is TRUE in Spark SQL.
-    assert(scan.filter(col("b") === Double.NaN).collect()
-      .map(_.getDouble(0)).toSeq == Seq(1.0))
-    // -0.0 = 0.0 is TRUE (SQLOrderingUtil semantics).
-    assert(scan.filter(col("b") === 0.0).collect()
-      .map(_.getDouble(0)).toSeq == Seq(4.0))
-    // NaN must NOT pass b <= Infinity (it sorts above +Inf).
-    assert(scan.filter(col("b") <= Double.PositiveInfinity).collect()
-      .map(_.getDouble(0)).sorted.toSeq == Seq(2.0, 3.0, 4.0))
   }
 }
