@@ -369,11 +369,10 @@ object Bench {
     // counts (the only driver-side signal for no-oracle queries) cannot
     // catch an index/bucketing regression; these numbers can. Tiny
     // collects: tens-to-hundreds of id pairs per query.
-    // One row per [[Recall]]-checked query in the registry, measured
-    // the way [[RecallGate]] measures it.
-    val recall = RecallGate.Pairings.flatMap { case (twin, variants, keyCols) =>
+    // One row per [[Recall]]-checked query in the registry.
+    val recall = Recall.Pairings.flatMap { case (twin, variants, keyCols) =>
       if (!fatal && !failed(twin) && names.contains(twin))
-        try RecallGate.recallOf(spark, sfDir, twin,
+        try Recall.recallOf(spark, sfDir, twin,
           variants.filter(v => names.contains(v) && !failed(v)), keyCols)
         catch {
           case scala.util.control.NonFatal(e) =>
@@ -403,8 +402,16 @@ object Bench {
     val regSummaryJson = Harness.arr(
       regressions.toSeq.sortBy(-_._2).take(8).map(_._1))
     val recallJson = qJson(recall)
+    // Floors are judged over the variants this run selected together
+    // with their twin: one whose measurement is missing flags.
+    val recallFlags = Recall.flagged(recall.toMap,
+      Recall.Floors.filter { case (v, _) =>
+        names.contains(v) && Recall.Pairings.exists { case (twin, vs, _) =>
+          vs.contains(v) && names.contains(twin) }
+      })
     // Final artifact: complete results + the end-of-run-only fields.
     writeArtifact(provisional = false, extra = Seq("recall" -> recallJson,
+      "recall_flags" -> Harness.arr(recallFlags),
       "regressions_vs_prev" -> qJson(regressions.toSeq.sortBy(-_._2)),
       "floor_reproduced" -> floorJson, "prev_n" -> prev.size.toString))
     // Refresh the committed prior for the NEXT run's regression gate —

@@ -6,9 +6,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * how to build it, how its output is checked, and how the growth gate
   * judges its scaling. Each operator module declares its own `specs`;
   * [[SparkEntry.specs]] concatenates them, and the contract maps
-  * ([[SparkEntry.queries]], [[SparkEntry.oracleSql]]), [[RecallGate]],
-  * the bench's `recall` section and [[GrowthGate]]'s flag policy are all
-  * views over that one list.
+  * ([[SparkEntry.queries]], [[SparkEntry.oracleSql]]), the recall
+  * pairings and floors ([[Recall$]]), the bench's `recall` section and
+  * the growth gate's rules ([[Gates.growth]]) are all views over that
+  * one list.
   */
 final case class QuerySpec(name: String, build: Query, check: Check,
     growth: Option[Growth] = None)
@@ -60,12 +61,62 @@ final case class Oracle(sql: String) extends Check
 final case class Recall(twin: String, keyCols: Seq[String], floor: Double)
   extends Check
 
+/** The registry's [[Recall]] checks as the bench measures them. */
+object Recall {
+  private lazy val specs: Seq[(String, Recall)] =
+    SparkEntry.specs.collect { case QuerySpec(n, _, r: Recall, _) => n -> r }
+
+  /** (exact twin, approximate variants, id-pair columns), one row per
+    * twin, in registry order.
+    */
+  lazy val Pairings: Seq[(String, Seq[String], Seq[String])] =
+    specs.map { case (_, r) => (r.twin, r.keyCols) }.distinct.map {
+      case (twin, keyCols) =>
+        (twin, specs.collect {
+          case (n, r) if r.twin == twin && r.keyCols == keyCols => n
+        }, keyCols)
+    }
+
+  /** Each [[Recall]]-checked query's committed floor. */
+  lazy val Floors: Map[String, Double] =
+    specs.map { case (n, r) => n -> r.floor }.toMap
+
+  /** The floor policy, pure for the spec: a floored query flags when its
+    * measured recall is under the floor OR when the measurement is
+    * missing entirely (an exact twin that failed to run must not
+    * silently pass its variants). Sorted.
+    */
+  def flagged(recalls: Map[String, Double],
+      floors: Map[String, Double]): Seq[String] =
+    floors.keys.toSeq.sorted
+      .filter(q => recalls.get(q).forall(_ < floors(q)))
+
+  /** Recall of each variant's `keyCols` pair set against the exact
+    * twin's. Empty when the twin returns no pairs (corpus smaller than
+    * the query set): recall would be 0/0 = NaN.
+    */
+  def recallOf(spark: SparkSession, sfDir: String, twin: String,
+      variants: Seq[String], keyCols: Seq[String]): Seq[(String, Double)] = {
+    def pairs(q: String): Set[(Long, Long)] =
+      SparkEntry.queries(q)(spark, sfDir)
+        .select(keyCols.head, keyCols.tail: _*).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val exact = pairs(twin)
+    if (exact.isEmpty) Seq.empty
+    else variants.map { q =>
+      q -> pairs(q).count(exact.contains).toDouble / exact.size
+    }
+  }
+}
+
 /** Neither SQL-reproducible nor approximating an exact twin; `reason`
   * says what checks it instead. Its output gets only a rows-only check.
   */
 final case class Unchecked(reason: String) extends Check
 
-/** A [[GrowthGate]] rule replacing the default linear wall bound. */
+/** A growth-gate rule ([[Gates.growth]]) replacing the default linear
+  * wall bound.
+  */
 sealed trait Growth
 
 /** Super-linear BY SPEC: `bound` is the wall growth allowed at 10×, and

@@ -3,14 +3,53 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Scaled-corpus generators shared by the scale gates ([[GrowthGate]]
-  * and the other `*Gate` mains). All growth is DETERMINISTIC
-  * (sin-hash mixtures, md5 id arithmetic — no RNG) so runs are
-  * reproducible and resumable, and all id remapping preserves
-  * referential integrity WITHIN a replica (joins behave exactly like a
-  * partition-wise scale-up; cross-replica keys never collide).
+/** Scaled-corpus generators shared by the scale gates ([[Gates]]). All
+  * growth is DETERMINISTIC (sin-hash mixtures, md5 id arithmetic — no
+  * RNG) so runs are reproducible and resumable, and all id remapping
+  * preserves referential integrity WITHIN a replica (joins behave
+  * exactly like a partition-wise scale-up; cross-replica keys never
+  * collide).
+  *
+  * Every writer stamps the dir it writes with what it was derived from
+  * (source, factor or planted shape, and the source's own stamp), and
+  * reuses an existing dir only when its stamp matches: a dir written
+  * from another source or at another factor, or one with no stamp, is
+  * regenerated.
   */
 object ScaleData {
+
+  private val StampFile = "_graft_source"
+
+  /** What `dir` holds: its stamp when a writer here made it, else its
+    * canonical path (a source warehouse).
+    */
+  private def stampOf(dir: String): String = {
+    val f = java.nio.file.Paths.get(dir, StampFile)
+    if (java.nio.file.Files.isRegularFile(f)) java.nio.file.Files.readString(f)
+    else new java.io.File(dir).getCanonicalPath
+  }
+
+  /** Run `write(tmp)` and move `tmp` to `outDir`, stamped as `how` of
+    * `from`, unless `outDir` already carries that stamp.
+    */
+  private def generate(outDir: String, from: String, how: String)(
+      write: String => Unit): Unit = {
+    val out = new java.io.File(outDir)
+    require(out.getCanonicalPath != new java.io.File(from).getCanonicalPath,
+      s"$outDir is its own source")
+    val stamp = s"$how of ${stampOf(from)}"
+    val stampPath = java.nio.file.Paths.get(outDir, StampFile)
+    if (java.nio.file.Files.isRegularFile(stampPath) &&
+        java.nio.file.Files.readString(stampPath) == stamp) return
+    org.apache.commons.io.FileUtils.deleteQuietly(out)
+    val tmp = outDir + ".tmp"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+    write(tmp)
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(tmp, StampFile), stamp)
+    require(new java.io.File(tmp).renameTo(out),
+      s"rename $tmp -> $outDir failed")
+  }
 
   /** `factor`× the embeddings table by seeded manifold mixtures —
     * NATURAL growth, not clone replication (round-6 verdict: recall on
@@ -65,8 +104,9 @@ object ScaleData {
   }
 
   /** Write a full `factor`× warehouse (every TESTDATA table) under
-    * `outDir`, for whole-inventory scale measurement ([[GrowthGate]]).
-    * Idempotent: skips generation when the dir already exists.
+    * `outDir`, for whole-inventory scale measurement ([[Gates]]).
+    * Idempotent: skips generation when the dir already holds this
+    * source at this factor.
     *
     * Replication strategy per table family:
     *  - region/nation: fixed small dims, copied as-is (a 10× corpus
@@ -87,10 +127,8 @@ object ScaleData {
     *    same distribution).
     */
   def writeScaledWarehouse(spark: SparkSession, src: String, outDir: String,
-      factor: Int, partitions: Int): Unit = {
-    if (new java.io.File(outDir).exists()) return
-    val tmp = outDir + ".tmp"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+      factor: Int, partitions: Int): Unit =
+      generate(outDir, src, s"x$factor") { tmp =>
     def reps: DataFrame =
       spark.range(0, factor.toLong).select(col("id").as("rep"))
     def write(name: String, df: DataFrame): Unit =
@@ -148,8 +186,6 @@ object ScaleData {
       write("documents", mutated.select(docs.columns.map(col): _*))
     }
     write("embeddings", grownVectors(spark, src, factor))
-    require(new java.io.File(tmp).renameTo(new java.io.File(outDir)),
-      s"rename $tmp -> $outDir failed")
   }
 
   /** Derive a PLANTED-SKEW warehouse from an existing (scaled) one:
@@ -172,15 +208,14 @@ object ScaleData {
     * order holding 30% of all parts would contain C(0.3·nPart, 3)
     * genuine triangles, which no plan can enumerate cheaply; the two
     * hazards are planted independently so each gate number isolates one
-    * mechanism. [[HubGate]] measures the graph family on (scaled,
-    * scaled+hub) and bounds the inflation.
+    * mechanism. The hub gate ([[Gates]]) measures the graph family on
+    * (scaled, scaled+hub) and bounds the inflation.
     */
   def writeHubWarehouse(spark: SparkSession, scaled: String, outDir: String,
-      supFrac: Double = 0.3, ordFrac: Double = 0.3): Unit = {
+      supFrac: Double = 0.3, ordFrac: Double = 0.3): Unit =
+      generate(outDir, scaled,
+        s"hub(sup $supFrac, ord $ordFrac)") { tmp =>
     import org.apache.spark.sql.types.DataType
-    if (new java.io.File(outDir).exists()) return
-    val tmp = outDir + ".tmp"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
     Seq("region", "nation", "customer", "supplier", "part", "events",
       "documents", "embeddings").foreach { t =>
       linkTree(java.nio.file.Paths.get(scaled, s"$t.parquet"),
@@ -242,8 +277,6 @@ object ScaleData {
       .parquet(s"$tmp/orders.parquet")
     li.unionByName(hubLi).unionByName(hotLi).write.mode("overwrite")
       .parquet(s"$tmp/lineitem.parquet")
-    require(new java.io.File(tmp).renameTo(new java.io.File(outDir)),
-      s"rename $tmp -> $outDir failed")
   }
 
   /** Derive a ZIPF-SKEWED variant of a warehouse: `o_custkey` is
@@ -262,10 +295,8 @@ object ScaleData {
     * preserved exactly.
     */
   def writeZipfWarehouse(spark: SparkSession, src: String, outDir: String,
-      alpha: Double = 1.2): Unit = {
-    if (new java.io.File(outDir).exists()) return
-    val tmp = outDir + ".tmp"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+      alpha: Double = 1.2): Unit =
+      generate(outDir, src, s"zipf($alpha)") { tmp =>
     Seq("region", "nation", "customer", "supplier", "part", "events",
       "documents", "embeddings", "lineitem").foreach { t =>
       linkTree(java.nio.file.Paths.get(src, s"$t.parquet"),
@@ -301,11 +332,9 @@ object ScaleData {
         case c => col(c)
       }.toSeq: _*)
       .write.mode("overwrite").parquet(s"$tmp/orders.parquet")
-    require(new java.io.File(tmp).renameTo(new java.io.File(outDir)),
-      s"rename $tmp -> $outDir failed")
   }
 
-  /** Minimal synthetic warehouse for [[HubGate]]'s EXTREME-hub probe:
+  /** Minimal synthetic warehouse for the hub gate's EXTREME-hub probe:
     * only the two tables `g4_jaccard` reads (orders, lineitem), with
     *
     *  - ONE customer (key 1) whose single order covers supplier keys
@@ -317,15 +346,12 @@ object ScaleData {
     *
     * Schemas are cloned from one template row of the source warehouse
     * (same trick as [[writeHubWarehouse]]) so `Tables`' contracts hold
-    * bit for bit. Each degree gets its own subdir (`deg<D>`): probes at
-    * different degrees must not reuse a stale build.
+    * bit for bit.
     */
   def writeExtremeHubWarehouse(spark: SparkSession, src: String,
-      outDir: String, degree: Long): Unit = {
+      outDir: String, degree: Long): Unit =
+      generate(outDir, src, s"hub degree $degree") { tmp =>
     import org.apache.spark.sql.types.DataType
-    if (new java.io.File(outDir).exists()) return
-    val tmp = outDir + ".tmp"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
     val ord = spark.read.parquet(s"$src/orders.parquet")
     val li = spark.read.parquet(s"$src/lineitem.parquet")
     def oType(c: String): DataType = ord.schema(c).dataType
@@ -359,8 +385,6 @@ object ScaleData {
       }.toSeq: _*)
     orders.write.mode("overwrite").parquet(s"$tmp/orders.parquet")
     lineitem.write.mode("overwrite").parquet(s"$tmp/lineitem.parquet")
-    require(new java.io.File(tmp).renameTo(new java.io.File(outDir)),
-      s"rename $tmp -> $outDir failed")
   }
 
   /** Hardlink a parquet directory tree (fallback to copy when the

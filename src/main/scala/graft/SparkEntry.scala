@@ -56,8 +56,8 @@ object SparkEntry {
 
   /** For each [[Oracle]]-checked query, equivalent ANSI SQL runnable by
     * DuckDB on the same parquet tables. The 7 queries without one get
-    * only a rows-only check there: the 6 approximate variants
-    * carry a [[Recall]] floor against their exact twin ([[RecallGate]]),
+    * only a rows-only check there: the 6 approximate variants carry a
+    * [[Recall]] floor against their exact twin (Bench's `recall_flags`),
     * and `ml_model_compare` is [[Unchecked]] (spec-tested instead).
     */
   lazy val oracleSql: Map[String, String] =

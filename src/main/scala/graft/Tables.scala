@@ -7,7 +7,8 @@ import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias,
   UnresolvedWith}
 import org.apache.spark.sql.graftglue.Glue
-import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+import org.apache.spark.sql.functions.{array, array_remove, col, explode, expr,
+  lit, size, split, timestamp_micros, try_element_at, when}
 import org.apache.spark.sql.types._
 
 /** Loader for the driver-generated testdata tables (TESTDATA.md).
@@ -104,6 +105,31 @@ object Tables {
         SubqueryAlias(n, plans(n.toLowerCase))
     }
     Glue.ofRows(spark, bind(parsed))
+  }
+
+  /** The one parser for headerless whitespace-separated text lines (a
+    * `value` string column): field i of `schema` reads token i, tokens
+    * past the schema's width are ignored, a short line gives trailing
+    * NULLs, and a blank or whitespace-only line gives no row. Integer
+    * and long fields cast strictly; every other type uses try_cast, so
+    * a bad token becomes NULL.
+    */
+  def parseText(lines: DataFrame, schema: StructType): DataFrame = {
+    val cols = schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+      val token = try_element_at(col("f"), lit(i + 1))
+      val typed = f.dataType match {
+        case IntegerType | LongType => token.cast(f.dataType)
+        case t => token.try_cast(t)
+      }
+      typed.as(f.name)
+    }
+    // Empty tokens come only from leading or trailing whitespace. A line
+    // left with none is dropped by explode rather than by a filter: a
+    // filter is pushed below a computed `value` (s1_text_scan's), which
+    // evaluates the caller's expression twice.
+    lines.select(array_remove(split(col("value"), "\\s+"), "").as("f"))
+      .select(explode(when(size(col("f")) > 0, array(col("f")))).as("f"))
+      .select(cols: _*)
   }
 
   // One nanos-enabled clone per parent session, created on the first

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft._
-import graft.pipeline.CmapssReader
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -108,7 +107,7 @@ object CorpusOps {
   /** The reference's native input format (headerless whitespace-numeric
     * sensor text) written to disk and read back: lineitem serializes to
     * text, `read.text` splits the files by byte range, and
-    * [[graft.pipeline.CmapssReader.parse]] (the CMAPSS reader's parser)
+    * [[graft.Tables.parseText]] (the CMAPSS reader's parser)
     * types the tokens; a quantity filter and a 3-of-5-column projection
     * leave the unused casts for Catalyst to prune, then it aggregates
     * per orderkey bucket. The roundtrip is exact: Spark's double→string
@@ -126,7 +125,7 @@ object CorpusOps {
         col("l_quantity"), col("l_extendedprice"), col("l_discount"))
         .as("value"))
       .write.mode("overwrite").text(dir)
-    CmapssReader.parse(s.read.text(dir), Relational.LineitemTextSchema)
+    Tables.parseText(s.read.text(dir), Relational.LineitemTextSchema)
       .filter(col("l_quantity") > 25.0)
       .select((col("l_orderkey") % 7).as("bucket"), col("l_extendedprice"))
       .groupBy("bucket")

@@ -293,9 +293,9 @@ object Dedup {
       .filter(col("edit_dist").between(0, EditMax))
   }
 
-  /** [[editDistance]]'s exact work contract, for
-    * [[graft.GrowthGate]]'s work-metric gate, updated for the BANDED
-    * DP: per candidate pair the thresholded Levenshtein costs ~1 when
+  /** [[editDistance]]'s exact work contract, for the growth gate's
+    * work metric ([[graft.Gates]]), updated for the BANDED DP: per
+    * candidate pair the thresholded Levenshtein costs ~1 when
     * |len_a − len_b| > EditMax (immediate −1) and ~min_len·(2k+3)
     * otherwise. The sum is NORMALIZED by the corpus mean document
     * length: the scaled-corpus generator suffixes every token, which

@@ -112,8 +112,7 @@ object Graph {
   }
 
   /** One power-iteration round over the degree-annotated pinned edge
-    * list: rank⋈edges join + dst aggregate, shared verbatim by the
-    * fixed-iteration oracle query and the converged variant.
+    * list: rank⋈edges join + dst aggregate.
     */
   private def pagerankRound(ranks: DataFrame, edges: DataFrame,
       nNodes: Double): DataFrame = {
@@ -155,70 +154,6 @@ object Graph {
           .as("node_type"),
         expr("node div 2").as("node_key"),
         r6(col("rank")).as("rank"))
-
-  /** Convergence-stopped PageRank: iterate until max |Δrank| < `eps`
-    * (L∞ — the classical power-iteration stop) instead of a fixed
-    * round count. The registry's `g1_pagerank` stays FIXED-iteration —
-    * the DuckDB oracle unrolls exactly [[PrIters]] rounds, and a
-    * data-dependent round count would make the oracle nondeterministic.
-    *
-    * Measured honesty about the trade (see
-    * [[graft.PagerankConvergeGate]]): L∞ deltas decay at ~d^k per
-    * round, so an eps tight enough to FREEZE 6-decimal rank values
-    * costs MORE rounds than the fixed 10, not fewer — the early-exit
-    * saves wall only at tolerances where the caller wants a stable
-    * RANKING rather than stable values (the ranking freezes many
-    * rounds before the values do). Iteration cost dominates this
-    * family at scale (the 100× gate measured 6.3× growth, all of it
-    * rounds × per-round cost), so the eps knob converts directly into
-    * wall either way. The per-round delta check is one
-    * node-cardinality aggregate; it also forces each round's lazy
-    * checkpoint, which the fixed mode defers to the final collect.
-    * Returns (head frame, rounds actually run).
-    */
-  private[graft] def pagerankConverged(s: SparkSession, d: String,
-      eps: Double = 1e-4, maxIters: Int = 120): (DataFrame, Int) = {
-    val rawEdges = purchaseEdges(s, d)
-    val nodes = rawEdges.groupBy("src").agg(count(lit(1)).as("deg"))
-      .select(col("src").as("node"), col("deg"))
-      .pinned()
-    val nNodes = nodes.count().toDouble
-    // Same build-dependent pin layout as [[pagerank]] — see there.
-    val pinKey =
-      if (nNodes <= PrBroadcastMaxNodes) col("dst") else col("src")
-    val edges = rawEdges
-      .join(nodes, col("src") === col("node"))
-      .select(col("src"), col("dst"), col("deg").cast("double").as("dsrc"))
-      .repartition(pinKey)
-      .pinned()
-    var ranks = nodes.select(col("node"), lit(1.0 / nNodes).as("rank"))
-    var iters = 0
-    var delta = Double.MaxValue
-    while (delta >= eps && iters < maxIters) {
-      val next = pagerankRound(ranks, edges, nNodes)
-      // RELATIVE L∞: max |Δrank| / max rank. Rank magnitudes scale as
-      // ~1/N (plus hub concentration), so an absolute eps that is
-      // meaningful at one corpus size is either never reached or
-      // reached in one round at another — the 30× gate measured
-      // exactly that failure (absolute 1e-4 "converged" in 1 round on
-      // a 480k-node graph whose ranks all sit below 1e-4).
-      // coalesce: on an empty graph (no purchase edges, or none shared
-      // between rounds) the join is empty and max() aggregates to NULL
-      // — delta 0.0 then converges immediately on the empty rank
-      // frame, matching the fixed-iteration path's tolerance of the
-      // same corpus instead of throwing NPE from getDouble.
-      val row = next.join(ranks.select(col("node"),
-          col("rank").as("prev")), "node")
-        .agg(coalesce(max(abs(col("rank") - col("prev"))), lit(0.0)),
-          coalesce(max(col("rank")), lit(0.0)))
-        .collect().head
-      delta = row.getDouble(0) /
-        math.max(row.getDouble(1), Double.MinPositiveValue)
-      ranks = next
-      iters += 1
-    }
-    (prHead(ranks), iters)
-  }
 
   // ------------------------------------------------------- triangles
 
@@ -402,9 +337,10 @@ object Graph {
     * C(⌈D/chunk⌉+1, 2) chunk-pair rows that the repartition spreads
     * across the cluster — each task does ≤ chunk² work — where the
     * self-join form would land all C(D, 2) pairs on ONE join key
-    * (quadratic straggler; [[HubGate]] plants exactly this customer
-    * shape and bounds the inflation). The segmented build keeps every
-    * per-stage unit bounded too: the widest ROW anywhere is one
+    * (quadratic straggler; the hub gate in [[graft.Gates]] plants
+    * exactly this customer shape and bounds the inflation). The
+    * segmented build keeps every per-stage unit bounded too: the widest
+    * ROW anywhere is one
     * JacChunk array, and the hub's only single-task stages are the
     * window sort (O(D log D), spillable) and the tiny key-row explode.
     * Chunks are consecutive rank ranges of the per-customer sort, so
@@ -456,9 +392,10 @@ object Graph {
     * capped expansion (the r15 redesign — no minhash estimate anywhere),
     * so whenever max customer degree ≤ this cap the output is
     * bit-identical to the exact operator — recall 1.0 by construction,
-    * which the bench recall field and RecallGate pin. Only above the
-    * cap (adversarial hubs) does the output diverge, by the documented
-    * curation semantics: hub-mediated co-occurrence is excluded.
+    * which the bench recall field and its `recall_flags` pin. Only
+    * above the cap (adversarial hubs) does the output diverge, by the
+    * documented curation semantics: hub-mediated co-occurrence is
+    * excluded.
     */
   private val JacCapDeg: Long = JacSegDeg.toLong
 
@@ -485,7 +422,8 @@ object Graph {
     * On any corpus whose max customer degree is ≤ the cap (every
     * natural corpus measured: max ~102 at all SFs vs cap 1024) the
     * output is BIT-IDENTICAL to [[jaccard]] — recall 1.0 by
-    * construction, which the bench's recall field and RecallGate pin.
+    * construction, which the bench's recall field and its
+    * `recall_flags` pin.
     *
     * Round-15 measured redesign (OPTIMIZATION_r15.md): the r14 variant
     * scored candidates by 128-component minhash over full customer
@@ -499,7 +437,7 @@ object Graph {
     * every scale, deletes the 128-aggregate signature pass + pair
     * `distinct` + two shuffled signature joins (measured in the bench),
     * and keeps the SAME hub-work bound. No DuckDB oracle (the cap is
-    * engine-side); accuracy is pinned by bench/RecallGate recall vs
+    * engine-side); accuracy is pinned by the bench's recall vs
     * [[jaccard]] and GraphSpec's equality-under-cap test.
     */
   private def jaccardCapped(s: SparkSession, d: String): DataFrame =
@@ -535,8 +473,8 @@ object Graph {
       .pinned() // consumed by the chunk build + degrees
   }
 
-  /** [[jaccard]]'s chunk-pair generator, exposed for
-    * [[graft.HubGate]]'s extreme-hub probe (which must drive THIS
+  /** [[jaccard]]'s chunk-pair generator, exposed for the hub gate's
+    * extreme-hub probe in [[graft.Gates]] (which must drive THIS
     * stage — the one the pre-r14 build could not survive at degree
     * 10⁶ — without paying the downstream C(D, 2) explode, an output
     * volume no plan can dodge). Returns (c, i, j, a, b) chunk-pair
@@ -650,10 +588,10 @@ object Graph {
   /** Customer-side degree profile of THE SAME incidence list
     * [[jaccard]] builds: (max customer degree, candidate-pair volume
     * Σ_c C(deg_c, 2)). One shared construction so the two consumers —
-    * [[graft.GrowthGate]]'s work metric and [[graft.HubGate]]'s
-    * planted-hub accounting — cannot silently diverge from what the
-    * operator actually sees; both numbers are variance-free where the
-    * pair stage's wall is not.
+    * the growth gate's work metric and the hub gate's planted-hub
+    * accounting ([[graft.Gates]]) — cannot silently diverge from what
+    * the operator actually sees; both numbers are variance-free where
+    * the pair stage's wall is not.
     */
   private[graft] def customerDegreeStats(s: SparkSession,
       d: String): (Long, Double) = {
@@ -670,9 +608,9 @@ object Graph {
     (r.getAs[Number](0).longValue, r.getAs[Number](1).doubleValue)
   }
 
-  /** [[jaccard]]'s exact work contract, for [[graft.GrowthGate]]'s
-    * work-metric gate: the candidate-pair volume the chunked generator
-    * must emit.
+  /** [[jaccard]]'s exact work contract, for the growth gate's work
+    * metric ([[graft.Gates]]): the candidate-pair volume the chunked
+    * generator must emit.
     */
   private[graft] def jaccardPairVolume(s: SparkSession, d: String): Double =
     customerDegreeStats(s, d)._2

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft._
-import graft.pipeline.CmapssReader
 import graft.plans.ValueGrid
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -24,7 +23,7 @@ object Relational {
   /** S1 (scripts/etl_turbofan.py:10-19): whitespace-text positional scan
     * with numeric coercion. Demonstrated as a lossless roundtrip: serialize
     * lineitem rows to space-separated lines, then parse them back with
-    * [[graft.pipeline.CmapssReader.parse]], the CMAPSS reader's parser.
+    * [[graft.Tables.parseText]], the CMAPSS reader's parser.
     */
   private def s1TextScan(s: SparkSession, d: String): DataFrame = {
     // spreadScan: the serialize→trim→regex-split→try_cast chain is the
@@ -33,7 +32,7 @@ object Relational {
     val li = spreadScan(Tables.lineitem(s, d), col("l_orderkey"))
     val line = concat_ws(" ", col("l_orderkey"), col("l_linenumber"),
       col("l_quantity"), col("l_extendedprice"), col("l_discount"))
-    CmapssReader.parse(li.select(line.as("value")), LineitemTextSchema)
+    Tables.parseText(li.select(line.as("value")), LineitemTextSchema)
   }
 
   /** The five lineitem columns [[s1TextScan]] and `io_text_scan` write

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
 
 /** CMAPSS-domain schema constants (reference: scripts/etl_turbofan.py:5-6;
   * sql/sqlite_ddl.sql:3-12). Positional column names for the headerless
@@ -33,33 +33,8 @@ object CmapssReader {
     val schema = StructType(CmapssSchema.colNames(nSensors).map(n =>
       StructField(n,
         if (CmapssSchema.keyCols.contains(n)) IntegerType else DoubleType)))
-    parse(spark.read.text(path), schema)
+    graft.Tables.parseText(spark.read.text(path), schema)
       .select(lit(dataset).as("dataset") +: schema.fieldNames.toSeq.map(col): _*)
-  }
-
-  /** The one parser for headerless whitespace-separated text lines (a
-    * `value` string column): field i of `schema` reads token i, tokens
-    * past the schema's width are ignored, a short line gives trailing
-    * NULLs, and a blank or whitespace-only line gives no row. Integer
-    * and long fields cast strictly; every other type uses try_cast, so
-    * a bad token becomes NULL.
-    */
-  def parse(lines: DataFrame, schema: StructType): DataFrame = {
-    val cols = schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
-      val token = try_element_at(col("f"), lit(i + 1))
-      val typed = f.dataType match {
-        case IntegerType | LongType => token.cast(f.dataType)
-        case t => token.try_cast(t)
-      }
-      typed.as(f.name)
-    }
-    // Empty tokens come only from leading or trailing whitespace. A line
-    // left with none is dropped by explode rather than by a filter: a
-    // filter is pushed below a computed `value` (s1_text_scan's), which
-    // evaluates the caller's expression twice.
-    lines.select(array_remove(split(col("value"), "\\s+"), "").as("f"))
-      .select(explode(when(size(col("f")) > 0, array(col("f")))).as("f"))
-      .select(cols: _*)
   }
 
   /** Read a RUL ground-truth file: one integer per line; unit_nr is the

@@ -39,23 +39,23 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("recall gate: every shipped pairing variant has a floor") {
-    val variants = RecallGate.Pairings.flatMap(_._2).toSet
+    val variants = Recall.Pairings.flatMap(_._2).toSet
     assert(variants.nonEmpty)
-    assert(RecallGate.Floors.keySet == variants,
-      s"floorless variants: ${variants.diff(RecallGate.Floors.keySet)}; " +
-        s"orphan floors: ${RecallGate.Floors.keySet.diff(variants)}")
+    assert(Recall.Floors.keySet == variants,
+      s"floorless variants: ${variants.diff(Recall.Floors.keySet)}; " +
+        s"orphan floors: ${Recall.Floors.keySet.diff(variants)}")
   }
 
   test("every floor is in (0, 1]") {
-    RecallGate.Floors.foreach { case (n, f) =>
+    Recall.Floors.foreach { case (n, f) =>
       assert(f > 0 && f <= 1, s"$n floor $f")
     }
   }
 
   test("every growth entry names a registered query") {
-    assert(GrowthGate.growth.size == 7)
-    assert(GrowthGate.growth.keySet.subsetOf(names))
-    assert(GrowthGate.growth.values.count(_.isInstanceOf[Exempt]) == 4)
+    assert(Gates.growth.size == 7)
+    assert(Gates.growth.keySet.subsetOf(names))
+    assert(Gates.growth.values.count(_.isInstanceOf[Exempt]) == 4)
   }
 
   test("only ml_model_compare is unchecked") {

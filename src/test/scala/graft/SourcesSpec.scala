@@ -2,12 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.pipeline.CmapssReader
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 /** The one parser for headerless whitespace-separated text,
-  * `CmapssReader.parse`, under a caller-given schema: null and blank-line
+  * `Tables.parseText`, under a caller-given schema: null and blank-line
   * semantics of a plain `spark.read.text` source.
   */
 class SourcesSpec extends GraftSuite {
@@ -29,7 +28,7 @@ class SourcesSpec extends GraftSuite {
       "9 10 11 12", // extra token ignored by a 3-col schema
       "13 14 15"))
     val schema = StructType.fromDDL("a DOUBLE, b DOUBLE, c DOUBLE")
-    def load() = CmapssReader.parse(spark.read.text(dir), schema)
+    def load() = Tables.parseText(spark.read.text(dir), schema)
     val rows = load().collect().map(r => (0 to 2).map(i =>
       if (r.isNullAt(i)) None else Some(r.getDouble(i))))
       .sortBy(_.head.getOrElse(Double.MaxValue))

@@ -8,6 +8,40 @@ import org.apache.spark.sql.functions._
 
 class StreamingAndMlSpec extends GraftSuite {
 
+  /** Each frame written as one single-file drop, with ascending mtimes:
+    * FileStreamSource replays them oldest-first, one per micro-batch
+    * under `maxFilesPerTrigger = 1`. Returns the drops dir.
+    */
+  private def drops(frames: Seq[org.apache.spark.sql.DataFrame]): String = {
+    val base = Files.createTempDirectory("graft_drops").toString
+    val dropsDir = new java.io.File(s"$base/drops")
+    assert(dropsDir.mkdirs())
+    frames.zipWithIndex.foreach { case (df, i) =>
+      val tmp = s"$base/tmp_$i"
+      df.coalesce(1).write.parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      val dst = new java.io.File(dropsDir, f"drop-$i%02d.parquet")
+      Files.copy(part.toPath, dst.toPath)
+      assert(dst.setLastModified(1700000000000L + i * 60000L))
+    }
+    dropsDir.toString
+  }
+
+  /** `df` cut into `parts` drops in the string order of `orderCol` (a
+    * zero-padded key): the batch corpus arriving in its own order, split
+    * at arbitrary points.
+    */
+  private def orderedDrops(df: org.apache.spark.sql.DataFrame,
+      orderCol: String, parts: Int): String = {
+    val key = col(orderCol).cast("string")
+    val keys = df.select(key).orderBy(key).collect().map(_.getString(0))
+    val cuts = (1 until parts).map(i => keys(i * keys.length / parts))
+    drops((("" +: cuts) :+ "\uffff").sliding(2).map { case Seq(lo, hi) =>
+      df.filter(key >= lit(lo) && key < lit(hi))
+    }.toSeq)
+  }
+
   test("streaming windowed counts equal the batch aggregation") {
     // Stage the events table as the stream source directory (one file =
     // one micro-batch of the incremental append protocol).
@@ -323,6 +357,48 @@ class StreamingAndMlSpec extends GraftSuite {
     q.processAllAvailable()
     q.stop()
     assert(spark.read.parquet(tbl).count() == 2)
+
+    // Per-user rollups over 4 sequential day ranges, one row per key per
+    // drop (the sink's pick among intra-batch duplicates is arbitrary),
+    // one drop per micro-batch: the table must end as each user's LAST
+    // range's rollup, with its partition moved to that range's last day.
+    val daily = Tables.events(spark, sf)
+      .select(col("user_id").as("id"),
+        expr("unix_micros(ts) div 86400000000").as("day"), col("value"))
+    val days = daily.select("day").distinct().orderBy("day")
+      .collect().map(_.getLong(0))
+    val cuts = (1 until 4).map(i => days(i * days.length / 4))
+    val ranges = ((Long.MinValue +: cuts) :+ Long.MaxValue).sliding(2)
+      .map { case Seq(lo, hi) =>
+        daily.filter(col("day") >= lo && col("day") < hi).groupBy("id")
+          .agg(max(col("day")).as("p"), count(lit(1)).as("n"),
+            r6(sum("value")).as("v"))
+      }.toSeq
+    val rangeDrops = drops(ranges)
+    val rolled = Files.createTempDirectory("graft_up_roll").toString + "/tbl"
+    val q4 = spark.readStream.schema("id LONG, p LONG, n LONG, v DOUBLE")
+      .option("maxFilesPerTrigger", 1).parquet(rangeDrops)
+      .writeStream
+      .foreachBatch(streaming.UpsertSink.foreachBatchPartitioned(
+        rolled, "id", "p", keysArePartitionStable = false))
+      .option("checkpointLocation", rolled + ".chk")
+      .start()
+    q4.processAllAvailable()
+    q4.stop()
+    val streamed = spark.read.parquet(rolled)
+      .select(col("id"), col("p").cast("long"), col("n"), col("v"))
+      .collect().map(_.toString).toSet
+    // The expected table reads the WRITTEN drops back: double sums are
+    // order-dependent, so a recomputed rollup could drift in ulps.
+    val last = org.apache.spark.sql.expressions.Window
+      .partitionBy("id").orderBy(col("range").desc)
+    val expected = (0 until 4).map(i =>
+        spark.read.parquet(f"$rangeDrops/drop-$i%02d.parquet")
+          .withColumn("range", lit(i)))
+      .reduce(_ unionByName _)
+      .withColumn("rn", row_number().over(last)).filter(col("rn") === 1)
+      .select("id", "p", "n", "v").collect().map(_.toString).toSet
+    assert(streamed.nonEmpty && streamed == expected)
   }
 
   test("partition-scoped upsert handles moved keys and vacated partitions") {
@@ -456,21 +532,12 @@ class StreamingAndMlSpec extends GraftSuite {
       .map(_.getLong(0))
     val cuts = Seq(ids(ids.length / 4), ids(ids.length / 2),
       ids(3 * ids.length / 4))
-    val dropsDir = new java.io.File(s"$base/drops")
-    assert(dropsDir.mkdirs())
-    (Long.MinValue +: cuts :+ Long.MaxValue).sliding(2).zipWithIndex
-      .foreach { case (Seq(lo, hi), i) =>
-        val tmp = s"$base/tmp_$i"
+    val dropsDir = drops((Long.MinValue +: cuts :+ Long.MaxValue).sliding(2)
+      .map { case Seq(lo, hi) =>
         docs.filter(col("doc_id") > lo && col("doc_id") <= hi)
-          .coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(dropsDir, f"drop-$i%02d.parquet")
-        java.nio.file.Files.copy(part.toPath, dst.toPath)
-        assert(dst.setLastModified(1700000000000L + i * 60000L))
-      }
+      }.toSeq)
     streaming.StreamingDedup.runLineDedupToParquet(spark,
-      s"$base/drops", s"$base/out", maxFilesPerTrigger = 1)
+      dropsDir, s"$base/out", maxFilesPerTrigger = 1)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_id", "n_kept", "text_deduped").orderBy("doc_id")
         .collect().map(_.toString).toSeq
@@ -504,9 +571,10 @@ class StreamingAndMlSpec extends GraftSuite {
       .write.mode("overwrite").parquet(s"$tmp/docs.parquet")
     streaming.StreamingQuota.runToMemory(spark,
       s"$tmp/docs.parquet", "quota_multi", maxFilesPerTrigger = 2)
-    val rows = spark.table("quota_multi")
+    def admitted(name: String) = spark.table(name)
       .select("doc_id", "source", "n_tokens", "cum_tokens").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
+    val rows = admitted("quota_multi")
     assert(rows.nonEmpty)
     rows.groupBy(_._2).foreach { case (src, rs) =>
       // every admitted doc started under budget, and the per-source
@@ -524,6 +592,21 @@ class StreamingAndMlSpec extends GraftSuite {
     val srcAll = Tables.documents(spark, sf)
       .select("source").distinct().collect().map(_.getString(0)).toSet
     assert(rows.map(_._2).toSet == srcAll)
+
+    // Arrival in admission order: the batch operator admits by the md5
+    // slice 17..20 of doc_id, then doc_id, so 4 drops cut in that order
+    // and replayed one per micro-batch must admit exactly its rows.
+    val hashOrd = conv(
+      substring(md5(col("doc_id").cast("string")), 17, 4), 16, 10)
+      .cast("long")
+    val ordered = orderedDrops(Tables.documents(spark, sf)
+      .withColumn("ord", concat(format_string("%05d", hashOrd),
+        format_string("%012d", col("doc_id")))), "ord", 4)
+    streaming.StreamingQuota.runToMemory(spark, ordered, "quota_ordered",
+      maxFilesPerTrigger = 1)
+    val batch = SparkEntry.queries("pp_token_budget")(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
+    assert(admitted("quota_ordered").toSet == batch.toSet)
   }
 
   test("streaming quota: the budget invariant holds under ANY micro-batch partitioning") {
@@ -702,6 +785,15 @@ class StreamingAndMlSpec extends GraftSuite {
     // only carries users who advanced at least one step
     val batch = batchFunnel().filter(_._2._4 > 0)
     assert(streamed == batch, "single micro-batch must equal the batch op")
+    // The same events as 4 ts-ordered drops, one per micro-batch: arrival
+    // in time order carries the funnel state across batches exactly.
+    val events = Tables.events(spark, sf)
+      .select("event_id", "ts", "user_id", "event_type", "value")
+      .withColumn("ord", format_string("%020d", unix_micros(col("ts"))))
+    streaming.StreamingFunnel.runToMemory(spark,
+      orderedDrops(events, "ord", 4), "funnel_ordered", maxFilesPerTrigger = 1)
+    assert(funnelFromProgress("funnel_ordered") == batch,
+      "ts-ordered micro-batches must equal the batch op")
   }
 
   test("streaming funnel: each step advances at most once per user") {

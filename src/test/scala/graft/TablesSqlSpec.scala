@@ -10,7 +10,7 @@ class TablesSqlSpec extends GraftSuite {
     java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
 
   test("one session builds a query on two dirs, each reading its own") {
-    // GrowthGate's shape: both frames built before either runs
+    // The gates' shape: both frames built before either runs
     val q = SparkEntry.queries("s3_table_scan")
     val (small, big) = (q(spark, sf), q(spark, sf01))
     assert(small.count() == Tables.supplier(spark, sf).count())
