@@ -21,12 +21,12 @@ import org.apache.spark.sql.SparkSession
   *
   * Protocol: each item is measured as one (a, b) pair on the record's
   * two data dirs — for a registry query, one warm pass and one timed
-  * pass on each ([[Harness.warmTimed]]) — and a [[WorkGated]] query also
-  * gets its deterministic work pair, measured once. A flagged item whose
-  * flag depends on the walls gets ONE fresh pair, and the verdict uses
-  * the per-scale minima: noise only inflates a timing, so the minima are
-  * the honest estimates of both sides, and a real super-linear plan
-  * reproduces its ratio in both pairs.
+  * pass on each ([[Harness.warmTimed]]) — and a [[WorkGated]] query
+  * whose rule reads work also gets its deterministic work pair, measured
+  * once. A flagged item whose flag depends on the walls gets ONE fresh
+  * pair, and the verdict uses the per-scale minima: noise only inflates
+  * a timing, so the minima are the honest estimates of both sides, and a
+  * real super-linear plan reproduces its ratio in both pairs.
   *
   * Usage: runMain graft.Gates <growth|skew|hub|stream> <factor> <srcSfDir>
   *   [scratchDir] [item ...]  (scratch defaults to target/gates_x<factor>;
@@ -58,7 +58,8 @@ object Gates {
     * @param dirs    writes any derived warehouse and returns the two dirs
     *                every item is measured on
     * @param items   the gate's items at a factor
-    * @param measure one (a, b) pair for an item
+    * @param measure a pass's measurer, made once per pass: one (a, b)
+    *                pair for an item
     * @param ratio   an item's ratio from its pair
     * @param flag    the bound, over (factor, item, row)
     * @param extra   numbers recorded beside the rows
@@ -68,8 +69,8 @@ object Gates {
       dirs: (SparkSession, Scale) => (String, String),
       items: Int => Seq[String],
       flag: (Int, String, Row) => Boolean,
-      measure: (SparkSession, String, String, String) => (Double, Double) =
-        (s, n, a, b) =>
+      measure: SparkSession => (String, String, String) => (Double, Double) =
+        s => (n, a, b) =>
           (Harness.warmTimed(s, n, a), Harness.warmTimed(s, n, b)),
       ratio: (Double, Double) => Double = growthRatio,
       extra: (SparkSession, Scale, String, String) => Seq[(String, Double)] =
@@ -77,6 +78,17 @@ object Gates {
       extraFlags: Map[String, Double] => Seq[String] = _ => Nil) {
     def row(a: Double, b: Double, work: Option[(Double, Double)]): Row =
       Row(a, b, ratio(a, b), work)
+
+    /** Whether the rule reads an item's work pair: a rule that does
+      * judges one of these rows differently once the pair is dropped
+      * (a work growth far past any contract, or walls far past their
+      * work).
+      */
+    def readsWork(factor: Int, item: String): Boolean =
+      Seq(Row(1.0, 1.0, 1.0, Some((1.0, 1e12))),
+          Row(1.0, 1e6, 1e6, Some((1.0, 1.0))))
+        .exists(r => flag(factor, item, r) != flag(factor, item,
+          r.copy(work = None)))
   }
 
   /** Wall growth with a 0.05 s denominator floor; -1 for a failed pair. */
@@ -260,20 +272,24 @@ object Gates {
     (docs.length, once())
   }
 
-  /** A stream item's pair: per-doc seconds at a and at b, or one
-    * replay's first and last batch walls, clamped at [[FloorSec]].
+  /** A pass's stream measurer: each dir is replayed once per pass, and
+    * every item reads that replay — per-doc seconds at a and at b, or
+    * one replay's first and last batch walls, clamped at [[FloorSec]].
     */
-  private def streamPair(spark: SparkSession, item: String, a: String,
-      b: String): (Double, Double) = {
+  private def streamPass(spark: SparkSession)
+      : (String, String, String) => (Double, Double) = {
+    val replays =
+      scala.collection.mutable.Map.empty[String, (Int, Seq[Double])]
+    def walls(dir: String) = replays.getOrElseUpdate(dir, replay(spark, dir))
     def slope(dir: String) = {
-      val w = replay(spark, dir)._2
+      val w = walls(dir)._2
       (math.max(w.head, FloorSec), math.max(w.last, FloorSec))
     }
     def perDoc(dir: String) = {
-      val (n, w) = replay(spark, dir)
+      val (n, w) = walls(dir)
       w.sum / n
     }
-    item match {
+    (item, a, b) => item match {
       case "per_doc_growth" => (perDoc(a), perDoc(b))
       case "slope_1x" => slope(a)
       case _ => slope(b)
@@ -324,7 +340,7 @@ object Gates {
         else Nil),
     Gate("stream", (_, sc) => (sc.src, sc.scaled),
       f => Seq("per_doc_growth", "slope_1x", s"slope_${f}x"),
-      (_, _, r) => r.ratio > Bound, measure = streamPair,
+      (_, _, r) => r.ratio > Bound, measure = streamPass,
       ratio = (a, b) => b / a,
       extra = (spark, _, a, b) => Seq("batches" -> Batches.toDouble,
         "docs_a" -> Tables.documents(spark, a).count().toDouble,
@@ -369,11 +385,13 @@ object Gates {
         f"ratio=${r.ratio}%7.2f" + r.work.map { case (wa, wb) =>
           f" work=$wa%.0f->$wb%.0f (${r.workRatio.get}%.1fx)"
         }.getOrElse("") + note)
+    val first = gate.measure(spark)
     items.foreach { n =>
       try {
-        val (ta, tb) = gate.measure(spark, n, a, b)
-        val work = growth.get(n).collect { case w: WorkGated =>
-          (w.metric(spark, a), w.metric(spark, b))
+        val (ta, tb) = first(n, a, b)
+        val work = growth.get(n).collect {
+          case w: WorkGated if gate.readsWork(factor, n) =>
+            (w.metric(spark, a), w.metric(spark, b))
         }
         rows(n) = gate.row(ta, tb, work)
         log(n, rows(n), "")
@@ -389,9 +407,10 @@ object Gates {
         val r = rows(n)
         gate.flag(factor, n, gate.row(r.a, r.a, r.work))
       }
+    val fresh = gate.measure(spark)
     remeasured.foreach { n =>
       try {
-        val (ta, tb) = gate.measure(spark, n, a, b)
+        val (ta, tb) = fresh(n, a, b)
         val r = rows(n)
         rows(n) = gate.row(math.min(r.a, ta), math.min(r.b, tb), r.work)
         log(n, rows(n), " REMEASURED")

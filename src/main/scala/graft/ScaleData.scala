@@ -13,20 +13,32 @@ import org.apache.spark.sql.functions._
   * Every writer stamps the dir it writes with what it was derived from
   * (source, factor or planted shape, and the source's own stamp), and
   * reuses an existing dir only when its stamp matches: a dir written
-  * from another source or at another factor, or one with no stamp, is
-  * regenerated.
+  * here from another source or at another factor is regenerated. A
+  * writer deletes only a dir that carries a stamp: an existing dir
+  * without one, or one that holds the source, is refused, never
+  * overwritten.
   */
 object ScaleData {
 
   private val StampFile = "_graft_source"
 
+  private def stampPath(dir: String) = java.nio.file.Paths.get(dir, StampFile)
+
   /** What `dir` holds: its stamp when a writer here made it, else its
     * canonical path (a source warehouse).
     */
-  private def stampOf(dir: String): String = {
-    val f = java.nio.file.Paths.get(dir, StampFile)
-    if (java.nio.file.Files.isRegularFile(f)) java.nio.file.Files.readString(f)
+  private def stampOf(dir: String): String =
+    if (java.nio.file.Files.isRegularFile(stampPath(dir)))
+      java.nio.file.Files.readString(stampPath(dir))
     else new java.io.File(dir).getCanonicalPath
+
+  /** Delete `dir` if a writer here made it; refuse any other dir. */
+  private def clear(dir: String): Unit = {
+    val f = new java.io.File(dir)
+    require(!f.exists || java.nio.file.Files.isRegularFile(stampPath(dir)),
+      s"$dir exists and was not written by ScaleData; remove it or " +
+        "choose another dir")
+    org.apache.commons.io.FileUtils.deleteQuietly(f)
   }
 
   /** Run `write(tmp)` and move `tmp` to `outDir`, stamped as `how` of
@@ -35,18 +47,20 @@ object ScaleData {
   private def generate(outDir: String, from: String, how: String)(
       write: String => Unit): Unit = {
     val out = new java.io.File(outDir)
-    require(out.getCanonicalPath != new java.io.File(from).getCanonicalPath,
-      s"$outDir is its own source")
+    require(!java.nio.file.Paths.get(new java.io.File(from).getCanonicalPath)
+        .startsWith(out.getCanonicalPath),
+      s"$outDir holds its own source $from")
     val stamp = s"$how of ${stampOf(from)}"
-    val stampPath = java.nio.file.Paths.get(outDir, StampFile)
-    if (java.nio.file.Files.isRegularFile(stampPath) &&
-        java.nio.file.Files.readString(stampPath) == stamp) return
-    org.apache.commons.io.FileUtils.deleteQuietly(out)
+    if (java.nio.file.Files.isRegularFile(stampPath(outDir)) &&
+        java.nio.file.Files.readString(stampPath(outDir)) == stamp) return
     val tmp = outDir + ".tmp"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+    clear(outDir)
+    clear(tmp)
+    // Stamped before it is filled, so a crashed run's leftover is ours
+    // to delete; only the rename makes it a reusable dir.
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tmp))
+    java.nio.file.Files.writeString(stampPath(tmp), stamp)
     write(tmp)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(tmp, StampFile), stamp)
     require(new java.io.File(tmp).renameTo(out),
       s"rename $tmp -> $outDir failed")
   }

@@ -84,4 +84,22 @@ class GatesSpec extends GraftSuite {
     assert(Tables.customer(spark, dir).count() ==
       3 * Tables.customer(spark, sf).count())
   }
+
+  test("a writer refuses a dir it did not write, and one holding its source") {
+    val root = Files.createTempDirectory("graft_refuse")
+    val foreign = Files.createDirectories(root.resolve("foreign"))
+    Files.writeString(foreign.resolve("keep.txt"), "not a warehouse")
+    intercept[IllegalArgumentException] {
+      ScaleData.writeScaledWarehouse(spark, sf, foreign.toString, 2, 4)
+    }
+    assert(Files.readString(foreign.resolve("keep.txt")) == "not a warehouse")
+    // Even a stamped dir is refused when the source lies inside it.
+    val src = Files.createDirectories(root.resolve("src"))
+    Files.writeString(src.resolve("keep.txt"), "source")
+    Files.writeString(root.resolve("_graft_source"), "x2 of elsewhere")
+    intercept[IllegalArgumentException] {
+      ScaleData.writeScaledWarehouse(spark, src.toString, root.toString, 2, 4)
+    }
+    assert(Files.readString(src.resolve("keep.txt")) == "source")
+  }
 }

@@ -132,4 +132,11 @@ class GrowthGateSpec extends AnyFunSuite {
       Map("a" -> 0.9, "b" -> 0.8, "c" -> 0.95, "zz" -> 0.0),
       floors).isEmpty)
   }
+
+  test("a work pair is measured only where the gate's rule reads it") {
+    // growth and skew judge g4 on its work; hub bounds walls only.
+    assert(Gates.byName("growth").readsWork(10, "g4_jaccard"))
+    assert(Gates.byName("skew").readsWork(10, "g4_jaccard"))
+    assert(!Gates.byName("hub").readsWork(10, "g4_jaccard"))
+  }
 }
